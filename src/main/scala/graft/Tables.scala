@@ -1,6 +1,11 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish parquet tables
   * (`/root/repo/TESTDATA.md`). Every query goes through here so scans stay
@@ -10,8 +15,63 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * directory instead of a single file — nothing else changes.
   */
 object Tables {
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** SQL confs whose values change what parquet schema inference returns
+    * for the same files (`events` flips the first).
+    */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.caseSensitive")
+
+  /** (path, inference conf values) → (the input's files when inferred, the
+    * schema inferred from them). One entry per path and conf setting, so a
+    * rewritten input replaces its entry instead of adding one.
+    */
+  private val schemas =
+    new ConcurrentHashMap[(String, Seq[String]), (Seq[(String, Long, Long)], StructType)]()
+
+  /** Every file under `path` (the path itself for a single file) as
+    * (name, length, modification time); empty when nothing is there.
+    */
+  private def files(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val out = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      out.result().sorted
+    } catch { case _: FileNotFoundException => Nil }
+  }
+
+  /** Reads `dir/name.parquet` with the schema inferred the last time the
+    * same files were read under the same inference confs. A schema-less
+    * `read.parquet` runs a Spark job to read a footer on every call; a warm
+    * read skips it. The files are listed before inferring, so an input
+    * rewritten meanwhile is re-inferred on its next read, never served a
+    * stale schema.
+    */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = (path, inferenceConfs.map(spark.conf.get))
+    val stamp = files(spark, path)
+    Option(schemas.get(key)) match {
+      case Some((`stamp`, schema)) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        schemas.put(key, (stamp, df.schema))
+        df
+    }
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = apply(s, d, "orders")

@@ -186,7 +186,7 @@ object Articles extends QueryModule {
     parts.map { n =>
       s"""SELECT '$n' AS corpus, COUNT(*) AS n, COUNT(NULLIF(doi,'')) AS n_doi,
          |  COUNT(NULLIF(titre,'')) AS n_titre, COUNT(NULLIF(abstract,'')) AS n_abstract
-         |FROM read_csv_auto('/root/reference/data/$n.csv', header=true, all_varchar=true)"""
+         |FROM read_csv_auto('${ArticleSource.dataDir}/$n.csv', header=true, all_varchar=true)"""
         .stripMargin
     }.mkString("", "\nUNION ALL BY NAME\n", "\nORDER BY corpus")
   }

@@ -128,8 +128,9 @@ object SqlProgrammability extends QueryModule {
     */
   private def q273(s: SparkSession, d: String): DataFrame = {
     Tables.lineitem(s, d).createOrReplaceTempView("lineitem_v")
+    val prev = s.conf.getOption("spark.sql.scripting.enabled")
     s.conf.set("spark.sql.scripting.enabled", "true")
-    s.sql(
+    try s.sql(
       """BEGIN
         |  DECLARE lo BIGINT;
         |  DECLARE hi BIGINT;
@@ -147,6 +148,10 @@ object SqlProgrammability extends QueryModule {
         |  GROUP BY bucket, bucket_lo
         |  ORDER BY bucket;
         |END""".stripMargin)
+    finally prev match {
+      case Some(v) => s.conf.set("spark.sql.scripting.enabled", v)
+      case None => s.conf.unset("spark.sql.scripting.enabled")
+    }
   }
 
   private val q273Sql =

@@ -68,22 +68,22 @@ object ArticleSource {
 
   /** DuckDB-side spelling of [[unionAll]] for oracle SQL strings. */
   val unionAllSql: String =
-    """SELECT * FROM (
+    s"""SELECT * FROM (
       |  SELECT NULLIF(journal,'') AS journal, NULLIF(indexation,'') AS indexation,
       |         NULLIF(publication,'') AS publication, NULLIF(doi,'') AS doi,
       |         NULLIF(titre,'') AS titre, NULLIF(chercheurs,'') AS chercheurs,
       |         NULLIF(laboratoires,'') AS laboratoires, NULLIF(abstract,'') AS abstract,
       |         NULLIF(keywords,'') AS keywords, NULLIF(pays,'') AS pays,
       |         NULLIF(quartile,'') AS quartile
-      |  FROM read_json_auto(['/root/reference/data/ai_articles.json',
-      |                       '/root/reference/data/blockchain_articles.json'])
+      |  FROM read_json_auto(['$dataDir/ai_articles.json',
+      |                       '$dataDir/blockchain_articles.json'])
       |  UNION ALL BY NAME
       |  SELECT NULLIF(journal,'') AS journal, NULLIF(indexation,'') AS indexation,
       |         NULLIF(publication,'') AS publication, NULLIF(doi,'') AS doi,
       |         NULLIF(titre,'') AS titre, NULLIF(chercheurs,'') AS chercheurs,
       |         NULLIF(laboratoires,'') AS laboratoires, NULLIF(abstract,'') AS abstract,
       |         NULLIF(keywords,'') AS keywords
-      |  FROM read_json_auto(['/root/reference/data/acm_machine_learning_articles.json',
-      |                       '/root/reference/data/acm_blockchain_articles.json'])
+      |  FROM read_json_auto(['$dataDir/acm_machine_learning_articles.json',
+      |                       '$dataDir/acm_blockchain_articles.json'])
       |)""".stripMargin
 }
