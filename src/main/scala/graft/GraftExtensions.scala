@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSessionExtensions
   *
   * {{{ spark-submit --conf spark.sql.extensions=graft.GraftExtensions ... }}}
   *
-  * injects the native function surface (`graft_dot`) into the session's
-  * function registry and installs the
+  * injects the native kernels ([[graft.functions.GraftFunctions.descriptions]])
+  * into the session's function registry and installs the
   * [[graft.plans.DotProductRewrite]] optimizer rule, so a cluster user
   * gets the fused kernels with zero code changes — both the `graft_dot`
   * SQL spelling and the built-in `aggregate(zip_with(...))` spelling
@@ -15,17 +15,13 @@ import org.apache.spark.sql.SparkSessionExtensions
   * fixture build their sessions through this config, so the injection
   * path itself is exercised by every verify/bench run.
   *
-  * [[graft.functions.GraftFunctions.register]] remains the programmatic
-  * equivalent for sessions the caller has already built.
+  * This extension is the only install path: a session built without the
+  * config has no `graft_*` functions and none of the rules below, and
+  * nothing installs them into a session after it is built.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(graft.functions.GraftFunctions.dotDescription)
-    ext.injectFunction(graft.functions.GraftFunctions.maxSimDescription)
-    ext.injectFunction(graft.functions.GraftFunctions.chunksDescription)
-    ext.injectFunction(graft.functions.GraftFunctions.minHashDescription)
-    ext.injectFunction(graft.functions.GraftFunctions.simHashDescription)
-    graft.functions.GraftFunctions.textKernelDescriptions.foreach(ext.injectFunction)
+    graft.functions.GraftFunctions.descriptions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.DotProductRewrite)
     ext.injectOptimizerRule(_ => graft.plans.MvRewrite)
     ext.injectOptimizerRule(_ => graft.plans.JoinElimination)

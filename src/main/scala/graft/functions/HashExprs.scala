@@ -17,24 +17,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   */
 object HashKernels {
 
-  private val mdLocal: ThreadLocal[java.security.MessageDigest] =
-    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
-
-  /** Hex digits [off, off+len) of the digest as one big-endian integer —
-    * exactly `conv(substring(hex(dg), off+1, len), 16, 10)`. len <= 15.
-    */
-  private def nibbles(dg: Array[Byte], off: Int, len: Int): Long = {
-    var v = 0L
-    var j = off
-    val end = off + len
-    while (j < end) {
-      val b = dg(j >> 1) & 0xFF
-      v = (v << 4) | (if ((j & 1) == 0) b >>> 4 else b & 0xF)
-      j += 1
-    }
-    v
-  }
-
   /** The 16-permutation Broder MinHash of a shingle set in one pass:
     * per element h1 = md5 hex digits 1..7, h2 = digits 9..15, and
     * m[p] = MIN(h1 + p*h2) — bit-identical to the explode →
@@ -51,9 +33,9 @@ object HashKernels {
     while (i < n) {
       if (!arr.isNullAt(i)) {
         seen = true
-        val dg = mdLocal.get().digest(arr.getUTF8String(i).getBytes)
-        val h1 = nibbles(dg, 0, 7)
-        val h2 = nibbles(dg, 8, 7)
+        val dg = Digest.instance.digest(arr.getUTF8String(i).getBytes)
+        val h1 = Digest.nibbles(dg, 0, 7)
+        val h2 = Digest.nibbles(dg, 8, 7)
         var p = 0
         var v = h1 // h1 + p*h2, accumulated
         while (p < nperm) {
@@ -84,7 +66,7 @@ object HashKernels {
         var b = 0
         while (b < nbits) { votes(b) -= 1; b += 1 }
       } else {
-        val h = nibbles(mdLocal.get().digest(arr.getUTF8String(i).getBytes), 0, 8)
+        val h = Digest.nibbles(Digest.instance.digest(arr.getUTF8String(i).getBytes), 0, 8)
         var b = 0
         while (b < nbits) {
           votes(b) += (if (((h >>> b) & 1L) == 1L) 1L else -1L)

@@ -17,24 +17,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TextKernelFns {
 
-  private val mdLocal: ThreadLocal[java.security.MessageDigest] =
-    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
-
-  /** Hex digits [off, off+len) of the digest as one big-endian integer —
-    * exactly `conv(substring(hex(dg), off+1, len), 16, 10)`. len <= 15.
-    */
-  private def nibbles(dg: Array[Byte], off: Int, len: Int): Long = {
-    var v = 0L
-    var j = off
-    val end = off + len
-    while (j < end) {
-      val b = dg(j >> 1) & 0xFF
-      v = (v << 4) | (if ((j & 1) == 0) b >>> 4 else b & 0xF)
-      j += 1
-    }
-    v
-  }
-
   // ---- BPE ----------------------------------------------------------
 
   /** Adjacent symbol pairs of a space-joined symbol string — the pair
@@ -177,12 +159,11 @@ object TextKernelFns {
     * 32× row expansion, no hex string, no substring, no radix parse.
     */
   def bootWeights(id: UTF8String): ArrayData = {
-    val md = mdLocal.get()
+    val md = Digest.instance
     val idBytes = if (id == null) null else id.getBytes
     val out = new Array[Long](32)
     var b = 0
     while (b < 32) {
-      md.reset()
       md.update(bootPrefix(b))
       if (idBytes != null) {
         md.update('|'.toByte)
@@ -252,15 +233,14 @@ object TextKernelFns {
     * straight off the digest bytes.
     */
   def cmsBuckets(w: UTF8String): ArrayData = {
-    val md = mdLocal.get()
+    val md = Digest.instance
     val wb = w.getBytes
     val out = new Array[Long](4)
     var r = 0
     while (r < 4) {
-      md.reset()
       md.update(cmsPrefix(r))
       md.update(wb)
-      out(r) = nibbles(md.digest(), 0, 7) % 512L
+      out(r) = Digest.nibbles(md.digest(), 0, 7) % 512L
       r += 1
     }
     new GenericArrayData(out)

@@ -1,12 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+
+import scala.reflect.ClassTag
 
 /** `graft_dot(array<bigint>, array<bigint>) -> bigint` — native Catalyst
   * expression with whole-stage codegen (SURVEY.md §2.10 escalation ladder:
@@ -228,116 +229,32 @@ case class MaxSimLong(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session-level registration of the graft native functions. */
+/** The graft native kernels as Spark FunctionDescriptions — the one
+  * table [[graft.GraftExtensions]] injects into every session's function
+  * registry. A kernel missing here is unresolvable by name everywhere.
+  */
 object GraftFunctions {
-  private val dotIdent = FunctionIdentifier("graft_dot")
-  private val maxSimIdent = FunctionIdentifier("graft_maxsim")
-  private val chunksIdent = FunctionIdentifier("graft_chunks")
-  private val minHashIdent = FunctionIdentifier("graft_minhash")
-  private val simHashIdent = FunctionIdentifier("graft_simhash")
+  type Description = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  /** `graft_dot` as a Spark FunctionDescription — the injectable triple
-    * consumed by [[graft.GraftExtensions]] and by [[register]].
-    */
-  val dotDescription: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (dotIdent,
-      new ExpressionInfo(classOf[DotProductLong].getName, "graft_dot"),
+  private def kernel[E <: Expression](name: String, arity: Int)(
+      build: Seq[Expression] => E)(implicit tag: ClassTag[E]): Description =
+    (FunctionIdentifier(name), new ExpressionInfo(tag.runtimeClass.getName, name),
       (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_dot takes exactly 2 arguments")
-        DotProductLong(children.head, children(1))
+        require(children.size == arity,
+          s"$name takes exactly $arity argument${if (arity == 1) "" else "s"}")
+        build(children)
       })
 
-  /** `graft_maxsim` ([[MaxSimLong]]) as an injectable FunctionDescription. */
-  val maxSimDescription: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (maxSimIdent,
-      new ExpressionInfo(classOf[MaxSimLong].getName, "graft_maxsim"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_maxsim takes exactly 2 arguments")
-        MaxSimLong(children.head, children(1))
-      })
-
-  /** `graft_chunks` (native Generator, [[SlidingChunks]]) as an injectable
-    * FunctionDescription.
-    */
-  val chunksDescription: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (chunksIdent,
-      new ExpressionInfo(classOf[SlidingChunks].getName, "graft_chunks"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3, "graft_chunks takes exactly 3 arguments")
-        SlidingChunks(children.head, children(1), children(2))
-      })
-
-  /** `graft_minhash` ([[MinHashSig]]) as an injectable FunctionDescription. */
-  val minHashDescription: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (minHashIdent,
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_minhash takes exactly 2 arguments")
-        MinHashSig(children.head, children(1))
-      })
-
-  /** `graft_simhash` ([[SimHashSig]]) as an injectable FunctionDescription. */
-  val simHashDescription: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (simHashIdent,
-      new ExpressionInfo(classOf[SimHashSig].getName, "graft_simhash"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_simhash takes exactly 2 arguments")
-        SimHashSig(children.head, children(1))
-      })
-
-  /** The fused text/sketch kernels ([[TextKernels]]) as injectable
-    * FunctionDescriptions — one-arg and two-arg constructors resolved by
-    * arity check.
-    */
-  val textKernelDescriptions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
-    def d1(name: String, cls: Class[_], f: Expression => Expression) =
-      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
-        (children: Seq[Expression]) => {
-          require(children.size == 1, s"$name takes exactly 1 argument")
-          f(children.head)
-        })
-    def d2(name: String, cls: Class[_], f: (Expression, Expression) => Expression) =
-      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
-        (children: Seq[Expression]) => {
-          require(children.size == 2, s"$name takes exactly 2 arguments")
-          f(children.head, children(1))
-        })
-    Seq(
-      d1("graft_bpe_pairs", classOf[BpePairs], BpePairs),
-      d2("graft_bpe_merge", classOf[BpeMerge], BpeMerge),
-      d2("graft_bleu_clip", classOf[BleuClip], BleuClip),
-      d1("graft_bootweights", classOf[BootWeights], BootWeights),
-      d2("graft_winhash", classOf[WinHashes], WinHashes),
-      d1("graft_cms", classOf[CmsBuckets], CmsBuckets))
-  }
-
-  /** Idempotently register `graft_dot` with the session's function
-    * registry (usable from `expr(...)` and `spark.sql(...)`) and install
-    * the [[graft.plans.DotProductRewrite]] optimizer rule so the built-in
-    * `aggregate(zip_with(...))` spelling compiles to the native kernel.
-    * Programmatic twin of wiring [[graft.GraftExtensions]] through
-    * `spark.sql.extensions`.
-    */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(dotIdent))
-      registry.registerFunction(dotDescription._1, dotDescription._2, dotDescription._3)
-    if (!registry.functionExists(maxSimIdent))
-      registry.registerFunction(maxSimDescription._1, maxSimDescription._2, maxSimDescription._3)
-    if (!registry.functionExists(chunksIdent))
-      registry.registerFunction(chunksDescription._1, chunksDescription._2, chunksDescription._3)
-    if (!registry.functionExists(minHashIdent))
-      registry.registerFunction(minHashDescription._1, minHashDescription._2, minHashDescription._3)
-    if (!registry.functionExists(simHashIdent))
-      registry.registerFunction(simHashDescription._1, simHashDescription._2, simHashDescription._3)
-    textKernelDescriptions.foreach { case (ident, info, builder) =>
-      if (!registry.functionExists(ident)) registry.registerFunction(ident, info, builder)
-    }
-    val extra = spark.experimental.extraOptimizations
-    if (!extra.contains(graft.plans.DotProductRewrite))
-      spark.experimental.extraOptimizations = extra :+ graft.plans.DotProductRewrite
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(graft.plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies = strategies :+ graft.plans.AsOfJoinStrategy
-  }
+  val descriptions: Seq[Description] = Seq(
+    kernel("graft_dot", 2)(c => DotProductLong(c(0), c(1))),
+    kernel("graft_maxsim", 2)(c => MaxSimLong(c(0), c(1))),
+    kernel("graft_chunks", 3)(c => SlidingChunks(c(0), c(1), c(2))),
+    kernel("graft_minhash", 2)(c => MinHashSig(c(0), c(1))),
+    kernel("graft_simhash", 2)(c => SimHashSig(c(0), c(1))),
+    kernel("graft_bpe_pairs", 1)(c => BpePairs(c(0))),
+    kernel("graft_bpe_merge", 2)(c => BpeMerge(c(0), c(1))),
+    kernel("graft_bleu_clip", 2)(c => BleuClip(c(0), c(1))),
+    kernel("graft_bootweights", 1)(c => BootWeights(c(0))),
+    kernel("graft_winhash", 2)(c => WinHashes(c(0), c(1))),
+    kernel("graft_cms", 1)(c => CmsBuckets(c(0))))
 }

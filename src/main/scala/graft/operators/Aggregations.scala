@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Exact, QueryModule, Tables}
+import graft.functions.Digest
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -269,8 +270,7 @@ object Aggregations extends QueryModule {
     val hashed = dedup.select(
       col("o_orderpriority"),
       col("o_custkey"),
-      expr("CAST(conv(substring(md5(concat('kmv-', CAST(o_custkey AS STRING))), 1, 12), 16, 10) AS BIGINT)")
-        .as("h"))
+      Digest.bucket(Digest.salted("kmv-", col("o_custkey")), 1, 12).as("h"))
     hashed.groupBy(col("o_orderpriority"))
       .agg(
         count(col("o_custkey")).as("n_exact"),
@@ -339,8 +339,7 @@ object Aggregations extends QueryModule {
     val alphaNum = math.round(0.7213 / (1 + 1.079 / m) * m * m * math.pow(2, 50))
     val hashed = Tables.orders(s, d).select(
       col("o_orderpriority").as("grp"),
-      expr("CAST(conv(substring(md5(concat('hll-', CAST(o_custkey AS STRING))), 1, 12), 16, 10) AS BIGINT)")
-        .as("h"))
+      Digest.bucket(Digest.salted("hll-", col("o_custkey")), 1, 12).as("h"))
     val regs = hashed
       .select(col("grp"), (col("h") % m).as("bucket"), expr(s"h div $m").as("rem"))
       // 42-bit remainder: rank = 43 - bitlength(rem); rem = 0 → all 42
@@ -438,8 +437,7 @@ object Aggregations extends QueryModule {
           .otherwise(expr("array()"))).as("w"))
       .distinct()
     val hashed = tok.select(col("source"),
-      expr("CAST(conv(substring(md5(concat('kmvset-', w)), 1, 12), 16, 10) AS BIGINT)")
-        .as("h"))
+      Digest.bucket(concat(lit("kmvset-"), col("w")), 1, 12).as("h"))
       .distinct()
     val sk = hashed.groupBy(col("source"))
       .agg(graft.functions.BottomK.kmv(k)(col("h")).as("sk"))

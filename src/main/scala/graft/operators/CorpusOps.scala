@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Exact, QueryModule, Tables}
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -234,9 +235,8 @@ object CorpusOps extends QueryModule {
       .select(col("doc_id"), size(col("t")).cast(LongType).as("n_tokens"),
         explode(expr("sequence(0, size(t) - 1)")).as("j"))
       .withColumn("g", expr("CAST(j div 3 AS BIGINT)"))
-      .withColumn("m", expr(
-        "CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), '-', " +
-          "CAST(g AS STRING))), 1, 7), 16, 10) AS BIGINT) % 7 = 0"))
+      .withColumn("m", Digest.bucket(concat(col("doc_id").cast("string"), lit("-"),
+        col("g").cast("string")), 1, 7) % 7 === 0)
       .groupBy(col("doc_id"), col("n_tokens"))
       .agg(
         count(when(col("m"), 1)).as("n_masked"),
@@ -394,8 +394,7 @@ object CorpusOps extends QueryModule {
     */
   private def q69(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .withColumn("bucket",
-        expr("CAST(conv(substring(md5(concat('doc-', CAST(doc_id AS STRING))), 1, 7), 16, 10) AS BIGINT) % 100"))
+      .withColumn("bucket", Digest.docBucket(100))
       .withColumn("split",
         when(col("bucket") < 80, "train").when(col("bucket") < 90, "val")
           .otherwise("test"))
@@ -779,8 +778,7 @@ object CorpusOps extends QueryModule {
     val asg = docs.join(comp, col("doc_id") === col("id"), "left")
       .select(col("doc_id"), col("n_chars"),
         coalesce(col("comp"), col("doc_id")).as("grp"))
-      .withColumn("b", expr(
-        "CAST(conv(substring(md5(concat('split-', CAST(grp AS STRING))), 1, 7), 16, 10) AS BIGINT) % 100"))
+      .withColumn("b", Digest.bucket(Digest.salted("split-", col("grp")), 1, 7) % 100)
       .withColumn("split",
         when(col("b") < 80, "train").when(col("b") < 90, "val")
           .otherwise("test"))
@@ -1512,7 +1510,6 @@ object CorpusOps extends QueryModule {
     // one buffer-reusing native pass instead of the interpreted
     // transform/slice/array_join HOF that allocated a slice array and a
     // joined string per window (bit-identical xxhash64 — TextKernelsSpec).
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"), toks(col("text")).as("t"))
       .filter(size(col("t")) >= k)
@@ -1676,8 +1673,7 @@ object CorpusOps extends QueryModule {
     val tf = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
         explode(toks(col("text"))).as("w"))
-      .select(col("doc_id"), col("lang"), expr(
-        "CAST(conv(substring(md5(w), 1, 4), 16, 10) AS BIGINT) % 4096").as("f"))
+      .select(col("doc_id"), col("lang"), (Digest.bucket(col("w"), 1, 4) % 4096).as("f"))
     val tgt = tf.filter(col("lang") === "en")
       .groupBy(col("f")).agg(count(lit(1)).as("tc"))
     val all = tf.groupBy(col("f")).agg(count(lit(1)).as("ac"))
@@ -1739,8 +1735,7 @@ object CorpusOps extends QueryModule {
     Tables.documents(s, d)
       .select(col("doc_id"), col("n_chars"),
         md5(concat_ws(" ", slice(toks(col("text")), 1, 32))).as("fp"),
-        expr("CAST(conv(substring(md5(concat('doc-', CAST(doc_id AS STRING))), 1, 7), 16, 10) AS BIGINT) % 100")
-          .as("bucket"))
+        Digest.docBucket(100).as("bucket"))
 
   /** Classify each delta doc against a snapshot fingerprint set (a 1-col
     * `fp` frame) — shared by the derived (q214) and persisted (q216)
@@ -1932,7 +1927,6 @@ object CorpusOps extends QueryModule {
     * streams once); the metric join touches 10 rows per query.
     */
   private def q311(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val lex = bm25Ranks(s, d).filter(col("lrank") <= 10)
       .select(col("qid"), col("nid"), col("lrank"))
     val emb = Tables.embeddings(s, d).select(col("vec_id"),
@@ -2017,7 +2011,6 @@ object CorpusOps extends QueryModule {
     * work is O(query-term postings), the metric join O(queries·10).
     */
   private def q320(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val lex = bm25Ranks(s, d).filter(col("lrank") <= 10)
       .select(col("qid"), col("nid"), col("lrank"))
     val terms = Tables.documents(s, d)
@@ -2145,7 +2138,6 @@ object CorpusOps extends QueryModule {
 
   private def bpeChain(vocab0: DataFrame, maxSteps: Int, weight: String,
                        carry: Seq[String]): (DataFrame, Seq[(Long, String, Long)]) = {
-    graft.functions.GraftFunctions.register(vocab0.sparkSession)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     var v = vocab0
     var k = 1
@@ -2399,8 +2391,7 @@ object CorpusOps extends QueryModule {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         size(toks(col("text"))).cast(LongType).as("n_tok"),
-        expr("CAST(conv(substring(md5(concat('doc-', CAST(doc_id AS STRING))), 1, 7), 16, 10) AS BIGINT) % 1000000")
-          .as("ppm"))
+        Digest.docBucket(1000000).as("ppm"))
     val bySrc = docs.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("src_tok"))
     val consts = bySrc.agg(
@@ -2596,7 +2587,7 @@ object CorpusOps extends QueryModule {
     val perDoc = Tables.documents(s, d)
       .select(col("source"), col("doc_id"),
         size(toks(col("text"))).cast(LongType).as("n_tok"),
-        md5(concat(lit("doc-"), col("doc_id").cast("string"))).as("h"))
+        Digest.docMd5.as("h"))
     val w = Window.partitionBy(col("source"))
       .orderBy(col("h")).rowsBetween(Window.unboundedPreceding, -1)
     val picked = perDoc
@@ -2680,9 +2671,8 @@ object CorpusOps extends QueryModule {
       Tables.documents(s, d)
         .select(col("doc_id"),
           size(toks(col("text"))).cast(LongType).as("n_tok"),
-          md5(concat(lit("doc-"), col("doc_id").cast("string"))).as("h"))
-        .withColumn("h48",
-          expr("CAST(conv(substring(h, 1, 12), 16, 10) AS BIGINT)"))
+          Digest.docMd5.as("h"))
+        .withColumn("h48", Digest.hexPrefix(col("h"), 1, 12))
         .withColumn("shard", pmod(col("h48"), lit(16)).cast(LongType))
         .repartition(col("shard"))
         .write.partitionBy("shard").mode("overwrite").parquet(s"$dir/data")
@@ -2726,8 +2716,7 @@ object CorpusOps extends QueryModule {
     * O(splits × sources) rows at any corpus size.
     */
   private def q295(s: SparkSession, d: String): DataFrame = {
-    val bucket = expr(
-      "CAST(conv(substring(md5(concat('doc-', CAST(doc_id AS STRING))), 1, 7), 16, 10) AS BIGINT) % 100")
+    val bucket = Digest.docBucket(100)
     Tables.documents(s, d)
       .withColumn("split",
         when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test"))
@@ -3105,8 +3094,7 @@ object CorpusOps extends QueryModule {
     val k = 64
     val pri = Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("n_chars"),
-        expr("CAST(conv(substring(md5(concat('pri-', CAST(doc_id AS " +
-          "STRING))), 1, 12), 16, 10) AS BIGINT)").as("h"))
+        Digest.bucket(Digest.salted("pri-", col("doc_id")), 1, 12).as("h"))
       .withColumn("p",
         col("n_chars").cast(DoubleType) * lit(281474976710656.0) /
           (col("h") + 1).cast(DoubleType))
@@ -3308,8 +3296,7 @@ object CorpusOps extends QueryModule {
     val k = 20L // resume offset: positions k+1 .. k+4
     def epochFrame(e: Int): DataFrame = {
       val keyed = Tables.documents(s, d).select(col("doc_id"),
-        expr(s"CAST(conv(substring(md5(concat('ep$e-', " +
-          s"CAST(doc_id AS STRING))), 1, 12), 16, 10) AS BIGINT)").as("key"))
+        Digest.bucket(Digest.salted(s"ep$e-", col("doc_id")), 1, 12).as("key"))
       val head = keyed.orderBy(col("key"), col("doc_id")).limit(8)
         .withColumn("pos", row_number()
           .over(Window.orderBy(col("key"), col("doc_id"))).cast(LongType))

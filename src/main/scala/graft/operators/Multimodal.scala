@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryModule, Tables}
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -96,9 +97,8 @@ object Multimodal extends QueryModule {
       }
       y += 1
     }
-    val md = java.security.MessageDigest.getInstance("MD5")
     ImageFeatures(r.doc_id, r.format, w.toLong, h.toLong,
-      md.digest(buf.array).map("%02x".format(_)).mkString, csum, csum2)
+      Digest.md5Hex(buf.array), csum, csum2)
   }
 
   /** Deterministic fixture pixel: RGB for (id, x, y). Shared by the q195
@@ -184,9 +184,8 @@ object Multimodal extends QueryModule {
       csum += (i + 1).toLong * s.toLong // |Σ| < n²·2^15 ≈ 1e11, inside Long
       i += 1
     }
-    val md = java.security.MessageDigest.getInstance("MD5")
     AudioFeatures(r.doc_id, n.toLong, fmt.getSampleRate.toLong, energy,
-      md.digest(bytes).map("%02x".format(_)).mkString, csum)
+      Digest.md5Hex(bytes), csum)
   }
 
   /** ====== STUB ======
@@ -196,8 +195,7 @@ object Multimodal extends QueryModule {
     * bytes). The REAL decode path is [[decodeImage]]/q195.
     */
   private def decodeStub(r: MediaRecord): MediaFeatures = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hash = md.digest(r.payload).map("%02x".format(_)).mkString
+    val hash = Digest.md5Hex(r.payload)
     val featNorm = r.payload.foldLeft(0L)((a, b) => a + (b & 0xff))
     MediaFeatures(r.doc_id, r.format, r.payload.length.toLong, hash, featNorm)
   }
@@ -609,9 +607,8 @@ object Multimodal extends QueryModule {
     val hashed = both
       .mapPartitions(_.map { r =>
         val ph = aHashImage(r)
-        val md = java.security.MessageDigest.getInstance("MD5")
         (ph.doc_id, ph.variant, ph.width, ph.height, ph.ahash,
-          md.digest(r.payload).map("%02x".format(_)).mkString)
+          Digest.md5Hex(r.payload))
       })
       .toDF("doc_id", "variant", "width", "height", "ahash", "byte_md5")
     val a = hashed.filter(col("variant") === "a")

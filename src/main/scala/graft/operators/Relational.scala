@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Exact, QueryModule, Tables}
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -330,7 +331,6 @@ object Relational extends QueryModule {
     * the first 20 vectors, exact integer dots.
     */
   private def q165(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.embeddings(s, d).createOrReplaceTempView("embeddings_v")
     s.sql(
       """WITH q AS (
@@ -495,7 +495,7 @@ object Relational extends QueryModule {
     */
   private def q290(s: SparkSession, d: String): DataFrame = {
     val tok = (c: org.apache.spark.sql.Column) =>
-      md5(concat(lit("tok-"), c.cast(StringType)))
+      md5(Digest.salted("tok-", c))
     val cust = Tables.customer(s, d)
       .select(tok(col("c_custkey")).as("cust_token"),
         regexp_replace(col("c_name"), "[0-9]", "*").as("masked_name"),

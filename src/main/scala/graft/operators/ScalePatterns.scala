@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Exact, QueryModule, Tables}
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -81,7 +82,7 @@ object ScalePatterns extends QueryModule {
     Tables.documents(s, d)
       .join(broadcast(rates), "source")
       .withColumn("bucket",
-        expr("CAST(conv(substring(md5(concat('samp-', CAST(doc_id AS STRING))), 1, 7), 16, 10) AS BIGINT) % 100"))
+        Digest.bucket(Digest.salted("samp-", col("doc_id")), 1, 7) % 100)
       .groupBy(col("source"))
       .agg(
         count(lit(1)).as("n_total"),
@@ -324,8 +325,7 @@ object ScalePatterns extends QueryModule {
     val epoch = to_date(lit("1995-01-01"))
     val windows = Tables.part(s, d).select(col("p_brand").as("brand")).distinct()
       .withColumn("off",
-        expr("CAST(conv(substring(md5(brand), 1, 4), 16, 10) AS BIGINT) % 2000")
-          .cast("int"))
+        (Digest.bucket(col("brand"), 1, 4) % 2000).cast("int"))
       .withColumn("wstart", date_add(epoch, col("off")))
       .withColumn("wend", date_add(col("wstart"), 90))
       .select(col("brand"), col("wstart"), col("wend"))
@@ -599,7 +599,6 @@ object ScalePatterns extends QueryModule {
     // md5 pass per token instead of the interpreted transform HOF that
     // built a hex string + substring + radix parse per (row, token)
     // (bit-identical buckets — TextKernelsSpec).
-    graft.functions.GraftFunctions.register(s)
     val tok = Tables.documents(s, d)
       .select(explode(filter(split(col("text"), " "),
         t => length(t) > 0)).as("w"))
@@ -3201,7 +3200,7 @@ object ScalePatterns extends QueryModule {
         s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
     val done = java.nio.file.Paths.get(dir, "_STAGED")
     val delPred = // seed-free ~5% bucket, engine-replayable
-      expr("CAST(conv(substring(md5(concat('del-', CAST(doc_id AS STRING))), 1, 7), 16, 10) AS BIGINT) % 20 = 0")
+      Digest.bucket(Digest.salted("del-", col("doc_id")), 1, 7) % 20 === 0
     if (!java.nio.file.Files.exists(done)) {
       Tables.documents(s, d).repartition(4)
         .write.mode("overwrite").parquet(s"$dir/base")
@@ -3260,8 +3259,7 @@ object ScalePatterns extends QueryModule {
       s"${System.getProperty("java.io.tmpdir")}/graft_dvcomp_" +
         s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
     val done = java.nio.file.Paths.get(dir, "_STAGED")
-    val delPred = expr(
-      "CAST(conv(substring(md5(concat('del-', CAST(doc_id AS STRING))), 1, 7), 16, 10) AS BIGINT) % 20 = 0")
+    val delPred = Digest.bucket(Digest.salted("del-", col("doc_id")), 1, 7) % 20 === 0
     if (!java.nio.file.Files.exists(done)) {
       Tables.documents(s, d).repartition(4)
         .write.mode("overwrite").parquet(s"$dir/v=1")
@@ -3814,8 +3812,7 @@ object ScalePatterns extends QueryModule {
         .repartitionByRange(16, col("doc_id"))
         .write.mode("overwrite").parquet(s"$dir/data")
       s.read.parquet(s"$dir/data")
-        .withColumn("md5col",
-          md5(concat(lit("doc-"), col("doc_id").cast("string"))))
+        .withColumn("md5col", Digest.docMd5)
         .select(input_file_name().as("file"),
           explode(bloomBits("md5col")).as("bit"))
         .groupBy(col("file"))
@@ -3849,8 +3846,7 @@ object ScalePatterns extends QueryModule {
     val dir = bloomLayout(s, d)
     val probes = Tables.documents(s, d)
       .filter(col("doc_id") % 101 === 7)
-      .withColumn("md5col",
-        md5(concat(lit("doc-"), col("doc_id").cast("string"))))
+      .withColumn("md5col", Digest.docMd5)
       .select(col("md5col").as("fp"), bloomBits("md5col").as("bits"))
       .collect() // bounded: O(probes) 4-long rows
       .map(r => (r.getString(0), r.getSeq[Long](1)))
@@ -3863,8 +3859,7 @@ object ScalePatterns extends QueryModule {
       case (f, bits) if probes.exists(_._2.forall(bits.contains)) => f
     }.toSeq
     s.read.parquet(hitFiles: _*)
-      .withColumn("md5col",
-        md5(concat(lit("doc-"), col("doc_id").cast("string"))))
+      .withColumn("md5col", Digest.docMd5)
       .filter(col("md5col").isInCollection(fps))
       .select(col("doc_id"), col("source"), col("n_chars"))
       .orderBy(col("doc_id"))
@@ -4315,7 +4310,7 @@ object ScalePatterns extends QueryModule {
           expr(s"(n_events * $P + total - 1) div total")).as("salt"))
     val partials = ev.join(broadcast(hist), "event_type")
       .withColumn("slot",
-        expr("CAST(conv(substring(md5(concat('salt-', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % salt"))
+        Digest.bucket(Digest.salted("salt-", col("event_id")), 1, 8) % col("salt"))
       .groupBy(col("event_type"), col("slot"))
       .agg(count(lit(1)).as("pn"), sum(Exact.money(col("value"))).as("pv"))
     partials

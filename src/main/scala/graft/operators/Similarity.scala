@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryModule, Tables}
-import graft.functions.GraftFunctions
+import graft.functions.Digest
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -74,9 +74,8 @@ object Similarity extends QueryModule {
     * rows of it).
     */
   private lazy val planeMatrix: Array[Array[Int]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
     Array.tabulate(1024, Dims) { (p, d) =>
-      val h = md.digest(s"$p#$d".getBytes("UTF-8"))
+      val h = Digest.instance.digest(s"$p#$d".getBytes("UTF-8"))
       if ((h(0) & 0xff) >= 0x80) 1 else -1
     }
   }
@@ -93,7 +92,7 @@ object Similarity extends QueryModule {
       |FROM embeddings""".stripMargin
 
   /** Exact integer dot product via the native codegen'd expression
-    * (graft.functions.DotProductLong); every query here registers it first.
+    * (graft.functions.DotProductLong), injected by graft.GraftExtensions.
     */
   private def dotExpr(a: String, b: String): Column = expr(s"graft_dot($a, $b)")
 
@@ -163,7 +162,6 @@ object Similarity extends QueryModule {
     * vectors) broadcasts against the corpus; ranking is per-query top-k.
     */
   private def q80(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = quantized(s, d)
     val q = vecs.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -204,7 +202,6 @@ object Similarity extends QueryModule {
     * cosine re-score, top-5 per query among candidates.
     */
   private def q81(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     // candidate IDS only flow through the bucket join + distinct — the
     // 64-wide vectors are joined back just once per surviving pair
     val bands = bandedIds(s, d)
@@ -255,7 +252,6 @@ object Similarity extends QueryModule {
     * collisions, never n².
     */
   private def q82(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     // ids-only through bucket join + distinct; vectors rejoined once after
     val idBands = bandedIds(s, d)
     val cand = idBands.as("a").join(idBands.as("b"),
@@ -416,7 +412,6 @@ object Similarity extends QueryModule {
   private[operators] def ivfTopK(s: SparkSession, d: String,
                       nlist: Int = 0, nprobe: Int = 0): DataFrame = {
     require(nlist <= 1024, "packed argmin key reserves 10 bits for cid")
-    GraftFunctions.register(s)
     val vecs = quantized(s, d)
     val derived = nlist <= 0
     val cents = lloydCents(vecs,
@@ -585,7 +580,6 @@ object Similarity extends QueryModule {
     * for q83's IVF candidates, same downstream plan.
     */
   private def q305(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = Tables.embeddings(s, d).select(
       col("vec_id"),
       expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT))").as("v"),
@@ -656,7 +650,6 @@ object Similarity extends QueryModule {
     * candidate scan swaps for q83's IVF route, same downstream plan.
     */
   private def q306(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = quantized(s, d)
     val qv = vecs.filter(col("vec_id") === 0).select(col("v").as("qv"))
     // candidate generation: global top-20 by exact dot — TakeOrdered shape
@@ -739,7 +732,6 @@ object Similarity extends QueryModule {
     * the threshold.
     */
   private def q309(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val all = quantized(s, d)
     val base = all.filter(col("vec_id") % 5 =!= 4)
     val arrivals = all.filter(col("vec_id") % 5 === 4)
@@ -809,7 +801,6 @@ object Similarity extends QueryModule {
     * drift (retrain) or deletion skew (rebalance) caused it.
     */
   private def q324(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val all = quantized(s, d)
     val base = all.filter(col("vec_id") % 5 =!= 4)
     val surviving = all.filter(col("vec_id") % 7 =!= 3)
@@ -932,7 +923,6 @@ object Similarity extends QueryModule {
     * The keep fraction is the one tunable a data-pruning run sweeps.
     */
   private def q314(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = quantized(s, d)
     val cents = lloydCents(vecs, seedCentsScaled(vecs))
     val d2 = assignTo(vecs, cents)
@@ -984,7 +974,6 @@ object Similarity extends QueryModule {
     * shuffle carries (label, dim, partial sum), O(labels × dims) state.
     */
   private def q84(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = Tables.embeddings(s, d).select(
       col("label").cast(LongType).as("label"),
       expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT))").as("v"))
@@ -1078,7 +1067,6 @@ object Similarity extends QueryModule {
     * toward-zero semantics bit-for-bit.
     */
   private def q147(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = quantized(s, d)
     val cents = vecs.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
@@ -1142,7 +1130,6 @@ object Similarity extends QueryModule {
     * scan stage but (label, partials).
     */
   private def q154(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val projNorm2 = (0 until 16).map { p =>
       val plane = planeMatrix(p).map(c => s"${c}L").mkString("array(", ", ", ")")
       val dp = expr(s"graft_dot(v, $plane)")
@@ -1197,7 +1184,6 @@ object Similarity extends QueryModule {
     * encode pass an IVF-PQ index build runs over billions of vectors.
     */
   private def q157(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = quantized(s, d)
     val sub = vecs
       .select(col("vec_id"), posexplode(expr(
@@ -1260,7 +1246,6 @@ object Similarity extends QueryModule {
     * stores codes: the re-rank pass reads 4 bytes/vector, not 512.
     */
   private def q218(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = quantized(s, d)
     val sub = vecs
       .select(col("vec_id"), posexplode(expr(
@@ -1345,7 +1330,6 @@ object Similarity extends QueryModule {
     * scan, exact refine for the head.
     */
   private def q221(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = quantized(s, d)
     // corpus-derived coarse geometry (ivfGeom), same as q83's registered
     // spelling — the serving index trains at the scale of the corpus
@@ -1543,7 +1527,6 @@ object Similarity extends QueryModule {
     * once; the matrix is a 1-row fold.
     */
   private def q160(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val idBands = bandedIds(s, d)
     val cand = idBands.as("a").join(idBands.as("b"),
         col("a.band") === col("b.band") && col("a.bk") === col("b.bk") &&
@@ -1625,7 +1608,6 @@ object Similarity extends QueryModule {
     * beyond (the gate inequality is unchanged).
     */
   private def q185(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = quantized(s, d)
       .join(Tables.embeddings(s, d).select(col("vec_id"), col("label")), "vec_id")
     val cents = vecs
@@ -1723,7 +1705,6 @@ object Similarity extends QueryModule {
     * flagged vector.
     */
   private def q199(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = quantized(s, d)
     val cents = lloydCents(vecs, seedCents(vecs, 10))
     val members = assignTo(vecs, cents).join(vecs, "vec_id")
@@ -1788,7 +1769,6 @@ object Similarity extends QueryModule {
     * point of fusing RANKS instead of re-scoring.
     */
   private def q225(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val lex = CorpusOps.bm25Ranks(s, d)
       .select(col("qid"), col("nid"), col("lrank"))
     val vecs = quantized(s, d)
@@ -1867,7 +1847,6 @@ object Similarity extends QueryModule {
     */
   private def q319(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val vecs = quantized(s, d)
     val q = vecs.filter(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -1963,7 +1942,6 @@ object Similarity extends QueryModule {
     * margin algebra is unchanged.
     */
   private def q347(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = quantized(s, d)
     val anchors = vecs.filter(col("vec_id") % 2 === 0 && col("vec_id") < 128)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -2067,7 +2045,6 @@ object Similarity extends QueryModule {
     * at scan speed.
     */
   private def q352(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = Tables.embeddings(s, d).select(
       col("vec_id"),
       expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT))").as("v"),
@@ -2155,7 +2132,6 @@ object Similarity extends QueryModule {
     * audit; production serves stage1+stage2 alone.
     */
   private def q359(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = quantized(s, d)
     val q = vecs.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
@@ -2255,7 +2231,6 @@ object Similarity extends QueryModule {
     * for the audit; production serves the code leg alone.
     */
   private def q364(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     // q121's integer-exact symmetric rounding: |c| ≤ 127 by construction
     val code = "transform(v, x -> IF(x >= 0, (x * 254 + scale) div (2 * scale), " +
       "-(((-x) * 254 + scale) div (2 * scale))))"
@@ -2350,7 +2325,6 @@ object Similarity extends QueryModule {
     * pushing the filter down.
     */
   private def q383(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
       expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT))")
         .as("v"))
@@ -2439,7 +2413,6 @@ object Similarity extends QueryModule {
     * sweep costs no additional probe passes at any corpus size.
     */
   private def q385(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
       expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT))")
         .as("v"))
@@ -2695,8 +2668,7 @@ object Similarity extends QueryModule {
   }
 
   private def sha256Hex(s: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    Digest.hex(java.security.MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8")))
 
   private def storedSignature(root: String): Option[String] = {
     val p = java.nio.file.Paths.get(root, "signature.txt")
@@ -3048,7 +3020,6 @@ object Similarity extends QueryModule {
     * layout rewrite may never change results), which is exactly what
     * `dataChange=false` asserts. */
   private def q409(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val root = ivfIndexRoot(s, d, "cmp")
     buildIvfIndex(s, d, root, baseOnly = true)
     appendToIvfIndex(s, d, root)
@@ -3070,7 +3041,6 @@ object Similarity extends QueryModule {
     * q83's train+serve — so the retrain provably erased the drift the
     * frozen-quantizer era accumulated. */
   private def q410(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val root = ivfIndexRoot(s, d, "rt")
     buildIvfIndex(s, d, root, baseOnly = true)
     appendToIvfIndex(s, d, root)
@@ -3124,7 +3094,6 @@ object Similarity extends QueryModule {
     * shortlist misses MaxSim winners" (scorer/geometry mismatch). */
   private[graft] def exactCosineTop5(s: SparkSession, d: String,
                                      nq: Long): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = quantized(s, d)
     val queries = vecs.filter(col("vec_id") < nq)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -3147,7 +3116,6 @@ object Similarity extends QueryModule {
     * pipeline against (linear in corpus, q80's shape). */
   private[graft] def exactMaxSimTop5(s: SparkSession, d: String,
                                      nq: Long): DataFrame = {
-    GraftFunctions.register(s)
     val vecs = quantized(s, d)
     val queries = vecs.filter(col("vec_id") < nq)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -3182,7 +3150,6 @@ object Similarity extends QueryModule {
                                         nprOverride: Option[Long] = None,
                                         queriesOverride: Option[DataFrame] = None)
       : DataFrame = {
-    GraftFunctions.register(s)
     val npr = nprOverride.getOrElse(4L * committedNpr(s, root))
     maxSimTop5(ivfCandidatePairs(s, d, root, Some(npr), queriesOverride))
   }
@@ -3282,7 +3249,6 @@ object Similarity extends QueryModule {
   private[graft] def multiVectorMaxSimTop5(s: SparkSession, d: String,
       root: String, nprSubOverride: Option[Long] = None,
       queriesOverride: Option[DataFrame] = None): DataFrame = {
-    GraftFunctions.register(s)
     maxSimTop5(
       multiVectorCandidatePairs(s, d, root, nprSubOverride, queriesOverride))
   }
@@ -3324,7 +3290,6 @@ object Similarity extends QueryModule {
     * and replay provably identical.
     */
   private def q413(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val root = ivfIndexRoot(s, d, "full")
     buildIvfIndex(s, d, root, baseOnly = false)
     twoStageMaxSimTop5(s, d, root)
@@ -3385,7 +3350,6 @@ object Similarity extends QueryModule {
     * centroids broadcast + probed lists only).
     */
   private def q414(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val root = ivfIndexRoot(s, d, "full")
     buildIvfIndex(s, d, root, baseOnly = false)
     val exact = exactMaxSimTop5(s, d, 10)
@@ -3480,7 +3444,6 @@ object Similarity extends QueryModule {
     */
   private def q415(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    GraftFunctions.register(s)
     val root = ivfIndexRoot(s, d, "full")
     buildIvfIndex(s, d, root, baseOnly = false)
     streamServe(s, d, s"q415r${q415Runs.incrementAndGet()}",
@@ -3547,7 +3510,6 @@ object Similarity extends QueryModule {
     * probed byte AND 1.1–2.1× cheaper per epoch than the widened pooled
     * path (RecallCheck r14). */
   private def q418(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val root = ivfIndexRoot(s, d, "full")
     buildIvfIndex(s, d, root, baseOnly = false)
     streamServe(s, d, s"q418r${q418Runs.incrementAndGet()}",
@@ -3610,7 +3572,6 @@ object Similarity extends QueryModule {
   }
 
   private def q416(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val M = graft.sources.VersionedManifest
     val root = ivfIndexRoot(s, d, "full")
     buildIvfIndex(s, d, root, baseOnly = false)
@@ -3673,7 +3634,6 @@ object Similarity extends QueryModule {
     * layout exactly like q413.
     */
   private def q417(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val root = ivfIndexRoot(s, d, "full")
     buildIvfIndex(s, d, root, baseOnly = false)
     multiVectorMaxSimTop5(s, d, root)
@@ -3743,7 +3703,6 @@ object Similarity extends QueryModule {
     val M = graft.sources.VersionedManifest
     if (M.latestCommitted(s, s"$root/sq8").nonEmpty) return
     estateBuilds.incrementAndGet()
-    GraftFunctions.register(s)
     val token = java.util.UUID.randomUUID.toString.take(8)
     // q121's integer-exact symmetric rounding (|c| ≤ 127); an all-zero
     // vector (sc = 0) keeps all-zero codes instead of dividing by zero
@@ -3790,7 +3749,6 @@ object Similarity extends QueryModule {
     * whole shortlist (~2% of it at sf0.1). */
   private[graft] def plaidPrunedMaxSimTop5(s: SparkSession, d: String,
       root: String, pruneK: Int = PlaidPruneK): DataFrame = {
-    GraftFunctions.register(s)
     val M = graft.sources.VersionedManifest
     val queries = quantized(s, d).filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -3823,7 +3781,6 @@ object Similarity extends QueryModule {
     * generation, encode, approximate scoring, prune, and rerank from
     * base tables — bit-exact integers end to end. */
   private def q419(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val root = ivfIndexRoot(s, d, "full")
     buildIvfIndex(s, d, root, baseOnly = false)
     buildSq8Sidecar(s, d, root)
@@ -3924,7 +3881,6 @@ object Similarity extends QueryModule {
     */
   private def q411(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    GraftFunctions.register(s)
     val M = graft.sources.VersionedManifest
     val run = q411Runs.incrementAndGet()
     val root = graft.StagingDirs.register(
@@ -3973,7 +3929,6 @@ object Similarity extends QueryModule {
     * train+serve from base tables — bit-exact integer training is the
     * proof the committed artifact equals the replay. */
   private def q407(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val root = ivfIndexRoot(s, d, "full")
     buildIvfIndex(s, d, root, baseOnly = false)
     serveFromIvfIndex(s, d, root)
@@ -3989,7 +3944,6 @@ object Similarity extends QueryModule {
     * them, base-geometry probe budget — exactly what the two committed
     * versions address. */
   private def q408(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val root = ivfIndexRoot(s, d, "base")
     buildIvfIndex(s, d, root, baseOnly = true)
     appendToIvfIndex(s, d, root)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Exact, QueryModule, Tables}
+import graft.functions.Digest
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -504,8 +505,7 @@ object TextOps extends QueryModule {
   private def q334(s: SparkSession, d: String): DataFrame = {
     val pairs = q75(s, d).select(col("da"), col("db"))
     val split = Tables.documents(s, d).select(col("doc_id"),
-        expr("CAST(conv(substring(md5(concat('doc-', CAST(doc_id AS STRING))), 1, 7), 16, 10) AS BIGINT) % 100")
-          .as("b"))
+        Digest.docBucket(100).as("b"))
       .select(col("doc_id"),
         when(col("b") < 80, "train").when(col("b") < 90, "val")
           .otherwise("test").as("sp"),
@@ -874,7 +874,7 @@ object TextOps extends QueryModule {
   private def q78(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("lang"),
-        expr("CAST(conv(substring(md5(text), 1, 7), 16, 10) AS BIGINT)").as("h"))
+        Digest.bucket(col("text"), 1, 7).as("h"))
       .groupBy(col("lang"))
       .agg(graft.functions.BottomK.bottomK(4)(col("h")).as("b4"),
         count(lit(1)).as("n_docs"))
@@ -1476,8 +1476,7 @@ object TextOps extends QueryModule {
       .select(col("doc_id"), posexplode(expr(
         "transform(sequence(0, size(t)-3), i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"))
         .as(Seq("pos", "g")))
-      .withColumn("h",
-        expr("CAST(conv(substring(md5(g), 1, 14), 16, 10) AS BIGINT)"))
+      .withColumn("h", Digest.bucket(col("g"), 1, 14))
     val fps = grams
       .withColumn("h1", lead(col("h"), 1).over(byDoc))
       .withColumn("h2", lead(col("h"), 2).over(byDoc))
@@ -1746,8 +1745,8 @@ object TextOps extends QueryModule {
     val hashed = df
       .select(keys.map(col) :+ explode(col("shingles")).as("x"): _*)
       .select(keys.map(col) ++ Seq(
-        expr("CAST(conv(substring(md5(x), 1, 7), 16, 10) AS BIGINT)").as("h1"),
-        expr("CAST(conv(substring(md5(x), 9, 7), 16, 10) AS BIGINT)").as("h2")): _*)
+        Digest.bucket(col("x"), 1, 7).as("h1"),
+        Digest.bucket(col("x"), 9, 7).as("h2")): _*)
     val mins = (0 until 16).map(i => min(col("h1") + lit(i.toLong) * col("h2")).as(s"m$i"))
     hashed.groupBy(keys.map(col): _*).agg(mins.head, mins.tail: _*)
       .select(keys.map(col) :+
@@ -2086,7 +2085,6 @@ object TextOps extends QueryModule {
     // means exactly like MIN/MAX; n_replicates was count of the always-full
     // b ∈ [0,32) explode, a constant). TextOpsSpec pins new ≡ old spelling.
     val B = 32
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.events(s, d)
       .select(col("event_type"), Exact.money(col("value")).as("v"),
         expr("graft_bootweights(CAST(event_id AS STRING))").as("ws"))
@@ -2256,7 +2254,6 @@ object TextOps extends QueryModule {
     // — no gram shuffle, no (doc,n,g) join, no per-n totals exchange. The
     // 4 output rows are rebuilt by an explode of the constant n sequence.
     // TextOpsSpec pins new ≡ old spelling.
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), toks(col("text")).as("r"))
       .withColumn("c", expr("filter(r, (x, i) -> (i + 1) % 7 != 0)"))
@@ -2527,9 +2524,7 @@ object TextOps extends QueryModule {
         (col("value") > 480.0).cast(LongType).as("hit"))
       .groupBy(col("user_id"), col("event_type"))
       .agg(max(col("hit")).as("converted"))
-      .withColumn("arm",
-        expr("CAST(conv(substring(md5(concat('ab-', CAST(user_id AS " +
-          "STRING))), 1, 7), 16, 10) AS BIGINT) % 2"))
+      .withColumn("arm", Digest.bucket(Digest.salted("ab-", col("user_id")), 1, 7) % 2)
     perUserType.groupBy(col("event_type"))
       .agg(
         sum(when(col("arm") === 0, 1L).otherwise(0L)).as("na"),

@@ -1,9 +1,9 @@
 package graft.sources
 
-import java.security.MessageDigest
 import java.util.{Map => JMap}
 
 import graft.QueryModule
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchNamespaceException, NoSuchTableException, NoSuchViewException}
@@ -257,11 +257,10 @@ private[sources] class LandProcedure(dataDir: String)
 
 /** `split_bucket(key STRING, n INT) → INT`: the engine's ONE seed-free
   * splitter — `conv(substring(md5(key), 1, 7), 16, 10) % n`, the exact
-  * q69/q238 spelling — as a catalog-shipped V2 scalar function. The
-  * digest math reproduces the hex-prefix parse bit-for-bit (first 3
-  * digest bytes plus the high nibble of the 4th ARE the first 7 hex
-  * chars), so SQL-front-door users, the Scala API and the DuckDB oracle
-  * replay all agree on every split ever taken.
+  * q69/q238 spelling — as a catalog-shipped V2 scalar function. It reads
+  * the hex prefix off the digest bytes with [[Digest]]'s JVM form, so
+  * SQL-front-door users, the Scala API and the DuckDB oracle replay all
+  * agree on every split ever taken.
   */
 object SplitBucket extends UnboundFunction {
   override def name(): String = "split_bucket"
@@ -286,21 +285,13 @@ object BoundSplitBucket extends ScalarFunction[Int] {
   override def isDeterministic: Boolean = true
   override def isResultNullable: Boolean = false
 
-  private val md = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
   /** Magic method: Spark plans this as a codegen'd `Invoke` on unboxed
     * args — no row boxing, no UDF.
     */
   def invoke(key: UTF8String, n: Int): Int = {
     require(n > 0, s"split_bucket: n must be positive, got $n")
-    val d = md.get(); d.reset()
-    val h = d.digest(key.getBytes)
-    // first 7 hex chars of the digest as an integer (28 bits, positive)
-    val v = ((h(0) & 0xffL) << 20) | ((h(1) & 0xffL) << 12) |
-      ((h(2) & 0xffL) << 4) | ((h(3) & 0xf0L) >>> 4)
-    (v % n).toInt
+    val h = Digest.instance.digest(key.getBytes)
+    (Digest.nibbles(h, 0, 7) % n).toInt
   }
   /** Interpreted fallback for engines that skip the magic-method path. */
   override def produceResult(row: InternalRow): Int =

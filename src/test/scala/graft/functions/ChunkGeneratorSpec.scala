@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 class ChunkGeneratorSpec extends SparkSpec {
 
   private def chunked(rows: Seq[(Long, Seq[String])], size: Int, stride: Int) = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     rows.toDF("id", "t")
       .selectExpr("id", s"graft_chunks(t, $size, $stride) AS (ci, chunk)")
@@ -34,7 +33,6 @@ class ChunkGeneratorSpec extends SparkSpec {
   }
 
   test("graft_chunks equals the explode(sequence)+slice spelling on corpus data") {
-    GraftFunctions.register(spark)
     val docs = graft.Tables.documents(spark, sf0001)
       .select(col("doc_id"), filter(split(col("text"), " "), t => length(t) > 0).as("t"))
     val native = docs
@@ -51,7 +49,6 @@ class ChunkGeneratorSpec extends SparkSpec {
   }
 
   test("graft_chunks plans as a Generate node, not a lateral join") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1L, Seq("a", "b"))).toDF("id", "t")
       .selectExpr("id", "graft_chunks(t, 2, 1) AS (ci, chunk)")
@@ -61,7 +58,6 @@ class ChunkGeneratorSpec extends SparkSpec {
   }
 
   test("graft_chunks rejects non-positive or non-literal size") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1L, Seq("a"))).toDF("id", "t")
     intercept[Exception] {

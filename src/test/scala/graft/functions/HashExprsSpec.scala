@@ -46,7 +46,6 @@ class HashExprsSpec extends SparkSpec {
       )).as("shingles"))
 
   test("graft_minhash matches the explode/conv/MIN-aggregate spelling on the real corpus") {
-    GraftFunctions.register(spark)
     val sh = realShingles
     val fused = sh.select(col("id"), expr("graft_minhash(shingles, 16)").as("ms"))
     val old = compositeMinhash(sh)
@@ -56,7 +55,6 @@ class HashExprsSpec extends SparkSpec {
   }
 
   test("graft_minhash degenerate inputs: null/empty arrays null out, null elements are skipped") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Array[String]("a b c", "b c d")),
@@ -76,7 +74,6 @@ class HashExprsSpec extends SparkSpec {
   }
 
   test("graft_simhash matches the explode/vote-aggregate spelling on the real corpus") {
-    GraftFunctions.register(spark)
     val tok = graft.Tables.documents(spark, sf0001)
       .select(col("doc_id").as("id"), split(col("text"), " ").as("tokens"))
     val fused = tok.select(col("id"), expr("graft_simhash(tokens, 32)").as("sig"))
@@ -87,7 +84,6 @@ class HashExprsSpec extends SparkSpec {
   }
 
   test("graft_simhash degenerate inputs: null token votes -1 everywhere, null/empty arrays null out") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Array[String]("alpha", "beta", "gamma")),
@@ -106,7 +102,6 @@ class HashExprsSpec extends SparkSpec {
   }
 
   test("fused signatures run inside whole-stage codegen (no fallback project)") {
-    GraftFunctions.register(spark)
     val sh = realShingles
     val plan = sh.select(expr("graft_minhash(shingles, 16)"))
       .queryExecution.executedPlan.toString

@@ -21,7 +21,6 @@ class TextKernelsSpec extends SparkSpec {
         "array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), ' ')"))
 
   test("graft_bpe_pairs matches the posexplode/lead-window pair stream on the real vocab") {
-    GraftFunctions.register(spark)
     val v = realVocab
     val byW = Window.partitionBy(col("w")).orderBy(col("pos"))
     val old = v
@@ -66,7 +65,6 @@ class TextKernelsSpec extends SparkSpec {
   }
 
   test("graft_bpe_merge matches the islands-window merge on the real vocab for the top pairs") {
-    GraftFunctions.register(spark)
     val v = realVocab.localCheckpoint()
     // take the 3 most frequent adjacent pairs — includes the actual step-1 argmax
     val tops = v.select(explode(expr("graft_bpe_pairs(s)")).as("pair"), col("freq"))
@@ -83,7 +81,6 @@ class TextKernelsSpec extends SparkSpec {
   }
 
   test("graft_bpe_merge adversarial runs: overlapping self-pairs merge greedily left-to-right") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rows = Seq(
       ("w1", "a a a a"), ("w2", "a a a"), ("w3", "a"), ("w4", "b c"),
@@ -124,7 +121,6 @@ class TextKernelsSpec extends SparkSpec {
   }
 
   test("graft_bleu_clip matches the explode/join/least spelling on the real corpus") {
-    GraftFunctions.register(spark)
     val docs = graft.Tables.documents(spark, sf0001)
       .select(col("doc_id"), split(col("text"), " ").as("r"))
       .withColumn("c", expr("filter(r, (x, i) -> (i + 1) % 7 != 0)"))
@@ -140,7 +136,6 @@ class TextKernelsSpec extends SparkSpec {
   }
 
   test("graft_bleu_clip degenerate inputs: short/empty sides clip to zero") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rows = Seq(
       (Seq("a", "b", "a", "b"), Seq("a", "b", "c")),
@@ -159,7 +154,6 @@ class TextKernelsSpec extends SparkSpec {
   }
 
   test("graft_bootweights matches the explode/md5/CASE spelling including null ids") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val ids = ((0L until 500L).map(Some(_): Option[Long]) :+ (None: Option[Long]))
       .toDF("event_id")
@@ -181,7 +175,6 @@ class TextKernelsSpec extends SparkSpec {
   }
 
   test("graft_winhash matches the transform/xxhash64/array_join spelling on the real corpus") {
-    GraftFunctions.register(spark)
     val docs = graft.Tables.documents(spark, sf0001)
       .select(col("doc_id"), filter(split(col("text"), " "), t => length(t) > 0).as("t"))
       .filter(size(col("t")) >= 16)
@@ -198,7 +191,6 @@ class TextKernelsSpec extends SparkSpec {
   }
 
   test("graft_cms matches the md5-bucket transform spelling on the real corpus") {
-    GraftFunctions.register(spark)
     val bucket = "CAST(conv(substring(md5(concat('cms-', CAST(r AS STRING)," +
       " '-', w)), 1, 7), 16, 10) AS BIGINT) % 512"
     val tok = graft.Tables.documents(spark, sf0001)

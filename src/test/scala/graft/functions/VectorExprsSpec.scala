@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 class VectorExprsSpec extends SparkSpec {
 
   test("graft_dot computes exact integer dot products (codegen path)") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1L, 2L, 3L), Array(4L, 5L, 6L)),   // 4+10+18 = 32
@@ -18,7 +17,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("graft_dot matches the zip_with/aggregate spelling on real data") {
-    GraftFunctions.register(spark)
     val vecs = graft.Tables.embeddings(spark, sf0001).select(
       col("vec_id"),
       expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT))").as("v"))
@@ -30,14 +28,12 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("graft_dot is null-safe") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Some(Array(1L)), None: Option[Array[Long]])).toDF("a", "b")
     assert(df.select(expr("graft_dot(a, b)")).collect()(0).isNullAt(0))
   }
 
   test("graft_dot replicates builtin null semantics: unequal lengths and null elements") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // unequal lengths: zip_with null-pads the shorter side → null sum
     // null element anywhere → null product → null sum
@@ -69,7 +65,6 @@ class VectorExprsSpec extends SparkSpec {
       s"graft_dot(slice($a, m * 8 + 1, 8), slice($b, n * 8 + 1, 8)))))")
 
   test("graft_maxsim matches the HOF spelling on real 64-wide vectors") {
-    GraftFunctions.register(spark)
     val vecs = graft.Tables.embeddings(spark, sf0001).select(
       col("vec_id"),
       expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT))").as("v"))
@@ -83,7 +78,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("graft_maxsim replicates the HOF spelling's degenerate-input semantics") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     def arr(n: Int, seed: Int): Array[java.lang.Long] =
       Array.tabulate(n)(i => java.lang.Long.valueOf(((i * 37 + seed * 101) % 19 - 9).toLong))
@@ -118,10 +112,8 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("spark.sql.extensions=graft.GraftExtensions injects function + rule at session build") {
-    // the shared spec session is built WITH the extensions config and no
-    // test in this suite ran GraftFunctions.register before this point is
-    // guaranteed — so assert via a CHILD session, which re-derives its
-    // state from the context's extensions and never saw register()
+    // assert via a CHILD session, which re-derives its state from the
+    // context's extensions rather than from anything a query installed
     val child = spark.newSession()
     val viaSql = child.sql(
       "SELECT graft_dot(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d").head.getLong(0)

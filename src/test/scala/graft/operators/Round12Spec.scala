@@ -263,7 +263,6 @@ class Round12Spec extends SparkSpec {
 
   test("q412 MaxSim dominates the pooled dot product pair-wise") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // Σ_m max_m' ⟨q_m, d_m'⟩ ≥ Σ_m ⟨q_m, d_m⟩ = ⟨q, d⟩ for EVERY pair
     // (the max over m' includes m' = m) — the property that makes late
     // interaction a refinement of single-vector retrieval

@@ -1,13 +1,11 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 class RewritesSpec extends SparkSpec {
 
   test("built-in zip_with/aggregate dot product rewrites to graft_dot") {
-    GraftFunctions.register(spark)
     // parquet-backed input so constant folding cannot pre-evaluate the plan
     val vecs = graft.Tables.embeddings(spark, sf0001).select(
       col("vec_id"),
@@ -24,7 +22,6 @@ class RewritesSpec extends SparkSpec {
   }
 
   test("rewrite leaves non-matching aggregates untouched") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // sum of squares plus 1 — different zero literal, must NOT rewrite
     val df = Seq((Array(1L, 2L), Array(3L, 4L))).toDF("a", "b")
