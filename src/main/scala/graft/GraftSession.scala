@@ -42,6 +42,11 @@ object GraftSession {
     *     2 MB peak execution memory in a corpus pass falls from 65 to
     *     9 MB. A record larger than a page still gets a page of its own
     *     size.
+    *
+    * `spark.sql.legacy.parquet.nanosAsLong` = true lets the events table's
+    * TIMESTAMP(NANOS) generation be read at all (see `Tables.events`). It
+    * is set here, not scoped around the read, because the parquet scan
+    * reads it at execution time, after any [[withConf]] scope has closed.
     */
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
@@ -54,11 +59,58 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "400")
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.buffer.pageSize", "2m")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Build (or reuse) the session and quiet the logs. */
   def get(cpus: String): SparkSession = {
     val s = builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Run `body` with each `k -> v` set on `s`'s session conf, then put
+    * every key back as it was: a key that was set gets its old value, a
+    * key that was unset is unset again (so a key with a fallback, such as
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, keeps following
+    * it). This holds whether `body` returns or throws. The semantics are
+    * those of Spark's test-side `SQLHelper.withSQLConf`: "was set" means
+    * the key is in `conf.getAll`, not that `getOption` finds a value,
+    * since `getOption` returns a registered key's default for an unset
+    * key.
+    *
+    * Only what plans or runs inside the scope sees the values. A
+    * DataFrame returned from `withConf` plans under the restored conf
+    * when an action runs it, so a body whose plan depends on the scoped
+    * values must `localCheckpoint` its result inside the scope.
+    */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val explicit = s.conf.getAll
+    val saved = kvs.map { case (k, _) => k -> explicit.get(k) }
+    try {
+      kvs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally saved.reverseIterator.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** Input bytes per shuffle partition for [[inputParts]]. */
+  private val partitionBytes = 32L * 1024 * 1024
+
+  /** Shuffle partitions sized to the input at `path` (a file, or a
+    * directory of files): one per 32 MiB, clamped to [`floor`, the
+    * session's `spark.sql.shuffle.partitions`]. A small working set then
+    * stops paying task launch and per-partition state for every session
+    * partition, while a large input still spreads across all of them.
+    */
+  def inputParts(s: SparkSession, path: String, floor: Int): Int = {
+    val sess = s.conf.get("spark.sql.shuffle.partitions").toLong
+    val src = new java.io.File(path)
+    val bytes =
+      if (src.isDirectory)
+        Option(src.listFiles()).map(_.filter(_.isFile).map(_.length).sum).getOrElse(0L)
+      else src.length
+    math.max(floor.toLong, math.min(sess, bytes / partitionBytes + 1L)).toInt
   }
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.StructType
 object Tables {
 
   /** SQL confs whose values change what parquet schema inference returns
-    * for the same files (`events` flips the first).
+    * for the same files.
     */
   private val inferenceConfs = Seq(
     "spark.sql.legacy.parquet.nanosAsLong",
@@ -83,9 +83,10 @@ object Tables {
   /** The events table's `ts` has shipped in two physical spellings across
     * testdata generations: TIMESTAMP(NANOS) — which Spark's reader rejects
     * outright ([PARQUET_TYPE_ILLEGAL]) unless read as a plain long
-    * (`spark.sql.legacy.parquet.nanosAsLong`) and floor-truncated to
-    * microseconds — and plain TIMESTAMP(MICROS) without UTC adjustment,
-    * which Spark infers as TIMESTAMP_NTZ. Dispatch on the landed type and
+    * (`spark.sql.legacy.parquet.nanosAsLong`, set by
+    * [[GraftSession.builder]]) and floor-truncated to microseconds — and
+    * plain TIMESTAMP(MICROS) without UTC adjustment, which Spark infers
+    * as TIMESTAMP_NTZ. Dispatch on the landed type and
     * normalize both to session-zone TIMESTAMP: under the harness's UTC
     * session the NTZ→LTZ cast is wall-clock-identical to what DuckDB's
     * naive-timestamp read sees, so the oracle compares equal either way.
@@ -93,7 +94,6 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = apply(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType => // nanos-as-long generation: floor-truncate to micros

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Exact, QueryModule, Tables}
+import graft.GraftSession.{inputParts, withConf}
 import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -489,8 +490,7 @@ object CorpusOps extends QueryModule {
     // input (1.3M shingle pairs → 256 edges at sf0.1). Run the loop at a
     // parallelism sized to it, not to the scan: each round is one small
     // shuffle, and task-launch overhead dominates when every shuffle fans
-    // out to the session's scan-sized partition count. The session
-    // setting is restored after the loop.
+    // out to the session's scan-sized partition count.
     val sessParts = s.conf.get("spark.sql.shuffle.partitions")
     val nEdges = edgesCp.count()
     // floor 2, not 1: at 1 the loop inputs report SinglePartition, and a
@@ -516,21 +516,16 @@ object CorpusOps extends QueryModule {
     // groupBy(db) neighbor-min aggregation — the actual label movement
     // along edges, which no partitioning can remove.
     //
-    // AQE is OFF inside the loop (restored after): under AQE the
-    // checkpoint sees an AdaptiveSparkPlan whose outputPartitioning is
-    // still UnknownPartitioning, so every round re-shuffled both join
+    // AQE is OFF inside the loop: under AQE the checkpoint sees an
+    // AdaptiveSparkPlan whose outputPartitioning is still
+    // UnknownPartitioning, so every round re-shuffled both join
     // inputs (the r15 before-plan: 4 Exchanges per round, all feeding
     // hash(…, loopParts) of checkpointed UnknownPartitioning(0) scans).
     // Nothing is lost: the loop's partition count is already sized to the
     // edge volume above — the one job AQE would do here — and the
     // remaining aggregation shuffle is partial-agg'd map-side.
-    val sessAqe = s.conf.get("spark.sql.adaptive.enabled")
-    var labels: DataFrame = null
-    var converged = false
-    var round = 0
-    try {
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
+    withConf(s, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> loopParts.toString) {
       val bi = edgesCp.union(edgesCp.select(col("db").as("da"), col("da").as("db")))
         .repartition(loopParts, col("da"))
         .localCheckpoint()
@@ -538,8 +533,10 @@ object CorpusOps extends QueryModule {
       // checkpointed `bi`, so the distinct's partial agg runs on the
       // hash(da)-partitioned rows and needs no further exchange; not
       // checkpointed — round 1 computes it once inside its own checkpoint job
-      labels = bi.select(col("da").as("id")).distinct()
+      var labels = bi.select(col("da").as("id")).distinct()
         .select(col("id"), col("id").as("comp"))
+      var converged = false
+      var round = 0
       while (!converged) {
         round += 1
         val nbrMin = bi.join(labels, col("da") === col("id"))
@@ -560,11 +557,8 @@ object CorpusOps extends QueryModule {
         converged = nextCp.filter(col("changed")).limit(1).count() == 0
         labels = nextCp.select(col("id"), col("comp"))
       }
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", sessParts)
-      s.conf.set("spark.sql.adaptive.enabled", sessAqe)
+      labels
     }
-    labels
   }
 
   private def q85(s: SparkSession, d: String): DataFrame =
@@ -2066,6 +2060,18 @@ object CorpusOps extends QueryModule {
 
   // --------------------------------------------------------------- q229
 
+  /** Build the vocabulary and run the merge chain over it (shared by
+    * q229/q234) with shuffle partitions sized to the documents input
+    * ([[graft.GraftSession.inputParts]], guide §2.2): the chain's working
+    * set is the distinct-word vocabulary — a sliver of the corpus — and
+    * each of its 8 argmax jobs pays task-launch overhead for every
+    * shuffle partition. Floor 2, not 1, for the same
+    * maxSinglePartitionBytes escape-hatch reason as [[components]].
+    */
+  private def withBpeParts[T](s: SparkSession, d: String)(body: => T): T =
+    withConf(s, "spark.sql.shuffle.partitions" ->
+      inputParts(s, s"$d/documents.parquet", 2).toString)(body)
+
   /** One BPE merge iteration over a (w, freq, s) vocabulary — s is the
     * word's current SYMBOL string (space-joined; symbols are space-free
     * by construction since words come from whitespace tokenization).
@@ -2104,38 +2110,6 @@ object CorpusOps extends QueryModule {
     * k−1's merge), so 8 driver round-trips of ONE ROW each is the
     * scale-independent floor.
     */
-  /** Input-sized parallelism for the BPE chain (the [[components]] /
-    * streamParts discipline, guide §2.2): the chain's working set is the
-    * distinct-word vocabulary — a sliver of the corpus — and each of its
-    * 8 argmax jobs pays task-launch overhead for every shuffle partition.
-    * One partition per `spark.graft.bpe.partitionBytes` (default 32 MiB)
-    * of documents source, clamped to [2, session] so a decade-scale corpus
-    * still spreads across the full parallelism while the bench-scale chain
-    * stops paying 32 tasks per 1-row argmax. Floor 2, not 1, for the same
-    * maxSinglePartitionBytes escape-hatch reason as [[components]].
-    */
-  private def bpeParts(s: SparkSession, d: String): Int = {
-    val sess = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val target = s.conf.getOption("spark.graft.bpe.partitionBytes")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
-    val src = new java.io.File(s"$d/documents.parquet")
-    val bytes =
-      if (src.isDirectory)
-        Option(src.listFiles()).map(_.filter(_.isFile).map(_.length).sum)
-          .getOrElse(0L)
-      else src.length
-    math.max(2, math.min(sess.toLong, bytes / target + 1L).toInt)
-  }
-
-  /** Build the vocabulary (under input-sized shuffle partitions, restored
-    * after) and run the merge chain over it — shared by q229/q234.
-    */
-  private def withBpeParts[T](s: SparkSession, d: String)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", bpeParts(s, d).toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   private def bpeChain(vocab0: DataFrame, maxSteps: Int, weight: String,
                        carry: Seq[String]): (DataFrame, Seq[(Long, String, Long)]) = {
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
@@ -3200,12 +3174,8 @@ object CorpusOps extends QueryModule {
     // Jaccard.pairs does (the size estimate shrinks ~100x through the
     // cached relation's explode + narrow projection, so the planner
     // broadcasts corpus-sized build sides — a shape that dies at the
-    // 8 GB/512M-row broadcast cap long before 100 TB). Same conf escape
-    // hatch as the shared core.
-    val pinOn = s.conf
-      .getOption("spark.graft.jaccard.pinShuffleHash").forall(_.toBoolean)
-    val pin: DataFrame => DataFrame =
-      if (pinOn) (df => df.hint("shuffle_hash")) else identity
+    // 8 GB/512M-row broadcast cap long before 100 TB).
+    val pin = Jaccard.pinFor(Jaccard.StopShingleDf)
     val colds = postings.groupBy(col("e")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= Jaccard.StopShingleDf).select(col("e"))
     val base = postings.join(pin(colds), Seq("e"), "left_semi")

@@ -37,6 +37,14 @@ object Jaccard {
     */
   val StopShingleDf = 256L
 
+  /** The join dressing for relations derived from postings under a df
+    * cap: a finite `maxDf` means corpus-sized ids, so the relation is
+    * pinned to a shuffled hash join (see [[pairs]]); an unbounded one
+    * leaves join selection to the planner.
+    */
+  private[operators] def pinFor(maxDf: Long): DataFrame => DataFrame =
+    if (maxDf == Long.MaxValue) identity else _.hint("shuffle_hash")
+
   /** Pairs `(ida, idb, inter, jac)` with `jac >= minJ`.
     *
     * @param postings distinct `(id, e)` rows — one per set element; ids
@@ -95,14 +103,7 @@ object Jaccard {
     // tens of MB at any corpus size once partitions are byte-sized).
     // maxDf == MaxValue callers (q89: df structurally bounded by the
     // id domain) keep the planner's freedom — their relations are small.
-    // escape hatch (measurement + deployments with reliable stats):
-    // spark.graft.jaccard.pinShuffleHash=false returns join selection to
-    // the planner's estimates
-    val pinOn = postings.sparkSession.conf
-      .getOption("spark.graft.jaccard.pinShuffleHash").forall(_.toBoolean)
-    val pin: DataFrame => DataFrame =
-      if (maxDf == Long.MaxValue || !pinOn) identity
-      else (df => df.hint("shuffle_hash"))
+    val pin = pinFor(maxDf)
     val base =
       if (maxDf == Long.MaxValue) postings
       else {
@@ -143,11 +144,7 @@ object Jaccard {
     */
   def pairsCarried(postings: DataFrame, minJ: Double,
                    maxDf: Long = Long.MaxValue): DataFrame = {
-    val pinOn = postings.sparkSession.conf
-      .getOption("spark.graft.jaccard.pinShuffleHash").forall(_.toBoolean)
-    val pin: DataFrame => DataFrame =
-      if (maxDf == Long.MaxValue || !pinOn) identity
-      else (df => df.hint("shuffle_hash"))
+    val pin = pinFor(maxDf)
     val base =
       if (maxDf == Long.MaxValue) postings
       else {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Exact, QueryModule, Tables}
+import graft.GraftSession.withConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1195,9 +1196,7 @@ object Joins extends QueryModule {
     */
   private def q281(s: SparkSession, d: String): DataFrame = {
     auditAndDeclare(s, d)
-    val prev = s.conf.getOption("spark.graft.ri.eliminate").getOrElse("false")
-    s.conf.set("spark.graft.ri.eliminate", "true")
-    try {
+    withConf(s, "spark.graft.ri.eliminate" -> "true") {
       val li = Tables.lineitem(s, d)
       val o = Tables.orders(s, d)
       val p = Tables.part(s, d)
@@ -1209,9 +1208,8 @@ object Joins extends QueryModule {
           count(lit(1)).as("n_items"),
           Exact.sumMoney(col("l_extendedprice")).as("gross"))
         .orderBy(col("l_returnflag"))
-      // freeze the eliminated plan while the conf is in scope
       out.localCheckpoint()
-    } finally s.conf.set("spark.graft.ri.eliminate", prev)
+    }
   }
 
   private val q281Sql =

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Exact, QueryModule, Tables}
+import graft.GraftSession.withConf
 import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1060,9 +1061,7 @@ object ScalePatterns extends QueryModule {
     * estimates the filter at the full 280 KB relation size and plans a
     * sort-merge join: the broadcast happens ONLY because ANALYZE ran.
     * PlanSpec pins both static plans; the threshold/CBO confs are scoped
-    * to this query and the plan is frozen inside the scope by an eager
-    * localCheckpoint of the (≤3-row) aggregate, so no conf leaks to
-    * neighbouring queries.
+    * to this query by [[graft.GraftSession.withConf]].
     *
     * Scale: this is the mechanism that picks broadcast vs shuffle for
     * 100 TB facts — at that size "measure then re-plan" (AQE) only helps
@@ -1127,11 +1126,8 @@ object ScalePatterns extends QueryModule {
 
   private def q246(s: SparkSession, d: String): DataFrame = {
     val db = catalogDb(s, d)
-    val cbo0 = s.conf.get("spark.sql.cbo.enabled")
-    val thr0 = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      s.conf.set("spark.sql.cbo.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", (16 * 1024).toString)
+    withConf(s, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> (16 * 1024).toString) {
       val o = s.table(s"$db.orders")
         .filter(col("o_orderdate") >= lit("1996-03-01").cast("date") &&
           col("o_orderdate") <= lit("1996-03-07").cast("date"))
@@ -1141,12 +1137,7 @@ object ScalePatterns extends QueryModule {
         .agg(count(lit(1)).as("n_items"),
           Exact.sumMoney(col("l_extendedprice")).as("gross"))
         .orderBy(col("l_linestatus"))
-      // freeze the CBO-planned physical plan inside the conf scope (the
-      // checkpointed result is the ≤|linestatus|-row aggregate)
-      out.localCheckpoint()
-    } finally {
-      s.conf.set("spark.sql.cbo.enabled", cbo0)
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", thr0)
+      out.localCheckpoint() // the ≤|linestatus|-row aggregate
     }
   }
 
@@ -1166,10 +1157,8 @@ object ScalePatterns extends QueryModule {
     * join consumes each side's layout as its distribution and plans ZERO
     * exchanges on the join inputs — the only shuffle left is the final
     * groupBy. Broadcast is disabled in-scope so the plan must reason
-    * about distribution, and the plan is frozen by an eager
-    * localCheckpoint of the ≤5-row aggregate (the q246 discipline);
-    * PlanSpec pins the exchange count. Promotes BucketingSpec's
-    * spec-only evidence to an oracled operator.
+    * about distribution; PlanSpec pins the exchange count. Promotes
+    * BucketingSpec's spec-only evidence to an oracled operator.
     *
     * Scale: bucketing converts every future orderkey join of these
     * tables from two O(data) shuffles into zero — THE amortization for
@@ -1179,16 +1168,13 @@ object ScalePatterns extends QueryModule {
     */
   private def q253(s: SparkSession, d: String): DataFrame = {
     val db = catalogDb(s, d)
-    val thr0 = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val ord0 = s.conf.get("spark.sql.legacy.bucketedTableScan.outputOrdering")
-    try {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // with one file per bucket (catalogDb's pre-write repartition) the
-      // write-time sortBy is real ordering — this flag lets the scan
-      // REPORT it (off by default since SPARK-28632 because multi-file
-      // buckets would need a planning-time listing check), which deletes
-      // both SMJ Sorts: the join runs straight off the layout
-      s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+    // with one file per bucket (catalogDb's pre-write repartition) the
+    // write-time sortBy is real ordering — outputOrdering lets the scan
+    // REPORT it (off by default since SPARK-28632 because multi-file
+    // buckets would need a planning-time listing check), which deletes
+    // both SMJ Sorts: the join runs straight off the layout
+    withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
       val out = s.table(s"$db.b_lineitem")
         .join(s.table(s"$db.b_orders"),
           col("l_orderkey") === col("o_orderkey"))
@@ -1197,9 +1183,6 @@ object ScalePatterns extends QueryModule {
           Exact.sumMoney(col("l_extendedprice")).as("gross"))
         .orderBy(col("o_orderpriority"))
       out.localCheckpoint()
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", thr0)
-      s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", ord0)
     }
   }
 
@@ -1216,9 +1199,9 @@ object ScalePatterns extends QueryModule {
     * the scan's PushedAggregation reads one stats struct per row group
     * and never materializes a data page — for a 100 TB estate, the
     * difference between "what's the key range of this table" costing a
-    * full scan and costing a footer sweep. The same conf-scope +
-    * localCheckpoint discipline as q246; PlanSpec pins PushedAggregation
-    * in the scan and the row-group-stats ReadSchema.
+    * full scan and costing a footer sweep. The confs are scoped as in
+    * q246; PlanSpec pins PushedAggregation in the scan and the
+    * row-group-stats ReadSchema.
     *
     * Scale: cost is O(#row groups), independent of row count — the
     * footer sweep parallelizes over files exactly like the data scan
@@ -1226,17 +1209,15 @@ object ScalePatterns extends QueryModule {
     * stats, this ANSWERS by stats.
     */
   private def q254(s: SparkSession, d: String): DataFrame = {
-    val agg0 = s.conf.get("spark.sql.parquet.aggregatePushdown")
-    val v10 = s.conf.get("spark.sql.sources.useV1SourceList")
-    try {
-      s.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-      // footer-stats pushdown lives in the DSv2 ParquetScan only — route
-      // parquet off the v1 list for this plan. Timestamp columns are
-      // excluded by the pushdown rules (INT96/NTZ stats ambiguity), so
-      // the query sticks to integer key stats: one unsupported column
-      // would silently veto the whole pushdown.
-      s.conf.set("spark.sql.sources.useV1SourceList",
-        v10.split(",").filterNot(_.trim == "parquet").mkString(","))
+    // footer-stats pushdown lives in the DSv2 ParquetScan only — route
+    // parquet off the v1 list for this plan. Timestamp columns are
+    // excluded by the pushdown rules (INT96/NTZ stats ambiguity), so
+    // the query sticks to integer key stats: one unsupported column
+    // would silently veto the whole pushdown.
+    val v1 = s.conf.get("spark.sql.sources.useV1SourceList")
+      .split(",").filterNot(_.trim == "parquet").mkString(",")
+    withConf(s, "spark.sql.parquet.aggregatePushdown" -> "true",
+        "spark.sql.sources.useV1SourceList" -> v1) {
       val out = s.read.parquet(s"$d/lineitem.parquet")
         .agg(count(lit(1)).as("n_rows"),
           min(col("l_orderkey")).as("min_key"),
@@ -1244,9 +1225,6 @@ object ScalePatterns extends QueryModule {
           min(col("l_partkey")).as("min_part"),
           max(col("l_partkey")).as("max_part"))
       out.localCheckpoint()
-    } finally {
-      s.conf.set("spark.sql.parquet.aggregatePushdown", agg0)
-      s.conf.set("spark.sql.sources.useV1SourceList", v10)
     }
   }
 
@@ -2196,18 +2174,11 @@ object ScalePatterns extends QueryModule {
     * data change, just runtime re-planning from shuffle statistics.
     */
   private def q260(s: SparkSession, d: String): DataFrame = {
-    val conf = s.conf
-    val saved = Seq(
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.autoBroadcastJoinThreshold"
-    ).map(k => k -> conf.get(k)).toMap
-    try {
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf(s,
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // a real 100 TB fact arrives in thousands of input splits; at test
       // scale the single parquet file is ONE map task, and AQE can only
       // split a skewed reducer partition along MAPPER boundaries — the
@@ -2226,7 +2197,7 @@ object ScalePatterns extends QueryModule {
           Exact.sumMoney(col("l_extendedprice")).as("gross"))
         .orderBy(col("flag_label"))
       out.localCheckpoint()
-    } finally saved.foreach { case (k, v) => conf.set(k, v) }
+    }
   }
 
   private val q260Sql =
@@ -2258,15 +2229,9 @@ object ScalePatterns extends QueryModule {
     * shuffle shrinking by the join selectivity.
     */
   private def q259(s: SparkSession, d: String): DataFrame = {
-    val thr0 = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val bf0 = s.conf.get("spark.sql.optimizer.runtime.bloomFilter.enabled")
-    val app0 = s.conf.get(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-    try {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      s.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+    withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
       val o = Tables.orders(s, d)
         .filter(col("o_orderdate") >= lit("1996-03-01").cast("timestamp") &&
           col("o_orderdate") <= lit("1996-03-07").cast("timestamp"))
@@ -2277,11 +2242,6 @@ object ScalePatterns extends QueryModule {
           Exact.sumMoney(col("l_extendedprice")).as("gross"))
         .orderBy(col("l_linestatus"))
       out.localCheckpoint()
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", thr0)
-      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", bf0)
-      s.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", app0)
     }
   }
 
@@ -2300,7 +2260,7 @@ object ScalePatterns extends QueryModule {
     * promise of cost-based optimization. Round10Spec pins the optimized
     * join tree (innermost join = {lineitem, part} with CBO; the written
     * {lineitem, orders} without) by traversing the logical plan, not
-    * string-matching. Conf scope + eager localCheckpoint as in q246.
+    * string-matching. Confs scoped as in q246.
     *
     * Scale: at 100 TB the difference is an intermediate of terabytes vs
     * gigabytes feeding the second join — the one decision a human can't
@@ -2309,11 +2269,8 @@ object ScalePatterns extends QueryModule {
     */
   private def q258(s: SparkSession, d: String): DataFrame = {
     val db = catalogDb(s, d)
-    val cbo0 = s.conf.get("spark.sql.cbo.enabled")
-    val jr0 = s.conf.get("spark.sql.cbo.joinReorder.enabled")
-    try {
-      s.conf.set("spark.sql.cbo.enabled", "true")
-      s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+    withConf(s, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.cbo.joinReorder.enabled" -> "true") {
       val out = s.table(s"$db.lineitem")
         .join(s.table(s"$db.orders"),
           col("l_orderkey") === col("o_orderkey")) // facts first: worst order
@@ -2324,9 +2281,6 @@ object ScalePatterns extends QueryModule {
           Exact.sumMoney(col("l_extendedprice")).as("gross"))
         .orderBy(col("p_brand"))
       out.localCheckpoint()
-    } finally {
-      s.conf.set("spark.sql.cbo.enabled", cbo0)
-      s.conf.set("spark.sql.cbo.joinReorder.enabled", jr0)
     }
   }
 
@@ -2698,9 +2652,7 @@ object ScalePatterns extends QueryModule {
     */
   private def q280(s: SparkSession, d: String): DataFrame = {
     mvLayout(s, d)
-    val prev = s.conf.getOption("spark.graft.mv.rewrite").getOrElse("false")
-    s.conf.set("spark.graft.mv.rewrite", "true")
-    try {
+    withConf(s, "spark.graft.mv.rewrite" -> "true") {
       val out = Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(
@@ -2710,9 +2662,8 @@ object ScalePatterns extends QueryModule {
           min(col("l_quantity")).as("min_qty"),
           max(col("l_discount")).as("max_disc"))
         .orderBy(col("l_returnflag"))
-      // freeze the rewritten plan while the conf is in scope
       out.localCheckpoint()
-    } finally s.conf.set("spark.graft.mv.rewrite", prev)
+    }
   }
 
   private val q280Sql =
@@ -3474,13 +3425,9 @@ object ScalePatterns extends QueryModule {
     * (W ≈ median interval width).
     */
   private def q298(s: SparkSession, d: String): DataFrame = {
-    val prev = s.conf.getOption("spark.graft.rangejoin.bin").getOrElse("0")
-    s.conf.set("spark.graft.rangejoin.bin", "3600")
-    try {
-      // freeze the rewritten plan while the conf is in scope (q280's
-      // localCheckpoint discipline)
+    withConf(s, "spark.graft.rangejoin.bin" -> "3600") {
       q298Query(s, d).localCheckpoint()
-    } finally s.conf.set("spark.graft.rangejoin.bin", prev)
+    }
   }
 
   /** The q298 frame WITHOUT conf scoping — shared with PlanSpec so the
@@ -5566,9 +5513,7 @@ object ScalePatterns extends QueryModule {
       java.nio.file.Files.createFile(done)
     }
     val nLive = M.registerDeclaredForeignKeys(s, factDir).toLong
-    val prev = s.conf.getOption("spark.graft.ri.eliminate").getOrElse("false")
-    s.conf.set("spark.graft.ri.eliminate", "true")
-    try {
+    withConf(s, "spark.graft.ri.eliminate" -> "true") {
       val fact = M.readAt(s, factDir, 2)
       val dim = M.readAt(s, dimDir, 1)
       val out = fact.join(dim, fact("o_custkey") === dim("c_custkey"))
@@ -5577,9 +5522,8 @@ object ScalePatterns extends QueryModule {
           Exact.sumMoney(col("o_totalprice")).as("revenue"))
         .crossJoin(broadcast(Seq(nLive).toDF("n_live_fks")))
         .orderBy(col("o_orderpriority"))
-      // freeze the eliminated plan while the conf is in scope
       out.localCheckpoint()
-    } finally s.conf.set("spark.graft.ri.eliminate", prev)
+    }
   }
 
   private val q401Sql =

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryModule, Tables}
+import graft.GraftSession.withConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -128,9 +129,7 @@ object SqlProgrammability extends QueryModule {
     */
   private def q273(s: SparkSession, d: String): DataFrame = {
     Tables.lineitem(s, d).createOrReplaceTempView("lineitem_v")
-    val prev = s.conf.getOption("spark.sql.scripting.enabled")
-    s.conf.set("spark.sql.scripting.enabled", "true")
-    try s.sql(
+    withConf(s, "spark.sql.scripting.enabled" -> "true")(s.sql(
       """BEGIN
         |  DECLARE lo BIGINT;
         |  DECLARE hi BIGINT;
@@ -147,11 +146,7 @@ object SqlProgrammability extends QueryModule {
         |  FROM lineitem_v
         |  GROUP BY bucket, bucket_lo
         |  ORDER BY bucket;
-        |END""".stripMargin)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.scripting.enabled", v)
-      case None => s.conf.unset("spark.sql.scripting.enabled")
-    }
+        |END""".stripMargin))
   }
 
   private val q273Sql =

@@ -5,6 +5,7 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import graft.QueryModule
+import graft.GraftSession.withConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -1205,11 +1206,8 @@ object ArticlesV2 extends QueryModule {
     * the table, not the session.
     */
   private def q261(s: SparkSession, dir: String): DataFrame = {
-    val bk0 = s.conf.get("spark.sql.sources.v2.bucketing.enabled")
-    val thr0 = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf(s, "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val read = () => s.read.format("graft.sources.ArticleSourceV2")
         .option("corpus", "all").option("clusterByIndexation", "true").load()
         .filter(col("indexation").isNotNull)
@@ -1220,9 +1218,6 @@ object ArticlesV2 extends QueryModule {
         .agg(count(lit(1)).as("n_pairs"))
         .orderBy(col("indexation"))
       out.localCheckpoint()
-    } finally {
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", bk0)
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", thr0)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{Exact, QueryModule, Tables}
+import graft.GraftSession.{inputParts, withConf}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -72,7 +73,6 @@ object Streams extends QueryModule {
     * a production deployment points the same code at an arriving directory.
     */
   private[streaming] def streamEvents(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the file stream source wants a DIRECTORY of arriving files — stage a
     // symlink to the single test parquet under tmp (a real deployment
     // points this at the landing directory)
@@ -105,47 +105,21 @@ object Streams extends QueryModule {
   val lastStateRows: scala.collection.concurrent.TrieMap[String, Long] =
     scala.collection.concurrent.TrieMap.empty
 
-  /** Input-volume-sized shuffle/state-store partition count for a bounded
-    * streaming run (guide §2.2 — partitioning must be scale-adaptive, not
-    * a constant tuned for either local mode or the cluster). A streaming
+  /** Run `body` (which starts and awaits a bounded stream over `d`'s
+    * events) with shuffle partitions sized to the events input
+    * ([[graft.GraftSession.inputParts]], floor 1; guide §2.2). A streaming
     * query pins `spark.sql.shuffle.partitions` into its checkpoint at
     * start, and every micro-batch then pays fixed per-partition overhead
     * (state-store provider init, commit files, task launch) for ALL of
     * them — which is why the r14 driver measured q90/q94 ~1.5× SLOWER on
     * 32 cores than 8 at sf0.1: 32 state partitions over a 2 MB backfill
-    * is pure overhead. Sized here from the bytes actually staged for the
-    * run: one state partition per `spark.graft.stream.partitionBytes`
-    * (default 32 MiB) of source input, clamped to [1, session shuffle
-    * partitions] so a decade-scale input still spreads across the full
-    * parallelism — at 100 TB the clamp leaves the cluster-sized session
-    * value in charge, at a tiny backfill the state store collapses to a
-    * handful of partitions. The session value is restored after the
-    * bounded run, so batch queries in the same session are untouched.
+    * is pure overhead. The post-stream batch fold a caller builds on the
+    * returned DataFrame executes after the session value is restored, so
+    * only the streaming runtime itself sees the reduced count.
     */
-  private def streamParts(s: SparkSession, d: String): Int = {
-    val sess = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val target = s.conf.getOption("spark.graft.stream.partitionBytes")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
-    val src = new java.io.File(s"$d/events.parquet")
-    val bytes =
-      if (src.isDirectory)
-        Option(src.listFiles()).map(_.filter(_.isFile).map(_.length).sum)
-          .getOrElse(0L)
-      else src.length
-    math.max(1, math.min(sess.toLong, bytes / target + 1L).toInt)
-  }
-
-  /** Run `body` (which starts and awaits a bounded stream over `d`'s
-    * events) with input-sized shuffle partitions; restore the session
-    * value afterwards. The post-stream batch fold a caller builds on the
-    * returned DataFrame executes AFTER the restore, so only the streaming
-    * runtime itself sees the reduced count.
-    */
-  private def withStreamParts[T](s: SparkSession, d: String)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamParts(s, d).toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private def withStreamParts[T](s: SparkSession, d: String)(body: => T): T =
+    withConf(s, "spark.sql.shuffle.partitions" ->
+      inputParts(s, s"$d/events.parquet", 1).toString)(body)
 
   /** Run a bounded stream into a memory sink and return the result.
     * `d` is the dataset dir the stream's source was staged from — the
@@ -857,6 +831,10 @@ object Streams extends QueryModule {
         OutputMode.Update())
   }
 
+  /** The state-store provider conf q122, q132 and q393 scope on. */
+  private val rocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** q122: transformWithState — the third rung of the stateful-streaming
     * ladder (q92 dropDuplicates < q93 flatMapGroupsWithState < q122
     * arbitrary typed state with an explicit store handle): per-user
@@ -868,11 +846,7 @@ object Streams extends QueryModule {
     */
   private def q122(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(s, rocksDbProvider) {
       val purchases = streamEvents(s, d)
         .filter(col("event_type") === "purchase")
         .select(col("user_id"),
@@ -887,9 +861,6 @@ object Streams extends QueryModule {
           col("last.cents").as("cents"))
         .filter(col("n_purchases") >= 3)
         .orderBy(col("user_id"))
-    } finally prev match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
     }
   }
 
@@ -942,11 +913,7 @@ object Streams extends QueryModule {
     */
   private def q132(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(s, rocksDbProvider) {
       val ev = streamEvents(s, d)
         .select(col("user_id"), col("event_type")).as[(Long, String)]
       val tallied = typeTally(ev).toDF("user_id", "event_type", "n")
@@ -961,9 +928,6 @@ object Streams extends QueryModule {
           col("view").as("n_view"), col("purchase").as("n_purchase"),
           col("signup").as("n_signup"))
         .orderBy(col("user_id"))
-    } finally prev match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
     }
   }
 
@@ -2105,11 +2069,7 @@ object Streams extends QueryModule {
     * a config, not a rewrite.
     */
   private def q393(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider")
-    try {
+    withConf(s, rocksDbProvider) {
       val ev = streamEvents(s, d)
         .select(col("event_id"), col("ts"), col("event_type"))
       val doubled = ev.unionByName(streamEvents(s, d)
@@ -2130,9 +2090,6 @@ object Streams extends QueryModule {
         .agg(count(lit(1)).as("n_distinct"))
         .withColumn("rocksdb_state", lit(rocksdbServed))
         .orderBy(col("event_type"))
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
 

@@ -12,20 +12,13 @@ class AqeSkewSpec extends SparkSpec {
 
   test("AQE splits a skewed join partition and preserves the result") {
     import spark.implicits._
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.autoBroadcastJoinThreshold"
-    ).map(k => k -> conf.get(k)).toMap
-    try {
-      // thresholds scaled to fixture size; broadcast off so the join
-      // actually shuffles and AQE has partitions to split
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // thresholds scaled to fixture size; broadcast off so the join
+    // actually shuffles and AQE has partitions to split
+    GraftSession.withConf(spark,
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // 50k rows on ONE key + a sprinkle of others vs a small dim
       val fact = spark.range(50000).select(lit(7L).as("k"), col("id").as("v"))
         .unionByName(spark.range(100).select((col("id") % 10).as("k"), col("id").as("v")))
@@ -38,6 +31,6 @@ class AqeSkewSpec extends SparkSpec {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE did not mark the skewed join:\n$plan")
-    } finally saved.foreach { case (k, v) => conf.set(k, v) }
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.GraftSession.withConf
 import org.apache.spark.sql.functions._
 
 /** Co-located joins via bucketing — the pre-partitioning strategy for
@@ -9,10 +10,8 @@ import org.apache.spark.sql.functions._
 class BucketingSpec extends SparkSpec {
 
   test("join of tables bucketed on the join key plans no shuffle") {
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // disable broadcast so the join must consider distribution
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // disable broadcast so the join must consider distribution
+    try withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_customer")
       Tables.orders(spark, sf0001).write
@@ -36,7 +35,6 @@ class BucketingSpec extends SparkSpec {
       val got = joined.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(got == expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_customer")
     }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.GraftSession.withConf
+
 /** The engine's central cross-engine claim — results are bit-identical
   * regardless of partitioning — tested directly: hash-sensitive queries
   * re-run under a deliberately awkward shuffle partition count (7, vs the
@@ -33,28 +35,22 @@ class DeterminismSpec extends SparkSpec {
       .collect().map(_.toString).toSeq
 
   test("hash-sensitive queries are invariant to shuffle partition count") {
-    val conf = spark.conf
-    val before = conf.get("spark.sql.shuffle.partitions")
     val baseline = sensitive.map(n => n -> rows(n)).toMap
-    try {
-      conf.set("spark.sql.shuffle.partitions", "7")
+    withConf(spark, "spark.sql.shuffle.partitions" -> "7") {
       sensitive.foreach { n =>
         assert(rows(n) == baseline(n), s"$n changed under 7 shuffle partitions")
       }
-    } finally conf.set("spark.sql.shuffle.partitions", before)
+    }
   }
 
   test("hash-sensitive queries are invariant to input split size") {
-    val conf = spark.conf
-    val before = conf.get("spark.sql.files.maxPartitionBytes")
     val baseline = sensitive.map(n => n -> rows(n)).toMap
-    try {
-      // tiny splits -> many more scan partitions -> different partial-agg
-      // boundaries; results must not move
-      conf.set("spark.sql.files.maxPartitionBytes", "65536")
+    // tiny splits -> many more scan partitions -> different partial-agg
+    // boundaries; results must not move
+    withConf(spark, "spark.sql.files.maxPartitionBytes" -> "65536") {
       sensitive.foreach { n =>
         assert(rows(n) == baseline(n), s"$n changed under 64 KiB splits")
       }
-    } finally conf.set("spark.sql.files.maxPartitionBytes", before)
+    }
   }
 }

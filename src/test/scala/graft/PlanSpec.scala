@@ -1,6 +1,7 @@
 package graft
 
 import scala.jdk.CollectionConverters._
+import graft.GraftSession.withConf
 import org.apache.spark.sql.functions.{col, count, expr, lit}
 
 /** Physical-plan shape assertions — the scale posture is part of the
@@ -34,11 +35,8 @@ class PlanSpec extends SparkSpec {
         .groupBy(col("l_linestatus")).agg(count(lit(1)).as("n"))
         .queryExecution.sparkPlan.toString
     }
-    val cbo0 = spark.conf.get("spark.sql.cbo.enabled")
-    val thr0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (16 * 1024).toString)
+    withConf(spark, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> (16 * 1024).toString) {
       val withStats = shape("orders")
       val noStats = shape("orders_nostats")
       assert(withStats.contains("BroadcastHashJoin"),
@@ -46,9 +44,6 @@ class PlanSpec extends SparkSpec {
       assert(!noStats.contains("BroadcastHashJoin") &&
         noStats.contains("SortMergeJoin"),
         s"un-analyzed twin broadcast without stats (contrast lost):\n$noStats")
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", cbo0)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr0)
     }
   }
 
@@ -186,10 +181,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q189 Q21 shape keeps semi+anti on one l_orderkey partitioning") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // force the at-scale posture: no leg fits in a broadcast
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // force the at-scale posture: no leg fits in a broadcast
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan("q189_sole_supplier")
       assert(p.contains("LeftSemi") && p.contains("LeftAnti"),
         s"missing semi/anti joins:\n$p")
@@ -205,7 +198,7 @@ class PlanSpec extends SparkSpec {
         s"probe re-sorts on l_orderkey:\n$p")
       // supplier name lookup must stay broadcast (hinted) even at threshold -1
       assert(p.contains("BroadcastHashJoin"), s"supplier dim not broadcast:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("q190 global-threshold scalar joins back by broadcast, facts never re-shuffle") {
@@ -220,10 +213,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q191 Q13 shape: per-customer count rides the outer join's partitioning") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // at-scale posture: neither side of the outer join fits a broadcast
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // at-scale posture: neither side of the outer join fits a broadcast
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan("q191_custdist")
       // one exchange per join input; the per-customer count must reuse the
       // join's custkey layout (a second c_custkey exchange would re-shuffle
@@ -233,13 +224,11 @@ class PlanSpec extends SparkSpec {
       assert("Exchange hashpartitioning\\(o_custkey".r.findAllIn(p).size == 1,
         s"orders side shuffles more than once:\n$p")
       assert(p.contains("LeftOuter"), s"outer join lost:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("q192 Q17 shape: probe and per-part avg meet on one partkey exchange each") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan("q192_avg_yearly")
       // the decorrelated scalar must JOIN on partkey, not re-execute per
       // row: exactly two partkey exchanges (probe leg + agg leg), with the
@@ -251,13 +240,11 @@ class PlanSpec extends SparkSpec {
       // the part filter must stay a broadcast semi-join into the fact scans
       assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"),
         s"part filter not a broadcast semi-join:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("q193 Q20 shape: both scalar subqueries collapse into ONE pair-key aggregate") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan("q193_concentrated_suppliers")
       // the 1995 and all-time sums share one (l_partkey, l_suppkey)
       // exchange — a second fact-sized shuffle would mean the subqueries
@@ -269,7 +256,7 @@ class PlanSpec extends SparkSpec {
         s"unexpected extra shuffle:\n$p")
       // part filter and supplier name lookup ride broadcasts (hinted)
       assert(p.contains("BroadcastHashJoin"), s"dimension not broadcast:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("q161 RFM scores carry no unpartitioned window; anchor date stays in-plan") {
@@ -308,10 +295,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q197 Q22 shape: scalar broadcasts, anti join shuffles each side once") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // at-scale posture: customer and orders are both facts
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // at-scale posture: customer and orders are both facts
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan("q197_dormant_customers")
       assert(p.contains("LeftAnti"), s"anti join lost:\n$p")
       assert("Exchange hashpartitioning\\(c_custkey".r.findAllIn(p).size == 1 &&
@@ -321,7 +306,7 @@ class PlanSpec extends SparkSpec {
       // broadcast, never by re-executing the aggregation
       assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
         s"global scalar not broadcast:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("q198 Q2 shape: rank-1 window on ONE partkey exchange, dedup rides it") {
@@ -386,10 +371,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q207 Q3 shape: per-order rollup rides the join's orderkey layout") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // at-scale posture: the kept orders don't fit a broadcast
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // at-scale posture: the kept orders don't fit a broadcast
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan("q207_shipping_priority")
       // one exchange per join input, and NO third exchange between the
       // join and the per-order aggregate (group key ⊇ join key)
@@ -397,7 +380,7 @@ class PlanSpec extends SparkSpec {
         "Exchange hashpartitioning\\(o_orderkey".r.findAllIn(p).size == 1,
         s"per-order rollup re-shuffles after the join:\n$p")
       assert(p.contains("TakeOrderedAndProject"), s"top-10 is a global sort:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("q211 Q10 shape: revenue aggregates to custkey before the enrichment") {
@@ -414,11 +397,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q200 LM scoring join meets the model on the bigram key, not broadcast") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // at-scale posture: a web-scale bigram table fits no executor —
-      // the scoring join must stay a shuffle join keyed on (w1, w2)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // at-scale posture: a web-scale bigram table fits no executor —
+    // the scoring join must stay a shuffle join keyed on (w1, w2)
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan("q200_lm_fluency")
       val joinLine = p.linesIterator.find(l =>
         l.contains("Join") && l.contains("w1") && l.contains("w2"))
@@ -426,7 +407,7 @@ class PlanSpec extends SparkSpec {
         s"LM table broadcast — dies at corpus scale:\n$p")
       assert("HashAggregate".r.findAllIn(p).size >= 4,
         s"aggregations not two-phase:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("q201 DSIR feature tables broadcast; scoring never shuffles tokens twice") {
@@ -520,14 +501,11 @@ class PlanSpec extends SparkSpec {
   test("q298 range-join rewrite flips nested-loop to a binned hash join, rows identical") {
     val key = "spark.graft.rangejoin.bin"
     import graft.operators.ScalePatterns
-    def planOf(w: String): (String, Seq[org.apache.spark.sql.Row]) = {
-      val prev = spark.conf.getOption(key).getOrElse("0")
-      spark.conf.set(key, w)
-      try {
+    def planOf(w: String): (String, Seq[org.apache.spark.sql.Row]) =
+      withConf(spark, key -> w) {
         val df = ScalePatterns.q298Query(spark, sf0001)
         (df.queryExecution.executedPlan.toString, df.collect().toSeq)
-      } finally spark.conf.set(key, prev)
-    }
+      }
     val (off, rowsOff) = planOf("0")
     assert(off.contains("NestedLoopJoin"),
       s"without the rule the pure range join must nested-loop:\n$off")
@@ -546,10 +524,8 @@ class PlanSpec extends SparkSpec {
     // completeness only needs bin monotonicity, so the rule must fire
     // and the residual must apply the strictness exactly
     val key = "spark.graft.rangejoin.bin"
-    def run(w: String) = {
-      val prev = spark.conf.getOption(key).getOrElse("0")
-      spark.conf.set(key, w)
-      try {
+    def run(w: String) =
+      withConf(spark, key -> w) {
         val camp = spark.range(50).select(col("id").as("campaign_id"),
           expr("timestamp_seconds(1704067200 + id * 50220)").as("c_start"),
           expr("timestamp_seconds(1704067200 + id * 50220 + 18000)").as("c_end"))
@@ -558,8 +534,7 @@ class PlanSpec extends SparkSpec {
           .groupBy(col("campaign_id")).agg(count(lit(1)).as("n"))
           .orderBy(col("campaign_id"))
         (df.queryExecution.executedPlan.toString, df.collect().toSeq)
-      } finally spark.conf.set(key, prev)
-    }
+      }
     val (off, rowsOff) = run("0")
     val (on, rowsOn) = run("3600")
     assert(off.contains("NestedLoopJoin"), s"expected NLJ without the rule:\n$off")

@@ -9,6 +9,8 @@ import scala.util.Try
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
+import graft.GraftSession.withConf
+
 /** Pins `Tables.apply`'s schema memo: a memoized read returns what a
   * schema-less read returns, launches no Spark job, and never serves a
   * schema for files or inference confs other than those it was inferred
@@ -53,18 +55,8 @@ class TablesSpec extends SparkSpec {
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("a memoized read matches a schema-less read and launches no job") {
-    withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
+    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
       names.foreach { n =>
         val plain = spark.read.parquet(s"$sf0001/$n.parquet")
         Tables(spark, sf0001, n)
@@ -79,10 +71,10 @@ class TablesSpec extends SparkSpec {
   }
 
   test("flipping an inference conf misses the memo") {
-    withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
+    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
       Tables(spark, sf0001, "events")
     }
-    withConf("spark.sql.legacy.parquet.nanosAsLong", "false") {
+    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "false") {
       // a TIMESTAMP(NANOS) generation of events fails inference here, after
       // its footer job has started; either way a miss launches a job
       val (_, jobs) = jobsDuring(Try(Tables(spark, sf0001, "events")))
@@ -90,9 +82,9 @@ class TablesSpec extends SparkSpec {
     }
     // an unadjusted TIMESTAMP(MICROS) ts is TIMESTAMP_NTZ only while NTZ
     // inference is on, so a stale entry would show as a wrong type
-    withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
+    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
       Seq("true", "false").foreach { ntz =>
-        withConf("spark.sql.parquet.inferTimestampNTZ.enabled", ntz) {
+        withConf(spark, "spark.sql.parquet.inferTimestampNTZ.enabled" -> ntz) {
           val plain = spark.read.parquet(s"$sf0001/events.parquet")
           assert(Tables(spark, sf0001, "events").schema === plain.schema, s"NTZ inference $ntz")
         }

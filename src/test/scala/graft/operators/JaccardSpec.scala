@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.GraftSession.withConf
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -76,11 +77,9 @@ class JaccardSpec extends SparkSpec {
       i -> Set(s"r${i}", s"shared${i / 2}", "COMMON")
     }.toMap
     val (p, sz) = postingsDf(sets)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // at-scale posture: neither postings nor the cold-element list fit
-      // a broadcast, so every consumer must meet on an exchange
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // at-scale posture: neither postings nor the cold-element list fit
+    // a broadcast, so every consumer must meet on an exchange
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = Jaccard.pairs(p, sz, minJ = 0.0, maxDf = 10L)
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
@@ -96,7 +95,7 @@ class JaccardSpec extends SparkSpec {
       // and the postings shuffle must be re-read, not re-planned
       assert(plan.contains("ReusedExchange"),
         s"self-join sides re-materialize the postings shuffle:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   private def carriedDf(sets: Map[Int, Set[String]]): DataFrame = {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{SparkEntry, SparkSpec}
+import graft.GraftSession.withConf
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -60,11 +61,8 @@ class Round10Spec extends SparkSpec {
 
   test("q253 bucketed join plans ZERO exchanges on the join inputs") {
     val db = ScalePatterns.catalogDb(spark, sf0001)
-    val thr0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val ord0 = spark.conf.get("spark.sql.legacy.bucketedTableScan.outputOrdering")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
       val p = spark.table(s"$db.b_lineitem")
         .join(spark.table(s"$db.b_orders"),
           col("l_orderkey") === col("o_orderkey"))
@@ -84,19 +82,14 @@ class Round10Spec extends SparkSpec {
       // ordering requirement: the plan must contain NO Sort at all
       assert(!p.contains("Sort "),
         s"bucketed sides re-sorted (multi-file buckets?):\n$p")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr0)
-      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", ord0)
     }
   }
 
   test("q254 min/max/count push to the parquet footer (no data pages read)") {
-    val agg0 = spark.conf.get("spark.sql.parquet.aggregatePushdown")
-    val v10 = spark.conf.get("spark.sql.sources.useV1SourceList")
-    try {
-      spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-      spark.conf.set("spark.sql.sources.useV1SourceList",
-        v10.split(",").filterNot(_.trim == "parquet").mkString(","))
+    val v1 = spark.conf.get("spark.sql.sources.useV1SourceList")
+      .split(",").filterNot(_.trim == "parquet").mkString(",")
+    withConf(spark, "spark.sql.parquet.aggregatePushdown" -> "true",
+        "spark.sql.sources.useV1SourceList" -> v1) {
       val p = spark.read.parquet(s"$sf0001/lineitem.parquet")
         .agg(count(lit(1)).as("n"),
           min(col("l_orderkey")).as("lo"), max(col("l_orderkey")).as("hi"))
@@ -104,9 +97,6 @@ class Round10Spec extends SparkSpec {
       assert(p.contains("PushedAggregation") && p.contains("COUNT(*)") &&
         p.contains("MIN(l_orderkey)") && p.contains("MAX(l_orderkey)"),
         s"aggregates not pushed to the footer scan:\n$p")
-    } finally {
-      spark.conf.set("spark.sql.parquet.aggregatePushdown", agg0)
-      spark.conf.set("spark.sql.sources.useV1SourceList", v10)
     }
   }
 
@@ -128,35 +118,22 @@ class Round10Spec extends SparkSpec {
         case _ => None
       }.toSet
     }
-    val cbo0 = spark.conf.get("spark.sql.cbo.enabled")
-    val jr0 = spark.conf.get("spark.sql.cbo.joinReorder.enabled")
-    try {
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-      val asWritten = innermost(query().queryExecution.optimizedPlan)
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      val reordered = innermost(query().queryExecution.optimizedPlan)
-      assert(asWritten == Set("lineitem", "orders"),
-        s"without CBO the written order must stand: $asWritten")
-      assert(reordered == Set("lineitem", "part"),
-        s"CBO did not move the selective join innermost: $reordered")
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", cbo0)
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", jr0)
+    def innermostWithCbo(on: String) = withConf(spark,
+        "spark.sql.cbo.enabled" -> on, "spark.sql.cbo.joinReorder.enabled" -> on) {
+      innermost(query().queryExecution.optimizedPlan)
     }
+    val asWritten = innermostWithCbo("false")
+    val reordered = innermostWithCbo("true")
+    assert(asWritten == Set("lineitem", "orders"),
+      s"without CBO the written order must stand: $asWritten")
+    assert(reordered == Set("lineitem", "part"),
+      s"CBO did not move the selective join innermost: $reordered")
   }
 
   test("q259 injects a runtime bloom filter on the probe side") {
-    val thr0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val bf0 = spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.enabled")
-    val app0 = spark.conf.get(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
       val o = graft.Tables.orders(spark, sf0001)
         .filter(col("o_orderdate") >= lit("1996-03-01").cast("timestamp") &&
           col("o_orderdate") <= lit("1996-03-07").cast("timestamp"))
@@ -175,27 +152,15 @@ class Round10Spec extends SparkSpec {
         probeFilter)
       assert(probeExchange >= 0 && probeExchange < probeFilter,
         s"bloom filter not below the probe-side shuffle:\n$p")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr0)
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", bf0)
-      spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", app0)
     }
   }
 
   test("q260 AQE marks and splits the skewed join at runtime") {
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.autoBroadcastJoinThreshold"
-    ).map(k => k -> conf.get(k)).toMap
-    try {
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf(spark,
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // sf0.01: the per-key shuffle partitions must clear the 8KB skew
       // threshold (sf0.001's compressed partitions sit under it)
       val li = graft.Tables.lineitem(spark, sf001).repartition(8)
@@ -215,7 +180,7 @@ class Round10Spec extends SparkSpec {
       val p = joined.queryExecution.executedPlan.toString
       assert(p.contains("skew=true"),
         s"AQE did not mark the skewed join on the real tables:\n$p")
-    } finally saved.foreach { case (k, v) => conf.set(k, v) }
+    }
   }
 
   test("q257 z-order prunes on BOTH dimensions; a 1-D sort prunes on one") {
@@ -413,11 +378,10 @@ class Round10Spec extends SparkSpec {
     val planOff = without.queryExecution.executedPlan.toString
     assert(planOff.contains("lineitem.parquet"), planOff)
     val offRows = without.collect().toSeq
-    spark.conf.set("spark.graft.mv.rewrite", "true")
-    val (planOn, onRows) = try {
+    val (planOn, onRows) = withConf(spark, "spark.graft.mv.rewrite" -> "true") {
       val q = rollup()
       (q.queryExecution.executedPlan.toString, q.collect().toSeq)
-    } finally spark.conf.set("spark.graft.mv.rewrite", "false")
+    }
     // the executed plan reads the SUMMARY, not the fact
     assert(planOn.contains("graft_mv") && !planOn.contains("lineitem.parquet"),
       planOn)
@@ -445,11 +409,10 @@ class Round10Spec extends SparkSpec {
     assert(planOff.contains("orders.parquet") && planOff.contains("part.parquet"),
       planOff)
     val offRows = off.collect().toSeq
-    spark.conf.set("spark.graft.ri.eliminate", "true")
-    val (planOn, onRows) = try {
+    val (planOn, onRows) = withConf(spark, "spark.graft.ri.eliminate" -> "true") {
       val q = wide()
       (q.queryExecution.executedPlan.toString, q.collect().toSeq)
-    } finally spark.conf.set("spark.graft.ri.eliminate", "false")
+    }
     // both dimension scans are gone; only the fact remains
     assert(planOn.contains("lineitem.parquet") &&
       !planOn.contains("orders.parquet") && !planOn.contains("part.parquet"),

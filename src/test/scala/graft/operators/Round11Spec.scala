@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{SparkEntry, SparkSpec}
+import graft.GraftSession.withConf
 import org.apache.spark.sql.functions._
 
 /** Round-11 contracts: the ADVICE regression pins (guarded range-join
@@ -14,10 +15,8 @@ class Round11Spec extends SparkSpec {
     // sequence(start, stop, 1) throws when start > stop — before the
     // guard, ONE inverted interval row crashed the whole rewritten query
     val key = "spark.graft.rangejoin.bin"
-    def run(w: String) = {
-      val prev = spark.conf.getOption(key).getOrElse("0")
-      spark.conf.set(key, w)
-      try {
+    def run(w: String) =
+      withConf(spark, key -> w) {
         val iv = spark.range(10).select(col("id").as("iv_id"),
           // every third interval inverted, spanning >1 bin at w=3600
           expr("CASE WHEN id % 3 = 0 THEN id * 10000 + 7200 " +
@@ -31,8 +30,7 @@ class Round11Spec extends SparkSpec {
           .select(col("p_id"), col("iv_id"))
           .orderBy(col("p_id"), col("iv_id"))
         (df.queryExecution.executedPlan.toString, df.collect().toSeq)
-      } finally spark.conf.set(key, prev)
-    }
+      }
     val (off, rowsOff) = run("0")
     assert(off.contains("NestedLoopJoin"), off)
     val (on, rowsOn) = run("3600")
@@ -57,11 +55,10 @@ class Round11Spec extends SparkSpec {
       .agg(count(lit(1)).as("n_rows"))
       .orderBy(col("l_returnflag"))
     val offRows = rollup().collect().toSeq
-    spark.conf.set("spark.graft.mv.rewrite", "true")
-    val (planOn, onRows) = try {
+    val (planOn, onRows) = withConf(spark, "spark.graft.mv.rewrite" -> "true") {
       val q = rollup()
       (q.queryExecution.executedPlan.toString, q.collect().toSeq)
-    } finally spark.conf.set("spark.graft.mv.rewrite", "false")
+    }
     assert(!planOn.contains("graft_mv"),
       s"decoy scan was retargeted to the MV:\n$planOn")
     assert(onRows == offRows, s"$onRows vs $offRows")
@@ -74,11 +71,10 @@ class Round11Spec extends SparkSpec {
     // global aggregates alone
     def total() = graft.Tables.lineitem(spark, sf0001)
       .agg(count(lit(1)).as("n_rows"))
-    spark.conf.set("spark.graft.mv.rewrite", "true")
-    val (planOn, onRows) = try {
+    val (planOn, onRows) = withConf(spark, "spark.graft.mv.rewrite" -> "true") {
       val q = total()
       (q.queryExecution.executedPlan.toString, q.collect().toSeq)
-    } finally spark.conf.set("spark.graft.mv.rewrite", "false")
+    }
     assert(!planOn.contains("graft_mv"),
       s"global aggregate was retargeted to the MV:\n$planOn")
     assert(onRows == total().collect().toSeq)
@@ -358,11 +354,9 @@ class Round11Spec extends SparkSpec {
       "a conversation rendered more than 16 turns")
     // determinism under aggregation order: the same assembly over a
     // 1-partition and a 64-partition shuffle must hash identically
-    val p = spark.conf.get("spark.sql.shuffle.partitions")
-    val one = try {
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
+    val one = withConf(spark, "spark.sql.shuffle.partitions" -> "1") {
       SparkEntry.queries("q346_chat_assembly")(spark, sf0001).collect()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", p)
+    }
     assert(one.map(_.toString).toSeq == rows.map(_.toString).toSeq,
       "transcript hash depends on partial-aggregation order")
     // accounting closes: per-role chars sum to the rendered turns' content
@@ -656,11 +650,10 @@ class Round11Spec extends SparkSpec {
         .orderBy(col("l_returnflag"))
     }
     val offRows = narrowed().collect().toSeq
-    spark.conf.set("spark.graft.ri.eliminate", "true")
-    val (planOn, onRows) = try {
+    val (planOn, onRows) = withConf(spark, "spark.graft.ri.eliminate" -> "true") {
       val q = narrowed()
       (q.queryExecution.executedPlan.toString, q.collect().toSeq)
-    } finally spark.conf.set("spark.graft.ri.eliminate", "false")
+    }
     assert(planOn.contains("graft_r11_dimdecoy"),
       s"join to the unregistered dimension was dropped:\n$planOn")
     assert(onRows == offRows, s"$onRows vs $offRows")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.GraftSession.withConf
 import graft.sources.{VersionedManifest => VM}
 import org.apache.spark.sql.functions._
 
@@ -43,15 +44,13 @@ class Round15Spec extends SparkSpec {
     Similarity.compactIvfIndex(spark, root)
     val key = "spark.graft.ivf.pruneMinBytes"
     // full-read serve: gate above any local size so pruning never fires
-    spark.conf.set(key, Long.MaxValue.toString)
-    val full =
-      try Similarity.serveFromIvfIndex(spark, d, root).collect().toSeq
-      finally spark.conf.unset(key)
+    val full = withConf(spark, key -> Long.MaxValue.toString) {
+      Similarity.serveFromIvfIndex(spark, d, root).collect().toSeq
+    }
     // pruned serve: gate 0 forces the file-skipping path
-    spark.conf.set(key, "0")
-    val pruned =
-      try Similarity.serveFromIvfIndex(spark, d, root).collect().toSeq
-      finally spark.conf.unset(key)
+    val pruned = withConf(spark, key -> "0") {
+      Similarity.serveFromIvfIndex(spark, d, root).collect().toSeq
+    }
     assert(pruned == full,
       s"pruned serving changed the result:\n$pruned\nvs\n$full")
     // the skip is real: on the compacted (cid-clustered) version, a
@@ -90,10 +89,9 @@ class Round15Spec extends SparkSpec {
     Similarity.buildIvfIndex(spark, d, root, baseOnly = true)
     Similarity.appendToIvfIndex(spark, d, root) // v2: no colstats
     val key = "spark.graft.ivf.pruneMinBytes"
-    spark.conf.set(key, "0")
-    val served =
-      try Similarity.serveFromIvfIndex(spark, d, root).collect().toSeq
-      finally spark.conf.unset(key)
+    val served = withConf(spark, key -> "0") {
+      Similarity.serveFromIvfIndex(spark, d, root).collect().toSeq
+    }
     val ref = Similarity.serveFromIvfIndex(spark, d, root).collect().toSeq
     assert(served == ref)
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Exact, SparkSpec, Tables}
+import graft.GraftSession.withConf
 import org.apache.spark.sql.functions._
 
 /** Pins for the scale-pattern rewrites whose point is the PLAN, not the
@@ -83,20 +84,14 @@ class ScalePatternsSpec extends SparkSpec {
     // skewed shuffle partition and splitting it. One hot key carries ~90%
     // of the fact side; thresholds are tuned down so the sf-sized fixture
     // trips the same detector a 100 TB run would.
-    val prev = Seq(
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.autoBroadcastJoinThreshold"
-    ).map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "20KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "20KB")
-      // force a shuffle join: broadcast would dodge the skew machinery
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // broadcast is off to force a shuffle join: broadcast would dodge
+    // the skew machinery
+    withConf(spark,
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "20KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "20KB",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val fact = spark.range(0, 200000)
         .select(when(col("id") % 10 =!= 0, lit(0L)).otherwise(col("id")).as("k"),
           col("id").as("v"))
@@ -110,9 +105,6 @@ class ScalePatternsSpec extends SparkSpec {
       assert(plan.contains("isFinalPlan=true"), s"plan not final: ${plan.take(200)}")
       assert(plan.contains("skew=true"),
         s"AQE did not mark the skewed join (plan: ${plan.take(600)})")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

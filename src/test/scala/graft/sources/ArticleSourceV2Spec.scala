@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.GraftSession.withConf
 import org.apache.spark.sql.functions._
 
 /** Pins the V2 connector's three contracts: row identity with the
@@ -242,11 +243,8 @@ class ArticleSourceV2Spec extends SparkSpec {
   }
 
   test("q261 storage-partitioned join consumes the connector's clustering") {
-    val bk0 = spark.conf.get("spark.sql.sources.v2.bucketing.enabled")
-    val thr0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf(spark, "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       import org.apache.spark.sql.functions._
       val read = () => spark.read.format("graft.sources.ArticleSourceV2")
         .option("corpus", "all").option("clusterByIndexation", "true").load()
@@ -265,9 +263,6 @@ class ArticleSourceV2Spec extends SparkSpec {
         s"storage-partitioned join still shuffled:\n$p")
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
         s"unexpected join strategy:\n$p")
-    } finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", bk0)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr0)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.GraftSession.withConf
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -109,12 +110,10 @@ class SinksSpec extends SparkSpec {
     val path = tmpDir("dpo")
     Seq((1L, "d1"), (2L, "d1"), (3L, "d2"))
       .toDF("id", "day").write.partitionBy("day").parquet(path)
-    val before = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       Seq((30L, "d2"), (31L, "d2")).toDF("id", "day")
         .write.mode("overwrite").partitionBy("day").parquet(path)
-    } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", before)
+    }
     val back = spark.read.parquet(path)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(back == Set((1L, "d1"), (2L, "d1"), (30L, "d2"), (31L, "d2")),

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.GraftSession.withConf
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -10,6 +11,9 @@ import org.apache.spark.sql.streaming.OutputMode
   * dropping late data.
   */
 class StreamsSpec extends SparkSpec {
+
+  private val rocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   private val MinUs = 60L * 1000 * 1000
 
@@ -221,112 +225,88 @@ class StreamsSpec extends SparkSpec {
   test("transformWithState tally accumulates typed state across micro-batches") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[(Long, Long)]
-    val q = Streams.purchaseTally(input.toDS())
-      .toDF("user_id", "n", "cents")
-      .writeStream.format("memory").queryName("tws_sink")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      input.addData((1L, 100L), (1L, 50L), (2L, 10L))
-      q.processAllAvailable()
-      input.addData((1L, 25L)) // user 1's ValueState must carry over
-      q.processAllAvailable()
-      val last = spark.table("tws_sink")
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("n"), col("cents"))).as("l"))
-        .select(col("user_id"), col("l.n"), col("l.cents"))
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      assert(last(1L) == ((3L, 175L)), s"user 1 got ${last(1L)}")
-      assert(last(2L) == ((1L, 10L)), s"user 2 got ${last(2L)}")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
+    withConf(spark, rocksDbProvider) {
+      val input = MemoryStream[(Long, Long)]
+      val q = Streams.purchaseTally(input.toDS())
+        .toDF("user_id", "n", "cents")
+        .writeStream.format("memory").queryName("tws_sink")
+        .outputMode(OutputMode.Update()).start()
+      try {
+        input.addData((1L, 100L), (1L, 50L), (2L, 10L))
+        q.processAllAvailable()
+        input.addData((1L, 25L)) // user 1's ValueState must carry over
+        q.processAllAvailable()
+        val last = spark.table("tws_sink")
+          .groupBy(col("user_id"))
+          .agg(max(struct(col("n"), col("cents"))).as("l"))
+          .select(col("user_id"), col("l.n"), col("l.cents"))
+          .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+        assert(last(1L) == ((3L, 175L)), s"user 1 got ${last(1L)}")
+        assert(last(2L) == ((1L, 10L)), s"user 2 got ${last(2L)}")
+      } finally q.stop()
     }
   }
 
   test("MapState tally keeps per-type counters across micro-batches") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[(Long, String)]
-    val q = Streams.typeTally(input.toDS())
-      .toDF("user_id", "event_type", "n")
-      .writeStream.format("memory").queryName("mapstate_sink")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      input.addData((1L, "click"), (1L, "view"), (2L, "click"))
-      q.processAllAvailable()
-      input.addData((1L, "click")) // user 1's click counter must carry over
-      q.processAllAvailable()
-      val last = spark.table("mapstate_sink")
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(max(col("n")).as("n")) // counters are monotone per (user, type)
-        .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-      assert(last((1L, "click")) == 2L, s"got $last")
-      assert(last((1L, "view")) == 1L && last((2L, "click")) == 1L, s"got $last")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
+    withConf(spark, rocksDbProvider) {
+      val input = MemoryStream[(Long, String)]
+      val q = Streams.typeTally(input.toDS())
+        .toDF("user_id", "event_type", "n")
+        .writeStream.format("memory").queryName("mapstate_sink")
+        .outputMode(OutputMode.Update()).start()
+      try {
+        input.addData((1L, "click"), (1L, "view"), (2L, "click"))
+        q.processAllAvailable()
+        input.addData((1L, "click")) // user 1's click counter must carry over
+        q.processAllAvailable()
+        val last = spark.table("mapstate_sink")
+          .groupBy(col("user_id"), col("event_type"))
+          .agg(max(col("n")).as("n")) // counters are monotone per (user, type)
+          .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+        assert(last((1L, "click")) == 2L, s"got $last")
+        assert(last((1L, "view")) == 1L && last((2L, "click")) == 1L, s"got $last")
+      } finally q.stop()
     }
   }
 
   test("timer-driven session assembly emits each session once, on watermark passage") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val gap = 600000L // 10 min
-    val input = MemoryStream[(Long, Long)]
-    val q = Streams.assembleSessions(input.toDS(), gap)
-      .toDF("user_id", "session_start", "n_events")
-      .writeStream.format("memory").queryName("session_sink")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // batch 1: user 1 has two events inside one session; user 2 one
-      // event. Watermark after the batch is 300,000 — below every
-      // session-end + gap, so nothing fires (not even in the no-data
-      // batch Spark appends after a watermark advance).
-      input.addData((1L, 1000L), (1L, 300000L), (2L, 1000L))
-      q.processAllAvailable()
-      assert(spark.table("session_sink").isEmpty,
-        "no session may close before the watermark passes its end + gap")
-      // batch 2 advances the watermark to 2,000,000; the trailing no-data
-      // batch fires the user-1/2 timers (at 900,000 / 601,000) — each
-      // closed session emitted exactly once; user 3's timer (2,600,000)
-      // stays armed
-      input.addData((3L, 2000000L))
-      q.processAllAvailable()
-      val afterB2 = spark.table("session_sink")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(afterB2 == Set((1L, 1000L, 2L), (2L, 1000L, 1L)), s"got $afterB2")
-      // batch 3 pushes the watermark past user 3's timer: its session
-      // closes too, and nothing re-emits for users 1/2 (state was cleared)
-      input.addData((4L, 5000000L))
-      q.processAllAvailable()
-      val got = spark.table("session_sink")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(got == afterB2 + ((3L, 2000000L, 1L)), s"got $got")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
+    withConf(spark, rocksDbProvider) {
+      val gap = 600000L // 10 min
+      val input = MemoryStream[(Long, Long)]
+      val q = Streams.assembleSessions(input.toDS(), gap)
+        .toDF("user_id", "session_start", "n_events")
+        .writeStream.format("memory").queryName("session_sink")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        // batch 1: user 1 has two events inside one session; user 2 one
+        // event. Watermark after the batch is 300,000 — below every
+        // session-end + gap, so nothing fires (not even in the no-data
+        // batch Spark appends after a watermark advance).
+        input.addData((1L, 1000L), (1L, 300000L), (2L, 1000L))
+        q.processAllAvailable()
+        assert(spark.table("session_sink").isEmpty,
+          "no session may close before the watermark passes its end + gap")
+        // batch 2 advances the watermark to 2,000,000; the trailing no-data
+        // batch fires the user-1/2 timers (at 900,000 / 601,000) — each
+        // closed session emitted exactly once; user 3's timer (2,600,000)
+        // stays armed
+        input.addData((3L, 2000000L))
+        q.processAllAvailable()
+        val afterB2 = spark.table("session_sink")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        assert(afterB2 == Set((1L, 1000L, 2L), (2L, 1000L, 1L)), s"got $afterB2")
+        // batch 3 pushes the watermark past user 3's timer: its session
+        // closes too, and nothing re-emits for users 1/2 (state was cleared)
+        input.addData((4L, 5000000L))
+        q.processAllAvailable()
+        val got = spark.table("session_sink")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        assert(got == afterB2 + ((3L, 2000000L, 1L)), s"got $got")
+      } finally q.stop()
     }
   }
 
@@ -614,10 +594,7 @@ class StreamsSpec extends SparkSpec {
     // them. No batch oracle can see this; the policy decides correctness
     // vs latency for every multi-source streaming union at scale.
     def run(policy: String): Map[Long, Long] = {
-      val key = "spark.sql.streaming.multipleWatermarkPolicy"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, policy)
-      try {
+      withConf(spark, "spark.sql.streaming.multipleWatermarkPolicy" -> policy) {
         import spark.implicits._
         implicit val sc = spark.sqlContext
         val a = MemoryStream[Long]
@@ -640,9 +617,6 @@ class StreamsSpec extends SparkSpec {
           spark.table(s"wmpol_$policy").collect()
             .map(r => r.getLong(0) -> r.getLong(1)).toMap
         } finally q.stop()
-      } finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
       }
     }
     val mn = run("min")
