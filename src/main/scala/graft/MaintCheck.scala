@@ -27,12 +27,8 @@ object MaintCheck {
 
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.get(GraftSession.cpus("32"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val app = spark.sparkContext.applicationId
 
     args.foreach { d =>
-      val tag = d.replaceAll("[^A-Za-z0-9.-]", "_")
-
       // ---- q233: DPP months-read at this scale
       val q233 = SparkEntry.queries("q233_dpp_star")
       val df = q233(spark, d) // first construction lands the hive layout
@@ -41,7 +37,7 @@ object MaintCheck {
         .find(_.metadata.getOrElse("Location", "").contains("graft_dpp_"))
         .getOrElse(sys.error("q233 fact scan not found in executed plan"))
       val monthsRead = fact.metrics("numPartitions").value
-      val layout = java.nio.file.Paths.get(s"$tmp/graft_dpp_${app}_$tag")
+      val layout = java.nio.file.Paths.get(StagingDirs.dir(spark, "dpp", d))
       val ls = java.nio.file.Files.list(layout)
       val monthsTotal =
         try ls.iterator().asScala.count(
@@ -60,7 +56,7 @@ object MaintCheck {
       val q245 = SparkEntry.queries("q245_partitioned_compaction")
       q245(spark, d).collect() // stages fragmented + compacted layouts
       val compacted = java.nio.file.Paths.get(
-        s"$tmp/graft_pcompact_${app}_$tag/compacted")
+        StagingDirs.dir(spark, "pcompact", d), "compacted")
       val ds = java.nio.file.Files.list(compacted)
       val perDir =
         try ds.iterator().asScala
@@ -91,7 +87,7 @@ object MaintCheck {
         .find(_.metadata.getOrElse("Location", "").contains("graft_skip_"))
         .getOrElse(sys.error("q251 pruned scan not found in executed plan"))
       val filesRead = skipScan.metrics("numFiles").value
-      val dataDir = java.nio.file.Paths.get(s"$tmp/graft_skip_${app}_$tag/data")
+      val dataDir = java.nio.file.Paths.get(StagingDirs.dir(spark, "skip", d), "data")
       val fs251 = java.nio.file.Files.list(dataDir)
       val filesTotal =
         try fs251.iterator().asScala.count(_.toString.endsWith(".parquet"))

@@ -1342,11 +1342,8 @@ object CorpusOps extends QueryModule {
     * the idf denominator) refreshes.
     */
   private def q276(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_incidx_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = graft.StagingDirs.dir(s, "incidx", d)
+    graft.StagingDirs.once(dir) {
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dir/v=1")
@@ -1354,7 +1351,6 @@ object CorpusOps extends QueryModule {
       docs.filter(col("doc_id") % 10 =!= 4)
         .write.mode("overwrite").parquet(s"$dir/v=2")
       graft.sources.VersionedManifest.commit(s, dir, 2, "rewrite + purge")
-      java.nio.file.Files.createFile(done)
     }
     val v1 = graft.sources.VersionedManifest.readAt(s, dir, 1)
     val v2 = graft.sources.VersionedManifest.readAt(s, dir, 2)
@@ -1791,9 +1787,7 @@ object CorpusOps extends QueryModule {
     * applicationId + sanitized dataset path (q203's non-racing scheme).
     */
   private def q216(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_snapfp_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val dir = graft.StagingDirs.dir(s, "snapfp", d)
     val f = snapshotFingerprints(s, d)
     f.filter(col("bucket") < 80).select(col("fp")).distinct()
       .write.mode("overwrite").parquet(dir)
@@ -2637,11 +2631,8 @@ object CorpusOps extends QueryModule {
     * sizes.
     */
   private def q287(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_shards_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = graft.StagingDirs.dir(s, "shards", d)
+    graft.StagingDirs.once(dir) {
       Tables.documents(s, d)
         .select(col("doc_id"),
           size(toks(col("text"))).cast(LongType).as("n_tok"),
@@ -2650,7 +2641,6 @@ object CorpusOps extends QueryModule {
         .withColumn("shard", pmod(col("h48"), lit(16)).cast(LongType))
         .repartition(col("shard"))
         .write.partitionBy("shard").mode("overwrite").parquet(s"$dir/data")
-      java.nio.file.Files.createFile(done)
     }
     s.read.parquet(s"$dir/data")
       .groupBy(col("shard"))

@@ -459,10 +459,8 @@ object Multimodal extends QueryModule {
   private val landLock = new Object
   private[operators] def landedPngDir(s: SparkSession, d: String): String =
     landLock.synchronized {
-      val root = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_png_${s.sparkContext.applicationId}_" +
-          d.replaceAll("[^A-Za-z0-9.-]", "_"))
+      val path = graft.StagingDirs.dir(s, "png", d)
+      val root = new java.io.File(path)
       if (!root.exists()) {
         import s.implicits._
         val ids = Tables.documents(s, d).select(col("doc_id"))
@@ -478,7 +476,7 @@ object Multimodal extends QueryModule {
         }
         require(tmp.renameTo(root), s"atomic publish of $root failed")
       }
-      graft.StagingDirs.register(root.getAbsolutePath)
+      path
     }
 
   /** q215: binaryFile ingestion — the REAL on-disk surface for images.

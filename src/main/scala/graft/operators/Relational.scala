@@ -671,9 +671,7 @@ object Relational extends QueryModule {
     import org.apache.spark.sql.Observation
     val obsIn = Observation()
     val obsOut = Observation()
-    val stage = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_obs_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val stage = graft.StagingDirs.dir(s, "obs", d)
     Tables.documents(s, d)
       .observe(obsIn, count(lit(1)).as("n_rows"),
         sum(length(col("text")).cast("long")).as("total_chars"))

@@ -1,8 +1,9 @@
 package graft.operators
 
-import graft.{Exact, QueryModule, Tables}
+import graft.{Exact, QueryModule, StagingDirs, Tables}
 import graft.GraftSession.withConf
 import graft.functions.Digest
+import graft.sources.VersionedCatalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -554,12 +555,7 @@ object ScalePatterns extends QueryModule {
     * |langs| rows.
     */
   private def q203(s: SparkSession, d: String): DataFrame = {
-    // staging dir keyed by the application id (unique per SparkSession —
-    // two concurrent runs never race on the overwrite) AND the full
-    // sanitized dataset path (no hashCode collisions between datasets)
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_orc_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val dir = StagingDirs.dir(s, "orc", d)
     Tables.documents(s, d).write.mode("overwrite").orc(dir)
     s.read.orc(dir)
       .filter(col("lang") =!= "zh")
@@ -671,11 +667,8 @@ object ScalePatterns extends QueryModule {
     * keyed shuffle instead of round-robin.
     */
   private def q242(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_compact_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_DONE")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "compact", d)
+    StagingDirs.once(dir) {
       // the fragmented landing a micro-batched ingest leaves behind
       Tables.documents(s, d).repartition(32)
         .write.mode("overwrite").parquet(s"$dir/fragmented")
@@ -691,7 +684,6 @@ object ScalePatterns extends QueryModule {
         (bytes + CompactionTargetBytes - 1) / CompactionTargetBytes).toInt
       s.read.parquet(s"$dir/fragmented").repartition(nFiles)
         .write.mode("overwrite").parquet(s"$dir/compacted")
-      java.nio.file.Files.createFile(done)
     }
     s.read.parquet(s"$dir/compacted")
       .groupBy(col("source"))
@@ -725,11 +717,8 @@ object ScalePatterns extends QueryModule {
     * actually runs (compact yesterday's landing inside its date dir).
     */
   private def q245(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_pcompact_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_DONE")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "pcompact", d)
+    StagingDirs.once(dir) {
       // the fragmented partitioned landing an incremental ingest leaves
       Tables.orders(s, d).repartition(8)
         .write.mode("overwrite").partitionBy("o_orderpriority")
@@ -738,7 +727,6 @@ object ScalePatterns extends QueryModule {
         .repartition(col("o_orderpriority"))
         .write.mode("overwrite").partitionBy("o_orderpriority")
         .parquet(s"$dir/compacted")
-      java.nio.file.Files.createFile(done)
     }
     s.read.parquet(s"$dir/compacted")
       .groupBy(col("o_orderpriority"))
@@ -832,11 +820,8 @@ object ScalePatterns extends QueryModule {
     * discipline.
     */
   private def q239(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_schevo_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_DONE")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "schevo", d)
+    StagingDirs.once(dir) {
       val o = Tables.orders(s, d)
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -844,7 +829,6 @@ object ScalePatterns extends QueryModule {
       o.filter(col("o_orderkey") % 2 === 1)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
         .write.mode("overwrite").parquet(s"$dir/v2")
-      java.nio.file.Files.createFile(done)
     }
     s.read.option("mergeSchema", "true").parquet(s"$dir/v1", s"$dir/v2")
       .groupBy(coalesce(col("o_orderpriority"), lit("(pre-evolution)"))
@@ -894,16 +878,13 @@ object ScalePatterns extends QueryModule {
     */
   private def q235(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_avro_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val dir = StagingDirs.dir(s, "avro", d)
     val schemaJson =
       """{"type":"record","name":"Doc","fields":[
         |{"name":"doc_id","type":"long"},
         |{"name":"lang","type":["null","string"],"default":null},
         |{"name":"n_chars","type":"long"}]}""".stripMargin
-    val done = java.nio.file.Paths.get(dir, "_DONE")
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(dir) {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
       val counts = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -931,7 +912,6 @@ object ScalePatterns extends QueryModule {
           }
         }
       counts.collect() // bounded: ≤ 8 per-partition counts
-      java.nio.file.Files.createFile(done)
     }
     val decoded = s.read.format("binaryFile")
       .option("pathGlobFilter", "*.avro").load(dir)
@@ -996,9 +976,7 @@ object ScalePatterns extends QueryModule {
     * ([[Exact.money]]/[[Exact.rate]]) and surfaces as double.
     */
   private def q233(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_dpp_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val dir = StagingDirs.dir(s, "dpp", d)
     // land the partitioned fact once per session+dataset: bench attempts
     // must measure the PRUNED SCAN, not re-landing the layout
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS")))
@@ -1077,9 +1055,7 @@ object ScalePatterns extends QueryModule {
   private[operators] def catalogDb(s: SparkSession, d: String): String = {
     val tag = d.replaceAll("[^A-Za-z0-9]", "_")
     val db = s"graft_cat_$tag"
-    val wh = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_warehouse_" +
-        s"${s.sparkContext.applicationId}_$tag")
+    val wh = StagingDirs.dir(s, "warehouse", tag)
     if (!s.catalog.databaseExists(db))
       s.sql(s"CREATE DATABASE $db LOCATION '$wh'")
     if (!s.catalog.tableExists(s"$db.orders")) {
@@ -1256,11 +1232,8 @@ object ScalePatterns extends QueryModule {
     * the Delta/Iceberg discipline with the log reduced to its essence.
     */
   private def q247(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_snap_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "snap", d)
+    StagingDirs.once(dir) {
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dir/v=1")
@@ -1270,7 +1243,6 @@ object ScalePatterns extends QueryModule {
       // an in-flight rewrite: data landed, manifest NOT committed —
       // invisible to every reader until its atomic rename publishes
       docs.unionByName(docs).write.mode("overwrite").parquet(s"$dir/v=3")
-      java.nio.file.Files.createFile(done)
     }
     val v = graft.sources.VersionedManifest.latestCommitted(s, dir).get
     graft.sources.VersionedManifest.readLatest(s, dir)
@@ -1307,18 +1279,14 @@ object ScalePatterns extends QueryModule {
     * scaladoc); the reclaim logic is size-independent.
     */
   private def q249(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_vac_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
+    val dir = StagingDirs.dir(s, "vac", d)
     val docs = Tables.documents(s, d)
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(dir) {
       docs.filter(col("doc_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dir/v=1")
       graft.sources.VersionedManifest.commit(s, dir, 1, "initial load")
       docs.write.mode("overwrite").parquet(s"$dir/v=2")
       graft.sources.VersionedManifest.commit(s, dir, 2, "full rewrite")
-      java.nio.file.Files.createFile(done)
     }
     // the abandoned rewrite this pass reclaims — re-created per run so
     // every attempt vacuums the same layout state
@@ -1356,18 +1324,14 @@ object ScalePatterns extends QueryModule {
     * at that size — history costs storage, not query shape.
     */
   private def q250(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_tt_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "tt", d)
+    StagingDirs.once(dir) {
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dir/v=1")
       graft.sources.VersionedManifest.commit(s, dir, 1, "initial load")
       docs.write.mode("overwrite").parquet(s"$dir/v=2")
       graft.sources.VersionedManifest.commit(s, dir, 2, "full rewrite")
-      java.nio.file.Files.createFile(done)
     }
     graft.sources.VersionedManifest.committedVersions(s, dir).map { v =>
       graft.sources.VersionedManifest.readAt(s, dir, v)
@@ -1410,32 +1374,25 @@ object ScalePatterns extends QueryModule {
     * q250's layout, registered under a per-dataset VersionedCatalog
     * (catalog instances are cached BY NAME, so a second dataset in the
     * same session must register its own, not silently reuse the first
-    * root). Returns the catalog name; the table is `<cat>.tables.tt`.
+    * root). Returns the catalog name and its root; the table is
+    * `<cat>.tables.tt`, its directory `<root>/tt`.
     */
-  private def sqlTtCatalog(s: SparkSession, d: String): String = {
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_sqltt_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+  private def sqlTtCatalog(s: SparkSession, d: String): (String, String) = {
+    val root = StagingDirs.dir(s, "sqltt", d)
     val dir = s"$root/tt"
-    val done = java.nio.file.Paths.get(root, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(root) {
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dir/v=1")
       graft.sources.VersionedManifest.commit(s, dir, 1, "initial load")
       docs.write.mode("overwrite").parquet(s"$dir/v=2")
       graft.sources.VersionedManifest.commit(s, dir, 2, "full rewrite")
-      java.nio.file.Files.createFile(done)
     }
-    val cat = "g321_" + d.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.VersionedCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
-    cat
+    (VersionedCatalog.mount(s, "g321_" + d.replaceAll("[^A-Za-z0-9]", "_"), root), root)
   }
 
   private def q321(s: SparkSession, d: String): DataFrame = {
-    val cat = sqlTtCatalog(s, d)
+    val (cat, _) = sqlTtCatalog(s, d)
     s.sql(
       s"""SELECT version, n_docs, total_chars, max_doc FROM (
          |  SELECT CAST(1 AS BIGINT) AS version,
@@ -1465,7 +1422,7 @@ object ScalePatterns extends QueryModule {
     * hash-checked result).
     */
   private def q327(s: SparkSession, d: String): DataFrame = {
-    val cat = sqlTtCatalog(s, d)
+    val (cat, _) = sqlTtCatalog(s, d)
     s.sql(s"SELECT version, format, operation FROM $cat.tables.tt.history " +
       "ORDER BY version")
   }
@@ -1501,15 +1458,9 @@ object ScalePatterns extends QueryModule {
     * Delta CREATE OR REPLACE semantics on this format).
     */
   private def rtasCatalog(s: SparkSession, d: String): (String, String) = {
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_rtas_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val cat = "g382_" + d.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.VersionedCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
-    val done = java.nio.file.Paths.get(root, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val root = StagingDirs.dir(s, "rtas", d)
+    val cat = VersionedCatalog.mount(s, "g382_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    StagingDirs.once(root) {
       val src = s"parquet.`$d/documents.parquet`"
       s.sql(s"CREATE TABLE $cat.tables.rt AS " +
         s"SELECT doc_id, source, n_chars FROM $src WHERE doc_id % 2 = 0")
@@ -1524,7 +1475,6 @@ object ScalePatterns extends QueryModule {
           false
         } catch { case _: Throwable => true }
       require(refused, "failing RTAS must abort, not commit")
-      java.nio.file.Files.createFile(done)
     }
     (cat, root)
   }
@@ -1595,15 +1545,9 @@ object ScalePatterns extends QueryModule {
     * (`canDeleteWhere`), never delete wrong.
     */
   private def sqlDeleteCatalog(s: SparkSession, d: String): (String, String) = {
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_sqldel_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val cat = "g384_" + d.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.VersionedCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
-    val done = java.nio.file.Paths.get(root, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val root = StagingDirs.dir(s, "sqldel", d)
+    val cat = VersionedCatalog.mount(s, "g384_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    StagingDirs.once(root) {
       val M = graft.sources.VersionedManifest
       val dir = s"$root/dl"
       val src = s"parquet.`$d/documents.parquet`"
@@ -1618,7 +1562,6 @@ object ScalePatterns extends QueryModule {
       s.sql(s"DELETE FROM $cat.tables.dl WHERE n_chars < 200")
       require(M.latestCommitted(s, dir).contains(3L),
         "SQL DELETE must publish version 3")
-      java.nio.file.Files.createFile(done)
     }
     (cat, root)
   }
@@ -1669,9 +1612,7 @@ object ScalePatterns extends QueryModule {
     */
   private def q332(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{VersionedManifest => VM}
-    sqlTtCatalog(s, d) // stages the two-generation estate
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_sqltt_" +
-      s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}/tt"
+    val dir = s"${sqlTtCatalog(s, d)._2}/tt" // stages the two-generation estate
     def shares(v: Long, ppmCol: String): DataFrame = {
       val b = VM.readAt(s, dir, v)
         .select(least(lit(7L), expr("CAST(n_chars AS BIGINT) div 256"))
@@ -1733,11 +1674,8 @@ object ScalePatterns extends QueryModule {
     */
   private def q331(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{SnapshotCatalog, VersionedManifest => VM}
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_sqlmt_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(root, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val root = StagingDirs.dir(s, "sqlmt", d)
+    StagingDirs.once(root) {
       val statsOf = (v: Long) => VM.readAt(s, s"$root/documents", v)
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
@@ -1760,13 +1698,9 @@ object ScalePatterns extends QueryModule {
       VM.readAt(s, s"$root/documents", 2).filter(col("source") =!= "src5")
         .write.mode("overwrite").parquet(s"$root/documents/v=3")
       VM.commit(s, s"$root/documents", 3, "in-flight: erase src5")
-      java.nio.file.Files.createFile(done)
     }
-    val cat = "g331_" + d.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.VersionedCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
-    s.conf.set(s"spark.sql.catalog.$cat.pinned", "true")
+    val cat = VersionedCatalog.mount(s, "g331_" + d.replaceAll("[^A-Za-z0-9]", "_"), root,
+      pinned = true)
     s.sql(
       s"""SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
          |  CAST(SUM(d.n_chars) AS BIGINT) AS total_chars,
@@ -1803,12 +1737,9 @@ object ScalePatterns extends QueryModule {
     */
   private def q330(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{VersionedManifest => VM}
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_sqlrb_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val root = StagingDirs.dir(s, "sqlrb", d)
     val dir = s"$root/tt"
-    val done = java.nio.file.Paths.get(root, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(root) {
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dir/v=1")
@@ -1816,12 +1747,8 @@ object ScalePatterns extends QueryModule {
       docs.unionByName(docs)
         .write.mode("overwrite").parquet(s"$dir/v=2")
       VM.commit(s, dir, 2, "bad rewrite (doubled rows)")
-      java.nio.file.Files.createFile(done)
     }
-    val cat = "g330_" + d.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.VersionedCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = VersionedCatalog.mount(s, "g330_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
     s.sql(s"CALL $cat.sys.rollback('tt', 1)").collect()
     s.sql(
       s"""SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1859,11 +1786,8 @@ object ScalePatterns extends QueryModule {
     * snapshot resolution already fetched.
     */
   private def q329(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_vstats_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "vstats", d)
+    StagingDirs.once(dir) {
       Tables.documents(s, d)
         .repartitionByRange(16, col("doc_id"))
         .write.mode("overwrite").parquet(s"$dir/v=1")
@@ -1871,7 +1795,6 @@ object ScalePatterns extends QueryModule {
         graft.sources.VersionedManifest.fileStats(s, s"$dir/v=1", "doc_id")
       graft.sources.VersionedManifest.commit(s, dir, 1,
         ("range layout on doc_id" +: stats).mkString("\n"))
-      java.nio.file.Files.createFile(done)
     }
     val (lo, hi) = (100L, 299L)
     val files = graft.sources.VersionedManifest.prunedFiles(s, dir, 1, lo, hi)
@@ -1914,11 +1837,8 @@ object ScalePatterns extends QueryModule {
     * spec pins.
     */
   private def q344(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_vcluster_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "vcluster", d)
+    StagingDirs.once(dir) {
       val docs = Tables.documents(s, d)
       // v1: hash layout on source — doc_id ranges interleave across files
       docs.repartition(16, col("source"))
@@ -1937,7 +1857,6 @@ object ScalePatterns extends QueryModule {
           graft.sources.VersionedManifest
             .fileStats(s, s"$dir/d-cluster-1", "doc_id")).mkString("\n")),
         "cluster rewrite commit lost a race")
-      java.nio.file.Files.createFile(done)
     }
     val (lo, hi) = (300L, 499L)
     val files = graft.sources.VersionedManifest.prunedFiles(s, dir, 2, lo, hi)
@@ -1976,12 +1895,9 @@ object ScalePatterns extends QueryModule {
     * operation in this format (q292/q330's discipline).
     */
   private def q339(s: SparkSession, d: String): DataFrame = {
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_vtags_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val root = StagingDirs.dir(s, "vtags", d)
     val dir = s"$root/corpus"
-    val done = java.nio.file.Paths.get(root, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(root) {
       val docs = Tables.documents(s, d)
       docs.write.mode("overwrite").parquet(s"$dir/v=1")
       graft.sources.VersionedManifest.commit(s, dir, 1, "raw corpus landed")
@@ -1990,12 +1906,8 @@ object ScalePatterns extends QueryModule {
         .write.mode("overwrite").parquet(s"$dir/v=2")
       graft.sources.VersionedManifest.commit(s, dir, 2, "curated: src0 dropped")
       graft.sources.VersionedManifest.tag(s, dir, "release-b", 2)
-      java.nio.file.Files.createFile(done)
     }
-    val cat = "g339_" + d.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.VersionedCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = VersionedCatalog.mount(s, "g339_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
     s.sql(
       s"""SELECT release, n_docs, total_chars FROM (
          |  SELECT 'release-a' AS release, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -2044,11 +1956,8 @@ object ScalePatterns extends QueryModule {
     * indexes, exactly like the stats pass.
     */
   private def q335(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_vbloom_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "vbloom", d)
+    StagingDirs.once(dir) {
       Tables.documents(s, d)
         .repartitionByRange(16, col("doc_id"))
         .write.mode("overwrite").parquet(s"$dir/v=1")
@@ -2059,7 +1968,6 @@ object ScalePatterns extends QueryModule {
       graft.sources.VersionedManifest.commit(s, dir, 1,
         ("range layout on doc_id, bloom on text" +: (stats ++ blooms))
           .mkString("\n"))
-      java.nio.file.Files.createFile(done)
     }
     // probe text: doc 250's, fetched through the RANGE stats (one file,
     // one row — the bounded driver-side lookup a real ingest has in hand)
@@ -2102,10 +2010,7 @@ object ScalePatterns extends QueryModule {
     * staged-dir + manifest essence.
     */
   private def q322(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_wap_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
+    val dir = StagingDirs.dir(s, "wap", d)
     val audit: DataFrame => Seq[String] = df => {
       val r = df.agg(
         sum(when(col("n_chars") < 0, 1L).otherwise(0L)).as("neg_chars"),
@@ -2114,8 +2019,8 @@ object ScalePatterns extends QueryModule {
       Seq("n_chars < 0" -> r.getLong(0), "source IS NULL" -> r.getLong(1))
         .collect { case (rule, n) if n > 0 => s"$rule: $n rows" }
     }
-    var refused: Seq[String] = Seq.empty
-    if (!java.nio.file.Files.exists(done)) {
+    var refused = Seq("n_chars < 0: 5 rows") // the build's refusal, replayed
+    StagingDirs.once(dir) {
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dir/v=1")
@@ -2134,8 +2039,7 @@ object ScalePatterns extends QueryModule {
       docs.write.mode("overwrite").parquet(s"$dir/v=3")
       require(graft.sources.VersionedManifest
         .commitAudited(s, dir, 3, "corrected rewrite", audit).isEmpty)
-      java.nio.file.Files.createFile(done)
-    } else refused = Seq("n_chars < 0: 5 rows")
+    }
     val committed =
       graft.sources.VersionedManifest.committedVersions(s, dir).size.toLong
     graft.sources.VersionedManifest.readLatest(s, dir)
@@ -2304,11 +2208,8 @@ object ScalePatterns extends QueryModule {
     * control to measure the z-order claim comparatively.
     */
   private[operators] def zorderLayouts(s: SparkSession, d: String): String = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_zskip_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "zskip", d)
+    StagingDirs.once(dir) {
       val li = Tables.lineitem(s, d)
         .select(col("l_partkey"), col("l_suppkey"), col("l_extendedprice"))
       val bounds = li.agg(
@@ -2334,7 +2235,6 @@ object ScalePatterns extends QueryModule {
           .coalesce(1)
           .write.mode("overwrite").json(s"$dir/${layout}_stats")
       }
-      java.nio.file.Files.createFile(done)
     }
     dir
   }
@@ -2417,11 +2317,8 @@ object ScalePatterns extends QueryModule {
     * n_chars. At 100 TB the diff cost is O(keys), not O(bytes).
     */
   private def q255(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_vdiff_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "vdiff", d)
+    StagingDirs.once(dir) {
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dir/v=1")
@@ -2429,7 +2326,6 @@ object ScalePatterns extends QueryModule {
       docs.filter(col("doc_id") % 10 =!= 4)
         .write.mode("overwrite").parquet(s"$dir/v=2")
       graft.sources.VersionedManifest.commit(s, dir, 2, "rewrite + purge")
-      java.nio.file.Files.createFile(done)
     }
     val v1 = graft.sources.VersionedManifest.readAt(s, dir, 1)
     val v2 = graft.sources.VersionedManifest.readAt(s, dir, 2)
@@ -2477,11 +2373,8 @@ object ScalePatterns extends QueryModule {
     */
   private def q277(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{SnapshotCatalog, VersionedManifest => VM}
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_mtcat_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(root, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val root = StagingDirs.dir(s, "mtcat", d)
+    StagingDirs.once(root) {
       val statsOf = (v: Long) => VM.readAt(s, s"$root/documents", v)
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
@@ -2504,7 +2397,6 @@ object ScalePatterns extends QueryModule {
       VM.readAt(s, s"$root/documents", 2).filter(col("source") =!= "src5")
         .write.mode("overwrite").parquet(s"$root/documents/v=3")
       VM.commit(s, s"$root/documents", 3, "in-flight: erase src5")
-      java.nio.file.Files.createFile(done)
     }
     val latest = SnapshotCatalog.latest(s, root).getOrElse(
       throw new IllegalStateException(s"no catalog at $root"))
@@ -2561,11 +2453,8 @@ object ScalePatterns extends QueryModule {
     * file-level COW, same commit protocol.
     */
   private def q256(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_cow_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "cow", d)
+    StagingDirs.once(dir) {
       Tables.documents(s, d)
         .write.mode("overwrite").parquet(s"$dir/v=1")
       graft.sources.VersionedManifest.commit(s, dir, 1, "initial load")
@@ -2574,7 +2463,6 @@ object ScalePatterns extends QueryModule {
         .filter(col("source") =!= "src3")
         .write.mode("overwrite").parquet(s"$dir/v=2")
       graft.sources.VersionedManifest.commit(s, dir, 2, "erase source=src3")
-      java.nio.file.Files.createFile(done)
     }
     val before = graft.sources.VersionedManifest.readAt(s, dir, 1)
       .agg(count(lit(1))).head().getLong(0)
@@ -2602,12 +2490,9 @@ object ScalePatterns extends QueryModule {
     * with [[graft.plans.MaterializedViews]]. Returns the MV path.
     */
   private[operators] def mvLayout(s: SparkSession, d: String): String = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_mv_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val dir = StagingDirs.dir(s, "mv", d)
     val path = s"$dir/mv"
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(dir) {
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -2617,7 +2502,6 @@ object ScalePatterns extends QueryModule {
           min(col("l_quantity")).as("min_qty"),
           max(col("l_discount")).as("max_disc"))
         .write.mode("overwrite").parquet(path)
-      java.nio.file.Files.createFile(done)
     }
     graft.plans.MaterializedViews.register(graft.plans.MaterializedViews.MvDef(
       dims = Set("l_returnflag", "l_linestatus"),
@@ -2693,11 +2577,8 @@ object ScalePatterns extends QueryModule {
     */
   private def q282(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{VersionedManifest => VM}
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_mvref_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "mvref", d)
+    StagingDirs.once(dir) {
       val li = Tables.lineitem(s, d)
       li.filter(col("l_orderkey") % 4 =!= 0)
         .write.mode("overwrite").parquet(s"$dir/v=1")
@@ -2705,7 +2586,6 @@ object ScalePatterns extends QueryModule {
       li.filter(col("l_orderkey") % 4 === 0)
         .write.mode("overwrite").parquet(s"$dir/v=2")
       VM.commit(s, dir, 2, "increment")
-      java.nio.file.Files.createFile(done)
     }
     val summarize = (df: DataFrame) => df
       .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -2783,11 +2663,8 @@ object ScalePatterns extends QueryModule {
     */
   private def occEstate(s: SparkSession, d: String): String = {
     import graft.sources.{VersionedManifest => VM}
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_occ_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "occ", d)
+    StagingDirs.once(dir) {
       val ord = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"))
       // base load via the plain positional-commit path (v=1): both
@@ -2817,7 +2694,6 @@ object ScalePatterns extends QueryModule {
       require(VM.tryCommit(s, dir, retry, "data=d-writer-b-2\nwriter-b append (rebased)"),
         s"rebased commit at $retry lost again")
       VM.vacuum(s, dir) // reclaims d-writer-b-1, keeps both committed dirs
-      java.nio.file.Files.createFile(done)
     }
     dir
   }
@@ -2864,13 +2740,10 @@ object ScalePatterns extends QueryModule {
     */
   private def cloneEstate(s: SparkSession, d: String): (String, String) = {
     import graft.sources.{VersionedManifest => VM}
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_clone_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val root = StagingDirs.dir(s, "clone", d)
     val src = s"$root/src"
     val cl = s"$root/clone"
-    val done = java.nio.file.Paths.get(root, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(root) {
       val ord = Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
       ord.filter(col("o_orderkey") % 4 === 0)
         .write.mode("overwrite").parquet(s"$src/v=1")
@@ -2886,7 +2759,6 @@ object ScalePatterns extends QueryModule {
       VM.commit(s, cl, 2,
         (srcData.map(p => s"data=$p") :+ "data=d-delta-1").mkString("\n") +
           "\nclone-local append")
-      java.nio.file.Files.createFile(done)
     }
     (src, cl)
   }
@@ -2931,18 +2803,14 @@ object ScalePatterns extends QueryModule {
     * `_metadata`).
     */
   private def smallFilesEstate(s: SparkSession, d: String): String = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_sfiles_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "sfiles", d)
+    StagingDirs.once(dir) {
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .withColumn("bucket", col("doc_id") % 8)
         .repartition(col("lang"), col("bucket"))
         .write.partitionBy("lang", "bucket").mode("overwrite")
         .parquet(s"$dir/docs")
-      java.nio.file.Files.createFile(done)
     }
     dir
   }
@@ -3061,11 +2929,8 @@ object ScalePatterns extends QueryModule {
     * costs a full-table rewrite and a frozen write path while it runs.
     */
   private[operators] def q285Estate(s: SparkSession, d: String): String = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_specevo_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "specevo", d)
+    StagingDirs.once(dir) {
       val li = Tables.lineitem(s, d)
         .select(col("l_shipdate"), col("l_extendedprice"), col("l_discount"))
       val cut = lit("2001-10-01").cast(DateType)
@@ -3079,7 +2944,6 @@ object ScalePatterns extends QueryModule {
         .repartition(col("l_ship_day"))
         .write.partitionBy("l_ship_day").mode("overwrite")
         .parquet(s"$dir/byday")
-      java.nio.file.Files.createFile(done)
     }
     dir
   }
@@ -3146,13 +3010,10 @@ object ScalePatterns extends QueryModule {
     * outgrowing broadcast is the compaction trigger.
     */
   private def q288(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_dv_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
+    val dir = StagingDirs.dir(s, "dv", d)
     val delPred = // seed-free ~5% bucket, engine-replayable
       Digest.bucket(Digest.salted("del-", col("doc_id")), 1, 7) % 20 === 0
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(dir) {
       Tables.documents(s, d).repartition(4)
         .write.mode("overwrite").parquet(s"$dir/base")
       s.read.parquet(s"$dir/base")
@@ -3162,7 +3023,6 @@ object ScalePatterns extends QueryModule {
         .select(col("f"), col("r"))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/dv")
-      java.nio.file.Files.createFile(done)
     }
     val dv = s.read.parquet(s"$dir/dv")
     val deleted = dv.count()
@@ -3206,12 +3066,9 @@ object ScalePatterns extends QueryModule {
     */
   private def q296(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{VersionedManifest => VM}
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_dvcomp_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
+    val dir = StagingDirs.dir(s, "dvcomp", d)
     val delPred = Digest.bucket(Digest.salted("del-", col("doc_id")), 1, 7) % 20 === 0
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(dir) {
       Tables.documents(s, d).repartition(4)
         .write.mode("overwrite").parquet(s"$dir/v=1")
       VM.commit(s, dir, 1, "base load")
@@ -3224,7 +3081,6 @@ object ScalePatterns extends QueryModule {
       morView(s, dir).write.mode("overwrite").parquet(s"$dir/d-compact-1")
       require(VM.tryCommit(s, dir, 2, "data=d-compact-1\ncompaction: DV absorbed"),
         "compaction commit lost a race in a single-writer test")
-      java.nio.file.Files.createFile(done)
     }
     val v = VM.latestCommitted(s, dir).get
     VM.readLatest(s, dir)
@@ -3278,11 +3134,8 @@ object ScalePatterns extends QueryModule {
     */
   private def q300(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{VersionedManifest => VM}
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_colmap_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "colmap", d)
+    StagingDirs.once(dir) {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars"), col("source"))
       // generation 1: physical name n_chars
@@ -3295,7 +3148,6 @@ object ScalePatterns extends QueryModule {
         .withColumnRenamed("n_chars", "char_count")
         .write.mode("overwrite").parquet(s"$dir/v=2")
       VM.commit(s, dir, 2, "map=char_count:char_count\nrename n_chars -> char_count; append odds")
-      java.nio.file.Files.createFile(done)
     }
     // the mapped reader: resolve each generation's physical schema to
     // the logical one, then union
@@ -3341,11 +3193,8 @@ object ScalePatterns extends QueryModule {
     * positional-delete + data-file commit in its layout essence.
     */
   private def q299(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_mormerge_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "mormerge", d)
+    StagingDirs.once(dir) {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars"), col("source"))
       docs.filter(col("doc_id") % 2 === 0).repartition(4)
@@ -3363,7 +3212,6 @@ object ScalePatterns extends QueryModule {
         .withColumn("n_chars", col("n_chars") + 1000)
         .unionByName(docs.filter(col("doc_id") % 2 === 1 && col("doc_id") % 5 === 1))
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/delta")
-      java.nio.file.Files.createFile(done)
     }
     val dv = s.read.parquet(s"$dir/dv")
     val delta = s.read.parquet(s"$dir/delta")
@@ -3486,11 +3334,8 @@ object ScalePatterns extends QueryModule {
     */
   private def cdfEstate(s: SparkSession, d: String): String = {
     import graft.sources.{VersionedManifest => VM}
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_cdf_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "cdf", d)
+    StagingDirs.once(dir) {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
       docs.filter(col("doc_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dir/v=1")
@@ -3504,7 +3349,6 @@ object ScalePatterns extends QueryModule {
         .unionByName(docs.filter(col("doc_id") % 2 === 1 && col("doc_id") % 5 === 1))
         .write.mode("overwrite").parquet(s"$dir/v=2")
       VM.commit(s, dir, 2, "edit + purge + append")
-      java.nio.file.Files.createFile(done)
     }
     dir
   }
@@ -3699,11 +3543,8 @@ object ScalePatterns extends QueryModule {
     */
   private def q292(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{VersionedManifest => VM}
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_rollback_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "rollback", d)
+    StagingDirs.once(dir) {
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dir/v=1")
@@ -3714,7 +3555,6 @@ object ScalePatterns extends QueryModule {
       // the rollback: one manifest write, zero data movement
       require(VM.tryCommit(s, dir, 3, "data=v=1\nrollback to version 1"),
         "rollback commit lost a race in a single-writer test")
-      java.nio.file.Files.createFile(done)
     }
     val v = VM.latestCommitted(s, dir).get
     VM.readLatest(s, dir)
@@ -3750,11 +3590,8 @@ object ScalePatterns extends QueryModule {
     * staging root.
     */
   private[operators] def bloomLayout(s: SparkSession, d: String): String = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_bskip_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "bskip", d)
+    StagingDirs.once(dir) {
       Tables.documents(s, d)
         .repartitionByRange(16, col("doc_id"))
         .write.mode("overwrite").parquet(s"$dir/data")
@@ -3766,7 +3603,6 @@ object ScalePatterns extends QueryModule {
         .agg(sort_array(collect_set(col("bit"))).as("bits"))
         .coalesce(1)
         .write.mode("overwrite").json(s"$dir/bloom")
-      java.nio.file.Files.createFile(done)
     }
     dir
   }
@@ -3838,11 +3674,8 @@ object ScalePatterns extends QueryModule {
     * manifest size, the same bound as q195's fixture listing.
     */
   private def q251(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_skip_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "skip", d)
+    StagingDirs.once(dir) {
       Tables.documents(s, d)
         .repartitionByRange(16, col("doc_id"))
         .write.mode("overwrite").parquet(s"$dir/data")
@@ -3851,7 +3684,6 @@ object ScalePatterns extends QueryModule {
         .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
         .coalesce(1)
         .write.mode("overwrite").json(s"$dir/filestats")
-      java.nio.file.Files.createFile(done)
     }
     val (lo, hi) = (100L, 299L)
     // manifest consult: O(#files) rows, bounded collect of matching paths
@@ -3902,11 +3734,8 @@ object ScalePatterns extends QueryModule {
     * scanned paths.
     */
   private def q315(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_djv_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "djv", d)
+    StagingDirs.once(dir) {
       val ord = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority"))
       val li = Tables.lineitem(s, d)
@@ -3930,7 +3759,6 @@ object ScalePatterns extends QueryModule {
         .agg(count(lit(1)).as("cnt"),
           sum(Exact.money(col("l_extendedprice"))).as("sdec"))
         .write.mode("overwrite").parquet(s"$dir/mv")
-      java.nio.file.Files.createFile(done)
     }
     val ordOld = s.read.parquet(s"$dir/ord_old")
     val ordFull = ordOld.unionByName(s.read.parquet(s"$dir/ord_delta"))
@@ -3981,11 +3809,8 @@ object ScalePatterns extends QueryModule {
     * the whole reason engine-assigned stable ids exist.
     */
   private def q348(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_vrowtrack_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "vrowtrack", d)
+    StagingDirs.once(dir) {
       // ingest: row ids assigned at commit time (the source cursor here;
       // an engine counter in general), payload carries NO natural key
       Tables.documents(s, d)
@@ -4005,7 +3830,6 @@ object ScalePatterns extends QueryModule {
           "rowTracking=preserved", "cluster rewrite: range on n_chars")
           .mkString("\n")),
         "row-tracking rewrite commit lost a race")
-      java.nio.file.Files.createFile(done)
     }
     val M = graft.sources.VersionedManifest
     val v1 = M.readAt(s, dir, 1).select(col("row_id"), col("source"),
@@ -4052,13 +3876,10 @@ object ScalePatterns extends QueryModule {
     * writers racing tryCommit.
     */
   private def q349(s: SparkSession, d: String): DataFrame = {
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_vbranch_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val root = StagingDirs.dir(s, "vbranch", d)
     val dir = s"$root/corpus"
-    val done = java.nio.file.Paths.get(root, "_STAGED")
     val M = graft.sources.VersionedManifest
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(root) {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       docs.write.mode("overwrite").parquet(s"$dir/v=1")
@@ -4082,7 +3903,6 @@ object ScalePatterns extends QueryModule {
       require(M.readAt(s, dir, 3).count() * 2 >= total, "audit failed")
       // the publish: ONE pointer advance, main 1 -> 3 (never saw v2)
       require(M.advanceBranch(s, dir, "main", 0, 3), "publish lost a race")
-      java.nio.file.Files.createFile(done)
     }
     import s.implicits._
     val log = (M.branchLog(s, dir, "main").map { case (q, v) => ("main", q, v) }
@@ -4143,12 +3963,9 @@ object ScalePatterns extends QueryModule {
     * entities × time, not with facts.
     */
   private def q350(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_vbitemp_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
+    val dir = StagingDirs.dir(s, "vbitemp", d)
     val M = graft.sources.VersionedManifest
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(dir) {
       // rate card: per (region, fiscal year starting Mar-15), in basis
       // points — exact integers end to end
       val base = Tables.region(s, d)
@@ -4167,7 +3984,6 @@ object ScalePatterns extends QueryModule {
           col("rate_bp") + 55).otherwise(col("rate_bp")))
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/v=2")
       M.commit(s, dir, 2, "restatement: region 2 FY1997 +55bp")
-      java.nio.file.Files.createFile(done)
     }
     val facts = Tables.orders(s, d).filter(col("o_orderkey") % 11 === 0)
       .join(broadcast(Tables.customer(s, d)
@@ -4314,13 +4130,10 @@ object ScalePatterns extends QueryModule {
     * version resolution — O(1) against table size.
     */
   private def q354(s: SparkSession, d: String): DataFrame = {
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_vsqlbr_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val root = StagingDirs.dir(s, "vsqlbr", d)
     val dir = s"$root/corpus"
-    val done = java.nio.file.Paths.get(root, "_STAGED")
     val M = graft.sources.VersionedManifest
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(root) {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       docs.write.mode("overwrite").parquet(s"$dir/v=1")
@@ -4331,12 +4144,8 @@ object ScalePatterns extends QueryModule {
         .write.mode("overwrite").parquet(s"$dir/v=2")
       M.commit(s, dir, 2, "curated: zh routed to its own corpus")
       require(M.advanceBranch(s, dir, "main", 0, 2), "publish lost a race")
-      java.nio.file.Files.createFile(done)
     }
-    val cat = "g354_" + d.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.VersionedCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = VersionedCatalog.mount(s, "g354_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
     s.sql(
       s"""SELECT ref, n_docs, total_chars FROM (
          |  SELECT 'blessed' AS ref, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -4379,13 +4188,10 @@ object ScalePatterns extends QueryModule {
     * O(forever).
     */
   private def q355(s: SparkSession, d: String): DataFrame = {
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_vexpire_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val root = StagingDirs.dir(s, "vexpire", d)
     val dir = s"$root/corpus"
-    val done = java.nio.file.Paths.get(root, "_STAGED")
     val M = graft.sources.VersionedManifest
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(root) {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       // four cumulative append versions: src0, +src1, +src2, +src3
@@ -4406,12 +4212,8 @@ object ScalePatterns extends QueryModule {
       val expired = M.expireSnapshots(s, dir, keepLast = 1)
       require(expired == Seq(1L, 3L, 4L),
         s"expected versions 1, 3, 4 to expire, got $expired")
-      java.nio.file.Files.createFile(done)
     }
-    val cat = "g355_" + d.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.VersionedCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = VersionedCatalog.mount(s, "g355_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
     s.sql(
       s"""SELECT ref, n_docs, total_chars FROM (
          |  SELECT 'head' AS ref, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -4452,17 +4254,11 @@ object ScalePatterns extends QueryModule {
     * O(#versions + #refs) for expiry — regardless of table size.
     */
   private def q358(s: SparkSession, d: String): DataFrame = {
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_vsqlproc_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val root = StagingDirs.dir(s, "vsqlproc", d)
     val dir = s"$root/corpus"
-    val done = java.nio.file.Paths.get(root, "_STAGED")
     val M = graft.sources.VersionedManifest
-    val cat = "g358_" + d.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.VersionedCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
-    if (!java.nio.file.Files.exists(done)) {
+    val cat = VersionedCatalog.mount(s, "g358_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    StagingDirs.once(root) {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       (1 to 3).foreach { v =>
@@ -4479,7 +4275,6 @@ object ScalePatterns extends QueryModule {
       val ex = s.sql(s"CALL $cat.sys.expire_snapshots('corpus', 1)").collect()
       require(ex.map(_.getLong(1)).toSeq == Seq(1L, 2L),
         s"expected versions 1,2 expired, got ${ex.mkString(",")}")
-      java.nio.file.Files.createFile(done)
     }
     s.sql(
       s"""SELECT step, n FROM (
@@ -4532,13 +4327,10 @@ object ScalePatterns extends QueryModule {
     */
   private def constraintEstate(s: SparkSession, d: String): (String, Long, Long) = {
     val M = graft.sources.VersionedManifest
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_constr_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
+    val dir = StagingDirs.dir(s, "constr", d)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(dir) {
       docs.filter(col("doc_id") % 4 === 0)
         .write.mode("overwrite").parquet(s"$dir/v=1")
       M.commit(s, dir, 1, "initial load")
@@ -4562,7 +4354,6 @@ object ScalePatterns extends QueryModule {
         .write.mode("overwrite").parquet(s"$dir/v=5")
       require(M.commitConstrained(s, dir, 5, "append odds").nonEmpty,
         "violating append must refuse")
-      java.nio.file.Files.createFile(done)
     }
     // evidence re-exercises BOTH refusal paths every run (the staged
     // inputs are immutable), so a broken gate can't hide behind the
@@ -4630,11 +4421,8 @@ object ScalePatterns extends QueryModule {
     */
   private def mergeEstate(s: SparkSession, d: String): String = {
     val M = graft.sources.VersionedManifest
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_merge_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "merge", d)
+    StagingDirs.once(dir) {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       docs.filter(col("doc_id") % 3 === 0)
@@ -4651,7 +4439,6 @@ object ScalePatterns extends QueryModule {
       require(v == 3L && affected.size == 1 && untouched.size == 1 &&
         affected.head.endsWith("d-a") && untouched.head.endsWith("d-b"),
         s"merge must rewrite exactly d-a: v=$v aff=$affected unt=$untouched")
-      java.nio.file.Files.createFile(done)
     }
     dir
   }
@@ -4715,11 +4502,8 @@ object ScalePatterns extends QueryModule {
     */
   private def zorderEstate(s: SparkSession, d: String): String = {
     val M = graft.sources.VersionedManifest
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_zorder_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "zorder", d)
+    StagingDirs.once(dir) {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       // v1: the single-column answer — range layout on doc_id only
@@ -4748,7 +4532,6 @@ object ScalePatterns extends QueryModule {
           M.fileStatsOn(s, s"$dir/d-zorder", "doc_id") ++
           M.fileStatsOn(s, s"$dir/d-zorder", "n_chars")).mkString("\n")),
         "z-order rewrite commit lost a race")
-      java.nio.file.Files.createFile(done)
     }
     dir
   }
@@ -4808,18 +4591,12 @@ object ScalePatterns extends QueryModule {
   private def q370(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val M = graft.sources.VersionedManifest
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_sqlmerge_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val root = StagingDirs.dir(s, "sqlmerge", d)
     val dir = s"$root/corpus"
-    val done = java.nio.file.Paths.get(root, "_STAGED")
-    val cat = "g370_" + d.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.VersionedCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = VersionedCatalog.mount(s, "g370_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(root) {
       docs.filter(col("doc_id") % 4 === 0)
         .write.mode("overwrite").parquet(s"$dir/d-b1")
       M.commit(s, dir, 1, "data=d-b1\nbase")
@@ -4834,7 +4611,6 @@ object ScalePatterns extends QueryModule {
         .head()
       require(r.getLong(2) == 3L && r.getLong(3) == 1L && r.getLong(4) == 1L,
         s"merge receipt must be (v3, 1 affected, 1 untouched): $r")
-      java.nio.file.Files.createFile(done)
     }
     val latest = M.latestCommitted(s, dir).getOrElse(0L)
     val untouched = M.resolveDataDirs(s, dir, latest).toSet
@@ -4890,12 +4666,9 @@ object ScalePatterns extends QueryModule {
     */
   private def erasureEstate(s: SparkSession, d: String): (String, Boolean) = {
     val M = graft.sources.VersionedManifest
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_erase_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
+    val dir = StagingDirs.dir(s, "erase", d)
     var travelWorkedBefore = false
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(dir) {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       docs.filter(col("doc_id") % 3 === 0)
@@ -4914,7 +4687,6 @@ object ScalePatterns extends QueryModule {
       val expired = M.expireSnapshots(s, dir, keepLast = 1)
       require(expired == Seq(1L, 2L), s"expected v1,v2 expired: $expired")
       M.vacuum(s, dir)
-      java.nio.file.Files.createFile(done)
     }
     (dir, travelWorkedBefore)
   }
@@ -4977,13 +4749,10 @@ object ScalePatterns extends QueryModule {
     import s.implicits._
     import org.apache.spark.sql.types.{LongType => LT, StringType => ST, StructField => SF, StructType => STT}
     val M = graft.sources.VersionedManifest
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_schemagate_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
+    val dir = StagingDirs.dir(s, "schemagate", d)
     val docs = Tables.documents(s, d)
     val v3cols = Seq("doc_id", "lang", "n_chars")
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(dir) {
       M.writeSchema(s, dir, STT(Seq(SF("doc_id", LT), SF("lang", ST),
         SF("n_chars", LT))))
       docs.filter(col("doc_id") % 2 === 0).select(v3cols.map(col): _*)
@@ -5000,7 +4769,6 @@ object ScalePatterns extends QueryModule {
         .select(col("doc_id"), col("lang"),
           col("n_chars").cast("string").as("n_chars"))
         .write.mode("overwrite").parquet(s"$dir/v=12")
-      java.nio.file.Files.createFile(done)
     }
     // refusals re-exercised every run. A WARM re-run (same session, the
     // bench's second quote) sees the POST-evolution declared schema —
@@ -5096,11 +4864,8 @@ object ScalePatterns extends QueryModule {
     */
   private def conflictEstate(s: SparkSession, d: String): String = {
     val M = graft.sources.VersionedManifest
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_ccmerge_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "ccmerge", d)
+    StagingDirs.once(dir) {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       docs.filter(col("doc_id") % 3 === 0)
@@ -5130,7 +4895,6 @@ object ScalePatterns extends QueryModule {
         try { M.mergeDetectingConflicts(s, dir, srcC, "doc_id", Some(2L)); false }
         catch { case _: java.util.ConcurrentModificationException => true }
       require(refused, "overlapping concurrent merge must abort")
-      java.nio.file.Files.createFile(done)
     }
     dir
   }
@@ -5196,15 +4960,9 @@ object ScalePatterns extends QueryModule {
     * table costs the batch, never the table.
     */
   private def sqlInsertCatalog(s: SparkSession, d: String): (String, String) = {
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_sqlins_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val cat = "g390_" + d.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.VersionedCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
-    val done = java.nio.file.Paths.get(root, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val root = StagingDirs.dir(s, "sqlins", d)
+    val cat = VersionedCatalog.mount(s, "g390_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    StagingDirs.once(root) {
       val M = graft.sources.VersionedManifest
       val src = s"parquet.`$d/documents.parquet`"
       s.sql(s"CREATE TABLE $cat.tables.ins AS SELECT doc_id, source, " +
@@ -5213,7 +4971,6 @@ object ScalePatterns extends QueryModule {
         s"n_chars FROM $src WHERE n_chars < 200")
       require(M.latestCommitted(s, s"$root/ins").contains(2L),
         "INSERT INTO must publish version 2")
-      java.nio.file.Files.createFile(done)
     }
     (cat, root)
   }
@@ -5266,15 +5023,9 @@ object ScalePatterns extends QueryModule {
     */
   private def replaceWhereCatalog(s: SparkSession, d: String)
       : (String, String) = {
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_replw_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val cat = "g391_" + d.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.VersionedCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
-    val done = java.nio.file.Paths.get(root, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val root = StagingDirs.dir(s, "replw", d)
+    val cat = VersionedCatalog.mount(s, "g391_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    StagingDirs.once(root) {
       val M = graft.sources.VersionedManifest
       val dir = s"$root/rw"
       val src = s"parquet.`$d/documents.parquet`"
@@ -5295,7 +5046,6 @@ object ScalePatterns extends QueryModule {
         .overwrite(col("source") === lit("src1"))
       require(M.latestCommitted(s, dir).contains(3L),
         "replaceWhere must publish version 3")
-      java.nio.file.Files.createFile(done)
     }
     (cat, root)
   }
@@ -5343,15 +5093,9 @@ object ScalePatterns extends QueryModule {
     */
   private def sqlUpdateCatalog(s: SparkSession, d: String)
       : (String, String) = {
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_squpd_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val cat = "g392_" + d.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.VersionedCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
-    val done = java.nio.file.Paths.get(root, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val root = StagingDirs.dir(s, "squpd", d)
+    val cat = VersionedCatalog.mount(s, "g392_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    StagingDirs.once(root) {
       val M = graft.sources.VersionedManifest
       val dir = s"$root/upd"
       val src = s"parquet.`$d/documents.parquet`"
@@ -5368,7 +5112,6 @@ object ScalePatterns extends QueryModule {
         .collect().head
       require(receipt.getLong(1) == 3L && receipt.getLong(2) == 1L &&
         receipt.getLong(3) == 1L, s"unexpected update receipt: $receipt")
-      java.nio.file.Files.createFile(done)
     }
     (cat, root)
   }
@@ -5412,11 +5155,8 @@ object ScalePatterns extends QueryModule {
     */
   private def q400(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{VersionedManifest => VM}
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_coldrop_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "coldrop", d)
+    StagingDirs.once(dir) {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
       docs.filter(col("doc_id") % 2 === 0)
@@ -5434,7 +5174,6 @@ object ScalePatterns extends QueryModule {
         s"data=$dir/v=1", s"data=$dir/v=3",
         "field=doc_id:doc_id", "field=n_chars:n_chars",
         "field=source:source_2").mkString("\n"))
-      java.nio.file.Files.createFile(done)
     }
     // the mapped reader: per data dir, each logical field resolves to
     // its physical name when the dir's footer carries it, else NULL —
@@ -5493,12 +5232,9 @@ object ScalePatterns extends QueryModule {
   private def q401(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val M = graft.sources.VersionedManifest
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_fkdecl_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val root = StagingDirs.dir(s, "fkdecl", d)
     val (factDir, dimDir) = (s"$root/orders", s"$root/customers")
-    val done = java.nio.file.Paths.get(root, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    StagingDirs.once(root) {
       Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
           col("o_orderpriority"), col("o_totalprice"))
         .write.mode("overwrite").parquet(s"$factDir/v=1")
@@ -5510,7 +5246,6 @@ object ScalePatterns extends QueryModule {
       val r = M.declareForeignKey(s, factDir, "o_custkey", dimDir,
         "c_custkey")
       require(r == Right(2L), s"FK declaration failed: $r")
-      java.nio.file.Files.createFile(done)
     }
     val nLive = M.registerDeclaredForeignKeys(s, factDir).toLong
     withConf(s, "spark.graft.ri.eliminate" -> "true") {

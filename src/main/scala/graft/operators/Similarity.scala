@@ -3459,9 +3459,7 @@ object Similarity extends QueryModule {
   private def streamServe(s: SparkSession, d: String, runTag: String,
       serveBatch: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val base = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_servestream_" +
-        s"${s.sparkContext.applicationId}_$runTag")
+    val base = graft.StagingDirs.dir(s, "servestream", runTag)
     val feed = graft.StagingDirs.register(s"${base}_feed")
     val out = graft.StagingDirs.register(s"${base}_out")
     val ckpt = graft.StagingDirs.register(s"${base}_ckpt")
@@ -3883,9 +3881,7 @@ object Similarity extends QueryModule {
     import org.apache.spark.sql.streaming.Trigger
     val M = graft.sources.VersionedManifest
     val run = q411Runs.incrementAndGet()
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_stream_" +
-        s"${s.sparkContext.applicationId}_r$run")
+    val root = graft.StagingDirs.dir(s, "ivfidx_stream", s"r$run")
     val feed = graft.StagingDirs.register(s"${root}_feed")
     val ckpt = graft.StagingDirs.register(s"${root}_ckpt")
     buildIvfIndex(s, d, root, baseOnly = true)

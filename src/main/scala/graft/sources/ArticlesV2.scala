@@ -1118,9 +1118,7 @@ object ArticlesV2 extends QueryModule {
     * thousand-executor scale.
     */
   private def q226(s: SparkSession, dir: String): DataFrame = {
-    val out = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_v2write_" +
-        s.sparkContext.applicationId)
+    val out = graft.StagingDirs.dir(s, "v2write")
     s.read.format("graft.sources.ArticleSourceV2")
       .option("corpus", "all").load()
       .write.format("graft.sources.ArticleSourceV2")
@@ -1148,12 +1146,8 @@ object ArticlesV2 extends QueryModule {
     // resumes a fully committed checkpoint and measures a no-data pass
     // (~0.1s), so the bench would quote resume cost as the write cost
     val run = q231Runs.incrementAndGet()
-    val out = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_v2swrite_" +
-        s"${s.sparkContext.applicationId}_r$run")
-    val ckpt = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_v2swrite_ckpt_" +
-        s"${s.sparkContext.applicationId}_r$run")
+    val out = graft.StagingDirs.dir(s, "v2swrite", s"r$run")
+    val ckpt = graft.StagingDirs.dir(s, "v2swrite_ckpt", s"r$run")
     val q = s.readStream.format("graft.sources.ArticleSourceV2")
       .option("corpus", "all").load()
       .writeStream.format("graft.sources.ArticleSourceV2")

@@ -306,23 +306,18 @@ object CatalogOps extends QueryModule {
 
   /** Shared scaffolding for the estate-MUTATING queries (q264/q267/q269):
     * one staging dir + catalog registration per (session, sfDir), with a
-    * `_DONE` gate so re-runs skip the mutation and re-audit the mutated
+    * stage-once gate so re-runs skip the mutation and re-audit the mutated
     * estate. Returns the catalog name to query.
     */
   private def stagedCatalog(s: SparkSession, dir: String, prefix: String)
       (mutate: (String, String) => Unit): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val appId = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val stage = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_${prefix}_${appId}_$safe")
-    val cat = s"graft_${prefix}_$safe"
+    val stage = graft.StagingDirs.dir(s, prefix, dir)
+    val cat = s"graft_${prefix}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     s.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
     s.conf.set(s"spark.sql.catalog.$cat.dataDir", stage)
-    val done = java.nio.file.Paths.get(stage, "_DONE")
-    if (!java.nio.file.Files.exists(done)) {
+    graft.StagingDirs.once(stage) {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage))
       mutate(cat, stage)
-      java.nio.file.Files.createFile(done)
     }
     cat
   }
@@ -384,7 +379,7 @@ object CatalogOps extends QueryModule {
     * through the catalog sees only the surviving estate because the
     * catalog lists the filesystem at resolution time. Runs against a
     * STAGED COPY of the landed estate (the reference dir is read-only
-    * upstream truth); the `_DONE` marker makes re-runs within a session
+    * upstream truth); the stage-once marker makes re-runs within a session
     * idempotent — they re-audit the already-deleted estate.
     *
     * Scale: the delete is O(#matching files) driver-side FS calls — the
@@ -476,7 +471,7 @@ object CatalogOps extends QueryModule {
     * (`main.py:208-227`) as catalog control-plane; the audit then reads
     * the landed estate through the same catalog and must reproduce the
     * upstream exactly (the oracle reads the ORIGINAL artifacts — landing
-    * is provably lossless). Re-runs are `_DONE`-gated: they re-audit the
+    * is provably lossless). Re-runs are stage-once gated: they re-audit the
     * already-landed estate.
     *
     * Scale: each landing is one Hadoop-FS copy + an O(1) receipt row
@@ -524,7 +519,7 @@ object CatalogOps extends QueryModule {
     * overwritten too — are hash-verified.
     *
     * Scale: only CHANGED rows shuffle (delta, clustered per artifact);
-    * the rewrite touches affected artifacts only. `_DONE`-gated like
+    * the rewrite touches affected artifacts only. Stage-once gated like
     * q264: re-runs re-audit the merged estate.
     */
   private def q269(s: SparkSession, dir: String): DataFrame = {

@@ -280,9 +280,20 @@ class VersionedCatalog extends CatalogPlugin with TableCatalog
   }
 }
 
-private[sources] object VersionedCatalog {
-  val TableNs = "tables"
-  val ProcNs = "sys"
+object VersionedCatalog {
+  private[sources] val TableNs = "tables"
+  private[sources] val ProcNs = "sys"
+
+  /** Register catalog `name` over the versioned tables under `root`
+    * (`pinned`: resolve through the multi-table snapshot pins); the only
+    * writer of a versioned catalog's `spark.sql.catalog.<name>` keys.
+    * Returns `name`. */
+  def mount(s: SparkSession, name: String, root: String, pinned: Boolean = false): String = {
+    s.conf.set(s"spark.sql.catalog.$name", classOf[VersionedCatalog].getName)
+    s.conf.set(s"spark.sql.catalog.$name.root", root)
+    if (pinned) s.conf.set(s"spark.sql.catalog.$name.pinned", "true")
+    name
+  }
 }
 
 /** The staged side of an atomic CTAS/RTAS: rows land under a

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import graft.{Exact, QueryModule, Tables}
+import graft.{Exact, QueryModule, StagingDirs, Tables}
 import graft.GraftSession.{inputParts, withConf}
+import graft.sources.VersionedCatalog
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -76,10 +77,8 @@ object Streams extends QueryModule {
     // the file stream source wants a DIRECTORY of arriving files — stage a
     // symlink to the single test parquet under tmp (a real deployment
     // points this at the landing directory)
-    val stage = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_stream_" + Integer.toHexString(d.hashCode))
+    val stage = new java.io.File(StagingDirs.dir(s, "stream", d))
     stage.mkdirs()
-    graft.StagingDirs.register(stage.getAbsolutePath)
     stageLinks(stage, s"$d/events.parquet")
     // probe the landed ts type from the batch footer, then apply the same
     // normalization as Tables.events (both generations → session-zone ts)
@@ -586,14 +585,10 @@ object Streams extends QueryModule {
     * (session, dataset).
     */
   private[streaming] def stageScd2Dim(s: SparkSession, d: String): String = {
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_scd2dim_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
-    val done = java.nio.file.Paths.get(dir, "_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = StagingDirs.dir(s, "scd2dim", d)
+    StagingDirs.once(dir) {
       scd2Dim(s, d).repartition(4, col("valid_from"))
         .write.mode("overwrite").parquet(s"$dir/dim")
-      java.nio.file.Files.createFile(done)
     }
     s"$dir/dim"
   }
@@ -1197,10 +1192,8 @@ object Streams extends QueryModule {
     * code at an arriving directory).
     */
   private def streamDocs(s: SparkSession, d: String): DataFrame = {
-    val stage = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_docstream_" + Integer.toHexString(d.hashCode))
+    val stage = new java.io.File(StagingDirs.dir(s, "docstream", d))
     stage.mkdirs()
-    graft.StagingDirs.register(stage.getAbsolutePath)
     stageLinks(stage, s"$d/documents.parquet")
     s.readStream
       .schema(s.read.parquet(s"$d/documents.parquet").schema)
@@ -1307,12 +1300,8 @@ object Streams extends QueryModule {
     */
   private def q252(s: SparkSession, d: String): DataFrame = {
     val run = q252Runs.incrementAndGet()
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_vingest_" +
-        s"${s.sparkContext.applicationId}_r$run")
-    val ckpt = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_vingest_ckpt_" +
-        s"${s.sparkContext.applicationId}_r$run")
+    val dir = StagingDirs.dir(s, "vingest", s"r$run")
+    val ckpt = StagingDirs.dir(s, "vingest_ckpt", s"r$run")
     val landEpoch: (DataFrame, Long) => Unit = (batch, epoch) => {
       val v = epoch + 1
       // idempotent replay: an already-committed version lands nothing
@@ -1379,12 +1368,8 @@ object Streams extends QueryModule {
   private def q367(s: SparkSession, d: String): DataFrame = {
     val M = graft.sources.VersionedManifest
     val run = q367Runs.incrementAndGet()
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_cdc_" +
-        s"${s.sparkContext.applicationId}_r$run")
-    val ckpt = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_cdc_ckpt_" +
-        s"${s.sparkContext.applicationId}_r$run")
+    val dir = StagingDirs.dir(s, "cdc", s"r$run")
+    val ckpt = StagingDirs.dir(s, "cdc_ckpt", s"r$run")
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
     def lwwFold(df: DataFrame): DataFrame = df
       .select(col("user_id"), struct(col("ts"), col("event_id"),
@@ -1459,12 +1444,9 @@ object Streams extends QueryModule {
     */
   private def q372(s: SparkSession, d: String): DataFrame = {
     val run = q372Runs.incrementAndGet()
-    val base = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_dlq_" +
-        s"${s.sparkContext.applicationId}_${d.replaceAll("[^A-Za-z0-9.-]", "_")}")
+    val base = StagingDirs.dir(s, "dlq", d)
     val arrivals = s"$base/arrivals"
-    val staged = java.nio.file.Paths.get(base, "_STAGED")
-    if (!java.nio.file.Files.exists(staged)) {
+    StagingDirs.once(base) {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
@@ -1481,11 +1463,10 @@ object Streams extends QueryModule {
         // IS the intended batch order
         dst.setLastModified(1700000000000L + k * 60000L)
       }
-      java.nio.file.Files.createFile(staged)
     }
     val mainDir = s"$base/main_r$run"
     val deadDir = s"$base/dead_r$run"
-    val ckpt = graft.StagingDirs.register(s"$base/ckpt_r$run")
+    val ckpt = StagingDirs.register(s"$base/ckpt_r$run")
     val sch = s.read.parquet(arrivals).schema
     var hwmMicros = Long.MinValue // driver state: ONE scalar
     val route: (DataFrame, Long) => Unit = (batch, _) => {
@@ -1584,17 +1565,10 @@ object Streams extends QueryModule {
     */
   private[streaming] def ingestVersioned(s: SparkSession, d: String,
                                          tag: String): (String, String) = {
-    val root = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_" +
-        s"${s.sparkContext.applicationId}")
-    val ckpt = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_ckpt_" +
-        s"${s.sparkContext.applicationId}")
+    val root = StagingDirs.dir(s, tag)
+    val ckpt = StagingDirs.dir(s, s"${tag}_ckpt")
     // catalog instances are cached by name: one per (app, tag)
-    val cat = s"g$tag"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.VersionedCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = VersionedCatalog.mount(s, s"g$tag", root)
     val table = s"$cat.tables.events_log"
     s.sql(s"CREATE TABLE $table " +
       "(event_type STRING, user_id BIGINT, value DOUBLE)")
@@ -1741,10 +1715,9 @@ object Streams extends QueryModule {
   private def q338(s: SparkSession, d: String): DataFrame = {
     val run = q338Runs.incrementAndGet()
     val (table, dir) = ingestVersioned(s, d, s"vmix_r$run")
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_vmix_r${run}_" +
-      s.sparkContext.applicationId
-    val sink = graft.StagingDirs.register(s"$base-sink")
-    val ckpt = graft.StagingDirs.register(s"$base-subckpt")
+    val base = StagingDirs.dir(s, s"vmix_r$run") // the ingest estate's root
+    val sink = StagingDirs.register(s"$base-sink")
+    val ckpt = StagingDirs.register(s"$base-subckpt")
     def drain(): Unit = {
       val q = s.readStream.table(table)
         .writeStream.format("parquet")
@@ -1829,10 +1802,9 @@ object Streams extends QueryModule {
     val M = graft.sources.VersionedManifest
     val vIn = M.latestCommitted(s, dir).get
     M.createBranch(s, dir, "main", vIn)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_vbr_r${run}_" +
-      s.sparkContext.applicationId
-    val sink = graft.StagingDirs.register(s"$base-sink")
-    val ckpt = graft.StagingDirs.register(s"$base-subckpt")
+    val base = StagingDirs.dir(s, s"vbr_r$run") // the ingest estate's root
+    val sink = StagingDirs.register(s"$base-sink")
+    val ckpt = StagingDirs.register(s"$base-subckpt")
     def drain(): Unit = {
       val q = s.readStream.option("branch", "main").table(table)
         .writeStream.format("parquet")
@@ -1960,11 +1932,8 @@ object Streams extends QueryModule {
     */
   private def q279(s: SparkSession, d: String): DataFrame = {
     val run = q279Runs.incrementAndGet()
-    val tmpdir = System.getProperty("java.io.tmpdir")
-    val estate = graft.StagingDirs.register(
-      s"$tmpdir/graft_vfeed_${s.sparkContext.applicationId}_r$run")
-    val stage = new java.io.File(graft.StagingDirs.register(
-      s"$tmpdir/graft_vfeed_stage_${s.sparkContext.applicationId}_r$run"))
+    val estate = StagingDirs.dir(s, "vfeed", s"r$run")
+    val stage = new java.io.File(StagingDirs.dir(s, "vfeed_stage", s"r$run"))
     stage.mkdirs()
     val ev = Tables.events(s, d)
     (0 to 2).foreach { slice =>
@@ -2016,9 +1985,7 @@ object Streams extends QueryModule {
     */
   private def q270(s: SparkSession, d: String): DataFrame = {
     val run = q270Runs.incrementAndGet()
-    val ckpt = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_statespect_" +
-        s"${s.sparkContext.applicationId}_r$run")
+    val ckpt = StagingDirs.dir(s, "statespect", s"r$run")
     val fps = streamDocs(s, d).select(passageFp(col("text")).as("fp"))
     withStreamParts(s, d) {
       val q = fps.dropDuplicates("fp").writeStream
@@ -2124,12 +2091,8 @@ object Streams extends QueryModule {
   private def q403(s: SparkSession, d: String): DataFrame = {
     val M = graft.sources.VersionedManifest
     val run = q403Runs.incrementAndGet()
-    val dir = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_scd2a_" +
-        s"${s.sparkContext.applicationId}_r$run")
-    val ckpt = graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_scd2a_ckpt_" +
-        s"${s.sparkContext.applicationId}_r$run")
+    val dir = StagingDirs.dir(s, "scd2a", s"r$run")
+    val ckpt = StagingDirs.dir(s, "scd2a_ckpt", s"r$run")
     if (M.latestCommitted(s, dir).isEmpty) {
       streamEventsSchemaFrame(s, d)
         .select(col("user_id"), col("event_type"), col("value"),
