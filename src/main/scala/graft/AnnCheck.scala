@@ -2,8 +2,8 @@ package graft
 
 /** Decade gauge for the persisted ANN index (r11 verdict "What's missing"
   * #1): per dataset dir, times (a) the ONE-TIME train+commit of the IVF
-  * index artifact ([[operators.Similarity.buildIvfIndex]]) and (b) warm
-  * min-of-2 SERVING from the committed version
+  * index artifact ([[operators.Similarity.buildIvfIndex]]) and (b)
+  * `Measure.warmMin` SERVING from the committed version
   * ([[operators.Similarity.serveFromIvfIndex]]) — the claim under test is
   * that query cost is independent of train cost: serving never re-runs
   * the Lloyd superstep, it reads centroids + probe budget + inverted
@@ -27,25 +27,16 @@ object AnnCheck {
       val root = operators.Similarity.ivfIndexRoot(spark, d, "full")
       val preCommitted = graft.sources.VersionedManifest
         .latestCommitted(spark, s"$root/lists").nonEmpty
-      val t0 = System.nanoTime()
-      operators.Similarity.buildIvfIndex(spark, d, root, baseOnly = false)
-      val tBuild = (System.nanoTime() - t0) / 1e9
-      // warm once untimed, then min-of-2 (the ScaleCheck protocol)
-      operators.Similarity.serveFromIvfIndex(spark, d, root)
-        .write.format("noop").mode("overwrite").save()
-      val tServe = (1 to 2).map { _ =>
-        val t1 = System.nanoTime()
-        operators.Similarity.serveFromIvfIndex(spark, d, root)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t1) / 1e9
-      }.min
+      val (_, tBuild) = Measure.timed(
+        operators.Similarity.buildIvfIndex(spark, d, root, baseOnly = false))
+      val tServe = Measure.warmMin(spark)(
+        operators.Similarity.serveFromIvfIndex(spark, d, root))
       val buildNote =
         if (preCommitted) f"SKIPPED (committed estate, ${tBuild}%.2f s probe)"
         else f"$tBuild%.2f s"
       val ratio =
         if (preCommitted) "" else f" (serve/build=${tServe / tBuild}%.3f)"
       println(f"[ann] $d build+commit=$buildNote serve=$tServe%.2f s$ratio")
-      CacheHygiene.release(spark)
     }
     // retention sweep (r13 ADVICE #4): reclaim estate roots orphaned by
     // dataset regenerations (7-day age gate protects anything a live

@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_SF_DIR. Each headline query is warmed once UNTIMED at the
   * bench SF immediately before its timed attempts (codegen + JIT +
   * parquet footer caches), so timings measure the operators, not JVM
-  * startup or the first-codegen window. The noop sink executes the
-  * complete plan (including sorts) without collect or write overhead.
+  * startup or the first-codegen window. Every execution, warm or timed,
+  * is one `Measure.once`: the noop sink runs the complete plan (including
+  * sorts) without collect or write overhead.
   *
   * Noise handling: this host shows multi-MINUTE CPU-steal bursts (a warm
   * query can swing 1.8s ↔ 21s on unchanged code; r03's driver bench
@@ -21,7 +22,7 @@ import org.apache.spark.sql.SparkSession
   * is reported as -1 with its error in an "errors" map — never as a
   * misleading timing.
   *
-  * Session-residue handling (r7 verdict): `CacheHygiene.release` runs
+  * Session-residue handling (r7 verdict): `Measure.once` releases
   * after every execution, outside the timed window, so localCheckpoint
   * blocks and streaming state-store providers from one query can never
   * inflate a later one; a late-session re-quote of the slowest rows
@@ -248,43 +249,26 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus("4")
     val nCpus = cpus.toInt
-    var spark = GraftSession.get(cpus)
-    // harness main: keep the driver's stdout-tail window free of log
-    // chatter — the compact JSON line must be the last thing printed.
-    // OFF, not ERROR (r13 verdict "What's wrong" #2): the deliberately-
-    // provoked refusal paths (COW/late-change/stray-row gates) make Spark
-    // internals log their expected exception at ERROR with a full stack,
-    // which landed in BENCH_r13's archived tail ahead of the JSON line.
-    // Bench does its own failure reporting (the "errors"/"failed" JSON
-    // fields), so muting log4j here hides no signal.
-    spark.sparkContext.setLogLevel("OFF")
+    // a dead context (host OOM-kill of an executor thread pool, external
+    // SIGTERM of the backend) must cost ONE query's measurement, not every
+    // row after it: GraftSession.get's getOrCreate builds a fresh session
+    // when the default's context is stopped. It also resets the log level.
+    // OFF keeps the driver's stdout-tail window free of log chatter — the
+    // compact JSON line must be the last thing printed. OFF, not ERROR
+    // (r13 verdict "What's wrong" #2): the deliberately-provoked refusal
+    // paths (COW/late-change/stray-row gates) make Spark internals log
+    // their expected exception at ERROR with a full stack, which landed in
+    // BENCH_r13's archived tail ahead of the JSON line. Bench does its own
+    // failure reporting (the "errors"/"failed" JSON fields), so muting
+    // log4j here hides no signal.
+    def session(): SparkSession = {
+      val s = GraftSession.get(cpus)
+      s.sparkContext.setLogLevel("OFF")
+      s
+    }
 
     val qs = SparkEntry.queries
     val names = headline.filter(qs.contains)
-
-    // a dead context (host OOM-kill of an executor thread pool, external
-    // SIGTERM of the backend) must cost ONE query's measurement, not every
-    // row after it: getOrCreate builds a fresh session when the default's
-    // context is stopped, so revival is one call away
-    def liveSession(): org.apache.spark.sql.SparkSession = {
-      if (spark.sparkContext.isStopped) {
-        spark = GraftSession.get(cpus)
-        spark.sparkContext.setLogLevel("OFF")
-      }
-      spark
-    }
-    // returns construction seconds (plan build — which for the iterative
-    // fixpoint queries q85/q113/q227 runs real jobs) so the JSON can
-    // attribute construct vs execute honestly (r8 verdict #7); the timed
-    // window in measure() still covers BOTH, so "queries" totals are
-    // unchanged in meaning
-    def exec(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      val df = qs(name)(liveSession(), dir)
-      val tc = (System.nanoTime() - t0) / 1e9
-      df.write.format("noop").mode("overwrite").save()
-      tc
-    }
 
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val nHostCpus = math.max(nCpus, hostCpus())
@@ -308,16 +292,18 @@ object Bench {
     // the timed attempts — an sf0.001 pass leaves per-query codegen cold
     // (q26's min-of-2 landed 5.9s inside the first-codegen window in r6;
     // warm it is 0.9s), so the minimum must never include a first-codegen
-    // run. Session storage is released after EVERY execution, outside the
-    // timed window (r7 verdict: never-unpersisted localCheckpoint blocks +
-    // streaming state-store providers accumulated across the ~336
-    // executions of a full run and inflated late rows up to 10x — q152
-    // 9.76s bench vs 0.94s fresh-JVM warm, with steal = 0). Codegen, JIT
-    // and parquet-footer caches are unaffected by the release, so warm
-    // stays warm.
+    // run. Each attempt is one `Measure.once`, which releases session
+    // storage after EVERY execution, outside the timed window (r7 verdict:
+    // q152 read 9.76s bench vs 0.94s fresh-JVM warm, with steal = 0).
+    // Codegen, JIT and parquet-footer caches are unaffected by the
+    // release, so warm stays warm. The construct seconds (plan build —
+    // which for the iterative fixpoint queries q85/q113/q227 runs real
+    // jobs) let the JSON attribute construct vs execute (r8 verdict #7);
+    // the timed total covers BOTH.
     def measure(name: String): (Double, Double, Double, Int, Option[String]) = {
-      try exec(name, sfDir) catch { case _: Throwable => () }
-      CacheHygiene.release(spark)
+      val s = session()
+      def run() = Measure.once(s)(qs(name)(s, sfDir))
+      try run() catch { case _: Throwable => () }
       var best = Double.MaxValue
       var bestConstruct = -1.0
       var bestStealFrac = 1.0
@@ -331,10 +317,8 @@ object Bench {
         // window, so sit out visible steal first (bounded shared budget)
         if (attempt == 1 || bestStealFrac > 0.02) waitForQuiet()
         val s0 = stealTicks()
-        val t0 = System.nanoTime()
         try {
-          val tc = exec(name, sfDir)
-          val dt = (System.nanoTime() - t0) / 1e9
+          val (tc, dt) = run()
           // steal ticks are host-wide: normalize by the HOST cpu count
           // (cpuN lines, not availableProcessors — see hostCpus()), or the
           // fraction overcounts whenever the container sees fewer cores
@@ -352,7 +336,6 @@ object Bench {
               err = Some(msg.replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200))
             } else attempt = 4 // stop retrying, keep the valid best
         }
-        CacheHygiene.release(spark)
       }
       (best, bestConstruct, bestStealFrac, attempt, err)
     }
@@ -496,6 +479,6 @@ object Bench {
     }.mkString("{", ",", "}")
     val compact = s"""{"metric":"total","value":${r2(total)},"unit":"sec","queries":$qCompact,"n_queries":${results.size},"failed":${errors.size},"contaminated":$contaminated,"requote_rounds":$round,"comparable_sweeps":2,"sweep2_improved":$sweep2Improved,"quiet_budget_exhausted":${quietBudgetMs <= 0},"full":"target/bench_latest.json","sf":"$sfDir"}"""
     println(compact)
-    spark.stop()
+    session().stop()
   }
 }

@@ -23,7 +23,7 @@ import org.apache.spark.sql.SparkSession
   * This is an engine feature, not just a bench fix: any long-lived
   * deployment (a query server looping over tenant jobs) needs the same
   * between-jobs release or it leaks block-manager memory for the process
-  * lifetime. Called by `Bench`, `Verify`, and `Profile` after every query;
+  * lifetime. Called by `Measure` and `Verify` after every query;
   * pinned by `CacheHygieneSpec` (storage returns to baseline, and queries
   * re-run correctly afterwards).
   */

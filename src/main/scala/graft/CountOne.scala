@@ -9,9 +9,7 @@ object CountOne {
     val spark = GraftSession.get(GraftSession.cpus("32"))
     val q = SparkEntry.queries(args.head)
     args.tail.foreach { dir =>
-      val t0 = System.nanoTime()
-      val n = q(spark, dir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (n, dt) = Measure.timed(q(spark, dir).count())
       println(f"[countone] ${args.head} $dir rows=$n time=$dt%.1fs")
       CacheHygiene.release(spark)
     }

@@ -10,9 +10,9 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * dataset dir and reports, per decade, the evidence PlanSpec pins only at
   * test scale — q233's months-READ metric from the executed fact scan
   * (must stay ≤ 12 however big the layout grows) and q245's
-  * files-per-partition-dir after compaction (must be exactly 1). Timing
-  * follows the ScaleCheck protocol: construction (which lands the layout)
-  * is untimed, then min of 2 timed re-executions per query.
+  * files-per-partition-dir after compaction (must be exactly 1). The
+  * first construction lands the layout and reads the evidence, untimed;
+  * then `Measure.warmMin` times the steady-state query.
   *
   * Usage: runMain graft.MaintCheck <dirA> [dirB ...]
   */
@@ -32,7 +32,7 @@ object MaintCheck {
       // ---- q233: DPP months-read at this scale
       val q233 = SparkEntry.queries("q233_dpp_star")
       val df = q233(spark, d) // first construction lands the hive layout
-      df.collect() // warm + the execution whose scan metrics we read
+      df.collect() // the execution whose scan metrics we read
       val fact = scans(df.queryExecution.executedPlan)
         .find(_.metadata.getOrElse("Location", "").contains("graft_dpp_"))
         .getOrElse(sys.error("q233 fact scan not found in executed plan"))
@@ -43,14 +43,9 @@ object MaintCheck {
         try ls.iterator().asScala.count(
           _.getFileName.toString.startsWith("l_ship_ym="))
         finally ls.close()
-      val t233 = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        q233(spark, d).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      val t233 = Measure.warmMin(spark)(q233(spark, d))
       println(f"[maint] $d q233_dpp_star: ${t233}%.2f s, " +
         s"monthsRead=$monthsRead of $monthsTotal partition dirs")
-      CacheHygiene.release(spark)
 
       // ---- q245: files per partition dir after compaction
       val q245 = SparkEntry.queries("q245_partitioned_compaction")
@@ -68,16 +63,11 @@ object MaintCheck {
             finally fl.close()
           }.toSeq
         finally ds.close()
-      val t245 = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        q245(spark, d).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      val t245 = Measure.warmMin(spark)(q245(spark, d))
       val counts = perDir.map(_._2)
       println(f"[maint] $d q245_partitioned_compaction: ${t245}%.2f s, " +
         s"${perDir.size} partition dirs, files/dir min=${counts.min} " +
         s"max=${counts.max}")
-      CacheHygiene.release(spark)
 
       // ---- q251: manifest file skipping — files READ vs files in layout
       val q251 = SparkEntry.queries("q251_file_skipping")
@@ -92,14 +82,9 @@ object MaintCheck {
       val filesTotal =
         try fs251.iterator().asScala.count(_.toString.endsWith(".parquet"))
         finally fs251.close()
-      val t251 = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        q251(spark, d).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      val t251 = Measure.warmMin(spark)(q251(spark, d))
       println(f"[maint] $d q251_file_skipping: ${t251}%.2f s, " +
         s"filesRead=$filesRead of $filesTotal layout files")
-      CacheHygiene.release(spark)
     }
     spark.stop()
   }

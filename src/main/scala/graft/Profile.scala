@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time a named query and print its formatted physical plan.
   * Usage: runMain graft.Profile <sfDir> <query> [query...]
   */
@@ -16,18 +14,16 @@ object Profile {
       // construction is not free for every query: iterative operators
       // (q85) and streaming backfills (q90+) execute jobs while building
       // the result — time it separately from plan re-execution
-      val tc = System.nanoTime()
-      val df = fn(spark, sfDir)
-      println(f"[profile] $name construct: ${(System.nanoTime() - tc) / 1e9}%.2f s")
+      val (df, tc) = Measure.timed(fn(spark, sfDir))
+      println(f"[profile] $name construct: $tc%.2f s")
       if (sys.env.contains("GRAFT_EXPLAIN")) df.explain("formatted")
       (1 to 3).foreach { i =>
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        println(f"[profile] $name run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        // NOTE: releasing here would break iterative queries whose result
-        // depends on localCheckpoint blocks built at construction (q85
-        // et al. re-execute from the checkpointed RDD); release only
-        // between queries, after this df's last run.
+        val (_, t) = Measure.timed(Measure.execute(df))
+        println(f"[profile] $name run$i: $t%.2f s")
+        // NOTE: not `Measure.once` — releasing here would break iterative
+        // queries whose result depends on localCheckpoint blocks built at
+        // construction (q85 et al. re-execute from the checkpointed RDD);
+        // release only between queries, after this df's last run.
         // the FINAL adaptive plan (ReusedExchange, AQEShuffleRead, join
         // demotions) only exists after execution — GRAFT_EXPLAIN's
         // pre-run dump cannot show it

@@ -6,7 +6,7 @@ package graft
   * whole corpus), swept over the probe budget `nprobe` — THE serving
   * quality dial a production retrieval estate watches. Per (dataset,
   * nprobe): recall@5 over the 10 standard queries, candidate-pair count
-  * (the probed-volume axis), and warm min-of-2 serve seconds, so the
+  * (the probed-volume axis), and `Measure.warmMin` serve seconds, so the
   * recall-vs-latency trade reads off one table. A second sweep covers
   * the MULTI-VECTOR candidate generator (q417's PLAID-shaped path) over
   * per-subvector budgets `mv_subnpr`, so the pooled-vs-multi-vector
@@ -29,9 +29,7 @@ object RecallCheck {
       val root = S.ivfIndexRoot(spark, d, "full")
       val pre = graft.sources.VersionedManifest
         .latestCommitted(spark, s"$root/lists").nonEmpty
-      val t0 = System.nanoTime()
-      S.buildIvfIndex(spark, d, root, baseOnly = false)
-      val tBuild = (System.nanoTime() - t0) / 1e9
+      val (_, tBuild) = Measure.timed(S.buildIvfIndex(spark, d, root, baseOnly = false))
       println(f"[recall] $d index: " +
         (if (pre) "committed estate reused" else f"built in $tBuild%.2f s"))
       val committed = S.committedNpr(spark, root)
@@ -48,12 +46,7 @@ object RecallCheck {
         Seq(committed, 4L * committed)).distinct.sorted.filter(_ >= 1L)
       budgets.foreach { npr =>
         def serve() = S.twoStageMaxSimTop5(spark, d, root, Some(npr))
-        serve().write.format("noop").mode("overwrite").save() // warm
-        val tServe = (1 to 2).map { _ =>
-          val t1 = System.nanoTime()
-          serve().write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t1) / 1e9
-        }.min
+        val tServe = Measure.warmMin(spark)(serve())
         val recallMs = (exactMs &
           top5Set(serve())).size.toDouble / exactMs.size
         val recallCos = (exactCos &
@@ -76,12 +69,7 @@ object RecallCheck {
         Seq(S.mvSubNpr(committed), committed)).distinct.sorted.filter(_ >= 1L)
       subBudgets.foreach { sub =>
         def serve() = S.multiVectorMaxSimTop5(spark, d, root, Some(sub))
-        serve().write.format("noop").mode("overwrite").save() // warm
-        val tServe = (1 to 2).map { _ =>
-          val t1 = System.nanoTime()
-          serve().write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t1) / 1e9
-        }.min
+        val tServe = Measure.warmMin(spark)(serve())
         val recallMs = (exactMs &
           top5Set(serve())).size.toDouble / exactMs.size
         val cand = S.multiVectorCandidatePairs(spark, d, root, Some(sub)).count()
@@ -96,12 +84,7 @@ object RecallCheck {
       // row shows what recall that budget costs vs the unpruned q417
       S.buildSq8Sidecar(spark, d, root)
       def servePruned() = S.plaidPrunedMaxSimTop5(spark, d, root)
-      servePruned().write.format("noop").mode("overwrite").save() // warm
-      val tPruned = (1 to 2).map { _ =>
-        val t1 = System.nanoTime()
-        servePruned().write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t1) / 1e9
-      }.min
+      val tPruned = Measure.warmMin(spark)(servePruned())
       val recallPruned = (exactMs &
         top5Set(servePruned())).size.toDouble / exactMs.size
       println(f"[recall] $d plaid_pruned(K=${S.PlaidPruneK}) " +

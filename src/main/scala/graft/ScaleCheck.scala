@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-growth measurement (r7 verdict #6): time the 22 TPC-H shapes plus
   * the shuffle-bound dedup/ANN family at TWO scale factors in one session
   * and report the growth ratio — converting the "this plan survives 10×"
@@ -9,9 +7,13 @@ import org.apache.spark.sql.SparkSession
   * ≈ linearly (ratio ≈ data ratio, here 10×); a quadratic candidate stage
   * or an unbounded window would show up as ratio ≫ 10.
   *
-  * Protocol per (query, dir): warm once untimed, then min of 2 timed runs,
-  * `CacheHygiene.release` after every execution (the Bench discipline).
-  * Usage: runMain graft.ScaleCheck <dirA> <dirB>   (A = small, B = big)
+  * Protocol per (query, dir): `Measure.warmMin` — warm once untimed, then
+  * min of 2 timed runs, session storage released after every execution.
+  * Usage: runMain graft.ScaleCheck <dirA> <dirB> [query ...]
+  * (A = small, B = big). Named queries replace the default set; any
+  * registered query may be named, and an unknown name fails the run. With
+  * a uniform dir and its Zipf twin as A and B, this is the skew timing
+  * table (see `SkewCheck`).
   */
 object ScaleCheck {
 
@@ -77,37 +79,19 @@ object ScaleCheck {
 
   def main(args: Array[String]): Unit = {
     val (dirA, dirB) = (args(0), args(1))
-    // optional 3rd+ args: restrict to the named queries (the sf10 decade
-    // runs only the most shuffle-bound shapes)
-    val only: Set[String] = args.drop(2).toSet
-    var spark = GraftSession.get(GraftSession.cpus("32"))
     val qs = SparkEntry.queries
-
-    // revive a dead context so one casualty doesn't void every later row
-    // (the Bench discipline — see Bench.liveSession)
-    def liveSession() = {
-      if (spark.sparkContext.isStopped)
-        spark = GraftSession.get(GraftSession.cpus("32"))
-      spark
-    }
+    // optional 3rd+ args: time these queries instead of the set (the sf10
+    // decade runs only the most shuffle-bound shapes)
+    val only = args.drop(2).toSeq
+    only.foreach(n => require(qs.contains(n), s"unknown query: $n"))
+    // GraftSession.get rebuilds the session when its context was stopped,
+    // so one casualty doesn't void every later row
     def timed(name: String, dir: String): Double = {
-      def exec(): Unit =
-        qs(name)(liveSession(), dir).write.format("noop").mode("overwrite").save()
-      try exec() catch { case t: Throwable =>
-        CacheHygiene.release(spark); throw t }
-      CacheHygiene.release(spark)
-      val runs = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        exec()
-        val dt = (System.nanoTime() - t0) / 1e9
-        CacheHygiene.release(spark)
-        dt
-      }
-      runs.min
+      val spark = GraftSession.get(GraftSession.cpus("32"))
+      Measure.warmMin(spark)(qs(name)(spark, dir))
     }
 
-    val rows = set.filter(qs.contains)
-      .filter(n => only.isEmpty || only(n)).map { name =>
+    val rows = (if (only.isEmpty) set.filter(qs.contains) else only).map { name =>
       // state footprint is recorded by the memory-sink helper per run;
       // read it right after each dir's timed runs so A and B don't mix
       val (a, stateA) =
@@ -143,6 +127,6 @@ object ScaleCheck {
       f""""$n":{"a":$a%.3f,"b":$b%.3f,"ratio":$r%.2f$stJs}""" }
       .mkString("{", ",", "}")
     println(s"""{"metric":"scalecheck","dirA":"$dirA","dirB":"$dirB","queries":$js}""")
-    spark.stop()
+    GraftSession.get(GraftSession.cpus("32")).stop()
   }
 }

@@ -15,16 +15,18 @@ import org.apache.spark.sql.functions._
   *   - the shingle-df evidence behind q74/q85's stop-shingle rule: the
   *     hottest 3-gram's df, shingles over the 256 cap, capped vs uncapped
   *     candidate-pair sums;
-  *   - min-of-2 warm timings for the skew-sensitive roster the r11
-  *     verdict named (q46/q105/q260 salting+AQE, q74/q85 caps, q395).
+  *   - the committed IVF index's per-list occupancy-cap evidence (q416).
   *
   * Usage: runMain graft.SkewCheck <uniformDir> <zipfDir>
+  *
+  * The warm timings of the skew-sensitive roster the r11 verdict named
+  * (q46/q105/q260 salting+AQE, q74/q85 caps, q395), uniform vs Zipf with
+  * the ratio, come from ScaleCheck:
+  * `runMain graft.ScaleCheck <uniformDir> <zipfDir> q46_salted_agg
+  * q105_salted_join q260_aqe_skew_join q74_ngram_jaccard
+  * q85_dedup_components q395_link_prediction`
   */
 object SkewCheck {
-
-  private val roster = Seq(
-    "q46_salted_agg", "q105_salted_join", "q260_aqe_skew_join",
-    "q74_ngram_jaccard", "q85_dedup_components", "q395_link_prediction")
 
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.get(GraftSession.cpus("32"))
@@ -98,22 +100,8 @@ object SkewCheck {
         println(s"[skew] $d q416_list_cap: skipped (${e.getMessage})")
       }
       // the index build leaves session storage (checkpoint blocks) that
-      // the heavy dedup roster below cannot afford at decade scale —
-      // q85 at sf1z OOM'd the 8g default heap when this was missing
+      // the next dir's evidence should not run on top of
       CacheHygiene.release(spark)
-
-      // ---- warm min-of-2 timings, the ScaleCheck protocol
-      roster.foreach { name =>
-        val q = SparkEntry.queries(name)
-        q(spark, d).write.format("noop").mode("overwrite").save() // warm
-        val t = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          q(spark, d).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }.min
-        println(f"[skew] $d $name: $t%.2f s")
-        CacheHygiene.release(spark)
-      }
     }
     spark.stop()
   }

@@ -139,9 +139,13 @@ object Streams extends QueryModule {
     s.table(name)
     }
 
-  /** A fresh sink directory for a foreachBatch parquet landing zone. */
+  /** A fresh sink directory for a foreachBatch parquet landing zone, under
+    * the current `java.io.tmpdir` (`Files.createTempDirectory(prefix)`
+    * keeps the one read at JVM startup) and deleted at JVM exit. */
   private def sinkDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_${tag}_sink").toFile.getAbsolutePath
+    StagingDirs.register(java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
+      s"graft_${tag}_sink").toFile.getAbsolutePath)
 
   /** q90: tumbling event-time window — per-hour, per-type count and exact
     * sum, with a watermark (complete mode keeps every window so the bounded

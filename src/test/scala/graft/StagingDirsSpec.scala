@@ -2,13 +2,15 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.sources.{SnapshotCatalog, VersionedCatalog, VersionedManifest}
 
 /** Pins the staging primitives: [[StagingDirs.dir]] names exactly what the
   * hand-spelled `<tmpdir>/graft_<tag>_<applicationId>_<key>` paths named and
-  * follows a moved `java.io.tmpdir`; [[StagingDirs.once]] builds once and
-  * marks only a build that returned; [[VersionedCatalog.mount]] writes only
-  * the catalog's own keys.
+  * follows a moved `java.io.tmpdir`, as q93's stream sink does;
+  * [[StagingDirs.once]] builds once and marks only a build that returned;
+  * [[VersionedCatalog.mount]] writes only the catalog's own keys.
   */
 class StagingDirsSpec extends SparkSpec {
 
@@ -35,6 +37,21 @@ class StagingDirsSpec extends SparkSpec {
       assert(StagingDirs.dir(spark, "tt", sf0001) ===
         s"$moved/graft_tt_${app}__root_testdata_sf0.001")
     } finally System.setProperty("java.io.tmpdir", before)
+  }
+
+  test("q93's foreachBatch sink lands under a moved java.io.tmpdir") {
+    val before = tmpdir
+    val moved = scratch()
+    try {
+      System.setProperty("java.io.tmpdir", moved)
+      Measure.once(spark)(SparkEntry.queries("q93_stream_stateful")(spark, sf0001))
+    } finally System.setProperty("java.io.tmpdir", before)
+    val ls = Files.list(Paths.get(moved))
+    val sinks =
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_q93_sink")).toList
+      finally ls.close()
+    assert(sinks.size === 1, s"q93 sink dirs under $moved: $sinks")
   }
 
   test("once builds exactly once across two calls") {
