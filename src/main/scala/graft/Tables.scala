@@ -3,7 +3,7 @@ package graft
 import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -39,18 +39,18 @@ object Tables {
 
   /** Every file under `path` (the path itself for a single file) as
     * (name, length, modification time); empty when nothing is there.
+    * Listed with `listStatus`, not `listFiles`: the `LocatedFileStatus`
+    * that `listFiles` builds reads each file's permission, which the
+    * local filesystem loads by running `ls -ld` once per file.
     */
   private def files(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
     val p = new Path(path)
-    try {
-      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
-      val out = Seq.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-      out.result().sorted
-    } catch { case _: FileNotFoundException => Nil }
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def under(st: FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(under)
+      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+    try fs.listStatus(p).toSeq.flatMap(under).sorted
+    catch { case _: FileNotFoundException => Nil }
   }
 
   /** Reads `dir/name.parquet` with the schema inferred the last time the

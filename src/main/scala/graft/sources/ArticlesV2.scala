@@ -21,6 +21,7 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, IsNotNull, IsNull, StringC
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** A genuine DataSource V2 connector for the reference's landed article
   * corpora — the SOURCE-side rung of the §2.10 extension ladder (scalar
@@ -265,12 +266,15 @@ private[sources] object ArticlesMeta {
 
 private[sources] object ArticlesFs {
   import org.apache.hadoop.fs.{FileSystem, Path}
-  def get(p: Path): FileSystem = {
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    fs.setWriteChecksum(false)
-    fs.setVerifyChecksum(false)
-    fs
-  }
+  /** `p`'s filesystem under `conf`, without client-side checksums. */
+  def get(p: Path, conf: SerializableConfiguration): FileSystem =
+    LocalFs.unchecked(p.getFileSystem(conf.value))
+  /** The same where the write is planned, under the active session's conf. */
+  def get(p: Path): FileSystem =
+    LocalFs.unchecked(p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration))
+  /** The active session's Hadoop conf, for shipping to task-side writers. */
+  def conf: SerializableConfiguration =
+    new SerializableConfiguration(SparkSession.active.sparkContext.hadoopConfiguration)
 }
 
 private[sources] class ArticlesWrite(dir: String, queryId: String,
@@ -285,7 +289,7 @@ private[sources] class ArticlesWrite(dir: String, queryId: String,
     new ArticlesStreamingWrite(dir, queryId, schema)
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     ArticlesFs.get(stagePath).mkdirs(stagePath)
-    new ArticlesWriterFactory(dir, queryId, schema)
+    new ArticlesWriterFactory(dir, queryId, schema, ArticlesFs.conf)
   }
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val target = new Path(dir)
@@ -321,11 +325,12 @@ private[sources] class ArticlesWrite(dir: String, queryId: String,
 }
 
 private[sources] class ArticlesWriterFactory(dir: String, queryId: String,
-                                             schema: StructType)
+                                             schema: StructType,
+                                             conf: SerializableConfiguration)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new ArticlesWriter(dir, queryId, schema,
-      f"part-$partitionId%05d-$taskId.json")
+      f"part-$partitionId%05d-$taskId.json", conf)
 }
 
 /** The STREAMING write face — with [[ArticlesMicroBatchStream]] this
@@ -347,7 +352,7 @@ private[sources] class ArticlesStreamingWrite(dir: String, queryId: String,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     ArticlesFs.get(stagePath).mkdirs(stagePath)
-    new ArticlesStreamingWriterFactory(dir, queryId, schema)
+    new ArticlesStreamingWriterFactory(dir, queryId, schema, ArticlesFs.conf)
   }
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val target = new Path(dir)
@@ -379,12 +384,13 @@ private[sources] class ArticlesStreamingWrite(dir: String, queryId: String,
 
 private[sources] class ArticlesStreamingWriterFactory(dir: String,
                                                       queryId: String,
-                                                      schema: StructType)
+                                                      schema: StructType,
+                                                      conf: SerializableConfiguration)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
     new ArticlesWriter(dir, queryId, schema,
-      f"part-e$epochId-$partitionId%05d-$taskId.json")
+      f"part-e$epochId-$partitionId%05d-$taskId.json", conf)
 }
 
 /** One task's writer: rows → JSON lines in a staged part file. Fields are
@@ -392,7 +398,8 @@ private[sources] class ArticlesStreamingWriterFactory(dir: String,
   * re-read side (`spark.read.schema(...).json`) recovers them exactly.
   */
 private[sources] class ArticlesWriter(dir: String, queryId: String,
-                                      schema: StructType, fileName: String)
+                                      schema: StructType, fileName: String,
+                                      conf: SerializableConfiguration)
     extends DataWriter[InternalRow] {
   import org.apache.hadoop.fs.Path
 
@@ -402,7 +409,7 @@ private[sources] class ArticlesWriter(dir: String, queryId: String,
   // renames from — the single-node java.nio assumption is gone (r9 #5)
   private val staged = new Path(new Path(dir, s".staging-$queryId"), fileName)
   private val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-    ArticlesFs.get(staged).create(staged, true),
+    ArticlesFs.get(staged, conf).create(staged, true),
     java.nio.charset.StandardCharsets.UTF_8))
 
   override def write(row: InternalRow): Unit = {
@@ -420,7 +427,7 @@ private[sources] class ArticlesWriter(dir: String, queryId: String,
   }
   override def abort(): Unit = {
     out.close()
-    ArticlesFs.get(staged).delete(staged, false)
+    ArticlesFs.get(staged, conf).delete(staged, false)
   }
   override def close(): Unit = ()
 }
@@ -496,14 +503,14 @@ private[sources] class ArticlesDeltaWrite(dir: String, queryId: String,
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DeltaWriterFactory = {
     ArticlesFs.get(stagePath).mkdirs(stagePath)
-    val d = dir; val q = queryId; val s = schema
+    val d = dir; val q = queryId; val s = schema; val c = ArticlesFs.conf
     new org.apache.spark.sql.connector.write.DeltaWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long)
           : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
         // attempt-scoped staging subdir: a speculative/zombie attempt
         // writes its own files, and only the attempt whose commit
         // message the coordinator accepts gets published
-        new ArticlesDeltaWriter(d, s"$q/p$partitionId-t$taskId", q, s)
+        new ArticlesDeltaWriter(d, s"$q/p$partitionId-t$taskId", q, s, c)
     }
   }
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -549,7 +556,8 @@ private[sources] class ArticlesDeltaWrite(dir: String, queryId: String,
   */
 private[sources] class ArticlesDeltaWriter(dir: String, attemptDir: String,
                                            queryId: String,
-                                           schema: StructType)
+                                           schema: StructType,
+                                           conf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
   import org.apache.hadoop.fs.Path
   import com.fasterxml.jackson.databind.ObjectMapper
@@ -594,7 +602,7 @@ private[sources] class ArticlesDeltaWriter(dir: String, attemptDir: String,
       val ops = deltas.getOrElse(corpus,
         scala.collection.mutable.LongMap.empty[Option[Seq[String]]])
       val src = new Path(dir, s"$corpus.json")
-      val fs = ArticlesFs.get(src)
+      val fs = ArticlesFs.get(src, conf)
       val out = mapper.createArrayNode()
       if (fs.exists(src)) {
         val root = mapper.readTree(fs.open(src))

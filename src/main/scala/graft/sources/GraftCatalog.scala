@@ -241,7 +241,7 @@ private[sources] class LandProcedure(dataDir: String)
     fs.mkdirs(dst.getParent)
     org.apache.hadoop.fs.FileUtil.copy(
       ArticlesFs.get(src), src, fs, dst, false, true,
-      new org.apache.hadoop.conf.Configuration())
+      SparkSession.active.sparkContext.hadoopConfiguration)
     val landedBytes = fs.getFileStatus(dst).getLen
     val receipt = new LocalScan {
       override def readSchema(): StructType = StructType(Seq(

@@ -4,6 +4,7 @@ import java.util.{Collections => JCollections}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -17,6 +18,7 @@ import org.apache.spark.sql.execution.datasources.v2.json.JsonTable
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** SQL front door for [[VersionedManifest]] tables — the way a SQL user
   * reaches snapshot history: `spark.sql.catalog.<name> = VersionedCatalog`
@@ -973,11 +975,12 @@ private[sources] class VersionedStreamingWrite(dir: String, tag: String,
       : StreamingDataWriterFactory = {
     fsOf(stagePath).mkdirs(stagePath)
     val d = dir; val t = tag; val s = schema
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     new StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long,
                                 epochId: Long): DataWriter[InternalRow] =
         new VersionedEpochWriter(d, t, s,
-          f"part-e$epochId-$partitionId%05d-$taskId.json")
+          f"part-e$epochId-$partitionId%05d-$taskId.json", conf)
     }
   }
 
@@ -1213,14 +1216,18 @@ private[sources] class VersionedSnapshotBatch(dirsWithFmt: Seq[(String, String)]
   * produced it. Both readers go through the Hadoop FileSystem so a
   * multi-node deployment reads shared storage.
   */
-private[sources] class VersionedFeedReaderFactory(schema: StructType)
+private[sources] class VersionedFeedReaderFactory(schema: StructType,
+                                                  conf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
+  /** Where the scan is planned: ship the active session's Hadoop conf. */
+  def this(schema: StructType) = this(schema,
+    new SerializableConfiguration(SparkSession.active.sparkContext.hadoopConfiguration))
   override def createReader(p: org.apache.spark.sql.connector.read.InputPartition)
       : org.apache.spark.sql.connector.read.PartitionReader[InternalRow] = {
     val fp = p.asInstanceOf[VersionedFilePartition]
     if (fp.format == "parquet")
-      new VersionedParquetPartitionReader(fp.path, schema)
-    else new VersionedJsonPartitionReader(fp.path, schema)
+      new VersionedParquetPartitionReader(fp.path, schema, conf.value)
+    else new VersionedJsonPartitionReader(fp.path, schema, conf.value)
   }
 }
 
@@ -1232,11 +1239,13 @@ private[sources] class VersionedFeedReaderFactory(schema: StructType)
   * behavior.
   */
 private[sources] class VersionedParquetPartitionReader(path: String,
-                                                       schema: StructType)
+                                                       schema: StructType,
+                                                       conf: Configuration)
     extends org.apache.spark.sql.connector.read.PartitionReader[InternalRow] {
   private val reader = org.apache.parquet.hadoop.ParquetReader
     .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
       new Path(path))
+    .withConf(conf)
     .build()
   private var row: InternalRow = _
 
@@ -1270,12 +1279,13 @@ private[sources] class VersionedParquetPartitionReader(path: String,
 }
 
 private[sources] class VersionedJsonPartitionReader(path: String,
-                                                    schema: StructType)
+                                                    schema: StructType,
+                                                    conf: Configuration)
     extends org.apache.spark.sql.connector.read.PartitionReader[InternalRow] {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper
   private val in = {
     val p = new Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(conf)
     new java.io.BufferedReader(new java.io.InputStreamReader(
       fs.open(p), java.nio.charset.StandardCharsets.UTF_8))
   }
@@ -1317,14 +1327,14 @@ private[sources] class VersionedJsonPartitionReader(path: String,
   */
 private[sources] class VersionedEpochWriter(dir: String, tag: String,
                                             schema: StructType,
-                                            fileName: String)
+                                            fileName: String,
+                                            conf: SerializableConfiguration)
     extends DataWriter[InternalRow] {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper
   private val staged = new Path(new Path(dir, s".staging-$tag"), fileName)
   private val out = {
-    val fs = staged.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    fs.setWriteChecksum(false)
+    val fs = LocalFs.unchecked(staged.getFileSystem(conf.value))
     new java.io.BufferedWriter(new java.io.OutputStreamWriter(
       fs.create(staged, true), java.nio.charset.StandardCharsets.UTF_8))
   }
@@ -1353,8 +1363,7 @@ private[sources] class VersionedEpochWriter(dir: String, tag: String,
   }
   override def abort(): Unit = {
     out.close()
-    staged.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      .delete(staged, false)
+    staged.getFileSystem(conf.value).delete(staged, false)
   }
   override def close(): Unit = ()
 }

@@ -4,6 +4,7 @@ import graft.{Exact, QueryModule, StagingDirs, Tables}
 import graft.GraftSession.{inputParts, withConf}
 import graft.sources.VersionedCatalog
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
@@ -326,8 +327,15 @@ object Streams extends QueryModule {
           val nSessions = if (all.isEmpty) 0L
           else 1L + all.zip(all.tail).count { case (a, b) => b - a >= gapUs }
           Iterator.single((uid, nSessions, all.size.toLong))
-      }
+      }(sessionStateEnc, sessionOutEnc)
   }
+
+  /** [[sessionStats]]'s state and output encoders, built once: a fresh
+    * `List[Long]` encoder numbers its `MapObjects` lambda variable anew,
+    * so every call generated new source and the stream recompiled its
+    * state operator on every start. */
+  private val sessionStateEnc = ExpressionEncoder[List[Long]]()
+  private val sessionOutEnc = ExpressionEncoder[(Long, Long, Long)]()
 
   private def q93(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

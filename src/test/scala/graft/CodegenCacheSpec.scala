@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Pins `GraftSession`'s codegen cache size: a session that plans more
@@ -8,6 +9,8 @@ import org.apache.spark.sql.functions.col
   * still run them a second time without compiling any. The cache size is
   * read once, when `CodeGenerator` first initializes, so this also fails
   * if that happens before the session is built and the default is frozen.
+  * A warm query run on `newSession()` and a warm stream started again
+  * (on its cloned session) compile nothing either.
   */
 class CodegenCacheSpec extends SparkSpec {
 
@@ -28,5 +31,28 @@ class CodegenCacheSpec extends SparkSpec {
     val first = round()
     assert(first > 100, s"the first round must overflow the default cache; compiled $first")
     assert(round() === 0L)
+  }
+
+  /** The classes compiled while `body` runs. */
+  private def compiledBy(body: => Unit): Long = {
+    val before = compiles()
+    body
+    compiles() - before
+  }
+
+  // a session with its own artifact class loader misses the cache, whose
+  // key includes the loader: newSession() and every stream start's cloned
+  // session would compile their classes again
+  test("a warm query's first run on newSession() compiles none") {
+    val agg = (s: SparkSession) =>
+      s.range(1000).selectExpr("id % 13 AS k", "id * 3 AS v").groupBy("k").sum("v").collect()
+    agg(spark)
+    assert(compiledBy(agg(spark.newSession())) === 0L)
+  }
+
+  test("a warm stream's second start compiles none") {
+    val q93 = SparkEntry.queries("q93_stream_stateful")
+    Measure.once(spark)(q93(spark, sf0001))
+    assert(compiledBy(Measure.once(spark)(q93(spark, sf0001))) === 0L)
   }
 }

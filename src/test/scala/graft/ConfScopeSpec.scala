@@ -120,8 +120,7 @@ class ConfScopeSpec extends SparkSpec {
   }
 
   test("a query that throws leaves the session conf as it found it") {
-    val missing = java.nio.file.Files.createTempDirectory("graft_conf_missing")
-      .resolve("no_such_dataset").toString
+    val missing = tempDir("graft_conf_missing") + "/no_such_dataset"
     assert(assertLeavesConf("q246_catalog_stats", missing).isFailure,
       "q246 ran on a dataset directory that does not exist")
   }

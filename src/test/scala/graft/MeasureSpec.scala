@@ -9,8 +9,9 @@ import org.apache.spark.sql.AnalysisException
 /** Pins the one measurement protocol: [[Measure.once]] leaves no persisted
   * RDD behind whether the query returns or throws, and its construct
   * seconds sit inside its total; [[Measure.warmMin]] runs its body N+1
-  * times; and no main outside `Measure.scala` keeps a clock or a batch
-  * `noop` sink of its own.
+  * times; no main outside `Measure.scala` keeps a clock or a batch
+  * `noop` sink of its own; and no source builds a stock Hadoop
+  * `Configuration` or switches a filesystem's checksums.
   */
 class MeasureSpec extends SparkSpec {
 
@@ -54,18 +55,32 @@ class MeasureSpec extends SparkSpec {
     assert(best >= 0.0)
   }
 
-  test("no main keeps its own clock or batch noop sink outside Measure.scala") {
-    val sources = {
-      val walk = Files.walk(Paths.get("src/main/scala"))
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
-    assert(sources.exists(_.getFileName.toString == "Measure.scala"))
-    val offenders = for {
-      p <- sources if p.getFileName.toString != "Measure.scala"
-      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
-      if line.contains("System.nanoTime") || line.contains("write.format(\"noop\")")
+  private lazy val sources = {
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  /** Every `src/main/scala` line (outside `exempt`) that holds one of `banned`. */
+  private def offenders(banned: Seq[String], exempt: String = ""): Seq[String] =
+    for {
+      p <- sources if p.getFileName.toString != exempt
+      (line, i) <- Files.readAllLines(p).asScala.toSeq.zipWithIndex
+      if banned.exists(line.contains)
     } yield s"$p:${i + 1}: ${line.trim}"
-    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+
+  test("no main keeps its own clock or batch noop sink outside Measure.scala") {
+    assert(sources.exists(_.getFileName.toString == "Measure.scala"))
+    val found = offenders(Seq("System.nanoTime", "write.format(\"noop\")"), "Measure.scala")
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  // FileSystem.get caches one instance per scheme for the whole JVM: a
+  // stock Configuration that reaches it first pins Hadoop's spawning local
+  // filesystem, and a checksum switch on it changes every other writer
+  test("no source builds a stock Hadoop Configuration or switches checksums") {
+    val found = offenders(Seq("new org.apache.hadoop.conf.Configuration()",
+      "new Configuration()", "setWriteChecksum", "setVerifyChecksum"))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

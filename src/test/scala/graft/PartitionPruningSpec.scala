@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Partition pruning over hive-style partitioned parquet — at 100 TB the
   * fact table is laid out by a partition column and a filtered scan must
@@ -10,8 +9,7 @@ import java.nio.file.Files
 class PartitionPruningSpec extends SparkSpec {
 
   test("filter on the partition column prunes at planning time") {
-    val base = Files.createTempDirectory("graft_part").toFile
-    base.deleteOnExit()
+    val base = new java.io.File(tempDir("graft_part"))
     val path = base.getAbsolutePath + "/orders_by_status"
     Tables.orders(spark, sf0001)
       .write.partitionBy("o_orderstatus").parquet(path)
@@ -33,8 +31,7 @@ class PartitionPruningSpec extends SparkSpec {
   }
 
   test("dynamic partition pruning fires for a dim-filtered fact join") {
-    val base = Files.createTempDirectory("graft_dpp").toFile
-    base.deleteOnExit()
+    val base = new java.io.File(tempDir("graft_dpp"))
     val path = base.getAbsolutePath + "/orders_by_prio"
     Tables.orders(spark, sf0001)
       .write.partitionBy("o_orderpriority").parquet(path)

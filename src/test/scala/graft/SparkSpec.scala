@@ -14,17 +14,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   protected lazy val spark: SparkSession = SparkSpec.session
 
+  /** A fresh `<tmpdir>/<prefix><random>` directory, deleted at JVM exit. */
+  protected def tempDir(prefix: String): String = SparkSpec.tempDir(prefix)
+
   override def afterAll(): Unit = () // keep the shared session alive
 }
 
 object SparkSpec {
   lazy val session: SparkSession = {
     val cpus = GraftSession.cpus("8")
-    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val warehouse = tempDir("graft_wh")
     val s = GraftSession.builder(cpus)
       .config("spark.sql.warehouse.dir", warehouse)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  def tempDir(prefix: String): String =
+    StagingDirs.register(java.nio.file.Files.createTempDirectory(prefix).toString)
 }

@@ -18,7 +18,7 @@ class StagingDirsSpec extends SparkSpec {
   private def app = spark.sparkContext.applicationId
 
   private def scratch(): String =
-    StagingDirs.register(Files.createTempDirectory("graft_stagingspec").toString)
+    tempDir("graft_stagingspec")
 
   test("dir spells the dataset-keyed, run-keyed and unkeyed paths byte for byte") {
     assert(StagingDirs.dir(spark, "tt", sf0001) ===

@@ -93,7 +93,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a rewritten file or directory misses the memo") {
-    val dir = Files.createTempDirectory("tables_memo").toString
+    val dir = tempDir("tables_memo")
     val file = Paths.get(dir, "t.parquet")
     Files.copy(Paths.get(sf0001, "nation.parquet"), file)
     Tables(spark, dir, "t")

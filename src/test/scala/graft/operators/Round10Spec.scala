@@ -337,8 +337,7 @@ class Round10Spec extends SparkSpec {
   test("q277 catalog pin hides table-level commits until the catalog rename") {
     import graft.sources.{SnapshotCatalog, VersionedManifest => VM}
     import spark.implicits._
-    val root = graft.StagingDirs.register(
-      java.nio.file.Files.createTempDirectory("graft_mtcat_spec").toString)
+    val root = tempDir("graft_mtcat_spec")
     Seq((1L, "a")).toDF("k", "t").write.parquet(s"$root/tab/v=1")
     VM.commit(spark, s"$root/tab", 1, "v1")
     SnapshotCatalog.commit(spark, root, 1, Map("tab" -> 1L))

@@ -100,8 +100,7 @@ class ArticleSourceV2Spec extends SparkSpec {
   }
 
   test("v2 write lands staged part files, publishes on commit, truncates on overwrite") {
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_v2write_spec_${spark.sparkContext.applicationId}")
+    val dir = new java.io.File(graft.StagingDirs.dir(spark, "v2write_spec"))
     def partFiles = Option(dir.listFiles()).getOrElse(Array.empty)
       .map(_.getName).filter(_.startsWith("part-")).sorted.toSeq
 
@@ -132,10 +131,8 @@ class ArticleSourceV2Spec extends SparkSpec {
   }
 
   test("v2 streaming write lands one epoch-tagged part file per micro-batch") {
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_v2swrite_spec_${spark.sparkContext.applicationId}")
-    val ckpt = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_v2swrite_spec_ckpt_${spark.sparkContext.applicationId}")
+    val dir = new java.io.File(graft.StagingDirs.dir(spark, "v2swrite_spec"))
+    val ckpt = new java.io.File(graft.StagingDirs.dir(spark, "v2swrite_spec_ckpt"))
     val q = spark.readStream.format("graft.sources.ArticleSourceV2")
       .option("corpus", "all").load()
       .writeStream.format("graft.sources.ArticleSourceV2")

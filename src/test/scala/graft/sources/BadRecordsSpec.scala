@@ -13,8 +13,7 @@ import java.nio.file.Files
 class BadRecordsSpec extends SparkSpec {
 
   test("PERMISSIVE JSONL parse quarantines corrupt rows, keeps good ones") {
-    val dir = Files.createTempDirectory("graft_bad").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(tempDir("graft_bad"))
     val f = new java.io.File(dir, "mixed.jsonl")
     Files.writeString(f.toPath,
       """{"titre": "ok one", "doi": "10.1/a"}
@@ -39,8 +38,7 @@ class BadRecordsSpec extends SparkSpec {
   }
 
   test("FAILFAST mode surfaces the corruption instead (opt-in strictness)") {
-    val dir = Files.createTempDirectory("graft_bad2").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(tempDir("graft_bad2"))
     val f = new java.io.File(dir, "bad.jsonl")
     Files.writeString(f.toPath, "{\"a\": 1}\nnope\n")
     val thrown = intercept[Exception] {

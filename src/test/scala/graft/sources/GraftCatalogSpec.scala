@@ -44,8 +44,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("DELETE is two-tier: file-aligned predicates drop artifacts, finer ones fall back to row-level COW") {
-    val stage = graft.StagingDirs.register(
-      java.nio.file.Files.createTempDirectory("graft_catspec").toString)
+    val stage = tempDir("graft_catspec")
     Seq("ai_articles", "acm_blockchain_articles").foreach { c =>
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(ArticleSource.dataDir, s"$c.json"),
@@ -131,8 +130,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("CALL sys.land lands an artifact and returns its receipt; args bind by name or position") {
-    val stage = graft.StagingDirs.register(
-      java.nio.file.Files.createTempDirectory("graft_landspec").toString)
+    val stage = tempDir("graft_landspec")
     spark.conf.set("spark.sql.catalog.gcs_land", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gcs_land.dataDir", stage)
 
@@ -169,8 +167,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("TRUNCATE TABLE drops every artifact (SupportsDelete's truncate face)") {
-    val stage = graft.StagingDirs.register(
-      java.nio.file.Files.createTempDirectory("graft_truncspec").toString)
+    val stage = tempDir("graft_truncspec")
     Seq("ai_articles", "blockchain_articles").foreach { c =>
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(ArticleSource.dataDir, s"$c.json"),
@@ -207,8 +204,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("MERGE INTO rewrites the estate copy-on-write: updates, inserts, atomic swap") {
-    val stage = graft.StagingDirs.register(
-      java.nio.file.Files.createTempDirectory("graft_mergespec").toString)
+    val stage = tempDir("graft_mergespec")
     Seq("ai_articles", "acm_blockchain_articles").foreach { c =>
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(ArticleSource.dataDir, s"$c.json"),

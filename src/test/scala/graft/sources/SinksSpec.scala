@@ -12,9 +12,7 @@ import java.nio.file.Files
 class SinksSpec extends SparkSpec {
 
   private def tmpDir(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft_sink_$tag").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath + "/out"
+    tempDir(s"graft_sink_$tag") + "/out"
   }
 
   test("CSV sink round trip (header, quoted fields, '' to NULL)") {

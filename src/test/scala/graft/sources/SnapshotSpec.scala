@@ -11,7 +11,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("versioned manifest: readers are isolated from an in-flight rewrite") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_snap_spec").toString
+    val dir = tempDir("graft_snap_spec")
 
     // v=1 data fully landed but NOT committed: no reader may see it
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$dir/v=1")

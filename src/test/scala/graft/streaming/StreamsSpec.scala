@@ -124,8 +124,8 @@ class StreamsSpec extends SparkSpec {
     import org.apache.spark.sql.DataFrame
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_vingest_spec").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_vingest_ckpt").toString
+    val dir = tempDir("graft_vingest_spec")
+    val ckpt = tempDir("graft_vingest_ckpt")
     val land: (DataFrame, Long) => Unit = (batch, epoch) => {
       val v = epoch + 1
       if (!VersionedManifest.committedVersions(spark, dir).contains(v)) {
@@ -188,8 +188,8 @@ class StreamsSpec extends SparkSpec {
     // the SAME code (Streams.upsertAggregate) is driven one file per
     // trigger, so keys are genuinely re-upserted across batches and the
     // last-write-wins replay has real work to do
-    val stage = java.nio.file.Files.createTempDirectory("graft_q106_multi").toString
-    val sink = java.nio.file.Files.createTempDirectory("graft_q106_sink").toString
+    val stage = tempDir("graft_q106_multi")
+    val sink = tempDir("graft_q106_sink")
     val ev = graft.Tables.events(spark, sf0001)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
     // split into 3 arriving files; pmod over event_id interleaves hours so
@@ -313,8 +313,8 @@ class StreamsSpec extends SparkSpec {
   test("streaming parquet file sink is exactly-once across restarts") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft_fsink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_fsink_ck").toString
+    val out = tempDir("graft_fsink")
+    val ckpt = tempDir("graft_fsink_ck")
     val input = MemoryStream[Long]
     def start() = input.toDF().toDF("v")
       .writeStream.format("parquet")
@@ -339,8 +339,8 @@ class StreamsSpec extends SparkSpec {
     // running totals without the old files re-reading
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft_cpin").toFile.getAbsolutePath
-    val cp = java.nio.file.Files.createTempDirectory("graft_cpck").toFile.getAbsolutePath
+    val in = tempDir("graft_cpin")
+    val cp = tempDir("graft_cpck")
     Seq(("a", 1L), ("a", 2L), ("b", 3L)).toDF("k", "v")
       .coalesce(1).write.mode("append").parquet(in)
     def run(name: String) = {
@@ -379,8 +379,8 @@ class StreamsSpec extends SparkSpec {
     // (maxFilesPerTrigger = 1 — the L1 num_pages analog on the source)
     val ev = graft.Tables.events(spark, sf0001)
       .select(col("ts"), col("user_id"), col("event_type"), col("value"))
-    val one = java.nio.file.Files.createTempDirectory("graft_inv_one").toString
-    val sliced = java.nio.file.Files.createTempDirectory("graft_inv_sliced").toString
+    val one = tempDir("graft_inv_one")
+    val sliced = tempDir("graft_inv_sliced")
     ev.coalesce(1).write.mode("overwrite").parquet(s"$one/all")
     // four CONTIGUOUS time slices arriving in event-time order (mod times
     // force the file source's processing order): watermarks then only
@@ -472,8 +472,8 @@ class StreamsSpec extends SparkSpec {
   test("streaming file sink partitions output by column (landing-zone layout)") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft_pout").toFile.getAbsolutePath
-    val cp = java.nio.file.Files.createTempDirectory("graft_pck").toFile.getAbsolutePath
+    val out = tempDir("graft_pout")
+    val cp = tempDir("graft_pck")
     val input = MemoryStream[(String, Long)]
     val q = input.toDS().toDF("k", "v")
       .writeStream.format("parquet").option("path", out)
@@ -523,10 +523,8 @@ class StreamsSpec extends SparkSpec {
   test("version feed: commits arrive per micro-batch, orphans never surface") {
     import graft.sources.{VersionedManifest => VM}
     import spark.implicits._
-    val estate = graft.StagingDirs.register(
-      java.nio.file.Files.createTempDirectory("graft_vfeed_spec").toString)
-    val stage = new java.io.File(graft.StagingDirs.register(
-      java.nio.file.Files.createTempDirectory("graft_vfeed_specstage").toString))
+    val estate = tempDir("graft_vfeed_spec")
+    val stage = new java.io.File(tempDir("graft_vfeed_specstage"))
     Seq((1L, "a"), (2L, "a")).toDF("k", "t").write.parquet(s"$estate/v=1")
     VM.commit(spark, estate, 1, "v1")
     Streams.stageCommittedVersions(spark, estate, stage)
@@ -559,8 +557,7 @@ class StreamsSpec extends SparkSpec {
     import spark.implicits._
     implicit val sc = spark.sqlContext
     val input = MemoryStream[String]
-    val ckpt = graft.StagingDirs.register(
-      java.nio.file.Files.createTempDirectory("graft_statespec").toString)
+    val ckpt = tempDir("graft_statespec")
     val q = input.toDF().toDF("fp").dropDuplicates("fp")
       .writeStream.format("noop").option("checkpointLocation", ckpt).start()
     try {
