@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 
 import graft.sources.{GraftLocalFileSystem, GraftLocalFs}
 
@@ -68,8 +68,8 @@ object GraftSession {
     *
     * `spark.sql.legacy.parquet.nanosAsLong` = true lets the events table's
     * TIMESTAMP(NANOS) generation be read at all (see `Tables.events`). It
-    * is set here, not scoped around the read, because the parquet scan
-    * reads it at execution time, after any [[withConf]] scope has closed.
+    * is set here, not scoped around the read, because every scan of the
+    * events table reads it.
     */
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
@@ -94,32 +94,23 @@ object GraftSession {
     s
   }
 
-  /** Run `body` with each `k -> v` set on `s`'s session conf, then put
-    * every key back as it was: a key that was set gets its old value, a
-    * key that was unset is unset again (so a key with a fallback, such as
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, keeps following
-    * it). This holds whether `body` returns or throws. The semantics are
-    * those of Spark's test-side `SQLHelper.withSQLConf`: "was set" means
-    * the key is in `conf.getAll`, not that `getOption` finds a value,
-    * since `getOption` returns a registered key's default for an unset
-    * key.
-    *
-    * Only what plans or runs inside the scope sees the values. A
-    * DataFrame returned from `withConf` plans under the restored conf
-    * when an action runs it, so a body whose plan depends on the scoped
-    * values must `localCheckpoint` its result inside the scope.
+  /** Run `body` on a child of `s` ([[GraftSqlBridge.child]]) with each
+    * `k -> v` set on the child's conf; `s` is never changed, whether `body`
+    * returns or throws. A DataFrame keeps its own session's conf: one built
+    * from the child plans under the scoped values whenever its action
+    * runs, so write the body as `withConf(s, …) { s => … }`, and
+    * [[rebind]] a DataFrame made outside the scope before using it.
     */
-  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
-    val explicit = s.conf.getAll
-    val saved = kvs.map { case (k, _) => k -> explicit.get(k) }
-    try {
-      kvs.foreach { case (k, v) => s.conf.set(k, v) }
-      body
-    } finally saved.reverseIterator.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: SparkSession => T): T = {
+    val c = GraftSqlBridge.child(s)
+    kvs.foreach { case (k, v) => c.conf.set(k, v) }
+    body(c)
   }
+
+  /** `df`'s analyzed plan on `s`, planned and run under `s`'s conf (not
+    * `logical`, which may name a view only `df`'s session has). */
+  def rebind(s: SparkSession, df: DataFrame): DataFrame =
+    GraftSqlBridge.ofRows(s, df.queryExecution.analyzed)
 
   /** Input bytes per shuffle partition for [[inputParts]]. */
   private val partitionBytes = 32L * 1024 * 1024

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local replica of the driver's t1 smoke: run [[SparkEntry.entry]] on
   * sf0.001 and require rows > 0. Also sanity-runs every registered query
   * once at sf0.001 so a broken registry entry is caught before the round's

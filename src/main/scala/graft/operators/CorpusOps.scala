@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Exact, QueryModule, Tables}
-import graft.GraftSession.{inputParts, withConf}
+import graft.GraftSession.{inputParts, rebind, withConf}
 import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -524,9 +524,10 @@ object CorpusOps extends QueryModule {
     // Nothing is lost: the loop's partition count is already sized to the
     // edge volume above — the one job AQE would do here — and the
     // remaining aggregation shuffle is partial-agg'd map-side.
-    withConf(s, "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> loopParts.toString) {
-      val bi = edgesCp.union(edgesCp.select(col("db").as("da"), col("da").as("db")))
+    val labels = withConf(s, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> loopParts.toString) { s =>
+      val edges = rebind(s, edgesCp)
+      val bi = edges.union(edges.select(col("db").as("da"), col("da").as("db")))
         .repartition(loopParts, col("da"))
         .localCheckpoint()
       // labels(0): every node its own component — derived from the
@@ -559,6 +560,7 @@ object CorpusOps extends QueryModule {
       }
       labels
     }
+    rebind(s, labels) // the caller's plans over the labels keep its conf
   }
 
   private def q85(s: SparkSession, d: String): DataFrame =
@@ -2062,7 +2064,7 @@ object CorpusOps extends QueryModule {
     * shuffle partition. Floor 2, not 1, for the same
     * maxSinglePartitionBytes escape-hatch reason as [[components]].
     */
-  private def withBpeParts[T](s: SparkSession, d: String)(body: => T): T =
+  private def withBpeParts[T](s: SparkSession, d: String)(body: SparkSession => T): T =
     withConf(s, "spark.sql.shuffle.partitions" ->
       inputParts(s, s"$d/documents.parquet", 2).toString)(body)
 
@@ -2155,7 +2157,7 @@ object CorpusOps extends QueryModule {
     // each (the old best.isEmpty probe in driver terms), exhaustion
     // short-circuited identically (no adjacent pair remains ⇒ stop before
     // the engines could diverge on an empty argmax)
-    val (_, merges) = withBpeParts(s, d) {
+    val (_, merges) = withBpeParts(s, d) { s =>
       val vocab = Tables.documents(s, d)
         .select(explode(toks(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("freq"))
@@ -2239,8 +2241,8 @@ object CorpusOps extends QueryModule {
       "array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), ' ')")
     val words = Tables.documents(s, d)
       .select(col("doc_id"), explode(toks(col("text"))).as("w"))
-    val (vocab0, vocab) = withBpeParts(s, d) {
-      val v0 = words
+    val (vocab0, vocab) = withBpeParts(s, d) { s =>
+      val v0 = rebind(s, words)
         .groupBy(col("w"))
         .agg(count(when(col("doc_id") % 2 === 0, 1)).as("freq_t"),
           count(lit(1)).as("freq_a"))

@@ -1196,19 +1196,18 @@ object Joins extends QueryModule {
     */
   private def q281(s: SparkSession, d: String): DataFrame = {
     auditAndDeclare(s, d)
-    withConf(s, "spark.graft.ri.eliminate" -> "true") {
+    withConf(s, "spark.graft.ri.eliminate" -> "true") { s =>
       val li = Tables.lineitem(s, d)
       val o = Tables.orders(s, d)
       val p = Tables.part(s, d)
       val wide = li
         .join(o, li("l_orderkey") === o("o_orderkey"))
         .join(p, li("l_partkey") === p("p_partkey"))
-      val out = wide.groupBy(col("l_returnflag"))
+      wide.groupBy(col("l_returnflag"))
         .agg(
           count(lit(1)).as("n_items"),
           Exact.sumMoney(col("l_extendedprice")).as("gross"))
         .orderBy(col("l_returnflag"))
-      out.localCheckpoint()
     }
   }
 

@@ -1103,17 +1103,16 @@ object ScalePatterns extends QueryModule {
   private def q246(s: SparkSession, d: String): DataFrame = {
     val db = catalogDb(s, d)
     withConf(s, "spark.sql.cbo.enabled" -> "true",
-        "spark.sql.autoBroadcastJoinThreshold" -> (16 * 1024).toString) {
+        "spark.sql.autoBroadcastJoinThreshold" -> (16 * 1024).toString) { s =>
       val o = s.table(s"$db.orders")
         .filter(col("o_orderdate") >= lit("1996-03-01").cast("date") &&
           col("o_orderdate") <= lit("1996-03-07").cast("date"))
-      val out = s.table(s"$db.lineitem")
+      s.table(s"$db.lineitem")
         .join(o, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("l_linestatus"))
         .agg(count(lit(1)).as("n_items"),
           Exact.sumMoney(col("l_extendedprice")).as("gross"))
         .orderBy(col("l_linestatus"))
-      out.localCheckpoint() // the ≤|linestatus|-row aggregate
     }
   }
 
@@ -1150,15 +1149,14 @@ object ScalePatterns extends QueryModule {
     // buckets would need a planning-time listing check), which deletes
     // both SMJ Sorts: the join runs straight off the layout
     withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
-      val out = s.table(s"$db.b_lineitem")
+        "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") { s =>
+      s.table(s"$db.b_lineitem")
         .join(s.table(s"$db.b_orders"),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_items"),
           Exact.sumMoney(col("l_extendedprice")).as("gross"))
         .orderBy(col("o_orderpriority"))
-      out.localCheckpoint()
     }
   }
 
@@ -1193,14 +1191,13 @@ object ScalePatterns extends QueryModule {
     val v1 = s.conf.get("spark.sql.sources.useV1SourceList")
       .split(",").filterNot(_.trim == "parquet").mkString(",")
     withConf(s, "spark.sql.parquet.aggregatePushdown" -> "true",
-        "spark.sql.sources.useV1SourceList" -> v1) {
-      val out = s.read.parquet(s"$d/lineitem.parquet")
+        "spark.sql.sources.useV1SourceList" -> v1) { s =>
+      s.read.parquet(s"$d/lineitem.parquet")
         .agg(count(lit(1)).as("n_rows"),
           min(col("l_orderkey")).as("min_key"),
           max(col("l_orderkey")).as("max_key"),
           min(col("l_partkey")).as("min_part"),
           max(col("l_partkey")).as("max_part"))
-      out.localCheckpoint()
     }
   }
 
@@ -2082,7 +2079,7 @@ object ScalePatterns extends QueryModule {
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") { s =>
       // a real 100 TB fact arrives in thousands of input splits; at test
       // scale the single parquet file is ONE map task, and AQE can only
       // split a skewed reducer partition along MAPPER boundaries — the
@@ -2095,12 +2092,11 @@ object ScalePatterns extends QueryModule {
       val dim = li.select(col("l_returnflag").as("rf")).distinct()
         .withColumn("flag_label", concat(lit("flag_"), col("rf")))
         .localCheckpoint()
-      val out = li.join(dim, col("l_returnflag") === col("rf"))
+      li.join(dim, col("l_returnflag") === col("rf"))
         .groupBy(col("flag_label"))
         .agg(count(lit(1)).as("n_items"),
           Exact.sumMoney(col("l_extendedprice")).as("gross"))
         .orderBy(col("flag_label"))
-      out.localCheckpoint()
     }
   }
 
@@ -2135,17 +2131,16 @@ object ScalePatterns extends QueryModule {
   private def q259(s: SparkSession, d: String): DataFrame = {
     withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") { s =>
       val o = Tables.orders(s, d)
         .filter(col("o_orderdate") >= lit("1996-03-01").cast("timestamp") &&
           col("o_orderdate") <= lit("1996-03-07").cast("timestamp"))
-      val out = Tables.lineitem(s, d)
+      Tables.lineitem(s, d)
         .join(o, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("l_linestatus"))
         .agg(count(lit(1)).as("n_items"),
           Exact.sumMoney(col("l_extendedprice")).as("gross"))
         .orderBy(col("l_linestatus"))
-      out.localCheckpoint()
     }
   }
 
@@ -2174,8 +2169,8 @@ object ScalePatterns extends QueryModule {
   private def q258(s: SparkSession, d: String): DataFrame = {
     val db = catalogDb(s, d)
     withConf(s, "spark.sql.cbo.enabled" -> "true",
-        "spark.sql.cbo.joinReorder.enabled" -> "true") {
-      val out = s.table(s"$db.lineitem")
+        "spark.sql.cbo.joinReorder.enabled" -> "true") { s =>
+      s.table(s"$db.lineitem")
         .join(s.table(s"$db.orders"),
           col("l_orderkey") === col("o_orderkey")) // facts first: worst order
         .join(s.table(s"$db.part").filter(col("p_size") === 1),
@@ -2184,7 +2179,6 @@ object ScalePatterns extends QueryModule {
         .agg(count(lit(1)).as("n_items"),
           Exact.sumMoney(col("l_extendedprice")).as("gross"))
         .orderBy(col("p_brand"))
-      out.localCheckpoint()
     }
   }
 
@@ -2536,8 +2530,8 @@ object ScalePatterns extends QueryModule {
     */
   private def q280(s: SparkSession, d: String): DataFrame = {
     mvLayout(s, d)
-    withConf(s, "spark.graft.mv.rewrite" -> "true") {
-      val out = Tables.lineitem(s, d)
+    withConf(s, "spark.graft.mv.rewrite" -> "true") { s =>
+      Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(
           sum(col("l_quantity").cast("decimal(18,2)")).cast("double")
@@ -2546,7 +2540,6 @@ object ScalePatterns extends QueryModule {
           min(col("l_quantity")).as("min_qty"),
           max(col("l_discount")).as("max_disc"))
         .orderBy(col("l_returnflag"))
-      out.localCheckpoint()
     }
   }
 
@@ -3272,11 +3265,8 @@ object ScalePatterns extends QueryModule {
     * side. The conf is the tuning knob a real estate sets per domain
     * (W ≈ median interval width).
     */
-  private def q298(s: SparkSession, d: String): DataFrame = {
-    withConf(s, "spark.graft.rangejoin.bin" -> "3600") {
-      q298Query(s, d).localCheckpoint()
-    }
-  }
+  private def q298(s: SparkSession, d: String): DataFrame =
+    withConf(s, "spark.graft.rangejoin.bin" -> "3600")(q298Query(_, d))
 
   /** The q298 frame WITHOUT conf scoping — shared with PlanSpec so the
     * rule-off and rule-on plans compare the same construction.
@@ -5230,7 +5220,6 @@ object ScalePatterns extends QueryModule {
     * Liveness is manifest arithmetic per session, not a data audit.
     */
   private def q401(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val M = graft.sources.VersionedManifest
     val root = StagingDirs.dir(s, "fkdecl", d)
     val (factDir, dimDir) = (s"$root/orders", s"$root/customers")
@@ -5248,16 +5237,16 @@ object ScalePatterns extends QueryModule {
       require(r == Right(2L), s"FK declaration failed: $r")
     }
     val nLive = M.registerDeclaredForeignKeys(s, factDir).toLong
-    withConf(s, "spark.graft.ri.eliminate" -> "true") {
+    withConf(s, "spark.graft.ri.eliminate" -> "true") { s =>
+      import s.implicits._
       val fact = M.readAt(s, factDir, 2)
       val dim = M.readAt(s, dimDir, 1)
-      val out = fact.join(dim, fact("o_custkey") === dim("c_custkey"))
+      fact.join(dim, fact("o_custkey") === dim("c_custkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),
           Exact.sumMoney(col("o_totalprice")).as("revenue"))
         .crossJoin(broadcast(Seq(nLive).toDF("n_live_fks")))
         .orderBy(col("o_orderpriority"))
-      out.localCheckpoint()
     }
   }
 

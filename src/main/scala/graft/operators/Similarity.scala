@@ -101,14 +101,14 @@ object Similarity extends QueryModule {
     * inlined ±1 plane literal (one fused loop per plane instead of a
     * 64-term expression tree per bit).
     */
-  private def bandCol(b: Int, bandBits: Int = BandBits): Column =
+  private def bandCol(b: Int, bandBits: Int): Column =
     (0 until bandBits).map { i =>
       val p = b * bandBits + i
       val plane = planeMatrix(p).map(c => s"${c}L").mkString("array(", ", ", ")")
       when(expr(s"graft_dot(v, $plane)") >= 0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  private def bandSql(b: Int, bandBits: Int = BandBits): String =
+  private def bandSql(b: Int, bandBits: Int): String =
     (0 until bandBits).map { i =>
       val p = b * bandBits + i
       val plane = planeMatrix(p).mkString("[", ",", "]")
@@ -658,7 +658,7 @@ object Similarity extends QueryModule {
       .select(col("vec_id").as("nid"), col("v"), dotExpr("v", "qv").as("rel"))
       .orderBy(desc("rel"), col("nid")).limit(20)
       .localCheckpoint() // 20 rows, re-read by all 5 greedy steps
-    var sel = cand.orderBy(desc("rel"), col("nid")).limit(1)
+    val sel = cand.orderBy(desc("rel"), col("nid")).limit(1)
       .select(col("nid"), col("v"), col("rel"), lit(0L).as("max_sim"),
         (lit(7L) * col("rel")).as("score"), lit(1L).as("step"))
     var selSet = sel.select(col("nid"), col("v"))
@@ -3443,7 +3443,6 @@ object Similarity extends QueryModule {
     * restart-safe by directory listing alone, the q252/q411 discipline.
     */
   private def q415(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = ivfIndexRoot(s, d, "full")
     buildIvfIndex(s, d, root, baseOnly = false)
     streamServe(s, d, s"q415r${q415Runs.incrementAndGet()}",

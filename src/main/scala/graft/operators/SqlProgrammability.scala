@@ -128,25 +128,27 @@ object SqlProgrammability extends QueryModule {
     * up as a hash mismatch, not just a different row count.
     */
   private def q273(s: SparkSession, d: String): DataFrame = {
-    Tables.lineitem(s, d).createOrReplaceTempView("lineitem_v")
-    withConf(s, "spark.sql.scripting.enabled" -> "true")(s.sql(
-      """BEGIN
-        |  DECLARE lo BIGINT;
-        |  DECLARE hi BIGINT;
-        |  DECLARE w BIGINT DEFAULT 1;
-        |  SET lo = (SELECT CAST(MIN(l_quantity) AS BIGINT) FROM lineitem_v);
-        |  SET hi = (SELECT CAST(MAX(l_quantity) AS BIGINT) FROM lineitem_v);
-        |  WHILE ((hi - lo + 1) + w - 1) DIV w > 16 DO
-        |    SET w = w * 2;
-        |  END WHILE;
-        |  SELECT CAST((CAST(l_quantity AS BIGINT) - lo) DIV w AS BIGINT) AS bucket,
-        |         CAST(lo + ((CAST(l_quantity AS BIGINT) - lo) DIV w) * w AS BIGINT) AS bucket_lo,
-        |         CAST(COUNT(*) AS BIGINT) AS n,
-        |         CAST(w AS BIGINT) AS width
-        |  FROM lineitem_v
-        |  GROUP BY bucket, bucket_lo
-        |  ORDER BY bucket;
-        |END""".stripMargin))
+    withConf(s, "spark.sql.scripting.enabled" -> "true") { s =>
+      Tables.lineitem(s, d).createOrReplaceTempView("lineitem_v")
+      s.sql(
+        """BEGIN
+          |  DECLARE lo BIGINT;
+          |  DECLARE hi BIGINT;
+          |  DECLARE w BIGINT DEFAULT 1;
+          |  SET lo = (SELECT CAST(MIN(l_quantity) AS BIGINT) FROM lineitem_v);
+          |  SET hi = (SELECT CAST(MAX(l_quantity) AS BIGINT) FROM lineitem_v);
+          |  WHILE ((hi - lo + 1) + w - 1) DIV w > 16 DO
+          |    SET w = w * 2;
+          |  END WHILE;
+          |  SELECT CAST((CAST(l_quantity AS BIGINT) - lo) DIV w AS BIGINT) AS bucket,
+          |         CAST(lo + ((CAST(l_quantity AS BIGINT) - lo) DIV w) * w AS BIGINT) AS bucket_lo,
+          |         CAST(COUNT(*) AS BIGINT) AS n,
+          |         CAST(w AS BIGINT) AS width
+          |  FROM lineitem_v
+          |  GROUP BY bucket, bucket_lo
+          |  ORDER BY bucket;
+          |END""".stripMargin)
+    }
   }
 
   private val q273Sql =

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, ExprId, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExprId, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation

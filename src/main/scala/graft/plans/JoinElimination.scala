@@ -58,7 +58,7 @@ object JoinElimination extends Rule[LogicalPlan] {
     val cs = DeclaredConstraints.all
     if (cs.isEmpty) return plan
     plan.transformUp {
-      case p @ Project(projList, Join(left, right, Inner, Some(cond), _))
+      case Project(projList, Join(left, right, Inner, Some(cond), _))
           if eliminable(projList, left, right, cond, cs) =>
         Project(projList, left)
     }

@@ -56,7 +56,7 @@ class ResolveV2Views(spark: SparkSession) extends Rule[LogicalPlan] {
       // inside expression subqueries — with the view's
       // currentCatalog/currentNamespace
       val qualified = substituted.transformUpWithSubqueries {
-        case r @ UnresolvedRelation(p, opts, streaming) if p.length < 3 =>
+        case UnresolvedRelation(p, opts, streaming) if p.length < 3 =>
           val full =
             if (p.length == 1) view.currentCatalog +: (view.currentNamespace.toSeq ++ p)
             else view.currentCatalog +: p

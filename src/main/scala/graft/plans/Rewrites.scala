@@ -39,7 +39,7 @@ object DotProductRewrite extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
     case ArrayAggregate(
-        zw @ ZipWith(a, b,
+        ZipWith(a, b,
           LambdaFunction(Multiply(x1: NamedLambdaVariable, y1: NamedLambdaVariable, _),
             Seq(x0: NamedLambdaVariable, y0: NamedLambdaVariable), _)),
         ZeroLong(),

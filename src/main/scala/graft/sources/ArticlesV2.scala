@@ -1209,17 +1209,16 @@ object ArticlesV2 extends QueryModule {
     */
   private def q261(s: SparkSession, dir: String): DataFrame = {
     withConf(s, "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") { s =>
       val read = () => s.read.format("graft.sources.ArticleSourceV2")
         .option("corpus", "all").option("clusterByIndexation", "true").load()
         .filter(col("indexation").isNotNull)
         .select(col("indexation"))
-      val out = read().as("a")
+      read().as("a")
         .join(read().as("b"), col("a.indexation") === col("b.indexation"))
         .groupBy(col("a.indexation").as("indexation"))
         .agg(count(lit(1)).as("n_pairs"))
         .orderBy(col("indexation"))
-      out.localCheckpoint()
     }
   }
 

@@ -295,7 +295,7 @@ object VersionedManifest {
   def declareForeignKey(s: SparkSession, dir: String, factCol: String,
                         dimDir: String, dimKey: String)
       : Either[Seq[String], Long] = {
-    import org.apache.spark.sql.functions.{col, count, countDistinct, lit, sum, when}
+    import org.apache.spark.sql.functions.{col, count, countDistinct, lit}
     val latest = latestCommitted(s, dir).getOrElse(
       throw new IllegalStateException(s"no committed version at $dir"))
     val dimLatest = latestCommitted(s, dimDir).getOrElse(

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{Exact, QueryModule, StagingDirs, Tables}
-import graft.GraftSession.{inputParts, withConf}
+import graft.GraftSession.{inputParts, rebind, withConf}
 import graft.sources.VersionedCatalog
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -113,11 +113,10 @@ object Streams extends QueryModule {
     * (state-store provider init, commit files, task launch) for ALL of
     * them — which is why the r14 driver measured q90/q94 ~1.5× SLOWER on
     * 32 cores than 8 at sf0.1: 32 state partitions over a 2 MB backfill
-    * is pure overhead. The post-stream batch fold a caller builds on the
-    * returned DataFrame executes after the session value is restored, so
-    * only the streaming runtime itself sees the reduced count.
+    * is pure overhead. `body` gets the scope's child session: the stream
+    * it starts must be built from it to see the reduced count.
     */
-  private def withStreamParts[T](s: SparkSession, d: String)(body: => T): T =
+  private def withStreamParts[T](s: SparkSession, d: String)(body: SparkSession => T): T =
     withConf(s, "spark.sql.shuffle.partitions" ->
       inputParts(s, s"$d/events.parquet", 1).toString)(body)
 
@@ -125,20 +124,24 @@ object Streams extends QueryModule {
     * `d` is the dataset dir the stream's source was staged from — the
     * bounded run executes under [[withStreamParts]]'s input-sized
     * shuffle/state-partition count (events.parquet volume as the
-    * dataset-scale proxy), restored before the caller's batch fold.
+    * dataset-scale proxy). The sink's view lives in the scope's child
+    * session; the returned DataFrame reads the sink in `s`, so the
+    * caller's batch fold plans under `s`'s conf.
     */
   private def runToMemory(s: SparkSession, d: String, df: DataFrame,
-                          name: String, mode: String): DataFrame =
-    withStreamParts(s, d) {
-    s.catalog.dropTempView(name)
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val perBatch = q.recentProgress
-      .map(p => Option(p.stateOperators).map(_.map(_.numRowsTotal).sum).getOrElse(0L))
-    lastStateRows(name) = if (perBatch.isEmpty) 0L else perBatch.max
-    s.table(name)
+                          name: String, mode: String): DataFrame = {
+    val sunk = withStreamParts(s, d) { s =>
+      val q = rebind(s, df)
+        .writeStream.format("memory").queryName(name)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val perBatch = q.recentProgress
+        .map(p => Option(p.stateOperators).map(_.map(_.numRowsTotal).sum).getOrElse(0L))
+      lastStateRows(name) = if (perBatch.isEmpty) 0L else perBatch.max
+      s.table(name)
     }
+    rebind(s, sunk)
+  }
 
   /** A fresh sink directory for a foreachBatch parquet landing zone, under
     * the current `java.io.tmpdir` (`Files.createTempDirectory(prefix)`
@@ -276,7 +279,7 @@ object Streams extends QueryModule {
     */
   private def q92(s: SparkSession, d: String): DataFrame = {
     val sink = sinkDir("q92")
-    withStreamParts(s, d) {
+    withStreamParts(s, d) { s =>
       val q = streamEvents(s, d)
         .withWatermark("ts", "24 hours")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
@@ -340,11 +343,11 @@ object Streams extends QueryModule {
   private def q93(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val sink = sinkDir("q93")
-    val sessions = sessionStats(
-      streamEvents(s, d)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
-        .as[(Long, Long)])
-    withStreamParts(s, d) {
+    withStreamParts(s, d) { s =>
+      val sessions = sessionStats(
+        streamEvents(s, d)
+          .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
+          .as[(Long, Long)])
       val q = sessions.toDF("user_id", "n_sessions", "n_events")
         .writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -847,13 +850,13 @@ object Streams extends QueryModule {
     * arbitrary typed state with an explicit store handle): per-user
     * purchase count + exact cents total for repeat buyers (≥ 3). The API
     * requires the RocksDB state-store provider (state lives off-heap and
-    * spills to disk — the 100 TB-state story), set for this query and
-    * restored after. Money rides as integer cents, so per-key accumulation
+    * spills to disk — the 100 TB-state story), set for this query's
+    * scope only. Money rides as integer cents, so per-key accumulation
     * order cannot change the result and the batch oracle matches exactly.
     */
   private def q122(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    withConf(s, rocksDbProvider) {
+    withConf(s, rocksDbProvider) { s =>
       val purchases = streamEvents(s, d)
         .filter(col("event_type") === "purchase")
         .select(col("user_id"),
@@ -920,7 +923,7 @@ object Streams extends QueryModule {
     */
   private def q132(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    withConf(s, rocksDbProvider) {
+    withConf(s, rocksDbProvider) { s =>
       val ev = streamEvents(s, d)
         .select(col("user_id"), col("event_type")).as[(Long, String)]
       val tallied = typeTally(ev).toDF("user_id", "event_type", "n")
@@ -1323,7 +1326,7 @@ object Streams extends QueryModule {
         graft.sources.VersionedManifest.commit(s, dir, v, s"epoch $epoch")
       }
     }
-    withStreamParts(s, d) {
+    withStreamParts(s, d) { s =>
       val q = streamEvents(s, d).writeStream
         .foreachBatch(landEpoch)
         .option("checkpointLocation", ckpt)
@@ -1998,9 +2001,9 @@ object Streams extends QueryModule {
   private def q270(s: SparkSession, d: String): DataFrame = {
     val run = q270Runs.incrementAndGet()
     val ckpt = StagingDirs.dir(s, "statespect", s"r$run")
-    val fps = streamDocs(s, d).select(passageFp(col("text")).as("fp"))
-    withStreamParts(s, d) {
-      val q = fps.dropDuplicates("fp").writeStream
+    withStreamParts(s, d) { s =>
+      val q = streamDocs(s, d).select(passageFp(col("text")).as("fp"))
+        .dropDuplicates("fp").writeStream
         .format("noop")
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
@@ -2048,7 +2051,7 @@ object Streams extends QueryModule {
     * a config, not a rewrite.
     */
   private def q393(s: SparkSession, d: String): DataFrame = {
-    withConf(s, rocksDbProvider) {
+    withConf(s, rocksDbProvider) { s =>
       val ev = streamEvents(s, d)
         .select(col("event_id"), col("ts"), col("event_type"))
       val doubled = ev.unionByName(streamEvents(s, d)
@@ -2056,7 +2059,6 @@ object Streams extends QueryModule {
       val dedup = doubled
         .withWatermark("ts", "24 hours")
         .dropDuplicates("event_id")
-      s.catalog.dropTempView("q393_sink")
       val q = dedup.writeStream.format("memory").queryName("q393_sink")
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -2123,7 +2125,7 @@ object Streams extends QueryModule {
             col("ts"), col("event_id")),
           "user_id", "ts", "event_id", marker)
     }
-    withStreamParts(s, d) {
+    withStreamParts(s, d) { s =>
       val q = streamEvents(s, d).writeStream
         .foreachBatch(applyBatch)
         .option("checkpointLocation", ckpt)

@@ -25,4 +25,13 @@ object GraftSqlBridge {
   def parsePlan(spark: SparkSession, sql: String): LogicalPlan =
     spark.asInstanceOf[classic.SparkSession]
       .sessionState.sqlParser.parsePlan(sql)
+
+  /** A child of `spark` (`cloneSession` is `private[sql]`): a copy of its
+    * conf, temp views, functions and query-execution listeners, plus its
+    * streaming listeners, which are per session and not cloned. */
+  def child(spark: SparkSession): SparkSession = {
+    val c = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    spark.streams.listListeners().foreach(c.streams.addListener)
+    c
+  }
 }

@@ -18,7 +18,7 @@ class AqeSkewSpec extends SparkSpec {
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") { spark =>
       // 50k rows on ONE key + a sprinkle of others vs a small dim
       val fact = spark.range(50000).select(lit(7L).as("k"), col("id").as("v"))
         .unionByName(spark.range(100).select((col("id") % 10).as("k"), col("id").as("v")))

@@ -11,7 +11,7 @@ class BucketingSpec extends SparkSpec {
 
   test("join of tables bucketed on the join key plans no shuffle") {
     // disable broadcast so the join must consider distribution
-    try withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    try withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { spark =>
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_customer")
       Tables.orders(spark, sf0001).write

@@ -1,6 +1,7 @@
 package graft
 
 import graft.GraftSession.withConf
+import org.apache.spark.sql.SparkSession
 
 /** The engine's central cross-engine claim — results are bit-identical
   * regardless of partitioning — tested directly: hash-sensitive queries
@@ -30,26 +31,26 @@ class DeterminismSpec extends SparkSpec {
                              // before q joined the tiebreak)
   )
 
-  private def rows(name: String): Seq[String] =
-    SparkEntry.queries(name)(spark, sf001)
+  private def rows(s: SparkSession, name: String): Seq[String] =
+    SparkEntry.queries(name)(s, sf001)
       .collect().map(_.toString).toSeq
 
   test("hash-sensitive queries are invariant to shuffle partition count") {
-    val baseline = sensitive.map(n => n -> rows(n)).toMap
-    withConf(spark, "spark.sql.shuffle.partitions" -> "7") {
+    val baseline = sensitive.map(n => n -> rows(spark, n)).toMap
+    withConf(spark, "spark.sql.shuffle.partitions" -> "7") { spark =>
       sensitive.foreach { n =>
-        assert(rows(n) == baseline(n), s"$n changed under 7 shuffle partitions")
+        assert(rows(spark, n) == baseline(n), s"$n changed under 7 shuffle partitions")
       }
     }
   }
 
   test("hash-sensitive queries are invariant to input split size") {
-    val baseline = sensitive.map(n => n -> rows(n)).toMap
+    val baseline = sensitive.map(n => n -> rows(spark, n)).toMap
     // tiny splits -> many more scan partitions -> different partial-agg
     // boundaries; results must not move
-    withConf(spark, "spark.sql.files.maxPartitionBytes" -> "65536") {
+    withConf(spark, "spark.sql.files.maxPartitionBytes" -> "65536") { spark =>
       sensitive.foreach { n =>
-        assert(rows(n) == baseline(n), s"$n changed under 64 KiB splits")
+        assert(rows(spark, n) == baseline(n), s"$n changed under 64 KiB splits")
       }
     }
   }

@@ -2,6 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 import graft.GraftSession.withConf
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, count, expr, lit}
 
 /** Physical-plan shape assertions — the scale posture is part of the
@@ -12,35 +13,33 @@ import org.apache.spark.sql.functions.{col, count, expr, lit}
   */
 class PlanSpec extends SparkSpec {
 
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sf0001).queryExecution.executedPlan.toString
+  private def plan(name: String, s: SparkSession = spark): String =
+    SparkEntry.queries(name)(s, sf0001).queryExecution.executedPlan.toString
 
   test("q246 join broadcasts ONLY because ANALYZE ran (catalog stats + CBO)") {
     import org.apache.spark.sql.functions._
-    // land + ANALYZE the catalog tables (idempotent per session+dataset)
-    SparkEntry.queries("q246_catalog_stats")(spark, sf001).collect()
+    // the registered query, not yet run: its executed plan is the adaptive
+    // plan's initial (static, pre-AQE) plan — the decision catalog stats
+    // move to plan time; AQE could rescue the no-stats case only after the
+    // first shuffle is already laid out. Building it lands and ANALYZEs
+    // the catalog tables (idempotent per session+dataset).
+    val withStats = SparkEntry.queries("q246_catalog_stats")(spark, sf001)
+      .queryExecution.executedPlan.toString
+    assert(withStats.contains("BroadcastHashJoin"),
+      s"ANALYZE'd plan did not broadcast the week-filtered orders:\n$withStats")
     val db = "graft_cat_" + sf001.replaceAll("[^A-Za-z0-9]", "_")
     // a twin of orders with identical data but NO catalog statistics
     if (!spark.catalog.tableExists(s"$db.orders_nostats"))
       spark.table(s"$db.orders").write.saveAsTable(s"$db.orders_nostats")
-    // the STATIC physical plan (pre-AQE): the decision catalog stats move
-    // to plan time — AQE could rescue the no-stats case only after the
-    // first shuffle is already laid out
-    def shape(ordersTable: String): String = {
-      val o = spark.table(s"$db.$ordersTable")
+    withConf(spark, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> (16 * 1024).toString) { spark =>
+      val o = spark.table(s"$db.orders_nostats")
         .filter(col("o_orderdate") >= lit("1996-03-01").cast("date") &&
           col("o_orderdate") <= lit("1996-03-07").cast("date"))
-      spark.table(s"$db.lineitem")
+      val noStats = spark.table(s"$db.lineitem")
         .join(o, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("l_linestatus")).agg(count(lit(1)).as("n"))
         .queryExecution.sparkPlan.toString
-    }
-    withConf(spark, "spark.sql.cbo.enabled" -> "true",
-        "spark.sql.autoBroadcastJoinThreshold" -> (16 * 1024).toString) {
-      val withStats = shape("orders")
-      val noStats = shape("orders_nostats")
-      assert(withStats.contains("BroadcastHashJoin"),
-        s"ANALYZE'd plan did not broadcast the week-filtered orders:\n$withStats")
       assert(!noStats.contains("BroadcastHashJoin") &&
         noStats.contains("SortMergeJoin"),
         s"un-analyzed twin broadcast without stats (contrast lost):\n$noStats")
@@ -182,8 +181,8 @@ class PlanSpec extends SparkSpec {
 
   test("q189 Q21 shape keeps semi+anti on one l_orderkey partitioning") {
     // force the at-scale posture: no leg fits in a broadcast
-    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val p = plan("q189_sole_supplier")
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { spark =>
+      val p = plan("q189_sole_supplier", spark)
       assert(p.contains("LeftSemi") && p.contains("LeftAnti"),
         s"missing semi/anti joins:\n$p")
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
@@ -214,8 +213,8 @@ class PlanSpec extends SparkSpec {
 
   test("q191 Q13 shape: per-customer count rides the outer join's partitioning") {
     // at-scale posture: neither side of the outer join fits a broadcast
-    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val p = plan("q191_custdist")
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { spark =>
+      val p = plan("q191_custdist", spark)
       // one exchange per join input; the per-customer count must reuse the
       // join's custkey layout (a second c_custkey exchange would re-shuffle
       // one row per customer between the join and its aggregate)
@@ -228,8 +227,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q192 Q17 shape: probe and per-part avg meet on one partkey exchange each") {
-    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val p = plan("q192_avg_yearly")
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { spark =>
+      val p = plan("q192_avg_yearly", spark)
       // the decorrelated scalar must JOIN on partkey, not re-execute per
       // row: exactly two partkey exchanges (probe leg + agg leg), with the
       // agg's output partitioning feeding the join directly
@@ -244,8 +243,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q193 Q20 shape: both scalar subqueries collapse into ONE pair-key aggregate") {
-    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val p = plan("q193_concentrated_suppliers")
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { spark =>
+      val p = plan("q193_concentrated_suppliers", spark)
       // the 1995 and all-time sums share one (l_partkey, l_suppkey)
       // exchange — a second fact-sized shuffle would mean the subqueries
       // didn't fuse; the only other hash exchange is the sliver-sized
@@ -296,8 +295,8 @@ class PlanSpec extends SparkSpec {
 
   test("q197 Q22 shape: scalar broadcasts, anti join shuffles each side once") {
     // at-scale posture: customer and orders are both facts
-    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val p = plan("q197_dormant_customers")
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { spark =>
+      val p = plan("q197_dormant_customers", spark)
       assert(p.contains("LeftAnti"), s"anti join lost:\n$p")
       assert("Exchange hashpartitioning\\(c_custkey".r.findAllIn(p).size == 1 &&
         "Exchange hashpartitioning\\(o_custkey".r.findAllIn(p).size == 1,
@@ -372,8 +371,8 @@ class PlanSpec extends SparkSpec {
 
   test("q207 Q3 shape: per-order rollup rides the join's orderkey layout") {
     // at-scale posture: the kept orders don't fit a broadcast
-    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val p = plan("q207_shipping_priority")
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { spark =>
+      val p = plan("q207_shipping_priority", spark)
       // one exchange per join input, and NO third exchange between the
       // join and the per-order aggregate (group key ⊇ join key)
       assert("Exchange hashpartitioning\\(l_orderkey".r.findAllIn(p).size == 1 &&
@@ -399,8 +398,8 @@ class PlanSpec extends SparkSpec {
   test("q200 LM scoring join meets the model on the bigram key, not broadcast") {
     // at-scale posture: a web-scale bigram table fits no executor —
     // the scoring join must stay a shuffle join keyed on (w1, w2)
-    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val p = plan("q200_lm_fluency")
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { spark =>
+      val p = plan("q200_lm_fluency", spark)
       val joinLine = p.linesIterator.find(l =>
         l.contains("Join") && l.contains("w1") && l.contains("w2"))
       assert(joinLine.exists(l => !l.contains("Broadcast")),
@@ -502,7 +501,7 @@ class PlanSpec extends SparkSpec {
     val key = "spark.graft.rangejoin.bin"
     import graft.operators.ScalePatterns
     def planOf(w: String): (String, Seq[org.apache.spark.sql.Row]) =
-      withConf(spark, key -> w) {
+      withConf(spark, key -> w) { spark =>
         val df = ScalePatterns.q298Query(spark, sf0001)
         (df.queryExecution.executedPlan.toString, df.collect().toSeq)
       }
@@ -525,7 +524,7 @@ class PlanSpec extends SparkSpec {
     // and the residual must apply the strictness exactly
     val key = "spark.graft.rangejoin.bin"
     def run(w: String) =
-      withConf(spark, key -> w) {
+      withConf(spark, key -> w) { spark =>
         val camp = spark.range(50).select(col("id").as("campaign_id"),
           expr("timestamp_seconds(1704067200 + id * 50220)").as("c_start"),
           expr("timestamp_seconds(1704067200 + id * 50220 + 18000)").as("c_end"))

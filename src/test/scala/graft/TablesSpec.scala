@@ -56,7 +56,7 @@ class TablesSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   test("a memoized read matches a schema-less read and launches no job") {
-    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") { spark =>
       names.foreach { n =>
         val plain = spark.read.parquet(s"$sf0001/$n.parquet")
         Tables(spark, sf0001, n)
@@ -71,10 +71,10 @@ class TablesSpec extends SparkSpec {
   }
 
   test("flipping an inference conf misses the memo") {
-    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") { spark =>
       Tables(spark, sf0001, "events")
     }
-    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "false") {
+    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "false") { spark =>
       // a TIMESTAMP(NANOS) generation of events fails inference here, after
       // its footer job has started; either way a miss launches a job
       val (_, jobs) = jobsDuring(Try(Tables(spark, sf0001, "events")))
@@ -82,9 +82,9 @@ class TablesSpec extends SparkSpec {
     }
     // an unadjusted TIMESTAMP(MICROS) ts is TIMESTAMP_NTZ only while NTZ
     // inference is on, so a stale entry would show as a wrong type
-    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") { spark =>
       Seq("true", "false").foreach { ntz =>
-        withConf(spark, "spark.sql.parquet.inferTimestampNTZ.enabled" -> ntz) {
+        withConf(spark, "spark.sql.parquet.inferTimestampNTZ.enabled" -> ntz) { spark =>
           val plain = spark.read.parquet(s"$sf0001/events.parquet")
           assert(Tables(spark, sf0001, "events").schema === plain.schema, s"NTZ inference $ntz")
         }

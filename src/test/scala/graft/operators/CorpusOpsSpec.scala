@@ -69,6 +69,42 @@ class CorpusOpsSpec extends SparkSpec {
     assert(ids.distinct.length == ids.length)
   }
 
+  test("q85's fixpoint loop plans without AQE; the session keeps AQE on") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // (on the parent session, adaptive, shuffles, sentinel) per execution;
+    // the loop's child session inherits this listener from the parent
+    case class Exec(parent: Boolean, adaptive: Boolean, shuffles: Boolean, sentinel: Boolean)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Exec]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val p = qe.executedPlan
+        seen.add(Exec(qe.sparkSession eq spark, p.isInstanceOf[AdaptiveSparkPlanExec],
+          p.collectFirst { case e: ShuffleExchangeExec => e }.nonEmpty,
+          p.toString.contains("Range (0, 8513")))
+      }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      run("q85_dedup_components").collect()
+      // the listener bus is asynchronous but ordered: once a sentinel run
+      // after the query is seen, so is every execution of the query
+      spark.range(8513).collect()
+      val deadline = System.currentTimeMillis + 30000
+      while (!seen.toArray.exists(_.asInstanceOf[Exec].sentinel) &&
+          System.currentTimeMillis < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val all = seen.toArray.toSeq.map(_.asInstanceOf[Exec])
+    assert(all.exists(_.sentinel), "the sentinel execution never reached the listener")
+    val loop = all.filterNot(_.parent)
+    assert(loop.exists(_.shuffles), s"no shuffling execution ran in the loop's scope: $all")
+    assert(loop.forall(!_.adaptive), s"a loop execution planned under AQE: $loop")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+  }
+
   test("q86 packing: bins are full save the last, per lang") {
     val rows = run("q86_sequence_packing").collect()
     rows.foreach { r =>

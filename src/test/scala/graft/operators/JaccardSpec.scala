@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.GraftSession.withConf
+import graft.GraftSession.{rebind, withConf}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -79,8 +79,8 @@ class JaccardSpec extends SparkSpec {
     val (p, sz) = postingsDf(sets)
     // at-scale posture: neither postings nor the cold-element list fit
     // a broadcast, so every consumer must meet on an exchange
-    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val df = Jaccard.pairs(p, sz, minJ = 0.0, maxDf = 10L)
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { spark =>
+      val df = Jaccard.pairs(rebind(spark, p), rebind(spark, sz), minJ = 0.0, maxDf = 10L)
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
         .split("== Initial Plan ==").head

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{SparkEntry, SparkSpec}
-import graft.GraftSession.withConf
+import graft.GraftSession.{rebind, withConf}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -59,45 +59,36 @@ class Round10Spec extends SparkSpec {
     assert(pruned == full, s"pruned read lost rows: $pruned vs $full")
   }
 
+  /** The executed plan of the registered query `q`, built and planned
+    * under its own scope. */
+  private def registeredPlan(q: String, d: String = sf0001): String =
+    SparkEntry.queries(q)(spark, d).queryExecution.executedPlan.toString
+
   test("q253 bucketed join plans ZERO exchanges on the join inputs") {
-    val db = ScalePatterns.catalogDb(spark, sf0001)
-    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
-      val p = spark.table(s"$db.b_lineitem")
-        .join(spark.table(s"$db.b_orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
-        .queryExecution.executedPlan.toString
-      // the only hash exchange allowed is the groupBy's — both bucketed
-      // join inputs must consume their write-time layout (executedPlan,
-      // not sparkPlan: exchanges only exist after EnsureRequirements)
-      val nExchanges = "Exchange hashpartitioning".r.findAllIn(p).size
-      assert(nExchanges == 1,
-        s"bucketed join sides shuffled ($nExchanges exchanges):\n$p")
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-        s"unexpected join strategy:\n$p")
-      assert(p.contains("SelectedBucketsCount") || p.contains("Bucketed: true"),
-        s"scan not reading bucketed layout:\n$p")
-      // one file per bucket → write-time sortBy satisfies the SMJ's
-      // ordering requirement: the plan must contain NO Sort at all
-      assert(!p.contains("Sort "),
-        s"bucketed sides re-sorted (multi-file buckets?):\n$p")
-    }
+    val p = registeredPlan("q253_bucketed_join")
+    // the only hash exchange allowed is the groupBy's — both bucketed
+    // join inputs must consume their write-time layout (executedPlan,
+    // not sparkPlan: exchanges only exist after EnsureRequirements)
+    val nExchanges = "Exchange hashpartitioning".r.findAllIn(p).size
+    assert(nExchanges == 1,
+      s"bucketed join sides shuffled ($nExchanges exchanges):\n$p")
+    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
+      s"unexpected join strategy:\n$p")
+    assert(p.contains("SelectedBucketsCount") || p.contains("Bucketed: true"),
+      s"scan not reading bucketed layout:\n$p")
+    // one file per bucket → write-time sortBy satisfies the SMJ's
+    // ordering requirement: no Sort below the join (the final orderBy's
+    // Sort sits above the aggregate's exchange)
+    val belowAgg = p.substring(p.indexOf("Exchange hashpartitioning"))
+    assert(!belowAgg.contains("Sort "),
+      s"bucketed sides re-sorted (multi-file buckets?):\n$p")
   }
 
   test("q254 min/max/count push to the parquet footer (no data pages read)") {
-    val v1 = spark.conf.get("spark.sql.sources.useV1SourceList")
-      .split(",").filterNot(_.trim == "parquet").mkString(",")
-    withConf(spark, "spark.sql.parquet.aggregatePushdown" -> "true",
-        "spark.sql.sources.useV1SourceList" -> v1) {
-      val p = spark.read.parquet(s"$sf0001/lineitem.parquet")
-        .agg(count(lit(1)).as("n"),
-          min(col("l_orderkey")).as("lo"), max(col("l_orderkey")).as("hi"))
-        .queryExecution.executedPlan.toString
-      assert(p.contains("PushedAggregation") && p.contains("COUNT(*)") &&
-        p.contains("MIN(l_orderkey)") && p.contains("MAX(l_orderkey)"),
-        s"aggregates not pushed to the footer scan:\n$p")
-    }
+    val p = registeredPlan("q254_metadata_agg")
+    assert(p.contains("PushedAggregation") && p.contains("COUNT(*)") &&
+      p.contains("MIN(l_orderkey)") && p.contains("MAX(l_orderkey)"),
+      s"aggregates not pushed to the footer scan:\n$p")
   }
 
   test("q258 CBO reorders the join tree to run the selective join first") {
@@ -105,9 +96,9 @@ class Round10Spec extends SparkSpec {
     import org.apache.spark.sql.execution.datasources.LogicalRelation
     val db = ScalePatterns.catalogDb(spark, sf0001)
     // the written order: facts first, selective dim last
-    def query() = spark.table(s"$db.lineitem")
-      .join(spark.table(s"$db.orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(spark.table(s"$db.part").filter(col("p_size") === 1),
+    def query(s: org.apache.spark.sql.SparkSession) = s.table(s"$db.lineitem")
+      .join(s.table(s"$db.orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(s.table(s"$db.part").filter(col("p_size") === 1),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand")).agg(count(lit(1)).as("n"))
     // tables under the INNERMOST join of the optimized logical plan
@@ -118,12 +109,12 @@ class Round10Spec extends SparkSpec {
         case _ => None
       }.toSet
     }
-    def innermostWithCbo(on: String) = withConf(spark,
-        "spark.sql.cbo.enabled" -> on, "spark.sql.cbo.joinReorder.enabled" -> on) {
-      innermost(query().queryExecution.optimizedPlan)
+    val asWritten = withConf(spark,
+        "spark.sql.cbo.enabled" -> "false", "spark.sql.cbo.joinReorder.enabled" -> "false") {
+      spark => innermost(query(spark).queryExecution.optimizedPlan)
     }
-    val asWritten = innermostWithCbo("false")
-    val reordered = innermostWithCbo("true")
+    val reordered = innermost(SparkEntry.queries("q258_cbo_join_reorder")(spark, sf0001)
+      .queryExecution.optimizedPlan)
     assert(asWritten == Set("lineitem", "orders"),
       s"without CBO the written order must stand: $asWritten")
     assert(reordered == Set("lineitem", "part"),
@@ -131,56 +122,29 @@ class Round10Spec extends SparkSpec {
   }
 
   test("q259 injects a runtime bloom filter on the probe side") {
-    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
-      val o = graft.Tables.orders(spark, sf0001)
-        .filter(col("o_orderdate") >= lit("1996-03-01").cast("timestamp") &&
-          col("o_orderdate") <= lit("1996-03-07").cast("timestamp"))
-      val p = graft.Tables.lineitem(spark, sf0001)
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_linestatus")).agg(count(lit(1)).as("n"))
-        .queryExecution.executedPlan.toString
-      // the optimizer must have planted might_contain on the lineitem
-      // (probe) side — rows drop BEFORE the shuffle
-      assert(p.contains("might_contain") && p.contains("bloom_filter_agg"),
-        s"no runtime bloom filter injected:\n$p")
-      // and it must sit UNDER the probe side's exchange: the filter line
-      // appears between the join and the probe shuffle in the tree
-      val probeFilter = p.indexOf("might_contain")
-      val probeExchange = p.lastIndexOf("Exchange hashpartitioning(l_orderkey",
-        probeFilter)
-      assert(probeExchange >= 0 && probeExchange < probeFilter,
-        s"bloom filter not below the probe-side shuffle:\n$p")
-    }
+    val p = registeredPlan("q259_runtime_bloom_join")
+    // the optimizer must have planted might_contain on the lineitem
+    // (probe) side — rows drop BEFORE the shuffle
+    assert(p.contains("might_contain") && p.contains("bloom_filter_agg"),
+      s"no runtime bloom filter injected:\n$p")
+    // and it must sit UNDER the probe side's exchange: the filter line
+    // appears between the join and the probe shuffle in the tree
+    val probeFilter = p.indexOf("might_contain")
+    val probeExchange = p.lastIndexOf("Exchange hashpartitioning(l_orderkey",
+      probeFilter)
+    assert(probeExchange >= 0 && probeExchange < probeFilter,
+      s"bloom filter not below the probe-side shuffle:\n$p")
   }
 
   test("q260 AQE marks and splits the skewed join at runtime") {
-    withConf(spark,
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      // sf0.01: the per-key shuffle partitions must clear the 8KB skew
-      // threshold (sf0.001's compressed partitions sit under it)
-      val li = graft.Tables.lineitem(spark, sf001).repartition(8)
-      // the dim materializes (3 rows) so its join child is a BARE shuffle
-      // stage: OptimizeSkewedJoin can only split a skewed partition when
-      // the matching other-side partition is re-readable shuffle output —
-      // an Aggregate between Sort and stage blocks the rule
-      val dim = li.select(col("l_returnflag").as("rf")).distinct()
-        .withColumn("flag_label", concat(lit("flag_"), col("rf")))
-        .localCheckpoint()
-      val joined = li.join(dim, col("l_returnflag") === col("rf"))
-        .groupBy(col("flag_label")).agg(count(lit(1)).as("n"),
-          sum(col("l_extendedprice")).as("g")) // keeps the shuffle above
-                                               // the skew threshold
-      // run through the SAME execution whose adaptive plan we inspect
-      assert(joined.collect().length == 3)
-      val p = joined.queryExecution.executedPlan.toString
-      assert(p.contains("skew=true"),
-        s"AQE did not mark the skewed join on the real tables:\n$p")
-    }
+    // sf0.01: the per-key shuffle partitions must clear the 8KB skew
+    // threshold (sf0.001's compressed partitions sit under it)
+    val q = SparkEntry.queries("q260_aqe_skew_join")(spark, sf001)
+    // run through the SAME execution whose adaptive plan we inspect
+    assert(q.collect().length == 3)
+    val p = q.queryExecution.executedPlan.toString
+    assert(p.contains("skew=true"),
+      s"AQE did not mark the skewed join on the real tables:\n$p")
   }
 
   test("q257 z-order prunes on BOTH dimensions; a 1-D sort prunes on one") {
@@ -377,8 +341,8 @@ class Round10Spec extends SparkSpec {
     val planOff = without.queryExecution.executedPlan.toString
     assert(planOff.contains("lineitem.parquet"), planOff)
     val offRows = without.collect().toSeq
-    val (planOn, onRows) = withConf(spark, "spark.graft.mv.rewrite" -> "true") {
-      val q = rollup()
+    val (planOn, onRows) = withConf(spark, "spark.graft.mv.rewrite" -> "true") { spark =>
+      val q = rebind(spark, rollup())
       (q.queryExecution.executedPlan.toString, q.collect().toSeq)
     }
     // the executed plan reads the SUMMARY, not the fact
@@ -408,8 +372,8 @@ class Round10Spec extends SparkSpec {
     assert(planOff.contains("orders.parquet") && planOff.contains("part.parquet"),
       planOff)
     val offRows = off.collect().toSeq
-    val (planOn, onRows) = withConf(spark, "spark.graft.ri.eliminate" -> "true") {
-      val q = wide()
+    val (planOn, onRows) = withConf(spark, "spark.graft.ri.eliminate" -> "true") { spark =>
+      val q = rebind(spark, wide())
       (q.queryExecution.executedPlan.toString, q.collect().toSeq)
     }
     // both dimension scans are gone; only the fact remains

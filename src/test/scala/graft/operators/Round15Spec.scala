@@ -44,11 +44,11 @@ class Round15Spec extends SparkSpec {
     Similarity.compactIvfIndex(spark, root)
     val key = "spark.graft.ivf.pruneMinBytes"
     // full-read serve: gate above any local size so pruning never fires
-    val full = withConf(spark, key -> Long.MaxValue.toString) {
+    val full = withConf(spark, key -> Long.MaxValue.toString) { spark =>
       Similarity.serveFromIvfIndex(spark, d, root).collect().toSeq
     }
     // pruned serve: gate 0 forces the file-skipping path
-    val pruned = withConf(spark, key -> "0") {
+    val pruned = withConf(spark, key -> "0") { spark =>
       Similarity.serveFromIvfIndex(spark, d, root).collect().toSeq
     }
     assert(pruned == full,
@@ -89,7 +89,7 @@ class Round15Spec extends SparkSpec {
     Similarity.buildIvfIndex(spark, d, root, baseOnly = true)
     Similarity.appendToIvfIndex(spark, d, root) // v2: no colstats
     val key = "spark.graft.ivf.pruneMinBytes"
-    val served = withConf(spark, key -> "0") {
+    val served = withConf(spark, key -> "0") { spark =>
       Similarity.serveFromIvfIndex(spark, d, root).collect().toSeq
     }
     val ref = Similarity.serveFromIvfIndex(spark, d, root).collect().toSeq

@@ -91,7 +91,7 @@ class ScalePatternsSpec extends SparkSpec {
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "20KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "20KB",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") { spark =>
       val fact = spark.range(0, 200000)
         .select(when(col("id") % 10 =!= 0, lit(0L)).otherwise(col("id")).as("k"),
           col("id").as("v"))

@@ -241,7 +241,7 @@ class ArticleSourceV2Spec extends SparkSpec {
 
   test("q261 storage-partitioned join consumes the connector's clustering") {
     withConf(spark, "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") { spark =>
       import org.apache.spark.sql.functions._
       val read = () => spark.read.format("graft.sources.ArticleSourceV2")
         .option("corpus", "all").option("clusterByIndexation", "true").load()

@@ -108,8 +108,8 @@ class SinksSpec extends SparkSpec {
     val path = tmpDir("dpo")
     Seq((1L, "d1"), (2L, "d1"), (3L, "d2"))
       .toDF("id", "day").write.partitionBy("day").parquet(path)
-    withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
-      Seq((30L, "d2"), (31L, "d2")).toDF("id", "day")
+    withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") { spark =>
+      spark.createDataFrame(Seq((30L, "d2"), (31L, "d2"))).toDF("id", "day")
         .write.mode("overwrite").partitionBy("day").parquet(path)
     }
     val back = spark.read.parquet(path)

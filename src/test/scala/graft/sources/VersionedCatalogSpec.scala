@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{SparkSpec, StagingDirs}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -17,8 +17,8 @@ class VersionedCatalogSpec extends SparkSpec {
     StructField("tag", StringType, nullable = true)))
 
   private def freshDir(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_r11_${name}_" +
-      spark.sparkContext.applicationId
+    StagingDirs.register(s"${System.getProperty("java.io.tmpdir")}/graft_r11_${name}_" +
+      spark.sparkContext.applicationId)
 
   /** Drive one task's writer for an epoch and return its commit message. */
   private def stageEpoch(w: VersionedStreamingWrite, epoch: Long,

@@ -223,9 +223,9 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("transformWithState tally accumulates typed state across micro-batches") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    withConf(spark, rocksDbProvider) {
+    withConf(spark, rocksDbProvider) { spark =>
+      import spark.implicits._
+      implicit val sc = spark.sqlContext
       val input = MemoryStream[(Long, Long)]
       val q = Streams.purchaseTally(input.toDS())
         .toDF("user_id", "n", "cents")
@@ -248,9 +248,9 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("MapState tally keeps per-type counters across micro-batches") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    withConf(spark, rocksDbProvider) {
+    withConf(spark, rocksDbProvider) { spark =>
+      import spark.implicits._
+      implicit val sc = spark.sqlContext
       val input = MemoryStream[(Long, String)]
       val q = Streams.typeTally(input.toDS())
         .toDF("user_id", "event_type", "n")
@@ -272,9 +272,9 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("timer-driven session assembly emits each session once, on watermark passage") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    withConf(spark, rocksDbProvider) {
+    withConf(spark, rocksDbProvider) { spark =>
+      import spark.implicits._
+      implicit val sc = spark.sqlContext
       val gap = 600000L // 10 min
       val input = MemoryStream[(Long, Long)]
       val q = Streams.assembleSessions(input.toDS(), gap)
@@ -591,7 +591,7 @@ class StreamsSpec extends SparkSpec {
     // them. No batch oracle can see this; the policy decides correctness
     // vs latency for every multi-source streaming union at scale.
     def run(policy: String): Map[Long, Long] = {
-      withConf(spark, "spark.sql.streaming.multipleWatermarkPolicy" -> policy) {
+      withConf(spark, "spark.sql.streaming.multipleWatermarkPolicy" -> policy) { spark =>
         import spark.implicits._
         implicit val sc = spark.sqlContext
         val a = MemoryStream[Long]
@@ -676,5 +676,37 @@ class StreamsSpec extends SparkSpec {
     // existence, not pairs: the inner join emits at least as many rows
     val pairs = signup.join(purchase, cond, "inner").count()
     assert(got.values.sum <= pairs)
+  }
+
+  test("a listener on the session sees q93's and q252's batches; q93's state runs at the scoped count") {
+    import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.add(e.progress)
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    /** The progress events of `q`'s streams, once the first one arrives. */
+    def batchesOf(q: String): Seq[StreamingQueryProgress] = {
+      progress.clear()
+      graft.SparkEntry.queries(q)(spark, sf0001).count()
+      val deadline = System.currentTimeMillis + 30000
+      while (progress.isEmpty && System.currentTimeMillis < deadline) Thread.sleep(50)
+      progress.toArray(Array.empty[StreamingQueryProgress]).toSeq
+    }
+    spark.streams.addListener(listener)
+    try {
+      val q93 = batchesOf("q93_stream_stateful")
+      assert(q93.nonEmpty, "the session's listener saw no q93 batch")
+      val parts = graft.GraftSession.inputParts(spark, s"$sf0001/events.parquet", 1)
+      assert(parts.toString != spark.conf.get("spark.sql.shuffle.partitions"),
+        "the fixture cannot tell the scoped count from the session's")
+      val stateParts = q93.filter(_.stateOperators.nonEmpty)
+        .map(_.stateOperators(0).numShufflePartitions).distinct
+      assert(stateParts == Seq(parts.toLong), s"q93's state partitions: $stateParts")
+      assert(batchesOf("q252_stream_versioned_ingest").nonEmpty,
+        "the session's listener saw no q252 batch")
+    } finally spark.streams.removeListener(listener)
   }
 }
