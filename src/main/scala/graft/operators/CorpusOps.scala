@@ -1793,7 +1793,7 @@ object CorpusOps extends QueryModule {
     val f = snapshotFingerprints(s, d)
     f.filter(col("bucket") < 80).select(col("fp")).distinct()
       .write.mode("overwrite").parquet(dir)
-    gateClasses(f.filter(col("bucket") >= 80), s.read.parquet(dir))
+    gateClasses(f.filter(col("bucket") >= 80), Tables.parquet(s, dir))
   }
 
   // --------------------------------------------------------------- q224
@@ -2644,7 +2644,7 @@ object CorpusOps extends QueryModule {
         .repartition(col("shard"))
         .write.partitionBy("shard").mode("overwrite").parquet(s"$dir/data")
     }
-    s.read.parquet(s"$dir/data")
+    Tables.parquet(s, s"$dir/data")
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"),
         expr("bit_xor(h48)").as("checksum"),

@@ -682,10 +682,10 @@ object ScalePatterns extends QueryModule {
         finally ls.close()
       val nFiles = math.max(1L,
         (bytes + CompactionTargetBytes - 1) / CompactionTargetBytes).toInt
-      s.read.parquet(s"$dir/fragmented").repartition(nFiles)
+      Tables.parquet(s, s"$dir/fragmented").repartition(nFiles)
         .write.mode("overwrite").parquet(s"$dir/compacted")
     }
-    s.read.parquet(s"$dir/compacted")
+    Tables.parquet(s, s"$dir/compacted")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
         min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
@@ -723,12 +723,12 @@ object ScalePatterns extends QueryModule {
       Tables.orders(s, d).repartition(8)
         .write.mode("overwrite").partitionBy("o_orderpriority")
         .parquet(s"$dir/fragmented")
-      s.read.parquet(s"$dir/fragmented")
+      Tables.parquet(s, s"$dir/fragmented")
         .repartition(col("o_orderpriority"))
         .write.mode("overwrite").partitionBy("o_orderpriority")
         .parquet(s"$dir/compacted")
     }
-    s.read.parquet(s"$dir/compacted")
+    Tables.parquet(s, s"$dir/compacted")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
         Exact.sumMoney(col("o_totalprice")).as("total"))
@@ -985,7 +985,7 @@ object ScalePatterns extends QueryModule {
           (year(col("l_shipdate")) * 100 + month(col("l_shipdate")))
             .cast("long"))
         .write.mode("overwrite").partitionBy("l_ship_ym").parquet(dir)
-    val fact = s.read.parquet(dir)
+    val fact = Tables.parquet(s, dir)
     val dim = Tables.orders(s, d)
       .filter(col("o_orderpriority") === "1-URGENT" &&
         year(col("o_orderdate")) === 1997)
@@ -1192,7 +1192,7 @@ object ScalePatterns extends QueryModule {
       .split(",").filterNot(_.trim == "parquet").mkString(",")
     withConf(s, "spark.sql.parquet.aggregatePushdown" -> "true",
         "spark.sql.sources.useV1SourceList" -> v1) { s =>
-      s.read.parquet(s"$d/lineitem.parquet")
+      Tables.lineitem(s, d)
         .agg(count(lit(1)).as("n_rows"),
           min(col("l_orderkey")).as("min_key"),
           max(col("l_orderkey")).as("max_key"),
@@ -1795,7 +1795,7 @@ object ScalePatterns extends QueryModule {
     }
     val (lo, hi) = (100L, 299L)
     val files = graft.sources.VersionedManifest.prunedFiles(s, dir, 1, lo, hi)
-    s.read.parquet(files: _*)
+    Tables.parquet(s, files: _*)
       .filter(col("doc_id").between(lo, hi))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
@@ -1857,7 +1857,7 @@ object ScalePatterns extends QueryModule {
     }
     val (lo, hi) = (300L, 499L)
     val files = graft.sources.VersionedManifest.prunedFiles(s, dir, 2, lo, hi)
-    s.read.parquet(files: _*)
+    Tables.parquet(s, files: _*)
       .filter(col("doc_id").between(lo, hi))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
@@ -1970,11 +1970,11 @@ object ScalePatterns extends QueryModule {
     // one row — the bounded driver-side lookup a real ingest has in hand)
     val probeFile =
       graft.sources.VersionedManifest.prunedFiles(s, dir, 1, 250L, 250L)
-    val probe = s.read.parquet(probeFile: _*)
+    val probe = Tables.parquet(s, probeFile: _*)
       .filter(col("doc_id") === 250L).select(col("text")).head().getString(0)
     val files =
       graft.sources.VersionedManifest.bloomPrunedFiles(s, dir, 1, probe)
-    s.read.parquet(files: _*)
+    Tables.parquet(s, files: _*)
       .filter(col("text") === lit(probe))
       .select(col("doc_id"), col("source"), col("n_chars"))
       .orderBy(col("doc_id"))
@@ -2201,6 +2201,7 @@ object ScalePatterns extends QueryModule {
     * (q251's mechanism). Returns the staging root. Round10Spec uses the
     * control to measure the z-order claim comparatively.
     */
+  private val zorderStatsDdl = "file STRING, plo BIGINT, phi BIGINT, slo BIGINT, shi BIGINT"
   private[operators] def zorderLayouts(s: SparkSession, d: String): String = {
     val dir = StagingDirs.dir(s, "zskip", d)
     StagingDirs.once(dir) {
@@ -2222,7 +2223,7 @@ object ScalePatterns extends QueryModule {
         .sortWithinPartitions("l_partkey")
         .write.mode("overwrite").parquet(s"$dir/keysort")
       Seq("zorder", "keysort").foreach { layout =>
-        s.read.parquet(s"$dir/$layout")
+        Tables.parquet(s, s"$dir/$layout")
           .groupBy(input_file_name().as("file"))
           .agg(min(col("l_partkey")).as("plo"), max(col("l_partkey")).as("phi"),
             min(col("l_suppkey")).as("slo"), max(col("l_suppkey")).as("shi"))
@@ -2263,11 +2264,11 @@ object ScalePatterns extends QueryModule {
       (b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
     val (pLo, pHi) = (plo + (phi - plo + 1) * 7 / 16, plo + (phi - plo + 1) * 8 / 16 - 1)
     val (sLo, sHi) = (slo + (shi - slo + 1) * 7 / 16, slo + (shi - slo + 1) * 8 / 16 - 1)
-    val files = s.read.json(s"$dir/zorder_stats")
+    val files = s.read.schema(zorderStatsDdl).json(s"$dir/zorder_stats")
       .filter(col("phi") >= pLo && col("plo") <= pHi &&
         col("shi") >= sLo && col("slo") <= sHi)
       .select(col("file")).collect().map(_.getString(0)).toSeq
-    s.read.parquet(files: _*)
+    Tables.parquet(s, files: _*)
       .filter(col("l_partkey").between(pLo, pHi) &&
         col("l_suppkey").between(sLo, sHi))
       .agg(count(lit(1)).as("n_rows"),
@@ -2681,7 +2682,7 @@ object ScalePatterns extends QueryModule {
       // B's rebase: blind appends commute — re-tag the staged rows with
       // the new target version and claim the next slot
       val retry = VM.latestCommitted(s, dir).get + 1
-      s.read.parquet(s"$dir/d-writer-b-1")
+      Tables.parquet(s, s"$dir/d-writer-b-1")
         .withColumn("commit_version", lit(retry))
         .write.mode("overwrite").parquet(s"$dir/d-writer-b-2")
       require(VM.tryCommit(s, dir, retry, "data=d-writer-b-2\nwriter-b append (rebased)"),
@@ -2810,7 +2811,7 @@ object ScalePatterns extends QueryModule {
 
   private def q313(s: SparkSession, d: String): DataFrame = {
     val dir = smallFilesEstate(s, d)
-    s.read.parquet(s"$dir/docs")
+    Tables.parquet(s, s"$dir/docs")
       .select(col("lang"), col("_metadata.file_path").as("f"))
       .groupBy(col("lang"))
       .agg(countDistinct(col("f")).as("n_files"), count(lit(1)).as("n_rows"))
@@ -2951,12 +2952,12 @@ object ScalePatterns extends QueryModule {
     // month spec: the range coarsens to [month(from), month(to)] — the
     // upper month may partially overlap, so it stays IN and the row
     // predicate trims it; pruning still drops every other history month
-    val monthLeg = s.read.parquet(s"$dir/bymonth")
+    val monthLeg = Tables.parquet(s, s"$dir/bymonth")
       .filter(col("l_ship_month") >= from.substring(0, 7) &&
         col("l_ship_month") <= to.substring(0, 7) && rowPred)
       .drop("l_ship_month")
     // day spec: the coarsening is exact ([from, to) on the dir name)
-    val dayLeg = s.read.parquet(s"$dir/byday")
+    val dayLeg = Tables.parquet(s, s"$dir/byday")
       .filter(col("l_ship_day") >= from && col("l_ship_day") < to && rowPred)
       .drop("l_ship_day")
     monthLeg.unionByName(dayLeg)
@@ -3009,7 +3010,7 @@ object ScalePatterns extends QueryModule {
     StagingDirs.once(dir) {
       Tables.documents(s, d).repartition(4)
         .write.mode("overwrite").parquet(s"$dir/base")
-      s.read.parquet(s"$dir/base")
+      Tables.parquet(s, s"$dir/base")
         .select(col("_metadata.file_path").as("f"),
           col("_metadata.row_index").as("r"), col("doc_id"))
         .filter(delPred)
@@ -3017,9 +3018,9 @@ object ScalePatterns extends QueryModule {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/dv")
     }
-    val dv = s.read.parquet(s"$dir/dv")
+    val dv = Tables.parquet(s, s"$dir/dv")
     val deleted = dv.count()
-    s.read.parquet(s"$dir/base")
+    Tables.parquet(s, s"$dir/base")
       .withColumn("f", col("_metadata.file_path"))
       .withColumn("r", col("_metadata.row_index"))
       .join(broadcast(dv), Seq("f", "r"), "left_anti")
@@ -3065,7 +3066,7 @@ object ScalePatterns extends QueryModule {
       Tables.documents(s, d).repartition(4)
         .write.mode("overwrite").parquet(s"$dir/v=1")
       VM.commit(s, dir, 1, "base load")
-      s.read.parquet(s"$dir/v=1")
+      Tables.parquet(s, s"$dir/v=1")
         .select(col("_metadata.file_path").as("f"),
           col("_metadata.row_index").as("r"), col("doc_id"))
         .filter(delPred).select(col("f"), col("r"))
@@ -3088,10 +3089,10 @@ object ScalePatterns extends QueryModule {
     * compares the same construction.
     */
   private[operators] def morView(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/v=1")
+    Tables.parquet(s, s"$dir/v=1")
       .withColumn("f", col("_metadata.file_path"))
       .withColumn("r", col("_metadata.row_index"))
-      .join(broadcast(s.read.parquet(s"$dir/dv-v1")), Seq("f", "r"), "left_anti")
+      .join(broadcast(Tables.parquet(s, s"$dir/dv-v1")), Seq("f", "r"), "left_anti")
       .drop("f", "r")
 
   private val q296Sql = {
@@ -3193,7 +3194,7 @@ object ScalePatterns extends QueryModule {
       docs.filter(col("doc_id") % 2 === 0).repartition(4)
         .write.mode("overwrite").parquet(s"$dir/base")
       // DV: old images of deleted (%10==4) AND updated (%6==0) rows
-      s.read.parquet(s"$dir/base")
+      Tables.parquet(s, s"$dir/base")
         .select(col("_metadata.file_path").as("f"),
           col("_metadata.row_index").as("r"), col("doc_id"))
         .filter(col("doc_id") % 10 === 4 || col("doc_id") % 6 === 0)
@@ -3206,10 +3207,10 @@ object ScalePatterns extends QueryModule {
         .unionByName(docs.filter(col("doc_id") % 2 === 1 && col("doc_id") % 5 === 1))
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/delta")
     }
-    val dv = s.read.parquet(s"$dir/dv")
-    val delta = s.read.parquet(s"$dir/delta")
+    val dv = Tables.parquet(s, s"$dir/dv")
+    val delta = Tables.parquet(s, s"$dir/delta")
     val (nDv, nDelta) = (dv.count(), delta.count())
-    s.read.parquet(s"$dir/base")
+    Tables.parquet(s, s"$dir/base")
       .withColumn("f", col("_metadata.file_path"))
       .withColumn("r", col("_metadata.row_index"))
       .join(broadcast(dv), Seq("f", "r"), "left_anti")
@@ -3579,13 +3580,14 @@ object ScalePatterns extends QueryModule {
     * fill at sf1 → per-probe false-positive rate ~1e-4). Returns the
     * staging root.
     */
+  private val bloomDdl = "file STRING, bits ARRAY<BIGINT>"
   private[operators] def bloomLayout(s: SparkSession, d: String): String = {
     val dir = StagingDirs.dir(s, "bskip", d)
     StagingDirs.once(dir) {
       Tables.documents(s, d)
         .repartitionByRange(16, col("doc_id"))
         .write.mode("overwrite").parquet(s"$dir/data")
-      s.read.parquet(s"$dir/data")
+      Tables.parquet(s, s"$dir/data")
         .withColumn("md5col", Digest.docMd5)
         .select(input_file_name().as("file"),
           explode(bloomBits("md5col")).as("bit"))
@@ -3624,14 +3626,14 @@ object ScalePatterns extends QueryModule {
       .collect() // bounded: O(probes) 4-long rows
       .map(r => (r.getString(0), r.getSeq[Long](1)))
     val fps = probes.map(_._1).toSet
-    val manifest = s.read.json(s"$dir/bloom")
+    val manifest = s.read.schema(bloomDdl).json(s"$dir/bloom")
       .select(col("file"), col("bits"))
       .collect() // bounded: one row per landed file (16)
       .map(r => (r.getString(0), r.getSeq[Long](1).toSet))
     val hitFiles = manifest.collect {
       case (f, bits) if probes.exists(_._2.forall(bits.contains)) => f
     }.toSeq
-    s.read.parquet(hitFiles: _*)
+    Tables.parquet(s, hitFiles: _*)
       .withColumn("md5col", Digest.docMd5)
       .filter(col("md5col").isInCollection(fps))
       .select(col("doc_id"), col("source"), col("n_chars"))
@@ -3663,13 +3665,14 @@ object ScalePatterns extends QueryModule {
     * by file; the 16-row collect of matching paths is bounded by the
     * manifest size, the same bound as q195's fixture listing.
     */
+  private val fileStatsDdl = "file STRING, lo BIGINT, hi BIGINT"
   private def q251(s: SparkSession, d: String): DataFrame = {
     val dir = StagingDirs.dir(s, "skip", d)
     StagingDirs.once(dir) {
       Tables.documents(s, d)
         .repartitionByRange(16, col("doc_id"))
         .write.mode("overwrite").parquet(s"$dir/data")
-      s.read.parquet(s"$dir/data")
+      Tables.parquet(s, s"$dir/data")
         .groupBy(input_file_name().as("file"))
         .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
         .coalesce(1)
@@ -3677,10 +3680,10 @@ object ScalePatterns extends QueryModule {
     }
     val (lo, hi) = (100L, 299L)
     // manifest consult: O(#files) rows, bounded collect of matching paths
-    val files = s.read.json(s"$dir/filestats")
+    val files = s.read.schema(fileStatsDdl).json(s"$dir/filestats")
       .filter(col("hi") >= lo && col("lo") <= hi)
       .select(col("file")).collect().map(_.getString(0)).toSeq
-    s.read.parquet(files: _*)
+    Tables.parquet(s, files: _*)
       .filter(col("doc_id").between(lo, hi))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
@@ -3725,6 +3728,7 @@ object ScalePatterns extends QueryModule {
     */
   private def q315(s: SparkSession, d: String): DataFrame = {
     val dir = StagingDirs.dir(s, "djv", d)
+    def read(part: String) = Tables.parquet(s, s"$dir/$part")
     StagingDirs.once(dir) {
       val ord = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority"))
@@ -3742,16 +3746,13 @@ object ScalePatterns extends QueryModule {
       li.filter(col("l_orderkey") % 8 === 2).write.mode("overwrite")
         .parquet(s"$dir/li_delta")
       // the stale MV: the (old, old) join materialized as decimal partials
-      s.read.parquet(s"$dir/li_old")
-        .join(s.read.parquet(s"$dir/ord_old"),
-          col("l_orderkey") === col("o_orderkey"))
+      read("li_old").join(read("ord_old"), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority").as("prio"), col("l_returnflag").as("rflag"))
         .agg(count(lit(1)).as("cnt"),
           sum(Exact.money(col("l_extendedprice"))).as("sdec"))
         .write.mode("overwrite").parquet(s"$dir/mv")
     }
-    val ordOld = s.read.parquet(s"$dir/ord_old")
-    val ordFull = ordOld.unionByName(s.read.parquet(s"$dir/ord_delta"))
+    val ordFull = read("ord_old").unionByName(read("ord_delta"))
     def partials(li: DataFrame, ord: DataFrame, bcastLeft: Boolean): DataFrame = {
       val l = if (bcastLeft) broadcast(li) else li
       val o = if (bcastLeft) ord else broadcast(ord)
@@ -3760,10 +3761,9 @@ object ScalePatterns extends QueryModule {
         .agg(count(lit(1)).as("cnt"),
           sum(Exact.money(col("l_extendedprice"))).as("sdec"))
     }
-    s.read.parquet(s"$dir/mv")
-      .unionByName(partials(s.read.parquet(s"$dir/li_delta"), ordFull, bcastLeft = true))
-      .unionByName(partials(s.read.parquet(s"$dir/li_old"),
-        s.read.parquet(s"$dir/ord_delta"), bcastLeft = false))
+    read("mv")
+      .unionByName(partials(read("li_delta"), ordFull, bcastLeft = true))
+      .unionByName(partials(read("li_old"), read("ord_delta"), bcastLeft = false))
       .groupBy(col("prio"), col("rflag"))
       .agg(sum(col("cnt")).as("cnt"),
         sum(col("sdec")).cast("double").as("sum_price"))
@@ -4543,7 +4543,7 @@ object ScalePatterns extends QueryModule {
       admitted(2, "n_chars", cLo, cHi) < total, // z-order: prunes chars
       admitted(2, "doc_id", aLo, aHi) < total // z-order: still prunes ids
     )).toDF("range_blind_chars", "zorder_prunes_chars", "zorder_prunes_id")
-    s.read.parquet(M.prunedFilesOn(s, dir, 2, "n_chars", cLo, cHi): _*)
+    Tables.parquet(s, M.prunedFilesOn(s, dir, 2, "n_chars", cLo, cHi): _*)
       .filter(col("n_chars").between(cLo, cHi))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
@@ -5171,7 +5171,7 @@ object ScalePatterns extends QueryModule {
     val fields = VM.describe(s, dir, 3).linesIterator
       .filter(_.startsWith("field=")).map(_.stripPrefix("field="))
       .map { kv => val Array(lg, ph) = kv.split(":", 2); lg -> ph }.toSeq
-    val gens = VM.resolveDataDirs(s, dir, 3).map(d0 => s.read.parquet(d0))
+    val gens = VM.resolveDataDirs(s, dir, 3).map(d0 => Tables.parquet(s, d0))
     // a logical field's type comes from the generation footers that
     // CARRY its physical name — never assumed (r11 advice: a hard-coded
     // string cast would mistype a non-string drop/re-add)

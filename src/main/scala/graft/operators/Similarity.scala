@@ -2952,7 +2952,7 @@ object Similarity extends QueryModule {
     // snapshot (same rows by dataChange=false), so the loser just reads
     // the winner's version.
     val sub = s"d-k${java.util.UUID.randomUUID.toString.take(8)}"
-    s.read.parquet(dirs: _*).repartition(col("cid"))
+    Tables.parquet(s, dirs: _*).repartition(col("cid"))
       .write.mode("overwrite").parquet(s"$root/lists/$sub")
     // compaction re-clusters by cid, so the recommitted colstats become
     // maximally selective again (append versions carry none — readers
@@ -3483,7 +3483,7 @@ object Similarity extends QueryModule {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.parquet(out)
+    Tables.parquet(s, out)
       .select(col("qid"), col("rank"), col("nid"), col("score"))
       .orderBy(col("qid"), col("rank"))
   }

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{
   Alias, AttributeReference, Cast, Expression, Literal, NamedExpression}
@@ -100,7 +101,7 @@ object MvRewrite extends Rule[LogicalPlan] {
   private def rewrite(agg: Aggregate, groupings: Seq[Expression],
                       results: Seq[NamedExpression],
                       mvDef: MaterializedViews.MvDef): Option[LogicalPlan] = {
-    val mvPlan = SparkSession.active.read.parquet(mvDef.path)
+    val mvPlan = Tables.parquet(SparkSession.active, mvDef.path)
       .queryExecution.analyzed
     val mvAttr = mvPlan.output.map(a => a.name -> a).toMap
     val mvOut = mvPlan.outputSet

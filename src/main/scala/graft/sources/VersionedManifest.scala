@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -144,7 +145,7 @@ object VersionedManifest {
     */
   def commitAudited(s: SparkSession, dir: String, n: Long, meta: String,
                     audit: DataFrame => Seq[String]): Seq[String] = {
-    val staged = s.read.parquet(s"$dir/v=$n")
+    val staged = Tables.parquet(s, s"$dir/v=$n")
     val violations = audit(staged)
     if (violations.isEmpty) {
       commit(s, dir, n, s"$meta\naudit=pass")
@@ -242,7 +243,7 @@ object VersionedManifest {
   def commitConstrained(s: SparkSession, dir: String, n: Long,
                         meta: String): Seq[String] = {
     val cs = constraints(s, dir)
-    val staged = s.read.parquet(s"$dir/v=$n")
+    val staged = Tables.parquet(s, s"$dir/v=$n")
     val bad = violationCounts(staged, cs).filter(_._2 > 0)
     if (bad.nonEmpty)
       return bad.map { case (nm, c) =>
@@ -387,7 +388,7 @@ object VersionedManifest {
     val declared = readSchema(s, dir).getOrElse(
       throw new IllegalStateException(s"no declared schema at $dir"))
     val problems =
-      conformProblems(declared, s.read.parquet(s"$dir/v=$n").schema)
+      conformProblems(declared, Tables.parquet(s, s"$dir/v=$n").schema)
     if (problems.nonEmpty) return problems
     commit(s, dir, n, (Seq(meta) ++
       (carriedDataLines(s, dir) :+ s"data=$dir/v=$n")).mkString("\n"))
@@ -482,10 +483,26 @@ object VersionedManifest {
       files.exists(f => f == dp || f.startsWith(dp + "/"))
     }
   }
+  /** [[splitAffected]] over the files that `files` keeps of the snapshot
+    * `dirs` (a one-column frame of file names): the DML discovery scan,
+    * O(affected files) driver rows.
+    */
+  private def affectedBy(s: SparkSession, dirs: Seq[String])(
+      files: DataFrame => DataFrame): (Seq[String], Seq[String]) =
+    splitAffected(dirs, if (dirs.isEmpty) Nil
+      else files(Tables.parquet(s, dirs: _*)).distinct().collect().map(_.getString(0)).toSeq)
+
+  /** The files of a snapshot that hold one of `keys`' `key` values. */
+  private def holding(key: String, keys: DataFrame)(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, input_file_name}
+    df.select(col(key), input_file_name().as("_gfile"))
+      .join(keys.select(col(key)), Seq(key), "left_semi").select(col("_gfile"))
+  }
+
 
   def merge(s: SparkSession, dir: String, source: DataFrame,
             key: String): (Long, Seq[String], Seq[String]) = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit}
+    import org.apache.spark.sql.functions.{col, count, lit}
     val latest = latestCommitted(s, dir).getOrElse(
       throw new IllegalStateException(s"no committed version at $dir"))
     val dup = source.groupBy(col(key)).agg(count(lit(1)).as("n"))
@@ -494,14 +511,10 @@ object VersionedManifest {
       s"merge source has duplicate $key values: ambiguous upsert")
     val dirs = resolveDataDirs(s, dir, latest)
     val keys = source.select(col(key))
-    val matchedFiles = s.read.parquet(dirs: _*)
-      .select(col(key), input_file_name().as("_gfile"))
-      .join(keys, Seq(key), "left_semi")
-      .select(col("_gfile")).distinct().collect().map(_.getString(0))
-    val (affected, untouched) = splitAffected(dirs, matchedFiles.toSeq)
+    val (affected, untouched) = affectedBy(s, dirs)(holding(key, keys))
     val kept =
       if (affected.isEmpty) source.limit(0)
-      else s.read.parquet(affected: _*).join(keys, Seq(key), "left_anti")
+      else Tables.parquet(s, affected: _*).join(keys, Seq(key), "left_anti")
     val out = kept.unionByName(source.select(kept.columns.map(col): _*))
     val n = latest + 1
     val newSub = s"d-m$n"
@@ -520,7 +533,7 @@ object VersionedManifest {
                          untouched: Seq[String], newSub: String,
                          head: String): Unit = {
     val cs = constraintsAt(s, dir, latest)
-    val bad = violationCounts(s.read.parquet(s"$dir/$newSub"), cs)
+    val bad = violationCounts(Tables.parquet(s, s"$dir/$newSub"), cs)
       .filter(_._2 > 0)
     // the refusal names the actual operation (`head` carries it: merge,
     // delete, update, overwrite, SCD2 apply) — r11 advice
@@ -550,15 +563,12 @@ object VersionedManifest {
     val latest = latestCommitted(s, dir).getOrElse(
       throw new IllegalStateException(s"no committed version at $dir"))
     val dirs = resolveDataDirs(s, dir, latest)
-    val matchedFiles = s.read.parquet(dirs: _*)
-      .filter(expr(predicate))
-      .select(input_file_name().as("_gfile")).distinct()
-      .collect().map(_.getString(0))
-    if (matchedFiles.isEmpty) return (latest, Nil, dirs)
-    val (affected, untouched) = splitAffected(dirs, matchedFiles.toSeq)
+    val (affected, untouched) =
+      affectedBy(s, dirs)(_.filter(expr(predicate)).select(input_file_name()))
+    if (affected.isEmpty) return (latest, Nil, dirs)
     val n = latest + 1
     val newSub = s"d-d$n"
-    s.read.parquet(affected: _*)
+    Tables.parquet(s, affected: _*)
       .filter(not(coalesce(expr(predicate), lit(false))))
       .write.mode("overwrite").parquet(s"$dir/$newSub")
     publishCow(s, dir, latest, n, untouched, newSub,
@@ -587,13 +597,10 @@ object VersionedManifest {
       throw new IllegalStateException(s"no committed version at $dir"))
     requireUniformParquet(s, dir, latest, "UPDATE")
     val dirs = resolveDataDirs(s, dir, latest)
-    val matchedFiles = s.read.parquet(dirs: _*)
-      .filter(expr(predicate))
-      .select(input_file_name().as("_gfile")).distinct()
-      .collect().map(_.getString(0))
-    if (matchedFiles.isEmpty) return (latest, Nil, dirs)
-    val (affected, untouched) = splitAffected(dirs, matchedFiles.toSeq)
-    val old = s.read.parquet(affected: _*)
+    val (affected, untouched) =
+      affectedBy(s, dirs)(_.filter(expr(predicate)).select(input_file_name()))
+    if (affected.isEmpty) return (latest, Nil, dirs)
+    val old = Tables.parquet(s, affected: _*)
     val setMap = sets.toMap
     require(setMap.size == sets.size, "duplicate assignment target")
     sets.foreach { case (c, _) =>
@@ -640,13 +647,7 @@ object VersionedManifest {
     val dirs = resolveDataDirs(s, dir, latest)
     val (affected, untouched) =
       if (predicate == "true") (dirs, Seq.empty[String])
-      else {
-        val matchedFiles = s.read.parquet(dirs: _*)
-          .filter(expr(predicate))
-          .select(input_file_name().as("_gfile")).distinct()
-          .collect().map(_.getString(0))
-        splitAffected(dirs, matchedFiles.toSeq)
-      }
+      else affectedBy(s, dirs)(_.filter(expr(predicate)).select(input_file_name()))
     if (predicate != "true") {
       val stray = source
         .filter(not(coalesce(expr(predicate), lit(false))))
@@ -656,7 +657,7 @@ object VersionedManifest {
     }
     val kept =
       if (affected.isEmpty || predicate == "true") source.limit(0)
-      else s.read.parquet(affected: _*)
+      else Tables.parquet(s, affected: _*)
         .filter(not(coalesce(expr(predicate), lit(false))))
     val out = kept.unionByName(source.select(kept.columns.map(col): _*))
     val n = latest + 1
@@ -689,7 +690,7 @@ object VersionedManifest {
                 tsCol: String, tieCol: String, head: String)
       : (Long, Seq[String], Seq[String]) = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{broadcast, col, input_file_name, lead, min}
+    import org.apache.spark.sql.functions.{broadcast, col, lead, min}
     val latest = latestCommitted(s, dir).getOrElse(
       throw new IllegalStateException(s"no committed version at $dir"))
     requireUniformParquet(s, dir, latest, "SCD2 apply")
@@ -701,17 +702,11 @@ object VersionedManifest {
     val firstNew = batch.groupBy(col(key))
       .agg(min(col(tsCol)).as("_first"))
     val dirs = resolveDataDirs(s, dir, latest)
-    val matchedFiles =
-      if (dirs.isEmpty) Array.empty[String]
-      else s.read.parquet(dirs: _*)
-        .select(col(key), input_file_name().as("_gfile"))
-        .join(firstNew.select(col(key)), Seq(key), "left_semi")
-        .select(col("_gfile")).distinct().collect().map(_.getString(0))
-    val (affected, untouched) = splitAffected(dirs, matchedFiles.toSeq)
+    val (affected, untouched) = affectedBy(s, dirs)(holding(key, firstNew))
     val closed =
       if (affected.isEmpty) iv.limit(0)
       else {
-        val aff = s.read.parquet(affected: _*)
+        val aff = Tables.parquet(s, affected: _*)
         val late = aff.join(broadcast(firstNew), Seq(key))
           .filter(col("start_ts") >= col("_first")).limit(1).count()
         require(late == 0,
@@ -754,7 +749,7 @@ object VersionedManifest {
     val sub = s"v=${latestCommitted(s, dir).getOrElse(0L) + 1}-" +
       java.util.UUID.randomUUID.toString.take(8)
     source.write.mode("overwrite").parquet(s"$dir/$sub")
-    val staged = s.read.parquet(s"$dir/$sub")
+    val staged = Tables.parquet(s, s"$dir/$sub")
     val schemaProblems = readSchema(s, dir) match {
       case None => Nil // no declared contract: footer gate inactive
       case Some(declared) => conformProblems(declared, staged.schema)
@@ -804,7 +799,7 @@ object VersionedManifest {
     requireUniformParquet(s, dir, n - 1, "tryAppendAt")
     val sub = s"v=$n-${java.util.UUID.randomUUID.toString.take(8)}"
     source.write.mode("overwrite").parquet(s"$dir/$sub")
-    val staged = s.read.parquet(s"$dir/$sub")
+    val staged = Tables.parquet(s, s"$dir/$sub")
     val schemaProblems = readSchema(s, dir) match {
       case None => Nil
       case Some(declared) => conformProblems(declared, staged.schema)
@@ -843,7 +838,7 @@ object VersionedManifest {
   def mergeLww(s: SparkSession, dir: String, source: DataFrame, key: String,
                orderCols: Seq[String], head: String)
       : (Long, Seq[String], Seq[String]) = {
-    import org.apache.spark.sql.functions.{col, greatest, input_file_name, max, struct}
+    import org.apache.spark.sql.functions.{col, greatest, max, struct}
     val latest = latestCommitted(s, dir).getOrElse(
       throw new IllegalStateException(s"no committed version at $dir"))
     val rest = source.columns.filterNot(c =>
@@ -853,14 +848,10 @@ object VersionedManifest {
       df.select(col(key), struct(packed: _*).as(as))
     val src = pack(source, "_s").groupBy(col(key)).agg(max(col("_s")).as("_s"))
     val dirs = resolveDataDirs(s, dir, latest)
-    val matchedFiles = s.read.parquet(dirs: _*)
-      .select(col(key), input_file_name().as("_gfile"))
-      .join(src.select(col(key)), Seq(key), "left_semi")
-      .select(col("_gfile")).distinct().collect().map(_.getString(0))
-    val (affected, untouched) = splitAffected(dirs, matchedFiles.toSeq)
+    val (affected, untouched) = affectedBy(s, dirs)(holding(key, src))
     val aff =
       if (affected.isEmpty) pack(source.limit(0), "_t")
-      else pack(s.read.parquet(affected: _*), "_t")
+      else pack(Tables.parquet(s, affected: _*), "_t")
     val out = aff.join(src, Seq(key), "full_outer")
       .select(col(key), greatest(col("_t"), col("_s")).as("_p"))
       .select(col(key) +: (orderCols ++ rest).map(c => col(s"_p.$c")): _*)
@@ -907,7 +898,7 @@ object VersionedManifest {
   def mergeDetectingConflicts(s: SparkSession, dir: String, source: DataFrame,
       key: String, baseVersion: Option[Long] = None,
       maxRebases: Int = 5): (Long, Long) = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit}
+    import org.apache.spark.sql.functions.{col, count, lit}
     val base = baseVersion.orElse(latestCommitted(s, dir)).getOrElse(
       throw new IllegalStateException(s"no committed version at $dir"))
     val dup = source.groupBy(col(key)).agg(count(lit(1)).as("n"))
@@ -917,15 +908,11 @@ object VersionedManifest {
     def norm(p: String): String = new Path(p).toUri.getPath
     val baseDirs = resolveDataDirs(s, dir, base)
     val keys = source.select(col(key))
-    val matchedFiles = s.read.parquet(baseDirs: _*)
-      .select(col(key), input_file_name().as("_gfile"))
-      .join(keys, Seq(key), "left_semi")
-      .select(col("_gfile")).distinct().collect().map(_.getString(0))
-    val (affected, _) = splitAffected(baseDirs, matchedFiles.toSeq)
+    val (affected, _) = affectedBy(s, baseDirs)(holding(key, keys))
     val affNorm = affected.map(norm).toSet
     val kept =
       if (affected.isEmpty) source.limit(0)
-      else s.read.parquet(affected: _*).join(keys, Seq(key), "left_anti")
+      else Tables.parquet(s, affected: _*).join(keys, Seq(key), "left_anti")
     val out = kept.unionByName(source.select(kept.columns.map(col): _*))
     val newSub = s"d-c$base-${java.util.UUID.randomUUID.toString.take(8)}"
     out.write.mode("overwrite").parquet(s"$dir/$newSub")
@@ -944,7 +931,7 @@ object VersionedManifest {
               s"affected dirs are stale; staged $newSub left for vacuum")
           val added = vDirs.filterNot(d0 => prevDirs.contains(norm(d0)))
           if (added.nonEmpty) {
-            val hit = s.read.parquet(added: _*).select(col(key))
+            val hit = Tables.parquet(s, added: _*).select(col(key))
               .join(keys, Seq(key), "left_semi").limit(1).count()
             if (hit > 0) throw new java.util.ConcurrentModificationException(
               s"version $v committed rows sharing $key values with this " +
@@ -960,7 +947,7 @@ object VersionedManifest {
       val untouched = resolveDataDirs(s, dir, attemptBase)
         .filterNot(d0 => affNorm.contains(norm(d0)))
       val cs = constraintsAt(s, dir, attemptBase)
-      val bad = violationCounts(s.read.parquet(s"$dir/$newSub"), cs)
+      val bad = violationCounts(Tables.parquet(s, s"$dir/$newSub"), cs)
         .filter(_._2 > 0)
       if (bad.nonEmpty) throw new IllegalStateException(
         s"merge output violates ${bad.map(_._1).mkString(", ")} — not published")
@@ -980,16 +967,17 @@ object VersionedManifest {
     * (a partial agg keyed by file), O(#files) rows collected, and meant
     * to ride the commit body so a selective reader can prune files from
     * the manifest ALONE — no footer opens, no data-dir listing beyond
-    * the survivors ([[prunedFiles]]).
+    * the survivors ([[prunedFiles]]). Each line starts with `prefix`.
     */
-  def fileStats(s: SparkSession, dataDir: String, colName: String): Seq[String] = {
+  def fileStats(s: SparkSession, dataDir: String, colName: String,
+                prefix: String = "stats="): Seq[String] = {
     import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    s.read.parquet(dataDir)
+    Tables.parquet(s, dataDir)
       .groupBy(input_file_name().as("f"))
       .agg(min(col(colName)).cast("long").as("lo"),
         max(col(colName)).cast("long").as("hi"))
       .collect()
-      .map(r => s"stats=${new Path(r.getString(0)).getName}:" +
+      .map(r => s"$prefix${new Path(r.getString(0)).getName}:" +
         s"${r.getLong(1)}:${r.getLong(2)}")
       .toSeq.sorted
   }
@@ -1000,18 +988,8 @@ object VersionedManifest {
     * q369) needs: one layout, independent skipping on EVERY clustered
     * column. Same one-pass construction, one aggregate per call.
     */
-  def fileStatsOn(s: SparkSession, dataDir: String,
-                  colName: String): Seq[String] = {
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    s.read.parquet(dataDir)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col(colName)).cast("long").as("lo"),
-        max(col(colName)).cast("long").as("hi"))
-      .collect()
-      .map(r => s"colstats=$colName:${new Path(r.getString(0)).getName}:" +
-        s"${r.getLong(1)}:${r.getLong(2)}")
-      .toSeq.sorted
-  }
+  def fileStatsOn(s: SparkSession, dataDir: String, colName: String): Seq[String] =
+    fileStats(s, dataDir, colName, s"colstats=$colName:")
 
   /** [[prunedFiles]] against the `colstats=` lines of ONE named column.
     * Refuses when the version carries no stats for that column — a
@@ -1101,7 +1079,7 @@ object VersionedManifest {
     import org.apache.spark.sql.functions.{array, col, collect_set, explode, input_file_name, lit, pmod, xxhash64}
     val pos = (0 until BloomK).map(i =>
       pmod(xxhash64(col(colName), lit(i)), lit(bits)).cast("int"))
-    s.read.parquet(dataDir)
+    Tables.parquet(s, dataDir)
       .select(input_file_name().as("f"), explode(array(pos: _*)).as("p"))
       .groupBy(col("f")).agg(collect_set(col("p")).as("ps"))
       .collect()
@@ -1523,7 +1501,7 @@ object VersionedManifest {
       case "json" =>
         val r = readSchema(s, dir).map(s.read.schema).getOrElse(s.read)
         r.json(dirs: _*)
-      case _ => s.read.parquet(dirs: _*)
+      case _ => Tables.parquet(s, dirs: _*)
     }
     resolveDataDirsWithFormat(s, dir, n)
       .groupBy(_._2).toSeq.sortBy(_._1)

@@ -83,7 +83,7 @@ object Streams extends QueryModule {
     stageLinks(stage, s"$d/events.parquet")
     // probe the landed ts type from the batch footer, then apply the same
     // normalization as Tables.events (both generations → session-zone ts)
-    val tsType = s.read.parquet(s"$d/events.parquet").schema("ts").dataType
+    val tsType = Tables(s, d, "events").schema("ts").dataType
     val raw = s.readStream.schema(rawSchema(tsType)).parquet(stage.getAbsolutePath)
     tsType match {
       case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -1211,7 +1211,7 @@ object Streams extends QueryModule {
     stage.mkdirs()
     stageLinks(stage, s"$d/documents.parquet")
     s.readStream
-      .schema(s.read.parquet(s"$d/documents.parquet").schema)
+      .schema(Tables(s, d, "documents").schema)
       .parquet(stage.getAbsolutePath)
   }
 
@@ -1482,7 +1482,7 @@ object Streams extends QueryModule {
     val mainDir = s"$base/main_r$run"
     val deadDir = s"$base/dead_r$run"
     val ckpt = StagingDirs.register(s"$base/ckpt_r$run")
-    val sch = s.read.parquet(arrivals).schema
+    val sch = Tables.parquet(s, arrivals).schema
     var hwmMicros = Long.MinValue // driver state: ONE scalar
     val route: (DataFrame, Long) => Unit = (batch, _) => {
       if (!batch.isEmpty) {
@@ -1507,13 +1507,13 @@ object Streams extends QueryModule {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val main = s.read.parquet(mainDir)
+    val main = Tables.parquet(s, mainDir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_ontime"),
         Exact.sumMoney(col("value")).as("ontime_value"))
     val dead = (if (java.nio.file.Files.exists(
         java.nio.file.Paths.get(deadDir)))
-      s.read.parquet(deadDir) else s.read.parquet(arrivals).limit(0))
+      Tables.parquet(s, deadDir) else Tables.parquet(s, arrivals).limit(0))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_late"),
         Exact.sumMoney(col("value")).as("late_value"))
@@ -1771,7 +1771,7 @@ object Streams extends QueryModule {
         s"compaction of 1..$vApp"),
       "compaction commit lost a race")
     drain() // 3: dataChange=false — NOTHING may arrive
-    s.read.parquet(sink)
+    Tables.parquet(s, sink)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),
@@ -1830,7 +1830,7 @@ object Streams extends QueryModule {
       q.awaitTermination()
     }
     drain() // 1: everything on main (the ingested epochs)
-    val afterFirst = s.read.parquet(sink).count()
+    val afterFirst = Tables.parquet(s, sink).count()
     // the correction batch: COMMITTED, but not yet published to main
     val prev = M.resolveDataDirsWithFormat(s, dir, vIn).map { case (d0, f0) =>
       val rel = if (d0.startsWith(s"$dir/")) d0.stripPrefix(s"$dir/") else d0
@@ -1845,13 +1845,13 @@ object Streams extends QueryModule {
         :+ "error correction batch (pending publish)").mkString("\n")),
       "correction commit lost a race")
     drain() // 2: main still points BEFORE the correction — nothing arrives
-    require(s.read.parquet(sink).count() == afterFirst,
+    require(Tables.parquet(s, sink).count() == afterFirst,
       "branch-scoped subscriber drained past the branch head")
     // the publish: one CAS fast-forward, then the correction flows
     require(M.advanceBranch(s, dir, "main", 0, vIn + 1),
       "main fast-forward lost a race")
     drain() // 3: exactly the correction batch
-    s.read.parquet(sink)
+    Tables.parquet(s, sink)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),

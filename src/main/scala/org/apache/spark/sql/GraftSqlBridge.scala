@@ -1,6 +1,10 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.conf.Configuration
+
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.util.HadoopFSUtils
 
 /** Bridge into the one `private[sql]` constructor an extension needs:
   * building a DataFrame from a custom LogicalPlan (`Dataset.ofRows`). The
@@ -34,4 +38,14 @@ object GraftSqlBridge {
     spark.streams.listListeners().foreach(c.streams.addListener)
     c
   }
+
+  /** The session's SQL conf, and a Hadoop conf with its `spark.hadoop.*`
+    * keys as Spark's file sources build one (`sessionState` is `private[sql]`). */
+  def sqlConf(spark: SparkSession): SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+  def hadoopConf(spark: SparkSession): Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** Whether Spark's file listing skips this name (`private[spark]`). */
+  def hiddenPath(name: String): Boolean = HadoopFSUtils.shouldFilterOutPathName(name)
 }

@@ -10,8 +10,9 @@ import org.apache.spark.sql.AnalysisException
   * RDD behind whether the query returns or throws, and its construct
   * seconds sit inside its total; [[Measure.warmMin]] runs its body N+1
   * times; no main outside `Measure.scala` keeps a clock or a batch
-  * `noop` sink of its own; and no source builds a stock Hadoop
-  * `Configuration` or switches a filesystem's checksums.
+  * `noop` sink of its own; no source builds a stock Hadoop
+  * `Configuration` or switches a filesystem's checksums; and no source
+  * reads parquet around [[Tables.parquet]].
   */
 class MeasureSpec extends SparkSpec {
 
@@ -81,6 +82,14 @@ class MeasureSpec extends SparkSpec {
   test("no source builds a stock Hadoop Configuration or switches checksums") {
     val found = offenders(Seq("new org.apache.hadoop.conf.Configuration()",
       "new Configuration()", "setWriteChecksum", "setVerifyChecksum"))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  // a schema-less read.parquet infers its schema in a Spark job of its
+  // own; Tables.parquet reads the same footer on the driver
+  test("no source reads parquet outside Tables.scala") {
+    assert(sources.exists(_.getFileName.toString == "Tables.scala"))
+    val found = offenders(Seq("read.parquet("), "Tables.scala")
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

@@ -1,118 +1,135 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Try
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.GraftSession.withConf
 
-/** Pins `Tables.apply`'s schema memo: a memoized read returns what a
-  * schema-less read returns, launches no Spark job, and never serves a
-  * schema for files or inference confs other than those it was inferred
-  * under.
+/** Pins [[Tables.parquet]]'s contract: a read of any input returns the
+  * schema, nullability and rows of a schema-less `spark.read.parquet`,
+  * launches no Spark job where Spark infers from one footer, and throws
+  * Spark's own exception where Spark does.
   */
 class TablesSpec extends SparkSpec {
 
   private val names = Seq("lineitem", "orders", "customer", "supplier", "part",
     "nation", "region", "events", "documents", "embeddings")
 
-  /** Runs `body` and counts the Spark jobs it launched. Listener events
-    * arrive asynchronously but in order, so a sentinel job run afterwards
-    * marks the point where every job of `body` has been seen.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${System.nanoTime}"
-    val sentinel = s"$group-end"
-    val seen = new AtomicInteger
-    val ended = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
-          case `group` => seen.incrementAndGet()
-          case `sentinel` => ended.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "tables memo", interruptOnCancel = false)
-      val out = body
-      sc.setJobGroup(sentinel, "tables memo sentinel", interruptOnCancel = false)
-      sc.parallelize(Seq(1), 1).count()
-      assert(ended.await(30, TimeUnit.SECONDS), "the sentinel job never reached the listener")
-      (out, seen.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
-  test("a memoized read matches a schema-less read and launches no job") {
-    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") { spark =>
-      names.foreach { n =>
-        val plain = spark.read.parquet(s"$sf0001/$n.parquet")
-        Tables(spark, sf0001, n)
-        val (memo, jobs) = jobsDuring(Tables(spark, sf0001, n))
-        assert(jobs === 0, s"$n: a warm read launched $jobs jobs")
-        assert(memo.schema === plain.schema, s"$n: schema")
-        assert(memo.schema.map(_.nullable) === plain.schema.map(_.nullable), s"$n: nullability")
-        assert(rows(memo) === rows(plain), s"$n: rows")
-      }
-      assert(jobsDuring(Tables.events(spark, sf0001))._2 === 0, "events")
-    }
+  /** `Tables.parquet(paths)` equals a schema-less read of them and, unless
+    * `jobs` is false, launches no Spark job.
+    */
+  private def matchesSpark(s: SparkSession, paths: String*)(jobs: Boolean = false): Unit = {
+    val what = paths.mkString(", ")
+    val plain = s.read.parquet(paths: _*)
+    val (df, launched) = jobsDuring(Tables.parquet(s, paths: _*))
+    if (!jobs) assert(launched === 0, s"$what: launched $launched jobs")
+    assert(df.schema === plain.schema, s"$what: schema")
+    assert(df.schema.map(_.nullable) === plain.schema.map(_.nullable), s"$what: nullability")
+    assert(rows(df) === rows(plain), s"$what: rows")
   }
 
-  test("flipping an inference conf misses the memo") {
-    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") { spark =>
-      Tables(spark, sf0001, "events")
-    }
-    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "false") { spark =>
-      // a TIMESTAMP(NANOS) generation of events fails inference here, after
-      // its footer job has started; either way a miss launches a job
-      val (_, jobs) = jobsDuring(Try(Tables(spark, sf0001, "events")))
-      assert(jobs > 0, "nanosAsLong=false was served the schema inferred under true")
+  /** `Tables.parquet(path)` throws what a schema-less read of it throws. */
+  private def throwsAsSpark(path: String): Unit = {
+    val plain = Try(spark.read.parquet(path)).failed.get
+    val ours = Try(Tables.parquet(spark, path)).failed.get
+    assert(ours.getClass === plain.getClass, path)
+    Seq(plain, ours).foreach(e => assert(e.isInstanceOf[SparkThrowable], e))
+    assert(ours.asInstanceOf[SparkThrowable].getCondition ===
+      plain.asInstanceOf[SparkThrowable].getCondition, path)
+  }
+
+  test("every table read matches a schema-less read and launches no job") {
+    names.foreach(n => matchesSpark(spark, s"$sf0001/$n.parquet")())
+    assert(jobsDuring(Tables.events(spark, sf0001))._2 === 0, "events")
+  }
+
+  test("a read follows the inference confs it runs under") {
+    val events = s"$sf0001/events.parquet"
+    Seq("true", "false").foreach { nanos =>
+      withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> nanos) { s =>
+        // a TIMESTAMP(NANOS) generation of events fails inference under
+        // false: the read must then fail as Spark's does
+        if (Try(s.read.parquet(events)).isSuccess) matchesSpark(s, events)()
+        else assert(Try(Tables.parquet(s, events)).isFailure, s"nanosAsLong $nanos")
+      }
     }
     // an unadjusted TIMESTAMP(MICROS) ts is TIMESTAMP_NTZ only while NTZ
-    // inference is on, so a stale entry would show as a wrong type
-    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") { spark =>
-      Seq("true", "false").foreach { ntz =>
-        withConf(spark, "spark.sql.parquet.inferTimestampNTZ.enabled" -> ntz) { spark =>
-          val plain = spark.read.parquet(s"$sf0001/events.parquet")
-          assert(Tables(spark, sf0001, "events").schema === plain.schema, s"NTZ inference $ntz")
-        }
+    // inference is on
+    Seq("true", "false").foreach { ntz =>
+      withConf(spark, "spark.sql.parquet.inferTimestampNTZ.enabled" -> ntz) { s =>
+        matchesSpark(s, events)()
       }
     }
   }
 
-  test("a rewritten file or directory misses the memo") {
-    val dir = tempDir("tables_memo")
+  test("a rewritten file or directory is read with its new schema") {
+    val dir = tempDir("tables_rewrite")
     val file = Paths.get(dir, "t.parquet")
     Files.copy(Paths.get(sf0001, "nation.parquet"), file)
-    Tables(spark, dir, "t")
-    assert(jobsDuring(Tables(spark, dir, "t"))._2 === 0)
+    matchesSpark(spark, file.toString)()
     Files.copy(Paths.get(sf0001, "region.parquet"), file, StandardCopyOption.REPLACE_EXISTING)
-    val region = spark.read.parquet(s"$sf0001/region.parquet")
-    val (reread, jobs) = jobsDuring(Tables(spark, dir, "t"))
-    assert(jobs > 0)
-    assert(reread.schema === region.schema)
-    assert(rows(reread) === rows(region))
+    matchesSpark(spark, file.toString)()
 
     spark.range(3).write.parquet(s"$dir/d.parquet")
-    Tables(spark, dir, "d")
-    assert(jobsDuring(Tables(spark, dir, "d"))._2 === 0)
+    matchesSpark(spark, s"$dir/d.parquet")()
     spark.range(3).selectExpr("id", "CAST(id AS STRING) AS s")
       .write.mode("overwrite").parquet(s"$dir/d.parquet")
-    val (d, djobs) = jobsDuring(Tables(spark, dir, "d"))
-    assert(djobs > 0)
-    assert(d.schema.fieldNames.toSeq === Seq("id", "s"))
-    assert(rows(d) === Seq("[0,0]", "[1,1]", "[2,2]"))
+    matchesSpark(spark, s"$dir/d.parquet")()
+    assert(Tables(spark, dir, "d").schema.fieldNames.toSeq === Seq("id", "s"))
+  }
+
+  test("partitioned parents, directory lists and file lists match a schema-less read") {
+    val dir = tempDir("tables_layouts")
+    spark.range(4).selectExpr("id", "CAST(id AS STRING) AS s").write.parquet(s"$dir/e/v=1")
+    spark.range(6).selectExpr("id", "CAST(id AS STRING) AS s").write.parquet(s"$dir/e/v=2")
+    spark.range(8).selectExpr("id", "id % 3 AS k", "id % 2 AS j")
+      .write.partitionBy("k", "j").parquet(s"$dir/p")
+    matchesSpark(spark, s"$dir/e")()
+    assert(Tables.parquet(spark, s"$dir/e").columns.toSeq === Seq("id", "s", "v"))
+    matchesSpark(spark, s"$dir/e/v=1")()
+    matchesSpark(spark, s"$dir/e/v=1", s"$dir/e/v=2")()
+    matchesSpark(spark, s"$dir/p")()
+    val parts = Files.list(Paths.get(s"$dir/e/v=2")).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).sorted.toSeq
+    matchesSpark(spark, parts: _*)()
+
+    // a file column that is also a partition directory: Spark places and
+    // types it differently under a given schema, so the read is Spark's
+    spark.range(3).selectExpr("id", "'x' AS v").write.parquet(s"$dir/o/v=1")
+    matchesSpark(spark, s"$dir/o")(jobs = true)
+  }
+
+  test("a streaming file sink is read from its log, and mergeSchema merges") {
+    val dir = tempDir("tables_sink")
+    spark.range(5).write.parquet(s"$dir/in")
+    spark.readStream.schema(spark.read.parquet(s"$dir/in").schema).parquet(s"$dir/in")
+      .writeStream.format("parquet").trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", s"$dir/ckpt").start(s"$dir/sink")
+      .awaitTermination()
+    // a file the log does not list, sorting first in the directory
+    Files.copy(Paths.get(sf0001, "nation.parquet"), Paths.get(dir, "sink", "a.parquet"))
+    matchesSpark(spark, s"$dir/sink")(jobs = true)
+    assert(Tables.parquet(spark, s"$dir/sink").columns.toSeq === Seq("id"))
+
+    spark.range(3).write.parquet(s"$dir/m1")
+    spark.range(3).selectExpr("id", "id * 2 AS x").write.parquet(s"$dir/m2")
+    withConf(spark, "spark.sql.parquet.mergeSchema" -> "true") { s =>
+      matchesSpark(s, s"$dir/m1", s"$dir/m2")(jobs = true)
+      assert(Tables.parquet(s, s"$dir/m1", s"$dir/m2").columns.toSeq === Seq("id", "x"))
+    }
+  }
+
+  test("a missing path and an empty directory throw what Spark throws") {
+    val dir = tempDir("tables_errors")
+    throwsAsSpark(s"$dir/missing")
+    Files.createDirectories(Paths.get(dir, "empty"))
+    throwsAsSpark(s"$dir/empty")
   }
 }

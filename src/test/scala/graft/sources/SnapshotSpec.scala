@@ -42,4 +42,20 @@ class SnapshotSpec extends SparkSpec {
     assert(VersionedManifest.readLatest(spark, dir).count() == 3,
       "new reader did not resolve the freshly committed version")
   }
+
+  test("time travel to a committed parquet version launches no job") {
+    import spark.implicits._
+    val dir = tempDir("graft_snap_jobs")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$dir/v=1")
+    VersionedManifest.commit(spark, dir, 1, "initial load")
+    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").write.parquet(s"$dir/v=2")
+    VersionedManifest.commit(spark, dir, 2, "rewrite")
+    val (at1, jobsAt) = jobsDuring(VersionedManifest.readAt(spark, dir, 1))
+    val (latest, jobsLatest) = jobsDuring(VersionedManifest.readLatest(spark, dir))
+    assert(jobsAt === 0, "readAt inferred its schema in a Spark job")
+    assert(jobsLatest === 0, "readLatest inferred its schema in a Spark job")
+    assert(at1.schema === spark.read.parquet(s"$dir/v=1").schema)
+    assert(at1.count() === 2)
+    assert(latest.count() === 3)
+  }
 }
