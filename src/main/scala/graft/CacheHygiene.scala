@@ -34,20 +34,12 @@ object CacheHygiene {
     * removal (deterministic for specs); benches use fire-and-forget.
     *
     * CAUTION for embedders: this unpersists EVERY persisted RDD in the
-    * session and clears ALL plan-level caches (`catalog.clearCache` has
-    * no per-entry selector) — correct for the harness, which owns the
-    * whole session. A deployment embedding the engine alongside its own
-    * RDD-level caches passes `keep` with the RDD ids to preserve;
-    * DataFrame (`.cache()`) plan caches cannot be selectively kept and
-    * should be re-established after release.
+    * SparkContext and clears ALL plan-level caches — right for the harness.
     */
-  def release(spark: SparkSession, blocking: Boolean = false,
-              keep: Set[Int] = Set.empty): Unit = {
+  def release(spark: SparkSession, blocking: Boolean = false): Unit = {
     val sc = spark.sparkContext
     if (sc.isStopped) return // nothing to release; the caller revives
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!keep.contains(id)) rdd.unpersist(blocking)
-    }
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking))
     spark.catalog.clearCache()
     try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     catch { case scala.util.control.NonFatal(_) => () }

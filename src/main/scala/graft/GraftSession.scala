@@ -107,6 +107,28 @@ object GraftSession {
     body(c)
   }
 
+  /** What a query can leave behind in a session, by kind: the `SET`
+    * output (`key=value`, catalog registrations included), temp views,
+    * temporary functions, session variables and active streams. Every
+    * registry query runs on its own child ([[SparkEntry.queries]]), so
+    * the caller's state is the same before and after each one; Smoke
+    * and ConfScopeSpec compare it. */
+  def state(s: SparkSession): Map[String, Set[String]] = Map(
+    "conf" -> s.sql("SET").collect().map(r => s"${r.getString(0)}=${r.getString(1)}").toSet,
+    "temp views" -> s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet,
+    "temp functions" -> GraftSqlBridge.tempFunctions(s).toSet,
+    "variables" -> GraftSqlBridge.variables(s).toSet,
+    "streams" -> s.streams.active.map(_.id.toString).toSet)
+
+  /** One `kind +added -removed …` line per kind that differs between two
+    * [[state]]s; empty when they are equal. */
+  def stateDiff(before: Map[String, Set[String]], after: Map[String, Set[String]]): Seq[String] =
+    before.keys.toSeq.sorted.flatMap { k =>
+      val change = Seq("+" -> (after(k) -- before(k)), "-" -> (before(k) -- after(k)))
+        .flatMap { case (sign, names) => names.toSeq.sorted.map(sign + _) }
+      if (change.isEmpty) None else Some(s"$k ${change.mkString(" ")}")
+    }
+
   /** `df`'s analyzed plan on `s`, planned and run under `s`'s conf (not
     * `logical`, which may name a view only `df`'s session has). */
   def rebind(s: SparkSession, df: DataFrame): DataFrame =

@@ -39,7 +39,7 @@ object Profile {
       }
       CacheHygiene.release(spark)
       println(s"[profile] active streams after $name: " +
-        spark.streams.active.length)
+        df.sparkSession.streams.active.length)
     }
     spark.stop()
   }

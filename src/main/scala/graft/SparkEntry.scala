@@ -56,13 +56,15 @@ object SparkEntry {
       .orderBy(desc("revenue"), col("n_name"))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2, each run on its
+    * own child of the given session ([[GraftSession.withConf]] with no keys). */
   def queries: Map[String, (SparkSession, String) => DataFrame] = {
     val flat = modules.flatMap(_.queries)
     require(flat.size == flat.map(_._1).distinct.size,
       s"duplicate query names across modules: " +
         flat.groupBy(_._1).filter(_._2.size > 1).keys.mkString(", "))
-    flat.toMap
+    flat.map { case (q, f) => q -> ((s: SparkSession, d: String) =>
+      GraftSession.withConf(s)(f(_, d))) }.toMap
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

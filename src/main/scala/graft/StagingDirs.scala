@@ -18,8 +18,8 @@ import org.apache.spark.sql.SparkSession
   *   - [[once]] runs a stage's build only while `<dir>/_STAGED` is absent
   *     and writes that marker only after the build returns, so a build that
   *     throws is retried by the next call.
-  *   - `graft.sources.VersionedCatalog.mount` is the one writer of a
-  *     versioned catalog's `spark.sql.catalog.<name>` registration.
+  *   - `graft.sources.VersionedCatalog.mount` is the one writer of a versioned
+  *     catalog's registration, under a fixed name on the query's own child.
   *
   * `java.io.tmpdir` is read on every [[dir]] call, never cached: a harness
   * may move it between passes (perfbench gives each pass its own tmpdir),

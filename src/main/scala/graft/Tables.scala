@@ -41,6 +41,10 @@ object Tables {
       .collect { case (schema, df) if !partitionedByFileColumn(schema, df) => df }
       .getOrElse(s.read.parquet(paths: _*))
 
+  /** A streaming file sink's output under the writing stream's `schema`: no inference job. */
+  def sink(s: SparkSession, path: String, schema: StructType): DataFrame =
+    s.read.schema(schema).parquet(path)
+
   private def footerSchema(s: SparkSession, paths: Seq[String]): Option[StructType] = {
     val (sqlConf, conf) = (GraftSqlBridge.sqlConf(s), GraftSqlBridge.hadoopConf(s))
     def visible(st: FileStatus) = !GraftSqlBridge.hiddenPath(st.getPath.getName)

@@ -1368,11 +1368,9 @@ object ScalePatterns extends QueryModule {
     * listing; the SQL front door adds zero data-path cost.
     */
   /** q321/q327's shared estate: the two-generation versioned table from
-    * q250's layout, registered under a per-dataset VersionedCatalog
-    * (catalog instances are cached BY NAME, so a second dataset in the
-    * same session must register its own, not silently reuse the first
-    * root). Returns the catalog name and its root; the table is
-    * `<cat>.tables.tt`, its directory `<root>/tt`.
+    * q250's layout, registered as a VersionedCatalog. Returns the catalog
+    * name and its root; the table is `<cat>.tables.tt`, its directory
+    * `<root>/tt`.
     */
   private def sqlTtCatalog(s: SparkSession, d: String): (String, String) = {
     val root = StagingDirs.dir(s, "sqltt", d)
@@ -1385,7 +1383,7 @@ object ScalePatterns extends QueryModule {
       docs.write.mode("overwrite").parquet(s"$dir/v=2")
       graft.sources.VersionedManifest.commit(s, dir, 2, "full rewrite")
     }
-    (VersionedCatalog.mount(s, "g321_" + d.replaceAll("[^A-Za-z0-9]", "_"), root), root)
+    (VersionedCatalog.mount(s, "g321", root), root)
   }
 
   private def q321(s: SparkSession, d: String): DataFrame = {
@@ -1456,7 +1454,7 @@ object ScalePatterns extends QueryModule {
     */
   private def rtasCatalog(s: SparkSession, d: String): (String, String) = {
     val root = StagingDirs.dir(s, "rtas", d)
-    val cat = VersionedCatalog.mount(s, "g382_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    val cat = VersionedCatalog.mount(s, "g382", root)
     StagingDirs.once(root) {
       val src = s"parquet.`$d/documents.parquet`"
       s.sql(s"CREATE TABLE $cat.tables.rt AS " +
@@ -1543,7 +1541,7 @@ object ScalePatterns extends QueryModule {
     */
   private def sqlDeleteCatalog(s: SparkSession, d: String): (String, String) = {
     val root = StagingDirs.dir(s, "sqldel", d)
-    val cat = VersionedCatalog.mount(s, "g384_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    val cat = VersionedCatalog.mount(s, "g384", root)
     StagingDirs.once(root) {
       val M = graft.sources.VersionedManifest
       val dir = s"$root/dl"
@@ -1696,8 +1694,7 @@ object ScalePatterns extends QueryModule {
         .write.mode("overwrite").parquet(s"$root/documents/v=3")
       VM.commit(s, s"$root/documents", 3, "in-flight: erase src5")
     }
-    val cat = VersionedCatalog.mount(s, "g331_" + d.replaceAll("[^A-Za-z0-9]", "_"), root,
-      pinned = true)
+    val cat = VersionedCatalog.mount(s, "g331", root, pinned = true)
     s.sql(
       s"""SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
          |  CAST(SUM(d.n_chars) AS BIGINT) AS total_chars,
@@ -1745,7 +1742,7 @@ object ScalePatterns extends QueryModule {
         .write.mode("overwrite").parquet(s"$dir/v=2")
       VM.commit(s, dir, 2, "bad rewrite (doubled rows)")
     }
-    val cat = VersionedCatalog.mount(s, "g330_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    val cat = VersionedCatalog.mount(s, "g330", root)
     s.sql(s"CALL $cat.sys.rollback('tt', 1)").collect()
     s.sql(
       s"""SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1904,7 +1901,7 @@ object ScalePatterns extends QueryModule {
       graft.sources.VersionedManifest.commit(s, dir, 2, "curated: src0 dropped")
       graft.sources.VersionedManifest.tag(s, dir, "release-b", 2)
     }
-    val cat = VersionedCatalog.mount(s, "g339_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    val cat = VersionedCatalog.mount(s, "g339", root)
     s.sql(
       s"""SELECT release, n_docs, total_chars FROM (
          |  SELECT 'release-a' AS release, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -4135,7 +4132,7 @@ object ScalePatterns extends QueryModule {
       M.commit(s, dir, 2, "curated: zh routed to its own corpus")
       require(M.advanceBranch(s, dir, "main", 0, 2), "publish lost a race")
     }
-    val cat = VersionedCatalog.mount(s, "g354_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    val cat = VersionedCatalog.mount(s, "g354", root)
     s.sql(
       s"""SELECT ref, n_docs, total_chars FROM (
          |  SELECT 'blessed' AS ref, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -4203,7 +4200,7 @@ object ScalePatterns extends QueryModule {
       require(expired == Seq(1L, 3L, 4L),
         s"expected versions 1, 3, 4 to expire, got $expired")
     }
-    val cat = VersionedCatalog.mount(s, "g355_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    val cat = VersionedCatalog.mount(s, "g355", root)
     s.sql(
       s"""SELECT ref, n_docs, total_chars FROM (
          |  SELECT 'head' AS ref, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -4247,7 +4244,7 @@ object ScalePatterns extends QueryModule {
     val root = StagingDirs.dir(s, "vsqlproc", d)
     val dir = s"$root/corpus"
     val M = graft.sources.VersionedManifest
-    val cat = VersionedCatalog.mount(s, "g358_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    val cat = VersionedCatalog.mount(s, "g358", root)
     StagingDirs.once(root) {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -4583,7 +4580,7 @@ object ScalePatterns extends QueryModule {
     val M = graft.sources.VersionedManifest
     val root = StagingDirs.dir(s, "sqlmerge", d)
     val dir = s"$root/corpus"
-    val cat = VersionedCatalog.mount(s, "g370_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    val cat = VersionedCatalog.mount(s, "g370", root)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
     StagingDirs.once(root) {
@@ -4951,7 +4948,7 @@ object ScalePatterns extends QueryModule {
     */
   private def sqlInsertCatalog(s: SparkSession, d: String): (String, String) = {
     val root = StagingDirs.dir(s, "sqlins", d)
-    val cat = VersionedCatalog.mount(s, "g390_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    val cat = VersionedCatalog.mount(s, "g390", root)
     StagingDirs.once(root) {
       val M = graft.sources.VersionedManifest
       val src = s"parquet.`$d/documents.parquet`"
@@ -5014,7 +5011,7 @@ object ScalePatterns extends QueryModule {
   private def replaceWhereCatalog(s: SparkSession, d: String)
       : (String, String) = {
     val root = StagingDirs.dir(s, "replw", d)
-    val cat = VersionedCatalog.mount(s, "g391_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    val cat = VersionedCatalog.mount(s, "g391", root)
     StagingDirs.once(root) {
       val M = graft.sources.VersionedManifest
       val dir = s"$root/rw"
@@ -5084,7 +5081,7 @@ object ScalePatterns extends QueryModule {
   private def sqlUpdateCatalog(s: SparkSession, d: String)
       : (String, String) = {
     val root = StagingDirs.dir(s, "squpd", d)
-    val cat = VersionedCatalog.mount(s, "g392_" + d.replaceAll("[^A-Za-z0-9]", "_"), root)
+    val cat = VersionedCatalog.mount(s, "g392", root)
     StagingDirs.once(root) {
       val M = graft.sources.VersionedManifest
       val dir = s"$root/upd"

@@ -1096,7 +1096,6 @@ object ArticlesV2 extends QueryModule {
     * for the events pipelines, now proved for the custom source too.
     */
   private def q223(s: SparkSession, dir: String): DataFrame = {
-    s.catalog.dropTempView("q223_sink")
     val agg = s.readStream.format("graft.sources.ArticleSourceV2")
       .option("corpus", "all").load()
       .filter(col("indexation").isNotNull)

@@ -305,14 +305,14 @@ object CatalogOps extends QueryModule {
     "acm_machine_learning_articles", "acm_blockchain_articles")
 
   /** Shared scaffolding for the estate-MUTATING queries (q264/q267/q269):
-    * one staging dir + catalog registration per (session, sfDir), with a
-    * stage-once gate so re-runs skip the mutation and re-audit the mutated
-    * estate. Returns the catalog name to query.
+    * one staging dir per (app, sfDir), registered on the query's session,
+    * with a stage-once gate so re-runs skip the mutation and re-audit the
+    * mutated estate. Returns the catalog name to query.
     */
   private def stagedCatalog(s: SparkSession, dir: String, prefix: String)
       (mutate: (String, String) => Unit): String = {
     val stage = graft.StagingDirs.dir(s, prefix, dir)
-    val cat = s"graft_${prefix}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val cat = s"graft_$prefix"
     s.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
     s.conf.set(s"spark.sql.catalog.$cat.dataDir", stage)
     graft.StagingDirs.once(stage) {

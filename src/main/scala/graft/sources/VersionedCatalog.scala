@@ -285,10 +285,10 @@ object VersionedCatalog {
   private[sources] val TableNs = "tables"
   private[sources] val ProcNs = "sys"
 
-  /** Register catalog `name` over the versioned tables under `root`
+  /** Register catalog `name` over the versioned tables under `root` on `s`
     * (`pinned`: resolve through the multi-table snapshot pins); the only
-    * writer of a versioned catalog's `spark.sql.catalog.<name>` keys.
-    * Returns `name`. */
+    * writer of a versioned catalog's keys. Returns `name`. A session keeps
+    * a name's first root: mount a fixed name on the query's own child. */
   def mount(s: SparkSession, name: String, root: String, pinned: Boolean = false): String = {
     s.conf.set(s"spark.sql.catalog.$name", classOf[VersionedCatalog].getName)
     s.conf.set(s"spark.sql.catalog.$name.root", root)

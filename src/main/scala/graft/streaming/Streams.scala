@@ -1582,8 +1582,7 @@ object Streams extends QueryModule {
                                          tag: String): (String, String) = {
     val root = StagingDirs.dir(s, tag)
     val ckpt = StagingDirs.dir(s, s"${tag}_ckpt")
-    // catalog instances are cached by name: one per (app, tag)
-    val cat = VersionedCatalog.mount(s, s"g$tag", root)
+    val cat = VersionedCatalog.mount(s, "gingest", root)
     val table = s"$cat.tables.events_log"
     s.sql(s"CREATE TABLE $table " +
       "(event_type STRING, user_id BIGINT, value DOUBLE)")
@@ -1771,7 +1770,7 @@ object Streams extends QueryModule {
         s"compaction of 1..$vApp"),
       "compaction commit lost a race")
     drain() // 3: dataChange=false — NOTHING may arrive
-    Tables.parquet(s, sink)
+    Tables.sink(s, sink, s.table(table).schema)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),
@@ -1830,7 +1829,8 @@ object Streams extends QueryModule {
       q.awaitTermination()
     }
     drain() // 1: everything on main (the ingested epochs)
-    val afterFirst = Tables.parquet(s, sink).count()
+    val schema = s.table(table).schema
+    val afterFirst = Tables.sink(s, sink, schema).count()
     // the correction batch: COMMITTED, but not yet published to main
     val prev = M.resolveDataDirsWithFormat(s, dir, vIn).map { case (d0, f0) =>
       val rel = if (d0.startsWith(s"$dir/")) d0.stripPrefix(s"$dir/") else d0
@@ -1845,13 +1845,13 @@ object Streams extends QueryModule {
         :+ "error correction batch (pending publish)").mkString("\n")),
       "correction commit lost a race")
     drain() // 2: main still points BEFORE the correction — nothing arrives
-    require(Tables.parquet(s, sink).count() == afterFirst,
+    require(Tables.sink(s, sink, schema).count() == afterFirst,
       "branch-scoped subscriber drained past the branch head")
     // the publish: one CAS fast-forward, then the correction flows
     require(M.advanceBranch(s, dir, "main", 0, vIn + 1),
       "main fast-forward lost a race")
     drain() // 3: exactly the correction batch
-    Tables.parquet(s, sink)
+    Tables.sink(s, sink, schema)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),

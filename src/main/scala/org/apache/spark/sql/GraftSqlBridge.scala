@@ -32,11 +32,28 @@ object GraftSqlBridge {
 
   /** A child of `spark` (`cloneSession` is `private[sql]`): a copy of its
     * conf, temp views, functions and query-execution listeners, plus its
-    * streaming listeners, which are per session and not cloned. */
+    * streaming listeners, which are per session and not cloned. No `streams`
+    * is built just to copy none: each adds a bus to the SparkContext for good. */
   def child(spark: SparkSession): SparkSession = {
     val c = spark.asInstanceOf[classic.SparkSession].cloneSession()
-    spark.streams.listListeners().foreach(c.streams.addListener)
+    if (manager.get(spark.asInstanceOf[classic.SparkSession].sessionState) != null)
+      spark.streams.listListeners().foreach(l => c.streams.addListener(l))
     c
+  }
+  private val manager = classOf[internal.SessionState].getDeclaredField("streamingQueryManager")
+  manager.setAccessible(true)
+
+  /** The session's temporary functions and session variables (Spark lists
+    * neither publicly; the variables sit in a private map). */
+  def tempFunctions(spark: SparkSession): Seq[String] =
+    spark.asInstanceOf[classic.SparkSession].sessionState.catalog
+      .listTemporaryFunctions().map(_.unquotedString)
+  def variables(spark: SparkSession): Seq[String] = {
+    val m = spark.asInstanceOf[classic.SparkSession].sessionState.catalogManager
+      .tempVariableManager
+    val f = m.getClass.getDeclaredField("variables")
+    f.setAccessible(true)
+    m.synchronized(f.get(m).asInstanceOf[scala.collection.Map[String, _]].keys.toSeq)
   }
 
   /** The session's SQL conf, and a Hadoop conf with its `spark.hadoop.*`

@@ -41,21 +41,4 @@ class CacheHygieneSpec extends SparkSpec {
     runNoop("q93_stream_stateful")
     CacheHygiene.release(spark, blocking = true)
   }
-
-  test("the keep-set preserves an embedder's persisted RDD across release") {
-    // r8 verdict: an embedding deployment must be able to release engine
-    // residue WITHOUT losing its own RDD-level caches (plan-level caches
-    // are session-wide and still cleared — see the release scaladoc)
-    CacheHygiene.release(spark, blocking = true)
-    val keepRdd = spark.sparkContext.range(0, 100).persist()
-    keepRdd.count()
-    val engineRdd = spark.sparkContext.range(0, 50).persist()
-    engineRdd.count()
-    CacheHygiene.release(spark, blocking = true, keep = Set(keepRdd.id))
-    val stillPersisted = spark.sparkContext.getPersistentRDDs.keySet
-    assert(stillPersisted.contains(keepRdd.id), "kept RDD was released")
-    assert(!stillPersisted.contains(engineRdd.id), "non-kept RDD survived")
-    keepRdd.unpersist(true)
-    CacheHygiene.release(spark, blocking = true)
-  }
 }

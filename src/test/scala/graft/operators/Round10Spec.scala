@@ -13,7 +13,7 @@ class Round10Spec extends SparkSpec {
 
   test("q268 pipe syntax is pure front-end: same plan shape as the classic form") {
     val pipe = SparkEntry.queries("q268_sql_pipe")(spark, sf0001)
-    val classic = spark.sql(
+    val classic = pipe.sparkSession.sql(
       """SELECT l_returnflag, l_linestatus,
         |  CAST(COUNT(*) AS BIGINT) AS n_items,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))

@@ -190,7 +190,7 @@ class Round11Spec extends SparkSpec {
     intercept[IllegalStateException](M.tag(spark, dir, "release-a", 2L))
     assert(M.resolveRef(spark, dir, "release-a").contains(1L))
     // a name that is neither numeric nor a known tag refuses in SQL
-    val cat = "g339_" + sf0001.replaceAll("[^A-Za-z0-9]", "_")
+    val cat = graft.sources.VersionedCatalog.mount(spark, "g339spec", root)
     val e = intercept[Exception](spark.sql(
       s"SELECT * FROM $cat.tables.corpus VERSION AS OF 'release-zz'").collect())
     assert(e.getMessage.contains("neither a numeric version, a tag, nor a branch"),
@@ -479,7 +479,7 @@ class Round11Spec extends SparkSpec {
     // the immutable citation must win
     M.createBranch(spark, dir, "clash", 2)
     M.tag(spark, dir, "clash", 1)
-    val cat = "g354_" + sf0001.replaceAll("[^A-Za-z0-9]", "_")
+    val cat = graft.sources.VersionedCatalog.mount(spark, "g354spec", root)
     val viaName = spark.sql(
       s"SELECT COUNT(*) AS n FROM $cat.tables.corpus VERSION AS OF 'clash'")
       .head().getLong(0)
@@ -559,7 +559,8 @@ class Round11Spec extends SparkSpec {
 
   test("q358: estate procedures are listed and refuse duplicates through SQL") {
     SparkEntry.queries("q358_sql_estate_procs")(spark, sf0001).collect()
-    val cat = "g358_" + sf0001.replaceAll("[^A-Za-z0-9]", "_")
+    val cat = graft.sources.VersionedCatalog.mount(spark, "g358spec",
+      StagingDirs.dir(spark, "vsqlproc", sf0001))
     val procRows = spark.sql(s"SHOW PROCEDURES IN $cat.sys").collect()
     val procs = procRows
       .map(r => r.get(r.length - 1).toString).sorted.toSeq
@@ -856,10 +857,7 @@ class Round11Spec extends SparkSpec {
     import spark.implicits._
     val root = StagingDirs.register(s"${System.getProperty("java.io.tmpdir")}/graft_r11_sqlmerge_" +
       spark.sparkContext.applicationId)
-    val cat = "g370spec"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.VersionedCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = graft.sources.VersionedCatalog.mount(spark, "g370spec", root)
     Seq((1L, 10L), (2L, 20L)).toDF("id", "v")
       .write.mode("overwrite").parquet(s"$root/t/v=1")
     M.commit(spark, s"$root/t", 1, "base")

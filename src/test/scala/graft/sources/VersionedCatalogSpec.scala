@@ -93,9 +93,7 @@ class VersionedCatalogSpec extends SparkSpec {
     w.commit(0, Array(stageEpoch(w, 0, Seq(1L -> "a", 2L -> "b"))))
     w.commit(1, Array(stageEpoch(w, 1, Seq(3L -> "c"))))
 
-    spark.conf.set("spark.sql.catalog.vc11",
-      classOf[VersionedCatalog].getName)
-    spark.conf.set("spark.sql.catalog.vc11.root", root)
+    VersionedCatalog.mount(spark, "vc11", root)
     assert(spark.sql("SELECT COUNT(*) FROM vc11.tables.t").head.getLong(0) == 3)
     assert(spark.sql(
       "SELECT COUNT(*) FROM vc11.tables.t VERSION AS OF 1").head.getLong(0) == 2)
@@ -120,9 +118,7 @@ class VersionedCatalogSpec extends SparkSpec {
     val w = new VersionedStreamingWrite(dir, "t5", schema)
     w.commit(0, Array(stageEpoch(w, 0, Seq(1L -> "a", 2L -> "b"))))
     w.commit(1, Array(stageEpoch(w, 1, Seq(3L -> "c"))))
-    spark.conf.set("spark.sql.catalog.vc11s",
-      classOf[VersionedCatalog].getName)
-    spark.conf.set("spark.sql.catalog.vc11s.root", root)
+    VersionedCatalog.mount(spark, "vc11s", root)
     val ckpt = freshDir("vsrc_ckpt")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     def drain(): Seq[Long] = {
@@ -156,9 +152,7 @@ class VersionedCatalogSpec extends SparkSpec {
     w.commit(0, Array(stageEpoch(w, 0, Seq(1L -> "a", 2L -> "b"))))
     w.commit(1, Array(stageEpoch(w, 1, Seq(3L -> "c"))))
     VersionedManifest.createBranch(spark, dir, "main", 1)
-    spark.conf.set("spark.sql.catalog.vbrs11",
-      classOf[VersionedCatalog].getName)
-    spark.conf.set("spark.sql.catalog.vbrs11.root", root)
+    VersionedCatalog.mount(spark, "vbrs11", root)
     val ckpt = freshDir("vbrs_ckpt")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     def drain(branch: String): Seq[Long] = {
@@ -198,9 +192,7 @@ class VersionedCatalogSpec extends SparkSpec {
     val w = new VersionedStreamingWrite(dir, "t4", schema)
     w.commit(0, Array(stageEpoch(w, 0, Seq(1L -> "a"))))
     w.commit(1, Array(stageEpoch(w, 1, Seq(2L -> "b"))))
-    spark.conf.set("spark.sql.catalog.vc11h",
-      classOf[VersionedCatalog].getName)
-    spark.conf.set("spark.sql.catalog.vc11h.root", root)
+    VersionedCatalog.mount(spark, "vc11h", root)
     val rows = spark.sql(
       "SELECT version, format, operation FROM vc11h.tables.t.history " +
         "ORDER BY version").collect()
@@ -217,9 +209,7 @@ class VersionedCatalogSpec extends SparkSpec {
 
   test("mixed-format snapshot: parquet appends feed subscribers once; compaction feeds nothing") {
     val root = freshDir("vmixspec")
-    spark.conf.set("spark.sql.catalog.vmix11",
-      classOf[VersionedCatalog].getName)
-    spark.conf.set("spark.sql.catalog.vmix11.root", root)
+    VersionedCatalog.mount(spark, "vmix11", root)
     spark.sql("CREATE TABLE vmix11.tables.t (k BIGINT, tag STRING)")
     val dir = s"$root/t"
     // v1: a hand-landed JSON epoch (the stream-arrival format)
@@ -274,9 +264,7 @@ class VersionedCatalogSpec extends SparkSpec {
 
   test("maxVersionsPerBatch: a backlogged subscriber catches up in bounded bites, exactly once") {
     val root = freshDir("vadm")
-    spark.conf.set("spark.sql.catalog.vadm11",
-      classOf[VersionedCatalog].getName)
-    spark.conf.set("spark.sql.catalog.vadm11.root", root)
+    VersionedCatalog.mount(spark, "vadm11", root)
     spark.sql("CREATE TABLE vadm11.tables.t (k BIGINT, tag STRING)")
     val dir = s"$root/t"
     // a 3-version backlog, one row each (cumulative data= addressing)
@@ -312,7 +300,7 @@ class VersionedCatalogSpec extends SparkSpec {
     // delegate ScanBuilder is handed back untouched, so predicate
     // pushdown and column pruning are the stock parquet scan's
     graft.SparkEntry.queries("q321_sql_time_travel")(spark, sf0001).collect()
-    val cat = "g321_" + sf0001.replaceAll("[^A-Za-z0-9]", "_")
+    val cat = VersionedCatalog.mount(spark, "g321spec", StagingDirs.dir(spark, "sqltt", sf0001))
     val df = spark.sql(
       s"SELECT doc_id FROM $cat.tables.tt VERSION AS OF 2 WHERE doc_id = 42")
     val plan = df.queryExecution.executedPlan.toString
@@ -325,7 +313,8 @@ class VersionedCatalogSpec extends SparkSpec {
 
   test("pinned catalog: tables travel together; in-flight table commits stay invisible") {
     graft.SparkEntry.queries("q331_sql_multitable_snapshot")(spark, sf0001).collect()
-    val cat = "g331_" + sf0001.replaceAll("[^A-Za-z0-9]", "_")
+    val cat = VersionedCatalog.mount(spark, "g331spec", StagingDirs.dir(spark, "sqlmt", sf0001),
+      pinned = true)
     // the CURRENT pin (catalog v2) excludes src3 — and the in-flight
     // documents v=3 (src5 also erased) must be invisible despite its
     // table-level commit existing
@@ -352,7 +341,7 @@ class VersionedCatalogSpec extends SparkSpec {
 
   test("CALL sys.rollback flips the pointer; the bad version stays travelable") {
     graft.SparkEntry.queries("q330_sql_rollback")(spark, sf0001).collect()
-    val cat = "g330_" + sf0001.replaceAll("[^A-Za-z0-9]", "_")
+    val cat = VersionedCatalog.mount(spark, "g330spec", StagingDirs.dir(spark, "sqlrb", sf0001))
     val good = spark.sql(s"SELECT COUNT(*) FROM $cat.tables.tt").head.getLong(0)
     val v1 = spark.sql(
       s"SELECT COUNT(*) FROM $cat.tables.tt VERSION AS OF 1").head.getLong(0)
@@ -385,9 +374,7 @@ class VersionedCatalogSpec extends SparkSpec {
       VersionedManifest.versionAtTimestamp(spark, dir, between - 3600 * 1000))
     // the SQL spelling rides the same resolution
     val root = new java.io.File(dir).getParent
-    spark.conf.set("spark.sql.catalog.vc11b",
-      classOf[VersionedCatalog].getName)
-    spark.conf.set("spark.sql.catalog.vc11b.root", root)
+    VersionedCatalog.mount(spark, "vc11b", root)
     val tbl = new java.io.File(dir).getName
     val n = spark.sql(
       s"SELECT COUNT(*) FROM vc11b.tables.`$tbl` " +
@@ -403,9 +390,7 @@ class VersionedCatalogSpec extends SparkSpec {
     val w = new VersionedStreamingWrite(dir, "seed", schema)
     w.commit(0, Array(stageEpoch(w, 0, Seq(1L -> "a", 2L -> "b"))))
     VersionedManifest.addConstraint(spark, dir, "k_pos", "k > 0")
-    spark.conf.set("spark.sql.catalog.vins11",
-      classOf[VersionedCatalog].getName)
-    spark.conf.set("spark.sql.catalog.vins11.root", root)
+    VersionedCatalog.mount(spark, "vins11", root)
     spark.sql("INSERT INTO vins11.tables.t SELECT 3L AS k, 'c' AS tag")
     assert(spark.sql("SELECT COUNT(*) FROM vins11.tables.t")
       .head.getLong(0) == 3)
@@ -427,9 +412,7 @@ class VersionedCatalogSpec extends SparkSpec {
     VersionedManifest.writeSchema(spark, dir, schema)
     val w = new VersionedStreamingWrite(dir, "seed", schema)
     w.commit(0, Array(stageEpoch(w, 0, Seq(1L -> "a", 2L -> "b"))))
-    spark.conf.set("spark.sql.catalog.vtr11",
-      classOf[VersionedCatalog].getName)
-    spark.conf.set("spark.sql.catalog.vtr11.root", root)
+    VersionedCatalog.mount(spark, "vtr11", root)
     spark.sql("INSERT OVERWRITE vtr11.tables.t SELECT 9L AS k, 'z' AS tag")
     assert(spark.sql("SELECT k FROM vtr11.tables.t")
       .collect().map(_.getLong(0)).toSeq == Seq(9L))
@@ -449,9 +432,7 @@ class VersionedCatalogSpec extends SparkSpec {
     Seq((10L, "b")).toDF("k", "tag").write.parquet(s"$dir/d-2")
     VersionedManifest.commit(spark, dir, 2,
       s"data=$dir/d-1\ndata=$dir/d-2\nseed b")
-    spark.conf.set("spark.sql.catalog.vrp11",
-      classOf[VersionedCatalog].getName)
-    spark.conf.set("spark.sql.catalog.vrp11.root", root)
+    VersionedCatalog.mount(spark, "vrp11", root)
     // a source row with tag 'b' does NOT match the predicate — refuse
     val stray = intercept[Exception] {
       Seq((5L, "a"), (6L, "b")).toDF("k", "tag")
@@ -532,9 +513,7 @@ class VersionedCatalogSpec extends SparkSpec {
   test("atomic CTAS/RTAS: abort leaves the prior snapshot and no staging") {
     val root = freshDir("rtas")
     val cat = "g_rtas_spec"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[VersionedCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    VersionedCatalog.mount(spark, cat, root)
     spark.sql(s"CREATE TABLE $cat.tables.t AS SELECT 1L AS k, 'a' AS tag")
     // CTAS on an existing table refuses at analysis time
     intercept[Exception] {

@@ -709,4 +709,24 @@ class StreamsSpec extends SparkSpec {
         "the session's listener saw no q252 batch")
     } finally spark.streams.removeListener(listener)
   }
+
+  test("a file-sink feed of a versioned table reads under the table's schema with no job") {
+    withConf(spark) { s =>
+      val (table, _) = Streams.ingestVersioned(s, sf0001, "sinkspec")
+      val dir = tempDir("graft_sinkspec")
+      s.readStream.table(table).writeStream.format("parquet")
+        .option("path", s"$dir/sink").option("checkpointLocation", s"$dir/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      val schema = s.table(table).schema
+      val (read, jobs) = jobsDuring(graft.Tables.sink(s, s"$dir/sink", schema))
+      assert(jobs === 0, s"the sink read launched $jobs jobs")
+      val (inferred, inferJobs) = jobsDuring(graft.Tables.parquet(s, s"$dir/sink"))
+      assert(inferJobs > 0, "a schema-less sink read no longer infers in a job")
+      assert(read.schema === inferred.schema)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(rows(read).nonEmpty)
+      assert(rows(read) === rows(inferred))
+    }
+  }
 }
