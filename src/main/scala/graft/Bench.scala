@@ -20,7 +20,8 @@ import org.apache.spark.sql.SparkSession
   * (sampling steal in 1s windows) before measuring — waiting is cheaper
   * than re-running a 70x-slowed query. A query that throws
   * is reported as -1 with its error in an "errors" map — never as a
-  * misleading timing.
+  * misleading timing — and, when a missing input caused it, under that
+  * path in the full line's "missing" map ([[MissingInputs]]).
   *
   * Session-residue handling (r7 verdict): `Measure.once` releases
   * after every execution, outside the timed window, so localCheckpoint
@@ -271,6 +272,7 @@ object Bench {
     val names = headline.filter(qs.contains)
 
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val missing = new MissingInputs
     val nHostCpus = math.max(nCpus, hostCpus())
 
     // shared wait budget for sitting out steal bursts (bounded so a
@@ -332,6 +334,7 @@ object Bench {
             // a transient failure on a RETRY must not discard a valid
             // earlier measurement — only report -1 when no attempt succeeded
             if (best == Double.MaxValue) {
+              missing.record(name, t)
               val msg = Option(t.getMessage).getOrElse(t.getClass.getName)
               err = Some(msg.replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200))
             } else attempt = 4 // stop retrying, keep the valid best
@@ -459,7 +462,7 @@ object Bench {
     val total = results.collect { case (_, v, _, _, _) if v >= 0 => v }.sum
     val contaminated =
       results.count { case (_, v, _, sf, _) => v >= 0 && sf > 0.02 }
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qjson,"construct":$cjson,"steal":$sjson,"attempts":$ajson,"requote":$rqjson,"inflated":$ijson,"estate":$estJson,"contaminated":$contaminated,"requote_rounds":$round,"comparable_sweeps":2,"sweep2_improved":$sweep2Improved,"quiet_budget_exhausted":${quietBudgetMs <= 0},"errors":$ejson,"failed":${errors.size},"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qjson,"construct":$cjson,"steal":$sjson,"attempts":$ajson,"requote":$rqjson,"inflated":$ijson,"estate":$estJson,"contaminated":$contaminated,"requote_rounds":$round,"comparable_sweeps":2,"sweep2_improved":$sweep2Improved,"quiet_budget_exhausted":${quietBudgetMs <= 0},"errors":$ejson,"missing":${missing.json},"failed":${errors.size},"sf":"$sfDir"}"""
     // The driver archives only a ~2 KB stdout TAIL of the sbt run and
     // json-parses what it finds there. The full line above is ~30 KB at
     // 300+ queries, so printing it truncates mid-map and the driver

@@ -109,7 +109,9 @@ object GraftSession {
 
   /** What a query can leave behind in a session, by kind: the `SET`
     * output (`key=value`, catalog registrations included), temp views,
-    * temporary functions, session variables and active streams. Every
+    * temporary functions, session variables and active streams (read
+    * without building a session's `streams`, which would add a bus to
+    * the SparkContext for good: [[GraftSqlBridge.builtStreams]]). Every
     * registry query runs on its own child ([[SparkEntry.queries]]), so
     * the caller's state is the same before and after each one; Smoke
     * and ConfScopeSpec compare it. */
@@ -118,7 +120,8 @@ object GraftSession {
     "temp views" -> s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet,
     "temp functions" -> GraftSqlBridge.tempFunctions(s).toSet,
     "variables" -> GraftSqlBridge.variables(s).toSet,
-    "streams" -> s.streams.active.map(_.id.toString).toSet)
+    "streams" -> GraftSqlBridge.builtStreams(s).toSeq
+      .flatMap(_.active.map(_.id.toString)).toSet)
 
   /** One `kind +added -removed …` line per kind that differs between two
     * [[state]]s; empty when they are equal. */

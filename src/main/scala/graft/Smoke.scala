@@ -1,17 +1,12 @@
 package graft
 
-import java.io.FileNotFoundException
-import java.nio.file.NoSuchFileException
-
-import org.apache.spark.sql.AnalysisException
-
 /** Local replica of the driver's t1 smoke: run [[SparkEntry.entry]] on
   * sf0.001 and require rows > 0. Also sanity-runs every registered query
   * once at sf0.001 so a broken registry entry is caught before the round's
   * verify pass, and checks that each one leaves the session's
   * [[GraftSession.state]] as it found it (`LEAKED` names what changed).
   * A query that fails on a missing input is reported once per missing
-  * path, with every query that path blocks.
+  * path, with every query that path blocks ([[MissingInputs]]).
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
@@ -20,7 +15,7 @@ object Smoke {
     val n = SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows=$n " + (if (n > 0) "OK" else "FAIL"))
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val missing = scala.collection.mutable.LinkedHashMap.empty[String, Vector[String]]
+    val missing = new MissingInputs
     var (bad, leaking) = (0, 0)
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val before = GraftSession.state(spark)
@@ -30,10 +25,7 @@ object Smoke {
       } catch {
         case e: Throwable =>
           bad += 1
-          missingInput(e) match {
-            case Some(p) => missing(p) = missing.getOrElse(p, Vector.empty) :+ name
-            case None => println(s"[smoke] $name FAILED: ${e.getMessage}")
-          }
+          if (!missing.record(name, e)) println(s"[smoke] $name FAILED: ${e.getMessage}")
       }
       val leaked = GraftSession.stateDiff(before, GraftSession.state(spark))
       if (leaked.nonEmpty) {
@@ -41,9 +33,7 @@ object Smoke {
         println(s"[smoke] $name LEAKED: ${leaked.mkString("; ")}")
       }
     }
-    missing.foreach { case (p, qs) =>
-      println(s"[smoke] MISSING $p blocks ${qs.size}: ${qs.mkString(", ")}")
-    }
+    missing.lines.foreach(l => println(s"[smoke] $l"))
     val missingOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     if (missingOracle.nonEmpty)
       println(s"[smoke] no oracle (rows-only check): ${missingOracle.toSeq.sorted.mkString(", ")}")
@@ -51,14 +41,4 @@ object Smoke {
     spark.stop()
     if (n == 0 || bad > 0 || leaking > 0) sys.exit(1)
   }
-
-  /** The input path a failure names as missing, when that is its cause. */
-  private def missingInput(t: Throwable): Option[String] =
-    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collectFirst {
-      case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
-        e.getMessageParameters.get("path")
-      case e: NoSuchFileException => e.getFile
-      case e: FileNotFoundException => e.getMessage.stripPrefix("File ")
-        .stripSuffix(" does not exist").stripSuffix(" (No such file or directory)")
-    }.map(_.stripPrefix("file:"))
 }

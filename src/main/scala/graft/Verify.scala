@@ -49,6 +49,7 @@ object Verify {
     val names = SparkEntry.queries.keys.toSeq
       .filter(n => only.isEmpty || only(n))
     val failed = scala.collection.mutable.ListBuffer.empty[String]
+    val missingInputs = new MissingInputs
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       try {
@@ -57,11 +58,13 @@ object Verify {
         System.err.println(s"[verify] $name ok")
       } catch { case e: Throwable =>
         failed += name
-        System.err.println(s"[verify] $name FAILED: ${e.getMessage}")
+        if (!missingInputs.record(name, e))
+          System.err.println(s"[verify] $name FAILED: ${e.getMessage}")
       }
       // keep the 407-query session at storage baseline (see CacheHygiene)
       CacheHygiene.release(spark)
     }
+    missingInputs.lines.foreach(l => System.err.println(s"[verify] $l"))
     spark.stop()
     // ------- structural completeness gate (check_dump.py, folded in) --
     def die(msg: String): Nothing = {

@@ -3422,8 +3422,6 @@ object Similarity extends QueryModule {
        |LEFT JOIN served5 s ON e.qid = s.qid AND e.nid = s.nid
        |GROUP BY e.qid ORDER BY e.qid""".stripMargin
 
-  private val q415Runs = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** q415: STREAMING TWO-STAGE SERVING — the committed index's ONLINE
     * face, completing the lifecycle's read side the way q411 completed
     * its write side: query vectors arrive as a FILE STREAM (one file per
@@ -3445,7 +3443,7 @@ object Similarity extends QueryModule {
   private def q415(s: SparkSession, d: String): DataFrame = {
     val root = ivfIndexRoot(s, d, "full")
     buildIvfIndex(s, d, root, baseOnly = false)
-    streamServe(s, d, s"q415r${q415Runs.incrementAndGet()}",
+    streamServe(s, d,
       batch => twoStageMaxSimTop5(s, d, root, queriesOverride = Some(batch)))
   }
 
@@ -3455,10 +3453,9 @@ object Similarity extends QueryModule {
     * idempotent `epoch=<n>` dir. The drained union equals the batch
     * serving row-for-row (per-qid ranking windows are batch-local and
     * each qid lives in exactly one batch). */
-  private def streamServe(s: SparkSession, d: String, runTag: String,
+  private def streamServe(s: SparkSession, d: String,
       serveBatch: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = graft.StagingDirs.dir(s, "servestream", runTag)
+    val base = graft.StagingDirs.fresh(s, "servestream")
     val feed = graft.StagingDirs.register(s"${base}_feed")
     val out = graft.StagingDirs.register(s"${base}_out")
     val ckpt = graft.StagingDirs.register(s"${base}_ckpt")
@@ -3476,13 +3473,10 @@ object Similarity extends QueryModule {
         serveBatch(batch.select(col("vec_id").as("qid"), col("v").as("qv")))
           .write.mode("overwrite").parquet(dir.getPath)
     }
-    val q = s.readStream.schema(queries.schema)
+    graft.streaming.Streams.drain(s.readStream.schema(queries.schema)
       .option("maxFilesPerTrigger", 1).parquet(feed)
       .writeStream.foreachBatch(serveEpoch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", ckpt))
     Tables.parquet(s, out)
       .select(col("qid"), col("rank"), col("nid"), col("score"))
       .orderBy(col("qid"), col("rank"))
@@ -3493,8 +3487,6 @@ object Similarity extends QueryModule {
   // and each qid lives in one batch). Proven by Round13Spec "q415
   // streaming serving equals q413's batch results".
   private def q415Sql = q413Sql
-
-  private val q418Runs = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** q418: STREAMING MULTI-VECTOR SERVING — q415's online face moved to
     * the RECOMMENDED candidate generator: each epoch probes the committed
@@ -3509,7 +3501,7 @@ object Similarity extends QueryModule {
   private def q418(s: SparkSession, d: String): DataFrame = {
     val root = ivfIndexRoot(s, d, "full")
     buildIvfIndex(s, d, root, baseOnly = false)
-    streamServe(s, d, s"q418r${q418Runs.incrementAndGet()}",
+    streamServe(s, d,
       batch => multiVectorMaxSimTop5(s, d, root, queriesOverride = Some(batch)))
   }
 
@@ -3854,8 +3846,6 @@ object Similarity extends QueryModule {
        |  FROM scored)
        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin
 
-  private val q411Runs = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** q411: STREAMING INDEX MAINTENANCE — the arrival loop a serving
     * estate actually runs, closing the q407–q410 lifecycle's last gap:
     * arrivals flow as a FILE STREAM (one file per micro-batch), each
@@ -3877,10 +3867,8 @@ object Similarity extends QueryModule {
     * checkpoint's no-op resume.
     */
   private def q411(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val M = graft.sources.VersionedManifest
-    val run = q411Runs.incrementAndGet()
-    val root = graft.StagingDirs.dir(s, "ivfidx_stream", s"r$run")
+    val root = graft.StagingDirs.fresh(s, "ivfidx_stream")
     val feed = graft.StagingDirs.register(s"${root}_feed")
     val ckpt = graft.StagingDirs.register(s"${root}_ckpt")
     buildIvfIndex(s, d, root, baseOnly = true)
@@ -3890,22 +3878,16 @@ object Similarity extends QueryModule {
     arrivals.repartition(2).write.mode("overwrite").parquet(feed)
     val applyEpoch: (DataFrame, Long) => Unit = (batch, epoch) => {
       val marker = s"epoch=$epoch"
-      val seen = M.committedVersions(s, s"$root/lists").exists(v =>
-        M.describe(s, s"$root/lists", v).linesIterator
-          .exists(_.trim == marker))
-      if (!seen && !batch.isEmpty)
+      if (!M.hasMarker(s, s"$root/lists", marker) && !batch.isEmpty)
         M.appendBatch(s, s"$root/lists",
           assignTo(batch, cents).join(batch, "vec_id")
             .select(col("cid"), col("vec_id"), col("v")),
           marker)
     }
-    val q = s.readStream.schema(arrivals.schema)
+    graft.streaming.Streams.drain(s.readStream.schema(arrivals.schema)
       .option("maxFilesPerTrigger", 1).parquet(feed)
       .writeStream.foreachBatch(applyEpoch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", ckpt))
     serveFromIvfIndex(s, d, root)
   }
 

@@ -1065,7 +1065,6 @@ private[sources] class ArticlesReader(part: ArticlesPartition,
 
 /** The oracle-verified query face of the connector. */
 object ArticlesV2 extends QueryModule {
-  private val q231Runs = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** q222: per-index article counts read THROUGH the V2 connector with
     * the `indexation` filter pushed into the reader — the plan shows a
@@ -1101,11 +1100,8 @@ object ArticlesV2 extends QueryModule {
       .filter(col("indexation").isNotNull)
       .groupBy(col("indexation"))
       .agg(count(lit(1)).as("n_articles"))
-    val q = agg.writeStream.format("memory").queryName("q223_sink")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.streaming.Streams.drain(agg.writeStream.format("memory")
+      .queryName("q223_sink").outputMode("complete"))
     s.table("q223_sink").orderBy(col("indexation"))
   }
 
@@ -1152,17 +1148,13 @@ object ArticlesV2 extends QueryModule {
     // session-keyed checkpoint means every re-run after the first
     // resumes a fully committed checkpoint and measures a no-data pass
     // (~0.1s), so the bench would quote resume cost as the write cost
-    val run = q231Runs.incrementAndGet()
-    val out = graft.StagingDirs.dir(s, "v2swrite", s"r$run")
-    val ckpt = graft.StagingDirs.dir(s, "v2swrite_ckpt", s"r$run")
-    val q = s.readStream.format("graft.sources.ArticleSourceV2")
+    val out = graft.StagingDirs.fresh(s, "v2swrite")
+    val ckpt = graft.StagingDirs.register(s"${out}_ckpt")
+    graft.streaming.Streams.drain(s.readStream.format("graft.sources.ArticleSourceV2")
       .option("corpus", "all").load()
       .writeStream.format("graft.sources.ArticleSourceV2")
       .option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", ckpt))
     s.read.schema(ArticleSource.schema).json(out)
       .filter(col("indexation").isNotNull)
       .groupBy(col("indexation"))

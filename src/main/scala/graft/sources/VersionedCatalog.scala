@@ -966,9 +966,7 @@ private[sources] class VersionedStreamingWrite(dir: String, tag: String,
   private def marker(epochId: Long) = s"epoch=$tag:$epochId"
 
   private def alreadyCommitted(epochId: Long): Boolean =
-    VersionedManifest.committedVersions(spark, dir).exists(v =>
-      VersionedManifest.describe(spark, dir, v).linesIterator
-        .contains(marker(epochId)))
+    VersionedManifest.hasMarker(spark, dir, marker(epochId))
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory = {

@@ -1159,6 +1159,15 @@ object VersionedManifest {
     manifestBody(fs(dir, s), dir, n).linesIterator
       .filterNot(_.startsWith("data=")).mkString("\n").trim
 
+  /** Whether some committed version's manifest carries `marker` as a line
+    * of its own: the replay check of every exactly-once streaming writer,
+    * which stamps an `epoch=<n>` line into the commit that lands epoch n.
+    * A replayed epoch finds its marker here and lands nothing.
+    */
+  def hasMarker(s: SparkSession, dir: String, marker: String): Boolean =
+    committedVersions(s, dir).exists(v =>
+      describe(s, dir, v).linesIterator.exists(_.trim == marker))
+
   /** Data FORMAT of committed version `n`: the manifest's `format=<fmt>`
     * line when present (the streaming write face lands JSON-lines part
     * files, [[VersionedStreamingWrite]]), else `parquet` — the layout the

@@ -6,7 +6,8 @@ import graft.sources.VersionedCatalog
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface — SURVEY.md §2.9 (all [S]; the reference's
@@ -14,7 +15,9 @@ import org.apache.spark.sql.types._
   *
   * Each query here runs a REAL streaming pipeline over the events parquet
   * (file stream source → transforms → sink) bounded with
-  * `Trigger.AvailableNow`, then hands the materialized result to the driver
+  * `Trigger.AvailableNow` through [[drain]], the one way a harness stream
+  * runs (here and in Similarity and ArticlesV2), then hands the
+  * materialized result to the driver
   * contract — so the streaming runtime itself goes through the same
   * DuckDB-oracle hash gate, each oracle being the batch-equivalent SQL
   * (stream–batch parity, SURVEY.md §5.2).
@@ -131,10 +134,8 @@ object Streams extends QueryModule {
   private def runToMemory(s: SparkSession, d: String, df: DataFrame,
                           name: String, mode: String): DataFrame = {
     val sunk = withStreamParts(s, d) { s =>
-      val q = rebind(s, df)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val q = drain(rebind(s, df)
+        .writeStream.format("memory").queryName(name).outputMode(mode))
       val perBatch = q.recentProgress
         .map(p => Option(p.stateOperators).map(_.map(_.numRowsTotal).sum).getOrElse(0L))
       lastStateRows(name) = if (perBatch.isEmpty) 0L else perBatch.max
@@ -143,13 +144,17 @@ object Streams extends QueryModule {
     rebind(s, sunk)
   }
 
-  /** A fresh sink directory for a foreachBatch parquet landing zone, under
-    * the current `java.io.tmpdir` (`Files.createTempDirectory(prefix)`
-    * keeps the one read at JVM startup) and deleted at JVM exit. */
-  private def sinkDir(tag: String): String =
-    StagingDirs.register(java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-      s"graft_${tag}_sink").toFile.getAbsolutePath)
+  /** Run `w` as a bounded stream: `Trigger.AvailableNow`, started by
+    * `start` (the writer's `start()` unless it ends in `toTable`), awaited
+    * to the end of its input; returns the finished query, whose
+    * `recentProgress` holds every batch.
+    */
+  private[graft] def drain(w: DataStreamWriter[_],
+      start: DataStreamWriter[_] => StreamingQuery = _.start()): StreamingQuery = {
+    val q = start(w.trigger(Trigger.AvailableNow()))
+    q.awaitTermination()
+    q
+  }
 
   /** q90: tumbling event-time window — per-hour, per-type count and exact
     * sum, with a watermark (complete mode keeps every window so the bounded
@@ -278,9 +283,9 @@ object Streams extends QueryModule {
     * so no key expires mid-stream and the result equals exact distinct.
     */
   private def q92(s: SparkSession, d: String): DataFrame = {
-    val sink = sinkDir("q92")
+    val sink = StagingDirs.fresh(s, "q92_sink")
     withStreamParts(s, d) { s =>
-      val q = streamEvents(s, d)
+      drain(streamEvents(s, d)
         .withWatermark("ts", "24 hours")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
@@ -289,9 +294,7 @@ object Streams extends QueryModule {
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("append").parquet(sink)
           ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        })
     }
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("event_type", StringType)))
@@ -342,22 +345,20 @@ object Streams extends QueryModule {
 
   private def q93(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val sink = sinkDir("q93")
+    val sink = StagingDirs.fresh(s, "q93_sink")
     withStreamParts(s, d) { s =>
       val sessions = sessionStats(
         streamEvents(s, d)
           .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
           .as[(Long, Long)])
-      val q = sessions.toDF("user_id", "n_sessions", "n_events")
+      drain(sessions.toDF("user_id", "n_sessions", "n_events")
         .writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           // executor-side parquet append, batch id stamped per row — the
           // driver never materializes a batch
           batch.withColumn("batch_id", lit(batchId)).write.mode("append").parquet(sink)
           ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        })
     }
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("n_sessions", LongType), StructField("n_events", LongType),
@@ -700,14 +701,12 @@ object Streams extends QueryModule {
     val agg = events
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour_start"))
       .agg(count(lit(1)).as("n"), Exact.sumMoney(col("value")).as("total"))
-    val q = agg.writeStream
+    drain(agg.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.withColumn("batch_id", lit(batchId)).write.mode("append").parquet(sink)
         ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      })
     val schema = StructType(Seq(
       StructField("event_type", StringType), StructField("hour_start", TimestampType),
       StructField("n", LongType), StructField("total", DoubleType),
@@ -723,7 +722,7 @@ object Streams extends QueryModule {
   }
 
   private def q106(s: SparkSession, d: String): DataFrame =
-    upsertAggregate(s, streamEvents(s, d), sinkDir("q106"))
+    upsertAggregate(s, streamEvents(s, d), StagingDirs.fresh(s, "q106_sink"))
 
   private val q106Sql =
     s"""SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour_start,
@@ -1292,8 +1291,6 @@ object Streams extends QueryModule {
 
   // --------------------------------------------------------------- q252
 
-  private val q252Runs = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** q252: EXACTLY-ONCE versioned streaming ingest — the streaming writer
     * for the [[graft.sources.VersionedManifest]] table family
     * (q247/q249/q250): each micro-batch lands inside `foreachBatch` as
@@ -1314,9 +1311,8 @@ object Streams extends QueryModule {
     * q249's vacuum — this query is the arrival half of that loop.
     */
   private def q252(s: SparkSession, d: String): DataFrame = {
-    val run = q252Runs.incrementAndGet()
-    val dir = StagingDirs.dir(s, "vingest", s"r$run")
-    val ckpt = StagingDirs.dir(s, "vingest_ckpt", s"r$run")
+    val dir = StagingDirs.fresh(s, "vingest")
+    val ckpt = StagingDirs.register(s"${dir}_ckpt")
     val landEpoch: (DataFrame, Long) => Unit = (batch, epoch) => {
       val v = epoch + 1
       // idempotent replay: an already-committed version lands nothing
@@ -1327,12 +1323,9 @@ object Streams extends QueryModule {
       }
     }
     withStreamParts(s, d) { s =>
-      val q = streamEvents(s, d).writeStream
+      drain(streamEvents(s, d).writeStream
         .foreachBatch(landEpoch)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .option("checkpointLocation", ckpt))
     }
     val versions = graft.sources.VersionedManifest.committedVersions(s, dir)
     versions
@@ -1352,8 +1345,6 @@ object Streams extends QueryModule {
        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
 
   // --------------------------------------------------------------- q367
-
-  private val q367Runs = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** q367: STREAMING LWW UPSERT — CDC apply into the versioned table:
     * q252 APPENDS each epoch as a new version, THIS one MERGES it
@@ -1382,9 +1373,8 @@ object Streams extends QueryModule {
     */
   private def q367(s: SparkSession, d: String): DataFrame = {
     val M = graft.sources.VersionedManifest
-    val run = q367Runs.incrementAndGet()
-    val dir = StagingDirs.dir(s, "cdc", s"r$run")
-    val ckpt = StagingDirs.dir(s, "cdc_ckpt", s"r$run")
+    val dir = StagingDirs.fresh(s, "cdc")
+    val ckpt = StagingDirs.register(s"${dir}_ckpt")
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
     def lwwFold(df: DataFrame): DataFrame = df
       .select(col("user_id"), struct(col("ts"), col("event_id"),
@@ -1400,19 +1390,14 @@ object Streams extends QueryModule {
     }
     val applyCdc: (DataFrame, Long) => Unit = (batch, epoch) => {
       val marker = s"epoch=$epoch"
-      val seen = M.committedVersions(s, dir).exists(v =>
-        M.describe(s, dir, v).linesIterator.exists(_.trim == marker))
-      if (!seen && !batch.isEmpty)
+      if (!M.hasMarker(s, dir, marker) && !batch.isEmpty)
         M.mergeLww(s, dir, batch.select(cols.map(col): _*), "user_id",
           Seq("ts", "event_id"), marker)
     }
-    val q = streamEvents(s, d).filter(col("event_id") % 2 === 1)
+    drain(streamEvents(s, d).filter(col("event_id") % 2 === 1)
       .writeStream
       .foreachBatch(applyCdc)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", ckpt))
     M.readLatest(s, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_users"),
@@ -1432,8 +1417,6 @@ object Streams extends QueryModule {
        |FROM w WHERE rk = 1 GROUP BY 1 ORDER BY 1""".stripMargin
 
   // --------------------------------------------------------------- q372
-
-  private val q372Runs = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** q372: LATE-DATA DEAD-LETTER — the capture half of the watermark
     * story: Spark's own watermark DROPS late rows (q90s) and COUNTS them
@@ -1458,7 +1441,6 @@ object Streams extends QueryModule {
     * shape (q252) a later catch-up job drains.
     */
   private def q372(s: SparkSession, d: String): DataFrame = {
-    val run = q372Runs.incrementAndGet()
     val base = StagingDirs.dir(s, "dlq", d)
     val arrivals = s"$base/arrivals"
     StagingDirs.once(base) {
@@ -1479,9 +1461,11 @@ object Streams extends QueryModule {
         dst.setLastModified(1700000000000L + k * 60000L)
       }
     }
-    val mainDir = s"$base/main_r$run"
-    val deadDir = s"$base/dead_r$run"
-    val ckpt = StagingDirs.register(s"$base/ckpt_r$run")
+    // the run's own outputs: deadDir exists only if some row came late
+    val out = StagingDirs.fresh(s, "dlq_out")
+    val mainDir = s"$out/main"
+    val deadDir = s"$out/dead"
+    val ckpt = s"$out/ckpt"
     val sch = Tables.parquet(s, arrivals).schema
     var hwmMicros = Long.MinValue // driver state: ONE scalar
     val route: (DataFrame, Long) => Unit = (batch, _) => {
@@ -1500,13 +1484,10 @@ object Streams extends QueryModule {
         batch.unpersist()
       }
     }
-    val q = s.readStream.schema(sch)
+    drain(s.readStream.schema(sch)
       .option("maxFilesPerTrigger", "1").parquet(arrivals)
       .writeStream.foreachBatch(route)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", ckpt))
     val main = Tables.parquet(s, mainDir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_ontime"),
@@ -1550,8 +1531,6 @@ object Streams extends QueryModule {
 
   // --------------------------------------------------------------- q323
 
-  private val q323Runs = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** q323: DSv2 STREAMING WRITE into the versioned table — q252's
     * exactly-once ingest with the `foreachBatch` escape hatch REPLACED by
     * the connector surface: `df.writeStream.toTable("<cat>.tables.…")`
@@ -1576,31 +1555,28 @@ object Streams extends QueryModule {
     */
   /** q323/q326's shared ingest: stream events into a fresh versioned
     * table through the DSv2 write face; returns (SQL table identifier,
-    * table directory). One estate per (tag, invocation).
+    * estate root). The table's directory is `<root>/events_log`. One
+    * estate per invocation ([[StagingDirs.fresh]]).
     */
   private[streaming] def ingestVersioned(s: SparkSession, d: String,
                                          tag: String): (String, String) = {
-    val root = StagingDirs.dir(s, tag)
-    val ckpt = StagingDirs.dir(s, s"${tag}_ckpt")
+    val root = StagingDirs.fresh(s, tag)
+    val ckpt = StagingDirs.register(s"${root}_ckpt")
     val cat = VersionedCatalog.mount(s, "gingest", root)
     val table = s"$cat.tables.events_log"
     s.sql(s"CREATE TABLE $table " +
       "(event_type STRING, user_id BIGINT, value DOUBLE)")
-    val q = streamEvents(s, d)
+    drain(streamEvents(s, d)
       .select(col("event_type"), col("user_id").cast("long").as("user_id"),
         col("value").cast("double").as("value"))
       .writeStream
       .option("checkpointLocation", ckpt)
-      .option("writerTag", "ingest")
-      .trigger(Trigger.AvailableNow())
-      .toTable(table)
-    q.awaitTermination()
-    (table, s"$root/events_log")
+      .option("writerTag", "ingest"), _.toTable(table))
+    (table, root)
   }
 
   private def q323(s: SparkSession, d: String): DataFrame = {
-    val run = q323Runs.incrementAndGet()
-    val (table, _) = ingestVersioned(s, d, s"vsink_r$run")
+    val (table, _) = ingestVersioned(s, d, "vsink")
     s.table(table)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -1612,8 +1588,6 @@ object Streams extends QueryModule {
   private val q323Sql = q252Sql
 
   // --------------------------------------------------------------- q326
-
-  private val q326Runs = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** q326: STREAM-TABLE COMPACTION — the columnar half of the ingest
     * lifecycle q323 opens: the stream lands many small JSON-lines epoch
@@ -1635,8 +1609,8 @@ object Streams extends QueryModule {
     * references.
     */
   private def q326(s: SparkSession, d: String): DataFrame = {
-    val run = q326Runs.incrementAndGet()
-    val (table, dir) = ingestVersioned(s, d, s"vcompact_r$run")
+    val (table, root) = ingestVersioned(s, d, "vcompact")
+    val dir = s"$root/events_log"
     val vIn = graft.sources.VersionedManifest.latestCommitted(s, dir).get
     // the columnar rewrite: land fully, then one atomic manifest rename
     graft.sources.VersionedManifest.readAt(s, dir, vIn)
@@ -1661,8 +1635,6 @@ object Streams extends QueryModule {
 
   // --------------------------------------------------------------- q328
 
-  private val q328Runs = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** q328: STREAMING READ FROM the versioned table — the 2×2's last cell
     * (batch read q321, batch publish q247/q284, stream write q323, now
     * stream READ): `readStream.table(...)` resolves through the catalog
@@ -1681,8 +1653,7 @@ object Streams extends QueryModule {
     * batch plans O(its new files); subscribers never re-list history.
     */
   private def q328(s: SparkSession, d: String): DataFrame = {
-    val run = q328Runs.incrementAndGet()
-    val (table, _) = ingestVersioned(s, d, s"vsrc_r$run")
+    val (table, _) = ingestVersioned(s, d, "vsrc")
     val agg = s.readStream.table(table)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -1697,8 +1668,6 @@ object Streams extends QueryModule {
        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
 
   // --------------------------------------------------------------- q338
-
-  private val q338Runs = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** q338: MIXED-FORMAT SUBSCRIBER FEED — the two delivery guarantees the
     * versioned table's stream source (q328) must honor once q323's ingest
@@ -1727,21 +1696,15 @@ object Streams extends QueryModule {
     * gives exactly-once delivery across drains from the checkpoint.
     */
   private def q338(s: SparkSession, d: String): DataFrame = {
-    val run = q338Runs.incrementAndGet()
-    val (table, dir) = ingestVersioned(s, d, s"vmix_r$run")
-    val base = StagingDirs.dir(s, s"vmix_r$run") // the ingest estate's root
-    val sink = StagingDirs.register(s"$base-sink")
-    val ckpt = StagingDirs.register(s"$base-subckpt")
-    def drain(): Unit = {
-      val q = s.readStream.table(table)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drain() // 1: the stream-landed JSON epochs
+    val (table, root) = ingestVersioned(s, d, "vmix")
+    val dir = s"$root/events_log"
+    val sink = StagingDirs.register(s"$root-sink")
+    val ckpt = StagingDirs.register(s"$root-subckpt")
+    def subscribe(): Unit = drain(s.readStream.table(table)
+      .writeStream.format("parquet")
+      .option("path", sink)
+      .option("checkpointLocation", ckpt))
+    subscribe() // 1: the stream-landed JSON epochs
     // batch parquet APPEND: the error slice re-landed columnar, cumulative
     // manifest with per-dir format addressing (old dirs stay JSON)
     val vIn = graft.sources.VersionedManifest.latestCommitted(s, dir).get
@@ -1759,7 +1722,7 @@ object Streams extends QueryModule {
       (prev :+ s"data=d-append-$vIn;format=parquet"
         :+ "appended error correction batch (columnar)").mkString("\n")),
       "append commit lost a race")
-    drain() // 2: ONLY the parquet append dir arrives
+    subscribe() // 2: ONLY the parquet append dir arrives
     // compaction: fold the mixed snapshot into one parquet version
     val vApp = vIn + 1
     graft.sources.VersionedManifest.readAt(s, dir, vApp)
@@ -1769,7 +1732,7 @@ object Streams extends QueryModule {
       s"data=d-compact-$vApp\nformat=parquet\ndataChange=false\n" +
         s"compaction of 1..$vApp"),
       "compaction commit lost a race")
-    drain() // 3: dataChange=false — NOTHING may arrive
+    subscribe() // 3: dataChange=false — NOTHING may arrive
     Tables.sink(s, sink, s.table(table).schema)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -1791,8 +1754,6 @@ object Streams extends QueryModule {
 
   // --------------------------------------------------------------- q351
 
-  private val q351Runs = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** q351: BRANCH-SCOPED SUBSCRIPTION — q349's publish gate extended to
     * STREAMING consumers (Iceberg's branch-scoped reads): the subscriber
     * passes `option("branch", "main")` and its visibility horizon becomes
@@ -1811,24 +1772,18 @@ object Streams extends QueryModule {
     * cost model (O(#versions) names, O(new files) per batch).
     */
   private def q351(s: SparkSession, d: String): DataFrame = {
-    val run = q351Runs.incrementAndGet()
-    val (table, dir) = ingestVersioned(s, d, s"vbr_r$run")
+    val (table, root) = ingestVersioned(s, d, "vbr")
+    val dir = s"$root/events_log"
     val M = graft.sources.VersionedManifest
     val vIn = M.latestCommitted(s, dir).get
     M.createBranch(s, dir, "main", vIn)
-    val base = StagingDirs.dir(s, s"vbr_r$run") // the ingest estate's root
-    val sink = StagingDirs.register(s"$base-sink")
-    val ckpt = StagingDirs.register(s"$base-subckpt")
-    def drain(): Unit = {
-      val q = s.readStream.option("branch", "main").table(table)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drain() // 1: everything on main (the ingested epochs)
+    val sink = StagingDirs.register(s"$root-sink")
+    val ckpt = StagingDirs.register(s"$root-subckpt")
+    def subscribe(): Unit = drain(s.readStream.option("branch", "main").table(table)
+      .writeStream.format("parquet")
+      .option("path", sink)
+      .option("checkpointLocation", ckpt))
+    subscribe() // 1: everything on main (the ingested epochs)
     val schema = s.table(table).schema
     val afterFirst = Tables.sink(s, sink, schema).count()
     // the correction batch: COMMITTED, but not yet published to main
@@ -1844,13 +1799,13 @@ object Streams extends QueryModule {
       (prev :+ s"data=d-fix-$vIn;format=parquet"
         :+ "error correction batch (pending publish)").mkString("\n")),
       "correction commit lost a race")
-    drain() // 2: main still points BEFORE the correction — nothing arrives
+    subscribe() // 2: main still points BEFORE the correction — nothing arrives
     require(Tables.sink(s, sink, schema).count() == afterFirst,
       "branch-scoped subscriber drained past the branch head")
     // the publish: one CAS fast-forward, then the correction flows
     require(M.advanceBranch(s, dir, "main", 0, vIn + 1),
       "main fast-forward lost a race")
-    drain() // 3: exactly the correction batch
+    subscribe() // 3: exactly the correction batch
     Tables.sink(s, sink, schema)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -1926,8 +1881,6 @@ object Streams extends QueryModule {
     graft.sources.VersionedManifest.committedVersions(s, estate)
       .foreach(v => stageLinks(stage, s"$estate/v=$v"))
 
-  private val q279Runs = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** q279: streaming FEED of the versioned table — the READ half of
     * q252's exactly-once versioned ingest: a subscriber follows the
     * commit log, each committed version's files flow into a file-stream
@@ -1946,9 +1899,8 @@ object Streams extends QueryModule {
     * manifest as the source of truth.
     */
   private def q279(s: SparkSession, d: String): DataFrame = {
-    val run = q279Runs.incrementAndGet()
-    val estate = StagingDirs.dir(s, "vfeed", s"r$run")
-    val stage = new java.io.File(StagingDirs.dir(s, "vfeed_stage", s"r$run"))
+    val estate = StagingDirs.fresh(s, "vfeed")
+    val stage = new java.io.File(StagingDirs.register(s"${estate}_stage"))
     stage.mkdirs()
     val ev = Tables.events(s, d)
     (0 to 2).foreach { slice =>
@@ -1978,8 +1930,6 @@ object Streams extends QueryModule {
 
   // --------------------------------------------------------------- q270
 
-  private val q270Runs = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** q270: streaming-state introspection — the ops face of a stateful
     * pipeline. Runs the continuous dedup gate as a real streaming query
     * (`dropDuplicates` on the q227 passage fingerprint, state checkpointed),
@@ -1999,16 +1949,12 @@ object Streams extends QueryModule {
     * BASELINE.md's state table (constant per distinct fingerprint).
     */
   private def q270(s: SparkSession, d: String): DataFrame = {
-    val run = q270Runs.incrementAndGet()
-    val ckpt = StagingDirs.dir(s, "statespect", s"r$run")
+    val ckpt = StagingDirs.fresh(s, "statespect")
     withStreamParts(s, d) { s =>
-      val q = streamDocs(s, d).select(passageFp(col("text")).as("fp"))
+      drain(streamDocs(s, d).select(passageFp(col("text")).as("fp"))
         .dropDuplicates("fp").writeStream
         .format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .option("checkpointLocation", ckpt))
     }
     s.read.format("statestore").load(ckpt)
       .agg(
@@ -2059,9 +2005,8 @@ object Streams extends QueryModule {
       val dedup = doubled
         .withWatermark("ts", "24 hours")
         .dropDuplicates("event_id")
-      val q = dedup.writeStream.format("memory").queryName("q393_sink")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val q = drain(dedup.writeStream.format("memory").queryName("q393_sink")
+        .outputMode("append"))
       import scala.jdk.CollectionConverters._
       val rocksdbServed = q.recentProgress.exists(p =>
         Option(p.stateOperators).exists(_.exists(op =>
@@ -2080,8 +2025,6 @@ object Streams extends QueryModule {
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
   // --------------------------------------------------------------- q403
-
-  private val q403Runs = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** q403: STREAMING SCD2 APPLY — the third CDC-into-the-table pattern,
     * completing the trio: q252 APPENDS each epoch, q367 keeps ONE live
@@ -2104,9 +2047,8 @@ object Streams extends QueryModule {
     */
   private def q403(s: SparkSession, d: String): DataFrame = {
     val M = graft.sources.VersionedManifest
-    val run = q403Runs.incrementAndGet()
-    val dir = StagingDirs.dir(s, "scd2a", s"r$run")
-    val ckpt = StagingDirs.dir(s, "scd2a_ckpt", s"r$run")
+    val dir = StagingDirs.fresh(s, "scd2a")
+    val ckpt = StagingDirs.register(s"${dir}_ckpt")
     if (M.latestCommitted(s, dir).isEmpty) {
       streamEventsSchemaFrame(s, d)
         .select(col("user_id"), col("event_type"), col("value"),
@@ -2117,21 +2059,16 @@ object Streams extends QueryModule {
     }
     val applyBatch: (DataFrame, Long) => Unit = (batch, epoch) => {
       val marker = s"epoch=$epoch"
-      val seen = M.committedVersions(s, dir).exists(v =>
-        M.describe(s, dir, v).linesIterator.exists(_.trim == marker))
-      if (!seen && !batch.isEmpty)
+      if (!M.hasMarker(s, dir, marker) && !batch.isEmpty)
         M.applyScd2(s, dir,
           batch.select(col("user_id"), col("event_type"), col("value"),
             col("ts"), col("event_id")),
           "user_id", "ts", "event_id", marker)
     }
     withStreamParts(s, d) { s =>
-      val q = streamEvents(s, d).writeStream
+      drain(streamEvents(s, d).writeStream
         .foreachBatch(applyBatch)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .option("checkpointLocation", ckpt))
     }
     M.readLatest(s, dir)
       .groupBy(col("event_type"))

@@ -32,14 +32,20 @@ object GraftSqlBridge {
 
   /** A child of `spark` (`cloneSession` is `private[sql]`): a copy of its
     * conf, temp views, functions and query-execution listeners, plus its
-    * streaming listeners, which are per session and not cloned. No `streams`
-    * is built just to copy none: each adds a bus to the SparkContext for good. */
+    * streaming listeners, which are per session and not cloned. */
   def child(spark: SparkSession): SparkSession = {
     val c = spark.asInstanceOf[classic.SparkSession].cloneSession()
-    if (manager.get(spark.asInstanceOf[classic.SparkSession].sessionState) != null)
-      spark.streams.listListeners().foreach(l => c.streams.addListener(l))
+    builtStreams(spark).foreach(_.listListeners().foreach(l => c.streams.addListener(l)))
     c
   }
+
+  /** The session's `streams`, if it has built them. The first touch of
+    * `streams` builds a `StreamingQueryManager`, and with it a bus on the
+    * SparkContext that is never removed; a session that never built one
+    * has no stream and no streaming listener to read. */
+  def builtStreams(spark: SparkSession): Option[streaming.StreamingQueryManager] =
+    Option(manager.get(spark.asInstanceOf[classic.SparkSession].sessionState))
+      .map(_ => spark.streams)
   private val manager = classOf[internal.SessionState].getDeclaredField("streamingQueryManager")
   manager.setAccessible(true)
 

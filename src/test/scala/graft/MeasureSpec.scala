@@ -11,8 +11,9 @@ import org.apache.spark.sql.AnalysisException
   * seconds sit inside its total; [[Measure.warmMin]] runs its body N+1
   * times; no main outside `Measure.scala` keeps a clock or a batch
   * `noop` sink of its own; no source builds a stock Hadoop
-  * `Configuration` or switches a filesystem's checksums; and no source
-  * reads parquet around [[Tables.parquet]].
+  * `Configuration` or switches a filesystem's checksums; no source
+  * reads parquet around [[Tables.parquet]]; and bounded streams, fresh
+  * stream estates and epoch-marker scans each have one definition.
   */
 class MeasureSpec extends SparkSpec {
 
@@ -64,10 +65,13 @@ class MeasureSpec extends SparkSpec {
 
   /** Every `src/main/scala` line (outside `exempt`) that holds one of `banned`. */
   private def offenders(banned: Seq[String], exempt: String = ""): Seq[String] =
+    offending(line => banned.exists(line.contains), exempt)
+
+  private def offending(bad: String => Boolean, exempt: String = ""): Seq[String] =
     for {
       p <- sources if p.getFileName.toString != exempt
       (line, i) <- Files.readAllLines(p).asScala.toSeq.zipWithIndex
-      if banned.exists(line.contains)
+      if bad(line)
     } yield s"$p:${i + 1}: ${line.trim}"
 
   test("no main keeps its own clock or batch noop sink outside Measure.scala") {
@@ -91,5 +95,20 @@ class MeasureSpec extends SparkSpec {
     assert(sources.exists(_.getFileName.toString == "Tables.scala"))
     val found = offenders(Seq("read.parquet("), "Tables.scala")
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  // a bounded stream runs only through Streams.drain, a stream estate that
+  // must not resume a committed checkpoint comes only from
+  // StagingDirs.fresh, and committed history is scanned for an epoch
+  // marker only by VersionedManifest.hasMarker
+  test("one bounded-stream run, one fresh-estate counter, one epoch-marker scan") {
+    def in(file: String, found: Seq[String]) =
+      assert(found.size === 1 && found.head.contains(s"/$file:"), found.mkString("\n", "\n", ""))
+    in("Streams.scala", offenders(Seq("Trigger.AvailableNow()")))
+    in("Streams.scala", offenders(Seq("awaitTermination()")))
+    in("VersionedManifest.scala", offenders(Seq("== marker", "contains(marker")))
+    val counters = offending(line => "q\\d+Runs".r.findFirstIn(line).nonEmpty) ++
+      offenders(Seq("createTempDirectory"))
+    assert(counters.isEmpty, counters.mkString("\n", "\n", ""))
   }
 }

@@ -9,6 +9,7 @@ import graft.sources.{SnapshotCatalog, VersionedCatalog, VersionedManifest}
 /** Pins the staging primitives: [[StagingDirs.dir]] names exactly what the
   * hand-spelled `<tmpdir>/graft_<tag>_<applicationId>_<key>` paths named and
   * follows a moved `java.io.tmpdir`, as q93's stream sink does;
+  * [[StagingDirs.fresh]] makes a new directory on every call;
   * [[StagingDirs.once]] builds once and marks only a build that returned;
   * [[VersionedCatalog.mount]] writes only the catalog's own keys.
   */
@@ -52,6 +53,22 @@ class StagingDirsSpec extends SparkSpec {
         .filter(_.startsWith("graft_q93_sink")).toList
       finally ls.close()
     assert(sinks.size === 1, s"q93 sink dirs under $moved: $sinks")
+  }
+
+  test("fresh makes a new, created, registered dir on every call, under a moved java.io.tmpdir") {
+    val before = tmpdir
+    val moved = scratch()
+    val made =
+      try {
+        System.setProperty("java.io.tmpdir", moved)
+        Seq.fill(2)(StagingDirs.fresh(spark, "freshspec"))
+      } finally System.setProperty("java.io.tmpdir", before)
+    assert(made.distinct.size === 2, made)
+    made.foreach { d =>
+      assert(d.startsWith(s"$moved/graft_freshspec_${app}_r"))
+      assert(Files.isDirectory(Paths.get(d)))
+      assert(StagingDirs.isRegistered(d))
+    }
   }
 
   test("once builds exactly once across two calls") {

@@ -11,11 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class Round12Spec extends SparkSpec {
 
-  private def tmp(tag: String): String =
-    graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_r12_${tag}_" +
-        spark.sparkContext.applicationId)
-
   // ------------------------------------------------ q395 projection cap
 
   test("q395 projection drops hot parts before pairing (bounded fan-out)") {
@@ -101,7 +96,7 @@ class Round12Spec extends SparkSpec {
 
   test("N concurrent INSERT appenders all commit exactly once (N=4, 8)") {
     for (n <- Seq(4, 8)) {
-      val dir = tmp(s"occ$n")
+      val dir = graft.StagingDirs.dir(spark, s"r12_occ$n")
       import spark.implicits._
       Seq((0L, "seed")).toDF("id", "src")
         .write.mode("overwrite").parquet(s"$dir/v=1")
@@ -137,7 +132,7 @@ class Round12Spec extends SparkSpec {
 
   test("refused append leaves a vacuumable orphan stage, no manifest") {
     import spark.implicits._
-    val dir = tmp("refstage")
+    val dir = graft.StagingDirs.dir(spark, "r12_refstage")
     Seq((1L, 5L)).toDF("id", "x").write.mode("overwrite").parquet(s"$dir/v=1")
     VM.commit(spark, dir, 1, Seq("seed", "constraint=pos:x >= 0").mkString("\n"))
     val bad = Seq((2L, -1L)).toDF("id", "x")
@@ -159,7 +154,7 @@ class Round12Spec extends SparkSpec {
 
   test("predicate-scoped overwrite rewrites a NESTED (partitionBy) data dir") {
     import spark.implicits._
-    val dir = tmp("nest")
+    val dir = graft.StagingDirs.dir(spark, "r12_nest")
     Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "a", 30L)).toDF("id", "k", "x")
       .write.partitionBy("k").mode("overwrite").parquet(s"$dir/v=1")
     VM.commit(spark, dir, 1, "seed partitioned")
@@ -177,7 +172,7 @@ class Round12Spec extends SparkSpec {
 
   test("publishCow refusal names the refusing operation, not 'merge'") {
     import spark.implicits._
-    val dir = tmp("opname")
+    val dir = graft.StagingDirs.dir(spark, "r12_opname")
     Seq((1L, 5L)).toDF("id", "x").write.mode("overwrite").parquet(s"$dir/v=1")
     VM.commit(spark, dir, 1, Seq("seed", "constraint=pos:x >= 0").mkString("\n"))
     val e = intercept[IllegalStateException] {

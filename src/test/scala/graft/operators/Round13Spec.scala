@@ -11,11 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class Round13Spec extends SparkSpec {
 
-  private def tmp(tag: String): String =
-    graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_r13_${tag}_" +
-        spark.sparkContext.applicationId)
-
   // ------------------------------------------- durable index estate (r12 #2)
 
   test("committed index estate: a FRESH session serves train-free and write-free") {
@@ -54,7 +49,7 @@ class Round13Spec extends SparkSpec {
 
   test("N racing builders publish ONE index version with unmixed data dirs") {
     val d = sf0001
-    val root = tmp("occbuild")
+    val root = graft.StagingDirs.dir(spark, "r13_occbuild")
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val threads = (1 to 4).map { _ =>
       new Thread(() => {
@@ -130,7 +125,7 @@ class Round13Spec extends SparkSpec {
 
   test("tryAppendAt: N racers land a deterministic batch exactly once") {
     import spark.implicits._
-    val dir = tmp("tryapp")
+    val dir = graft.StagingDirs.dir(spark, "r13_tryapp")
     Seq((0L, "seed")).toDF("id", "src").write.mode("overwrite")
       .parquet(s"$dir/v=1")
     VM.commit(spark, dir, 1, "seed")
@@ -157,7 +152,7 @@ class Round13Spec extends SparkSpec {
 
   test("tryAppendAt refuses a stale base snapshot without staging") {
     import spark.implicits._
-    val dir = tmp("stale")
+    val dir = graft.StagingDirs.dir(spark, "r13_stale")
     Seq((0L, 0L)).toDF("id", "x").write.mode("overwrite").parquet(s"$dir/v=1")
     VM.commit(spark, dir, 1, "seed")
     def stages = new java.io.File(dir).listFiles()
@@ -170,7 +165,7 @@ class Round13Spec extends SparkSpec {
   // --------------------------------- content-atomic tryCommit (ADVICE #1)
 
   test("tryCommit never exposes a torn manifest body (racing readers)") {
-    val dir = tmp("atomic")
+    val dir = graft.StagingDirs.dir(spark, "r13_atomic")
     new java.io.File(dir).mkdirs()
     // 8 writers race ONE slot with distinct multi-KB bodies ending in a
     // terminator line; a reader polls the slot the whole time. With the
@@ -212,7 +207,7 @@ class Round13Spec extends SparkSpec {
 
   test("vacuum with a retention age spares young unreferenced stages") {
     import spark.implicits._
-    val dir = tmp("retain")
+    val dir = graft.StagingDirs.dir(spark, "r13_retain")
     Seq((1L, 1L)).toDF("id", "x").write.mode("overwrite").parquet(s"$dir/v=1")
     VM.commit(spark, dir, 1, "seed")
     // an in-flight writer's freshly-landed stage (unreferenced until its

@@ -12,11 +12,6 @@ import org.apache.spark.sql.functions._
   */
 class Round14Spec extends SparkSpec {
 
-  private def tmp(tag: String): String =
-    graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_r14_${tag}_" +
-        spark.sparkContext.applicationId)
-
   // ------------------------------- q416 per-list cap (r13 "wrong" #1)
 
   test("q416's per-list cap BINDS on a Zipf-cluster hot list") {
@@ -130,7 +125,7 @@ class Round14Spec extends SparkSpec {
   // --------------------- fingerprint collision guard (r13 ADVICE #2)
 
   test("a stored-signature mismatch re-keys the estate root") {
-    val base = tmp("fpguard")
+    val base = graft.StagingDirs.dir(spark, "r14_fpguard")
     val primary = Similarity.ivfIndexRootIn(base, sf0001, "full")
     assert(Similarity.ivfIndexRootIn(base, sf0001, "full") == primary,
       "root derivation must be deterministic")
@@ -150,7 +145,7 @@ class Round14Spec extends SparkSpec {
 
   test("vacuumEstate reclaims stale roots, spares live and young ones") {
     import spark.implicits._
-    val base = tmp("estategc")
+    val base = graft.StagingDirs.dir(spark, "r14_estategc")
     new java.io.File(base).mkdirs()
     // live root: the current fingerprint of sf0.001
     val live = new java.io.File(
@@ -199,7 +194,7 @@ class Round14Spec extends SparkSpec {
 
   test("vacuum reclaims aged .tmp bodies in _commits, spares young ones") {
     import spark.implicits._
-    val dir = tmp("tmpgc")
+    val dir = graft.StagingDirs.dir(spark, "r14_tmpgc")
     Seq((1L, 1L)).toDF("id", "x").write.mode("overwrite").parquet(s"$dir/v=1")
     VM.commit(spark, dir, 1, "seed")
     // a crash between the body write and the createLink publish strands

@@ -17,14 +17,9 @@ import org.apache.spark.sql.functions._
   */
 class Round15Spec extends SparkSpec {
 
-  private def tmp(tag: String): String =
-    graft.StagingDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_r15_${tag}_" +
-        spark.sparkContext.applicationId)
-
   test("lists versions: build carries cid colstats, append none, compaction re-stats") {
     val d = sf0001
-    val root = tmp("stats")
+    val root = graft.StagingDirs.dir(spark, "r15_stats")
     Similarity.buildIvfIndex(spark, d, root, baseOnly = true)
     assert(VM.hasColStats(spark, s"$root/lists", 1, "cid"),
       "built lists v1 must carry colstats=cid lines")
@@ -38,7 +33,7 @@ class Round15Spec extends SparkSpec {
 
   test("probed-cell pruning: pruned serve == full serve; files skipped on the clustered layout") {
     val d = sf0001
-    val root = tmp("prune")
+    val root = graft.StagingDirs.dir(spark, "r15_prune")
     Similarity.buildIvfIndex(spark, d, root, baseOnly = true)
     Similarity.appendToIvfIndex(spark, d, root)
     Similarity.compactIvfIndex(spark, root)
@@ -69,7 +64,7 @@ class Round15Spec extends SparkSpec {
 
   test("compaction leaves lists cell-clustered: every cid lives in exactly one file") {
     val d = sf0001
-    val root = tmp("cluster")
+    val root = graft.StagingDirs.dir(spark, "r15_cluster")
     Similarity.buildIvfIndex(spark, d, root, baseOnly = true)
     Similarity.appendToIvfIndex(spark, d, root)
     Similarity.compactIvfIndex(spark, root)
@@ -85,7 +80,7 @@ class Round15Spec extends SparkSpec {
 
   test("pruning an unstatted version falls back to the full read (result-identical)") {
     val d = sf0001
-    val root = tmp("fallback")
+    val root = graft.StagingDirs.dir(spark, "r15_fallback")
     Similarity.buildIvfIndex(spark, d, root, baseOnly = true)
     Similarity.appendToIvfIndex(spark, d, root) // v2: no colstats
     val key = "spark.graft.ivf.pruneMinBytes"

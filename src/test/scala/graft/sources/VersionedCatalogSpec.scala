@@ -16,10 +16,6 @@ class VersionedCatalogSpec extends SparkSpec {
     StructField("k", LongType, nullable = false),
     StructField("tag", StringType, nullable = true)))
 
-  private def freshDir(name: String): String =
-    StagingDirs.register(s"${System.getProperty("java.io.tmpdir")}/graft_r11_${name}_" +
-      spark.sparkContext.applicationId)
-
   /** Drive one task's writer for an epoch and return its commit message. */
   private def stageEpoch(w: VersionedStreamingWrite, epoch: Long,
                          rows: Seq[(Long, String)]) = {
@@ -32,7 +28,7 @@ class VersionedCatalogSpec extends SparkSpec {
   }
 
   test("streaming epoch commit IS a manifest commit; a rogue replay lands nothing") {
-    val dir = freshDir("vsw")
+    val dir = StagingDirs.dir(spark, "r11_vsw")
     VersionedManifest.writeSchema(spark, dir, schema)
     val w = new VersionedStreamingWrite(dir, "t1", schema)
 
@@ -61,7 +57,7 @@ class VersionedCatalogSpec extends SparkSpec {
   }
 
   test("compaction across the format boundary: parquet snapshot, JSON history intact") {
-    val dir = freshDir("vcmp")
+    val dir = StagingDirs.dir(spark, "r11_vcmp")
     VersionedManifest.writeSchema(spark, dir, schema)
     val w = new VersionedStreamingWrite(dir, "t3", schema)
     w.commit(0, Array(stageEpoch(w, 0, Seq(1L -> "a", 2L -> "b"))))
@@ -86,7 +82,7 @@ class VersionedCatalogSpec extends SparkSpec {
   }
 
   test("catalog SQL: latest read, VERSION AS OF, analysis-time refusal of uncommitted") {
-    val root = freshDir("vcat")
+    val root = StagingDirs.dir(spark, "r11_vcat")
     val dir = s"$root/t"
     VersionedManifest.writeSchema(spark, dir, schema)
     val w = new VersionedStreamingWrite(dir, "t2", schema)
@@ -112,14 +108,14 @@ class VersionedCatalogSpec extends SparkSpec {
   }
 
   test("stream READ: manifest versions are offsets; a resumed subscriber sees each row once") {
-    val root = freshDir("vsrc")
+    val root = StagingDirs.dir(spark, "r11_vsrc")
     val dir = s"$root/t"
     VersionedManifest.writeSchema(spark, dir, schema)
     val w = new VersionedStreamingWrite(dir, "t5", schema)
     w.commit(0, Array(stageEpoch(w, 0, Seq(1L -> "a", 2L -> "b"))))
     w.commit(1, Array(stageEpoch(w, 1, Seq(3L -> "c"))))
     VersionedCatalog.mount(spark, "vc11s", root)
-    val ckpt = freshDir("vsrc_ckpt")
+    val ckpt = StagingDirs.dir(spark, "r11_vsrc_ckpt")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     def drain(): Seq[Long] = {
       val before = seen.size
@@ -145,7 +141,7 @@ class VersionedCatalogSpec extends SparkSpec {
   }
 
   test("branch-scoped stream: the horizon is the branch head; unknown branch refuses") {
-    val root = freshDir("vbrs")
+    val root = StagingDirs.dir(spark, "r11_vbrs")
     val dir = s"$root/t"
     VersionedManifest.writeSchema(spark, dir, schema)
     val w = new VersionedStreamingWrite(dir, "tb", schema)
@@ -153,7 +149,7 @@ class VersionedCatalogSpec extends SparkSpec {
     w.commit(1, Array(stageEpoch(w, 1, Seq(3L -> "c"))))
     VersionedManifest.createBranch(spark, dir, "main", 1)
     VersionedCatalog.mount(spark, "vbrs11", root)
-    val ckpt = freshDir("vbrs_ckpt")
+    val ckpt = StagingDirs.dir(spark, "r11_vbrs_ckpt")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     def drain(branch: String): Seq[Long] = {
       val before = seen.size
@@ -186,7 +182,7 @@ class VersionedCatalogSpec extends SparkSpec {
   }
 
   test("the .history metadata table reads the manifest trail by SQL") {
-    val root = freshDir("vhist")
+    val root = StagingDirs.dir(spark, "r11_vhist")
     val dir = s"$root/t"
     VersionedManifest.writeSchema(spark, dir, schema)
     val w = new VersionedStreamingWrite(dir, "t4", schema)
@@ -208,7 +204,7 @@ class VersionedCatalogSpec extends SparkSpec {
   }
 
   test("mixed-format snapshot: parquet appends feed subscribers once; compaction feeds nothing") {
-    val root = freshDir("vmixspec")
+    val root = StagingDirs.dir(spark, "r11_vmixspec")
     VersionedCatalog.mount(spark, "vmix11", root)
     spark.sql("CREATE TABLE vmix11.tables.t (k BIGINT, tag STRING)")
     val dir = s"$root/t"
@@ -219,8 +215,8 @@ class VersionedCatalogSpec extends SparkSpec {
       "{\"k\":1,\"tag\":\"a\"}\n{\"k\":2,\"tag\":\"b\"}\n")
     assert(VersionedManifest.tryCommit(spark, dir, 1,
       "data=d-e1\nformat=json\nepoch one"))
-    val sink = freshDir("vmixspec_sink")
-    val ckpt = freshDir("vmixspec_ckpt")
+    val sink = StagingDirs.dir(spark, "r11_vmixspec_sink")
+    val ckpt = StagingDirs.dir(spark, "r11_vmixspec_ckpt")
     def drained(): Seq[Long] = {
       val q = spark.readStream.table("vmix11.tables.t")
         .writeStream.format("parquet").option("path", sink)
@@ -263,7 +259,7 @@ class VersionedCatalogSpec extends SparkSpec {
   }
 
   test("maxVersionsPerBatch: a backlogged subscriber catches up in bounded bites, exactly once") {
-    val root = freshDir("vadm")
+    val root = StagingDirs.dir(spark, "r11_vadm")
     VersionedCatalog.mount(spark, "vadm11", root)
     spark.sql("CREATE TABLE vadm11.tables.t (k BIGINT, tag STRING)")
     val dir = s"$root/t"
@@ -277,12 +273,12 @@ class VersionedCatalogSpec extends SparkSpec {
       assert(VersionedManifest.tryCommit(spark, dir, v,
         lines.mkString("\n") + s"\nepoch $v"))
     }
-    val sink = freshDir("vadm_sink")
+    val sink = StagingDirs.dir(spark, "r11_vadm_sink")
     val q = spark.readStream
       .option("maxVersionsPerBatch", "1")
       .table("vadm11.tables.t")
       .writeStream.format("parquet").option("path", sink)
-      .option("checkpointLocation", freshDir("vadm_ckpt"))
+      .option("checkpointLocation", StagingDirs.dir(spark, "r11_vadm_ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -359,7 +355,7 @@ class VersionedCatalogSpec extends SparkSpec {
   }
 
   test("TIMESTAMP AS OF resolves against manifest commit times") {
-    val dir = freshDir("vmts")
+    val dir = StagingDirs.dir(spark, "r11_vmts")
     spark.range(1).toDF("k").write.mode("overwrite").parquet(s"$dir/v=1")
     VersionedManifest.commit(spark, dir, 1, "first")
     Thread.sleep(1100)
@@ -384,7 +380,7 @@ class VersionedCatalogSpec extends SparkSpec {
   }
 
   test("batch write face: INSERT INTO appends; a constraint violation refuses and publishes nothing") {
-    val root = freshDir("vins")
+    val root = StagingDirs.dir(spark, "r11_vins")
     val dir = s"$root/t"
     VersionedManifest.writeSchema(spark, dir, schema)
     val w = new VersionedStreamingWrite(dir, "seed", schema)
@@ -407,7 +403,7 @@ class VersionedCatalogSpec extends SparkSpec {
   }
 
   test("INSERT OVERWRITE truncates atomically; earlier versions still travel") {
-    val root = freshDir("vtrunc")
+    val root = StagingDirs.dir(spark, "r11_vtrunc")
     val dir = s"$root/t"
     VersionedManifest.writeSchema(spark, dir, schema)
     val w = new VersionedStreamingWrite(dir, "seed", schema)
@@ -422,7 +418,7 @@ class VersionedCatalogSpec extends SparkSpec {
 
   test("replaceWhere: stray source rows refuse; the out-of-scope dir re-addresses untouched") {
     import spark.implicits._
-    val root = freshDir("vrepl")
+    val root = StagingDirs.dir(spark, "r11_vrepl")
     val dir = s"$root/t"
     VersionedManifest.writeSchema(spark, dir, schema)
     // two dirs: tag 'a' rows and tag 'b' rows
@@ -470,7 +466,7 @@ class VersionedCatalogSpec extends SparkSpec {
 
   test("updateWhere: assignments see the PRE-update row (swap); no-match publishes nothing") {
     import spark.implicits._
-    val root = freshDir("vupd")
+    val root = StagingDirs.dir(spark, "r11_vupd")
     val dir = s"$root/t"
     Seq((1L, 100L), (5L, 500L)).toDF("a", "b").write.parquet(s"$dir/d-1")
     VersionedManifest.commit(spark, dir, 1, s"data=$dir/d-1\nseed")
@@ -489,7 +485,7 @@ class VersionedCatalogSpec extends SparkSpec {
   }
 
   test("commitAudited refuses the poisoned batch: no manifest, orphan is vacuumable") {
-    val dir = freshDir("wap")
+    val dir = StagingDirs.dir(spark, "r11_wap")
     import spark.implicits._
     Seq((1L, 10L), (2L, 20L)).toDF("doc_id", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/v=1")
@@ -511,7 +507,7 @@ class VersionedCatalogSpec extends SparkSpec {
   }
 
   test("atomic CTAS/RTAS: abort leaves the prior snapshot and no staging") {
-    val root = freshDir("rtas")
+    val root = StagingDirs.dir(spark, "r11_rtas")
     val cat = "g_rtas_spec"
     VersionedCatalog.mount(spark, cat, root)
     spark.sql(s"CREATE TABLE $cat.tables.t AS SELECT 1L AS k, 'a' AS tag")

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.GraftSession.withConf
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, StreamingQueryProgress}
 
 /** Multi-batch streaming semantics the single-batch backfill verify cannot
   * exercise: state carried across micro-batches, and watermarks actually
@@ -151,6 +151,21 @@ class StreamsSpec extends SparkSpec {
     assert(log.count() == 3, "replayed epoch changed the committed table")
     assert(log.filter(col("id") === 9L).isEmpty,
       "replayed epoch's data became visible")
+  }
+
+  test("hasMarker matches a whole committed line, never a prefix or an uncommitted version") {
+    import graft.sources.VersionedManifest
+    val dir = tempDir("graft_marker_spec")
+    assert(!VersionedManifest.hasMarker(spark, dir, "epoch=1"), "empty history")
+    VersionedManifest.commit(spark, dir, 1, "epoch=10\nmerge of epoch 10")
+    assert(!VersionedManifest.hasMarker(spark, dir, "epoch=1"), "epoch=10 is not epoch=1")
+    assert(VersionedManifest.hasMarker(spark, dir, "epoch=10"))
+    VersionedManifest.commit(spark, dir, 2, "  epoch=1  \ndata=d-e1")
+    assert(VersionedManifest.hasMarker(spark, dir, "epoch=1"), "a padded marker line")
+    assert(!VersionedManifest.hasMarker(spark, dir, "data=d-e1"), "data= lines are addressing")
+    // a manifest body left as a temp file is no commit
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_commits", ".3.tmp"), "epoch=3")
+    assert(!VersionedManifest.hasMarker(spark, dir, "epoch=3"))
   }
 
   test("watermark drops events later than the lateness bound") {
@@ -678,8 +693,10 @@ class StreamsSpec extends SparkSpec {
     assert(got.values.sum <= pairs)
   }
 
-  test("a listener on the session sees q93's and q252's batches; q93's state runs at the scoped count") {
-    import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+  /** Run `body` with a streaming listener on the session. `batchesOf(q)`
+    * runs registry query `q` once and returns its streams' progress
+    * events, once the first one arrives (30 s at most). */
+  private def withProgress(body: (String => Seq[StreamingQueryProgress]) => Unit): Unit = {
     val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
     val listener = new StreamingQueryListener {
       def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -687,7 +704,6 @@ class StreamsSpec extends SparkSpec {
         progress.add(e.progress)
       def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
-    /** The progress events of `q`'s streams, once the first one arrives. */
     def batchesOf(q: String): Seq[StreamingQueryProgress] = {
       progress.clear()
       graft.SparkEntry.queries(q)(spark, sf0001).count()
@@ -696,7 +712,11 @@ class StreamsSpec extends SparkSpec {
       progress.toArray(Array.empty[StreamingQueryProgress]).toSeq
     }
     spark.streams.addListener(listener)
-    try {
+    try body(batchesOf) finally spark.streams.removeListener(listener)
+  }
+
+  test("a listener on the session sees q93's and q252's batches; q93's state runs at the scoped count") {
+    withProgress { batchesOf =>
       val q93 = batchesOf("q93_stream_stateful")
       assert(q93.nonEmpty, "the session's listener saw no q93 batch")
       val parts = graft.GraftSession.inputParts(spark, s"$sf0001/events.parquet", 1)
@@ -707,7 +727,16 @@ class StreamsSpec extends SparkSpec {
       assert(stateParts == Seq(parts.toLong), s"q93's state partitions: $stateParts")
       assert(batchesOf("q252_stream_versioned_ingest").nonEmpty,
         "the session's listener saw no q252 batch")
-    } finally spark.streams.removeListener(listener)
+    }
+  }
+
+  test("q252 run twice on one session ingests twice: each run streams into a fresh estate") {
+    // a re-run that resumed the first run's committed checkpoint would
+    // read nothing and measure a no-op
+    withProgress { batchesOf =>
+      val rows = Seq.fill(2)(batchesOf("q252_stream_versioned_ingest").map(_.numInputRows).sum)
+      assert(rows.forall(_ > 0), s"input rows per run: $rows")
+    }
   }
 
   test("a file-sink feed of a versioned table reads under the table's schema with no job") {

@@ -2,8 +2,9 @@ package org.apache.spark.sql
 
 import graft.SparkSpec
 
-/** Pins what [[GraftSqlBridge.child]] costs the SparkContext: every
-  * registry query runs on a child, so a child that registered a listener
+/** Pins what [[GraftSqlBridge.child]] and `GraftSession.state` cost the
+  * SparkContext: every registry query runs on a child, and Smoke reads the
+  * state of its caller around each one, so either registering a listener
   * on the context's bus would grow it by one per query, for good. (The
   * bus is `private[spark]`, hence this package.)
   */
@@ -16,6 +17,14 @@ class GraftSqlBridgeSpec extends SparkSpec {
     val bus = spark.sparkContext.listenerBus
     val before = bus.listeners.size
     (1 to 50).foreach(_ => GraftSqlBridge.child(GraftSqlBridge.child(parent)))
+    assert(bus.listeners.size === before)
+  }
+
+  test("state on a fresh session adds no bus listener") {
+    val fresh = spark.newSession()
+    val bus = spark.sparkContext.listenerBus
+    val before = bus.listeners.size
+    graft.GraftSession.state(fresh)
     assert(bus.listeners.size === before)
   }
 }
